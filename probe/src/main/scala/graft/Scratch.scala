@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** SCALE-PROBE HARNESS — the evidence generator behind BASELINE.md's
   * scale sections (TTL/versions at 20M cells, the 8M-cell top-n
   * pricing, big-In costs, streaming state floors, …). Not a test suite
@@ -17,10 +15,7 @@ object Scratch {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def time[T](name: String)(f: => T): T = {
@@ -32,23 +27,6 @@ object Scratch {
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
     for (n <- args) n match {
-      case "stream" =>
-        time("stream_pivot")(Queries.streamPivot(spark, sfDir).count())
-      case "stream_parts" =>
-        val cells = graft.streaming.StreamingPivot.eventCellsStream(spark, sfDir)
-        val piv = graft.streaming.StreamingPivot.windowedPivot(cells, Queries.EventCols)
-        time("stream run")(graft.streaming.StreamingPivot.runAvailableNow(piv, "s1").count())
-      case "avro" =>
-        time("pivot only")(Queries.kvTypedExport(spark, sfDir).count())
-        time("avro full")(Queries.exportAvroRoundtrip(spark, sfDir).count())
-        val df = time("avro plan+write") {
-          Queries.exportAvroRoundtrip(spark, sfDir)
-        }
-        time("avro read-back only")(df.count())
-      case "parquet" =>
-        time("parquet full")(Queries.exportParquetRoundtrip(spark, sfDir).count())
-      case "explain" =>
-        Queries.kvTypedExport(spark, sfDir).explain("formatted")
       case "scale" =>
         // 2M generated records x 10 cells = 20M cells (~33x the sf0.1 bench
         // pivot input): linear-scaling evidence for the two pivot paths.
@@ -183,75 +161,6 @@ object Scratch {
           "encode(CAST(id AS STRING), 'UTF-8') AS value", "id AS ts")
         time("21M cells / 7M keys pivot")(
           graft.ops.KvPivot.pivot(hi, Seq("C0", "C1", "C2")).count())
-      case "annassign" =>
-        import org.apache.spark.sql.functions.col
-        val emb = spark.range(1000000L).selectExpr(
-          "id AS vec_id",
-          "transform(sequence(1, 64), i -> CAST((xxhash64(id * 64 + i) % 1000) / 1000.0 AS FLOAT)) AS embedding")
-          .localCheckpoint()
-        val idx = graft.ext.Similarity.index(emb)
-        time("index only")(idx.count())
-        val cents = idx.filter(col("vec_id") < 32).orderBy(col("vec_id")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-        import org.apache.spark.sql.functions._
-        val scores = cents.map { case (cid, cv, cn) =>
-          floor(graft.functions.VectorOps.dot(col("v"), typedlit(cv.toSeq)) * 1000000 /
-            (col("nrm") * lit(cn))).cast("long").as(s"s$cid")
-        }
-        time("32 dot columns (no structs)")(
-          idx.select(col("vec_id") +: scores.toSeq: _*).count())
-        val structs = array(cents.map { case (cid, cv, cn) =>
-          struct(floor(graft.functions.VectorOps.dot(col("v"), typedlit(cv.toSeq)) * 1000000 /
-            (col("nrm") * lit(cn))).cast("long").as("s"), lit(-cid).as("negid"))
-        }.toSeq: _*)
-        time("array(32 structs) + array_max")(
-          idx.select((-array_max(structs).getField("negid")).as("cell")).count())
-      case "annparts" =>
-        import org.apache.spark.sql.functions._
-        import graft.ext.Similarity
-        import graft.functions.VectorOps
-        val emb = spark.range(1000000L).selectExpr(
-          "id AS vec_id",
-          "transform(sequence(1, 64), i -> CAST((xxhash64(id * 64 + i) % 1000) / 1000.0 AS FLOAT)) AS embedding")
-          .localCheckpoint()
-        val idx = Similarity.index(emb)
-        val cents = idx.filter(col("vec_id") < 32).orderBy(col("vec_id")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-        def cellScores(v: org.apache.spark.sql.Column, nrm: org.apache.spark.sql.Column) =
-          array(cents.map { case (cid, cv, cn) =>
-            struct(floor(VectorOps.dot(v, typedlit(cv.toSeq)) * 1000000 / (nrm * lit(cn)))
-              .cast("long").as("s"), lit(-cid).as("negid"))
-          }.toSeq: _*)
-        val assigned = idx.withColumn("cell",
-          -array_max(cellScores(col("v"), col("nrm"))).getField("negid"))
-        time("assigned.count")(assigned.count())
-        val qs = broadcast(assigned.filter(col("vec_id") % 100000 === 0)
-          .withColumn("probe", explode(slice(reverse(array_sort(cellScores(col("v"), col("nrm")))), 1, 8)))
-          .select(col("vec_id"), col("v"), col("nrm"), (-col("probe.negid")).as("cell")))
-        time("qs.count")(qs.count())
-        val scored = qs.as("qr").join(assigned.as("cand"),
-            col("qr.cell") === col("cand.cell") && col("cand.vec_id") =!= col("qr.vec_id"))
-          .select(col("qr.vec_id").as("q"), col("cand.vec_id").as("nb"),
-            floor(VectorOps.dot(col("qr.v"), col("cand.v")) * 1000 /
-              (col("qr.nrm") * col("cand.nrm"))).cast("long").as("cos_x1000"))
-        locally {
-          val p = assigned.queryExecution.optimizedPlan.toString
-          println("optimized plan size chars = " + p.length)
-          println("transform occurrences = " + "transform\\(".r.findAllIn(p).size)
-          println("dot_product occurrences = " + "dot_product".r.findAllIn(p).size)
-        }
-        time("assigned FORCED (sum cell)")(assigned.agg(sum(col("cell"))).collect())
-        val oneDot = idx.select(floor(VectorOps.dot(col("v"), typedlit(cents(0)._2.toSeq)) * 1000000).as("d"))
-        time("1 dot FORCED (sum)")(oneDot.agg(sum(col("d"))).collect())
-        val joinedOnly = qs.as("qr").join(assigned.as("cand"),
-            col("qr.cell") === col("cand.cell") && col("cand.vec_id") =!= col("qr.vec_id"))
-          .select(col("cand.vec_id").as("nb"))
-        time("join only, no dot")(joinedOnly.count())
-        val joinedNrm = qs.as("qr").join(assigned.as("cand"),
-            col("qr.cell") === col("cand.cell") && col("cand.vec_id") =!= col("qr.vec_id"))
-          .select((col("qr.nrm") * col("cand.nrm")).as("x"))
-        time("join + nrm mult only")(joinedNrm.count())
-        println("scored rows = " + time("scored.count")(scored.count()))
       case "scalededup" =>
         import org.apache.spark.sql.functions._
         // 100k docs over a 1024-word vocab (shingle space 2^30 — near-dups
@@ -344,41 +253,6 @@ object Scratch {
             stateStoreProvider = Some(graft.streaming.StreamingPivot.RocksDbProvider)).count())
         println(s"  session rows: mem=$sMem rocksdb=$sRdb equal=${sMem == sRdb}")
 
-      case "jacab" =>
-        time("jaccard #1")(Queries.dedupJaccardPairs(spark, sfDir).count())
-        time("jaccard #2")(Queries.dedupJaccardPairs(spark, sfDir).count())
-
-      case "hotposting" =>
-        import org.apache.spark.sql.functions._
-        // One key shared by exactly MaxPosting (10k) ids — the adversarial
-        // boilerplate-shingle case. The single-row nested fan-out this
-        // replaced would buffer |ids|²/2 ≈ 50M structs (~800 MB) in ONE row
-        // before exploding; the two-stage posexplode streams them with
-        // per-row memory O(maxPosting). Then the same corpus behind the
-        // designed df filter: the hot key never reaches pair generation.
-        val n = 10000L
-        val rel = spark.range(n).select(col("id").as("doc_id"), lit("hot").as("k"))
-          .unionAll(spark.range(n).select(col("id").as("doc_id"),
-            concat(lit("u"), col("id")).as("k")))
-          .localCheckpoint()
-        time("10k-id hot posting, 50M pairs")(
-          println("  pairs = " + graft.ext.Dedup.jaccardOverKeys(
-            rel, "doc_id", "k", threshold = 300L).count()))
-        time("same corpus, maxDf=5000 filter")(
-          println("  pairs = " + graft.ext.Dedup.jaccardOverKeys(
-            rel, "doc_id", "k", threshold = 300L, maxDf = 5000).count()))
-      case "txtcost" =>
-        import org.apache.spark.sql.functions._
-        val d = graft.kv.KvTable.table(spark, sfDir, "documents").localCheckpoint()
-        println("  docs = " + d.count())
-        time("quality FORCED")(graft.ext.TextAnalysis.quality(d)
-          .agg(sum(col("quality"))).collect())
-        time("langid FORCED")(graft.ext.TextAnalysis.langId(d)
-          .agg(sum(col("score_en"))).collect())
-        time("tokens FORCED")(graft.ext.TextAnalysis.tokens(d)
-          .agg(sum(col("bpe_tokens"))).collect())
-        time("pipe_clean full")(Queries.pipeCleanCorpus(spark, sfDir).count())
-        time("pipe_clean full #2")(Queries.pipeCleanCorpus(spark, sfDir).count())
       case "scalesalt" =>
         import org.apache.spark.sql.functions._
         // 10M rows, ONE key: the adversarial skew case for the asof carry
@@ -462,23 +336,6 @@ object Scratch {
             .filter(col("doc_id") === col("c")).count())
         measure("128-bit hash-key dedup (new)")(
           graft.ext.Dedup.exact(d).filter(!col("is_dup")).count())
-      case "rjdebug" =>
-        import org.apache.spark.sql.functions._
-        val ev = spark.range(20000L).selectExpr(
-          "id AS event_id", "id DIV 2 % 100 AS user_id",
-          "abs(xxhash64(id)) % 1000000000000 AS tsNanos").localCheckpoint()
-        val le = ev.filter(col("event_id") % 2 === 0)
-          .select(col("event_id").as("l_id"), col("user_id"), col("tsNanos").as("lts"))
-        val re2 = ev.filter(col("event_id") % 2 === 1)
-          .select(col("event_id").as("r_id"), col("user_id"), col("tsNanos").as("rts"))
-        val w = 10000000000L
-        val naive = le.join(re2, Seq("user_id"))
-          .filter(col("rts") <= col("lts") && col("rts") >= col("lts") - w).count()
-        val banded = graft.ops.RangeJoin.backwardWindowJoin(le, re2,
-          Seq("user_id"), "lts", "rts", w).count()
-        println(s"naive = $naive, banded = $banded")
-        ev.selectExpr("min(tsNanos)", "max(tsNanos)", "count(distinct tsNanos)").show()
-        le.filter(col("user_id") === 5).orderBy(col("lts")).limit(5).show()
       case "scalejoin" =>
         import org.apache.spark.sql.functions._
         // 20M-row as-of join (10M left / 10M right over 100k keys) and a
@@ -741,37 +598,6 @@ object Scratch {
         time("retained view count")(
           println(s"[probe] rows: " +
             spark.read.format("graft-kv").load(d).count()))
-      case "topnparts" =>
-        import org.apache.spark.sql.functions._
-        val d = s"${sys.props("java.io.tmpdir")}/graft_scratch/topnstale"
-        val idx = s"$d/_index/by_v"
-        def lww(q: String) = graft.functions.MaxByTsAgg.maxByTs(
-          col("value"), when(col("qualifier") === q, col("ts")))
-        val keys = time("A: index head 1300 entries (pushed TopN desc)")(
-          spark.read.format("graft-kv").load(idx)
-            .orderBy(col("rowKey").desc).limit(2602)
-            .groupBy(col("rowKey")).agg(lww("k").as("_k"), lww("v").as("_v"))
-            .filter(col("_k").isNotNull && col("_v").isNotNull)
-            .orderBy(col("rowKey").desc).limit(1300)
-            .select(decode(col("_k"), "UTF-8").as("rowKey")).collect()
-            .map(_.getString(0)))
-        println(s"[probe] idx candidates: ${keys.length}")
-        val touched = time("B: touched-key probe (raw feed distinct)")(
-          spark.read.format("graft-kv").option("sinceSeq", "0")
-            .option("asOfSeq", "2").load(d)
-            .select(col("rowKey")).distinct().limit(5001).collect()
-            .map(_.getString(0)))
-        println(s"[probe] touched: ${touched.length}")
-        val cand = (keys ++ touched).distinct
-        val verified = time("C: pinned verification (In " + cand.length + ")")(
-          spark.read.format("graft-kv").option("asOfSeq", "2").load(d)
-            .filter(col("family") === "f" && col("qualifier") === "v")
-            .filter(col("rowKey").isin(cand.toIndexedSeq: _*))
-            .groupBy(col("rowKey"))
-            .agg(decode(graft.functions.MaxByTsAgg.maxByTs(
-              col("value"), col("ts")), "UTF-8").as("value"))
-            .orderBy(col("value").cast("long").desc).limit(100).collect())
-        println(s"[probe] verified head: ${verified.head}")
       case "scalebpe" =>
         import org.apache.spark.sql.functions._
         // BPE tokenization at production vocab scale: ~32k merges over
@@ -838,73 +664,6 @@ object Scratch {
         time("1M vec LSH bucket index")(
           graft.ext.Similarity.bucketedIndex(
             graft.ext.Similarity.index(emb)).count())
-      case "pqdecomp" =>
-        val df = Queries.kvTypedExport(spark, sfDir)
-        time("pivot count")(df.count())
-        time("pivot write parquet")(df.write.mode("overwrite").option("compression", "snappy")
-          .parquet(s"${Tmp}/graft_export/pq_decomp"))
-        time("read back count")(spark.read.parquet(s"${Tmp}/graft_export/pq_decomp").count())
-        time("write coalesce(8)")(df.coalesce(8).write.mode("overwrite")
-          .option("compression", "snappy").parquet(s"${Tmp}/graft_export/pq_decomp8"))
-        time("write repartition(32)")(df.repartition(32).write.mode("overwrite")
-          .option("compression", "snappy").parquet(s"${Tmp}/graft_export/pq_decomp32"))
-      case "jacplan" =>
-        val df = Queries.dedupJaccardPairs(spark, sfDir)
-        time("jaccard")(df.count())
-        val p = df.queryExecution.executedPlan.toString
-        println("joins: " + p.linesIterator.filter(_.contains("Join")).map(_.trim.take(60)).mkString(" | "))
-        println("shuffles: " + p.linesIterator.count(_.contains("ShuffleQueryStage")))
-      case "ivftrain" =>
-        // Deterministic spherical k-means (Lloyd's) over the sf embeddings,
-        // driver-side; prints the IvfCentroids.scala source artifact.
-        // Determinism: vec_id-sorted input, first-k init, smallest-id
-        // tie-break, fixed iteration count, sequential accumulation.
-        import org.apache.spark.sql.functions.col
-        val emb = graft.kv.KvTable.table(spark, sfDir, "embeddings")
-        val data = graft.ext.Similarity.index(emb).orderBy(col("vec_id")).collect()
-          .map(r => (r.getSeq[Double](1).toArray, r.getDouble(2)))
-        val k = graft.ext.Similarity.NumCells
-        val dim = data(0)._1.length
-        var cents = data.take(k).map(_._1.clone())
-        for (iter <- 1 to 15) {
-          val cn = cents.map(cv => math.sqrt(cv.map(x => x * x).sum))
-          val sums = Array.fill(k)(new Array[Double](dim))
-          val cnts = new Array[Long](k)
-          data.foreach { case (v, nrm) =>
-            var best = 0; var bestS = Double.NegativeInfinity
-            for (c <- 0 until k) {
-              var s = 0.0; var d = 0
-              while (d < dim) { s += v(d) * cents(c)(d); d += 1 }
-              val score = s / (nrm * cn(c))
-              if (score > bestS) { bestS = score; best = c }
-            }
-            var d = 0
-            while (d < dim) { sums(best)(d) += v(d); d += 1 }
-            cnts(best) += 1
-          }
-          cents = (0 until k).map { c =>
-            if (cnts(c) == 0) cents(c)
-            else sums(c).map(_ / cnts(c))
-          }.toArray
-          println(s"iter $iter cell sizes: ${cnts.mkString(",")}")
-        }
-        println("// === paste into IvfCentroids.scala ===")
-        println(cents.zipWithIndex.map { case (cv, i) =>
-          s"    /* $i */ Array(${cv.mkString(", ")})"
-        }.mkString("  val Cents: Array[Array[Double]] = Array(\n", ",\n", ")"))
-      case "recall" =>
-        import org.apache.spark.sql.functions.col
-        val emb = graft.kv.KvTable.table(spark, sfDir, "embeddings")
-        val isQ: org.apache.spark.sql.Column => org.apache.spark.sql.Column = v => v % 50 === 0
-        val brute = graft.ext.Similarity.bruteTopK(emb, isQ)
-          .select(col("q"), col("nb")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        for ((name, df) <- Seq(
-            "lsh" -> graft.ext.Similarity.lshTopK(emb, isQ),
-            "ivf" -> graft.ext.Similarity.ivfTopK(emb, isQ))) {
-          val got = df.select(col("q"), col("nb")).collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSet
-          println(f"[recall] $name%-4s ${ (brute & got).size.toDouble / brute.size }%.3f  (pairs ${got.size})")
-        }
       case "sweep" =>
         // Recall/cost operating-point sweep for the two ANN paths: pair
         // overlap vs the exact brute-force top-5 (rank-insensitive), time =
@@ -929,34 +688,6 @@ object Scratch {
         for (tables <- Seq(3, 5, 8); bits <- Seq(4, 6, 8))
           sweepOne(s"lsh L=$tables bits=$bits",
             graft.ext.Similarity.lshTopK(emb, isQ, tables = tables, bits = bits))
-      case "scalepipe" =>
-        // Sampling / mixing / packing at 5M docs (1000x the sf0.01 corpus):
-        // the ops are prefix-sums and map-side filters, so this is the
-        // linear-scaling evidence for the corpus-construction stage.
-        import org.apache.spark.sql.functions.{col, expr}
-        val d = spark.range(0, 5000000).selectExpr("id AS doc_id",
-          "concat('src', CAST(id % 20 AS STRING)) AS source",
-          "CAST(200 + (id * 37) % 800 AS BIGINT) AS n_chars")
-          .localCheckpoint()
-        val srcs = (0 until 20).map(i => s"src$i")
-        val w = srcs.zipWithIndex.map { case (s, i) => s -> (50L + 25L * i) }.toMap
-        time("bernoulli 20% of 5M")(
-          graft.ext.Sampling.bernoulli(d, "doc_id", 200).count())
-        time("stratifiedCap 50k/source x20")(
-          graft.ext.Sampling.stratifiedCap(d, "source", "doc_id", 50000).count())
-        time("weightedMix to 600M chars")(
-          graft.ext.Sampling.weightedMix(d, "source", "n_chars", "doc_id", w,
-            budget = 600000000L).count())
-        time("packWindows 4k-char, 10k-id buckets")(
-          graft.ext.Packing.packWindows(d, expr("doc_id div 10000"),
-            col("doc_id"), col("n_chars"), 4000L).count())
-        time("packFirstFit 4k-char, 10k-id buckets")(
-          graft.ext.Packing.packFirstFit(d, expr("doc_id div 10000"),
-            col("doc_id"), col("n_chars"), 4000L).count())
-        val cells = graft.kv.KvGenerator.cells(spark, 2000000, 32, "run1")
-          .localCheckpoint() // 20M cells, 32k keys x 10 qualifiers: ~61 versions/coordinate
-        time("retainVersions k=3 over 20M cells")(
-          graft.ops.KvPivot.retainVersions(cells, 3).count())
       case "sweep1m" =>
         // The same sweep at 1M synthetic vectors, where the scan/candidate
         // fraction dominates runtime — the axis the sf0.1 sweep can't see.
@@ -1010,158 +741,6 @@ object Scratch {
               .select(col("x.q"), col("c.vec_id")).distinct().count()
             println(f"[autobits] n=$n%8d $nm%-7s candidates/query ${cands / 10}%8d")
           }
-        }
-      case "scaler6" =>
-        import org.apache.spark.sql.functions._
-        // --- paragraph dedup: 1M ~100-word docs, 20% sharing a boilerplate
-        // preamble chunk-set (the realistic "same header everywhere" case)
-        val pd = spark.range(1000000L).selectExpr(
-          "id AS doc_id",
-          "concat(CASE WHEN id % 5 = 0 THEN 'hdr0 hdr1 hdr2 hdr3 hdr4 hdr5 hdr6 hdr7 hdr8 hdr9 ' ELSE '' END, " +
-            "array_join(transform(sequence(1, 100), i -> concat('w', CAST(abs(xxhash64(id * 100 + i)) % 50000 AS STRING))), ' ')) AS text")
-          .localCheckpoint()
-        time("1M docs paragraph dedup")(
-          println("  docs out = " + graft.ext.Dedup.paragraphDedup(pd).count()))
-        // --- bloom join: 50M fact rows, 1M dim keys, ~2% join selectivity;
-        // shuffle-byte A/B of bloom-reduced vs plain shuffle join
-        @volatile var shuffleBytes = 0L
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (te.taskMetrics != null)
-              shuffleBytes += te.taskMetrics.shuffleWriteMetrics.bytesWritten
-        })
-        val fact = spark.range(50000000L).selectExpr(
-          "abs(xxhash64(id)) % 50000000 AS k", "id AS payload").localCheckpoint()
-        val dim = spark.range(1000000L).selectExpr("id AS dk").localCheckpoint()
-        def measure(name: String)(f: => Long): Unit = {
-          shuffleBytes = 0L
-          time(name)(println("  rows = " + f))
-          Thread.sleep(2000)
-          println(f"  shuffle write = ${shuffleBytes / 1e6}%.1f MB")
-        }
-        val noBcast = dim.hint("shuffle_hash")
-        measure("plain shuffle join 50M x 1M")(
-          fact.join(noBcast, col("k") === col("dk")).count())
-        measure("bloom-reduced join 50M x 1M")(
-          graft.ops.BloomJoin.reduceJoin(fact, noBcast, "k", "dk",
-            expectedItems = 1000000L, fpp = 0.01).count())
-        // --- KMV distinct: 100M rows, 10M distinct, 5 groups — constant
-        // state vs exact distinct
-        val kv = spark.range(100000000L).selectExpr(
-          "id % 5 AS g", "abs(xxhash64(id)) % 10000000 AS v")
-        measure("exact count(DISTINCT) 100M")(
-          kv.groupBy(col("g")).agg(countDistinct(col("v"))).count())
-        measure("KMV sketch distinct 100M")(
-          kv.groupBy(col("g"))
-            .agg(graft.functions.KmvDistinctAgg.kmvDistinct(col("v")).as("n")).count())
-        kv.groupBy(col("g"))
-          .agg(graft.functions.KmvDistinctAgg.kmvDistinct(col("v")).as("est"),
-            countDistinct(col("v")).as("exact"))
-          .selectExpr("g", "est", "exact",
-            "CAST(abs(est - exact) AS DOUBLE) / exact AS rel_err")
-          .show()
-        // --- snapshot diff: 2M-record generator runs (~20M cells/side)
-        def oldc = graft.kv.KvGenerator.cells(spark, 2000000, 32, "r")
-        def newc = graft.kv.KvGenerator.cells(spark, 2200000, 32, "r")
-          .filter(col("qualifier") =!= "C3")
-        time("snapshot diff 20M vs 20M cells")(
-          println("  changes = " + graft.ops.SnapshotDiff.diff(oldc, newc).count()))
-      case "scaler6b" =>
-        import org.apache.spark.sql.functions._
-        // --- decontamination: 5M-doc corpus vs a 50k-doc eval set whose
-        // texts are exact copies of every 100th corpus doc (worst-case
-        // contamination density: every eval gram hits).
-        def corpusText(idExpr: String) =
-          s"array_join(transform(sequence(1, 60), i -> concat('w', " +
-            s"CAST(abs(xxhash64(($idExpr) * 60 + i)) % 30000 AS STRING))), ' ') AS text"
-        val corpus = spark.range(5000000L)
-          .selectExpr("id AS doc_id", corpusText("id")).localCheckpoint()
-        val evalSet = spark.range(50000L)
-          .selectExpr("id + 10000000 AS doc_id", corpusText("id * 100"))
-        time("decontaminate 5M docs vs 50k eval")(
-          println("  contaminated = " +
-            graft.ext.Dedup.decontaminate(corpus, evalSet, k = 4).count()))
-        // --- substring spans: 1M docs, 20% share a 10-token boilerplate
-        // preamble -> every preamble window duplicated across 200k docs
-        val pd = spark.range(1000000L).selectExpr(
-          "id AS doc_id",
-          "concat(CASE WHEN id % 5 = 0 THEN 'hdr0 hdr1 hdr2 hdr3 hdr4 hdr5 hdr6 hdr7 hdr8 hdr9 ' ELSE '' END, " +
-            "array_join(transform(sequence(1, 100), i -> concat('w', CAST(abs(xxhash64(id * 100 + i)) % 50000 AS STRING))), ' ')) AS text")
-          .localCheckpoint()
-        time("substring dup spans 1M docs")(
-          println("  docs with dup spans = " +
-            graft.ext.Dedup.substringDupSpans(pd).count()))
-        // --- tombstone compaction: 2M-record generator (~20M cells), every
-        // third record's C9 write masking its C0 stack
-        def tcells = graft.kv.KvGenerator.cells(spark, 2000000, 32, "r")
-        time("tombstone compaction 20M cells") {
-          val puts = tcells
-          val tombs = tcells
-            .filter(col("qualifier") === "C9" && col("ts") % 30 === 9)
-            .select(col("rowKey"), lit("C0").as("qualifier"), col("ts"))
-          println("  survivors = " +
-            graft.ops.KvPivot.compactTombstones(puts, tombs).count())
-        }
-        // --- PageRank: 10M-edge random graph over 1M nodes, 3 supersteps
-        val redges = spark.range(10000000L).selectExpr(
-          "abs(xxhash64(id)) % 1000000 AS src",
-          "abs(xxhash64(id + 77)) % 1000000 AS dst")
-        val symEdges = redges.union(
-          redges.selectExpr("dst AS src", "src AS dst")).localCheckpoint()
-        time("pagerank 20M directed edges, 3 iters")(
-          println("  nodes = " + graft.ops.PageRank.run(symEdges).count()))
-      case "scaler6c" =>
-        import org.apache.spark.sql.functions._
-        // --- SpaceSaving: 50M tokens over a 1M-term vocabulary with 20
-        // planted heavy hitters (~250k hits each, tail ~50/term). The sketch
-        // runs far past capacity; all 20 hitters must surface.
-        val toks = spark.range(50000000L).selectExpr(
-          "CASE WHEN id % 10 = 0 THEN concat('hot', CAST((id DIV 10) % 20 AS STRING)) " +
-            "ELSE concat('w', CAST(abs(xxhash64(id)) % 1000000 AS STRING)) END AS t")
-        time("spacesaving 50M tokens / 1M vocab") {
-          val top = toks.agg(
-              graft.functions.SpaceSavingAgg.heavyHitters(col("t"), capacity = 4096, k = 20)
-                .as("top"))
-            .select(explode(col("top")))
-            .select("col.term").collect().map(_.getString(0))
-          println("  hot terms found = " + top.count(_.startsWith("hot")) + "/20")
-        }
-        // --- int8 ANN: 1M x 64-dim corpus, quantized integer scan vs the
-        // exact double scan, same 10 queries.
-        val qemb = spark.range(1000000L).selectExpr(
-          "id AS vec_id",
-          "transform(sequence(1, 64), i -> CAST((xxhash64(id * 64 + i) % 1000) / 1000.0 AS FLOAT)) AS embedding")
-          .localCheckpoint()
-        time("1M vec brute double top-5 (10 q)")(
-          graft.ext.Similarity.bruteTopK(qemb, v => v % 100000 === 0).count())
-        time("1M vec int8 quant top-5 (10 q)")(
-          graft.ext.Similarity.quantTopK(qemb, v => v % 100000 === 0).count())
-        // --- triangles: 10M-edge random graph over 1M nodes (avg deg 20,
-        // xxhash endpoints so heavy-tail collisions exist), degree-oriented.
-        val tedges = spark.range(10000000L).selectExpr(
-            "least(abs(xxhash64(id)) % 1000000, abs(xxhash64(id + 77)) % 1000000) AS u",
-            "greatest(abs(xxhash64(id)) % 1000000, abs(xxhash64(id + 77)) % 1000000) AS v")
-          .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-        time("triangles 10M-edge graph")(
-          println("  nodes in triangles = " +
-            graft.ops.Triangles.perNodeCounts(tedges).count()))
-        // --- gap fill: 1M series, ~10 observed buckets each over a 0..49
-        // span -> ~50M dense rows out.
-        val obs = spark.range(10000000L).selectExpr(
-            "id % 1000000 AS k", "abs(xxhash64(id)) % 50 AS h", "id AS v")
-          .groupBy(col("k"), col("h")).agg(max(col("v")).as("v"))
-        time("gapfill 1M series -> dense grid")(
-          println("  dense rows = " +
-            graft.ops.GapFill.locf(obs, "k", "h", Seq("v")).count()))
-        // --- quantile sketch: 100M uniform values, one group, k=1024 —
-        // deep past capacity; median must land within the paper's bound.
-        time("quantile sketch 100M values") {
-          val q = spark.range(100000000L)
-            .select(((col("id") * 48271) % 100000000L).as("v"))
-            .agg(graft.functions.QuantileSketchAgg.quantileSketch(
-              col("v"), Seq(0.5), k = 1024).as("q"))
-            .selectExpr("q[0]").collect().head.getDouble(0)
-          println(f"  p50 = $q%.0f (true 5e7, rel err ${math.abs(q - 5e7) / 5e7}%.4f)")
         }
       case "scalebkt" =>
         import org.apache.spark.sql.functions._
@@ -1254,78 +833,6 @@ object Scratch {
           f" vs z-laid ${scanRows(s"$base/by_z", twoAxis)}%,d")
         println(f"    v-only:   u-sorted ${scanRows(s"$base/by_u", vOnly)}%,d" +
           f" vs z-laid ${scanRows(s"$base/by_z", vOnly)}%,d")
-      case "ab" =>
-        import org.apache.spark.sql.functions._
-        def cells = graft.kv.KvTable.lineitemAsCells(spark, sfDir)
-          .filter(col("family") === "c")
-        val cols = Seq("qty", "ln", "flag", "KEY")
-        def runOld() = cells.groupBy(col("rowKey")).agg(
-          max_by(col("value"), when(col("qualifier") === "qty", col("ts"))).as("qty"),
-          max_by(col("value"), when(col("qualifier") === "ln", col("ts"))).as("ln"),
-          max_by(col("value"), when(col("qualifier") === "flag", col("ts"))).as("flag"),
-          max_by(col("value"), when(col("qualifier") === "KEY", col("ts"))).as("KEY")).count()
-        def runNew() = cells.groupBy(col("rowKey")).agg(
-          graft.functions.MaxByTsAgg.maxByTs(col("value"), when(col("qualifier") === "qty", col("ts"))).as("qty"),
-          graft.functions.MaxByTsAgg.maxByTs(col("value"), when(col("qualifier") === "ln", col("ts"))).as("ln"),
-          graft.functions.MaxByTsAgg.maxByTs(col("value"), when(col("qualifier") === "flag", col("ts"))).as("flag"),
-          graft.functions.MaxByTsAgg.maxByTs(col("value"), when(col("qualifier") === "KEY", col("ts"))).as("KEY")).count()
-        for (i <- 1 to 3) {
-          time(s"sortagg max_by #$i")(runOld())
-          time(s"objhash maxByTs #$i")(runNew())
-        }
-      case "aqe" =>
-        val df = Queries.kvTypedExport(spark, sfDir)
-        time("typed export count")(df.count())
-        println(df.queryExecution.executedPlan.toString.take(3000))
-      case "ivf2" =>
-        time("ivf run1")(Queries.annTopkIvf(spark, sfDir).count())
-        time("ivf run2")(Queries.annTopkIvf(spark, sfDir).count())
-        time("clusters run1")(Queries.dedupClusters(spark, sfDir).count())
-      case "pairs" =>
-        time("dedup_simhash_pairs")(Queries.dedupSimhashPairs(spark, sfDir).count())
-        time("dedup_minhash_pairs")(Queries.dedupMinhashPairs(spark, sfDir).count())
-        time("dedup_jaccard_pairs")(Queries.dedupJaccardPairs(spark, sfDir).count())
-      case "decomp" =>
-        import org.apache.spark.sql.functions._
-        def cells = graft.kv.KvTable.lineitemAsCells(spark, sfDir)
-        for (i <- 1 to 2) {
-          time(s"cells scan only #$i")(cells.count())
-          time(s"cells shuffle only #$i")(cells.repartition(col("rowKey")).count())
-          time(s"groupBy count-only #$i")(
-            cells.groupBy(col("rowKey")).agg(count(lit(1))).count())
-          time(s"groupBy max ts-only #$i")(
-            cells.groupBy(col("rowKey")).agg(
-              max(when(col("qualifier") === "qty", col("ts"))),
-              max(when(col("qualifier") === "ln", col("ts"))),
-              max(when(col("qualifier") === "flag", col("ts")))).count())
-        }
-      case "pivotvar" =>
-        import org.apache.spark.sql.functions.col
-        val schema = graft.schema.SchemaFile.parseAvroJson(
-          """{"type":"record","name":"L","fields":[
-            |  {"name":"qty","type":"long"},{"name":"ln","type":"int"},
-            |  {"name":"flag","type":"string"},{"name":"KEY","type":"string"}]}""".stripMargin)
-        def cells = graft.kv.KvTable.lineitemAsCells(spark, sfDir)
-        time("A groupBy max_by") {
-          graft.ops.KvPivot.pivot(cells, schema.fieldNames.toSeq,
-            rowKeyCol = Some("KEY"), family = Some("c")).count()
-        }
-        time("B repartition+sort+stream") {
-          val re = cells.filter(col("family") === "c")
-            .repartition(col("rowKey")).sortWithinPartitions(col("rowKey"))
-          graft.ops.KvPivot.pivotPresorted(re, schema.fieldNames.toSeq,
-            rowKeyCol = Some("KEY")).count()
-        }
-        time("A again") {
-          graft.ops.KvPivot.pivot(cells, schema.fieldNames.toSeq,
-            rowKeyCol = Some("KEY"), family = Some("c")).count()
-        }
-        time("B again") {
-          val re = cells.filter(col("family") === "c")
-            .repartition(col("rowKey")).sortWithinPartitions(col("rowKey"))
-          graft.ops.KvPivot.pivotPresorted(re, schema.fieldNames.toSeq,
-            rowKeyCol = Some("KEY")).count()
-        }
       case "scalecc" =>
         import org.apache.spark.sql.functions._
         // 10M random edges over 5M nodes — 10x past the 2^20 driver ceiling:
@@ -2152,25 +1659,6 @@ object Scratch {
             .collect()(0).getLong(0)
         }
         println(s"  checksums equal = ${a == b && b == c} ($a)")
-      case "quant" =>
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.expressions.Window
-        for (i <- 1 to 3)
-          time(s"rel_quantiles #$i")(Queries.relQuantiles(spark, sfDir).count())
-        val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-        time("orders scan")(orders.count())
-        val vc = orders.groupBy(col("o_orderstatus"), floor(col("o_totalprice")).as("v"))
-          .agg(count(lit(1)).as("c"))
-        time("vc")(vc.count())
-        val w = Window.partitionBy(col("o_orderstatus")).orderBy(col("v"))
-        val cum = vc.select(col("o_orderstatus"), col("v"), col("c"),
-          sum(col("c")).over(w).as("cum"))
-        time("cum")(cum.count())
-        val tot = cum.groupBy(col("o_orderstatus")).agg(max(col("cum")).as("n"))
-        time("tot")(tot.count())
-        time("join+agg")(cum.join(tot, "o_orderstatus").groupBy(col("o_orderstatus"), col("n"))
-          .agg(max(when(col("cum") - col("c") <= lit(0), col("v")))).count())
-        time("rel_quantiles again")(Queries.relQuantiles(spark, sfDir).count())
       case "latebatch" =>
         // Per-micro-batch decomposition of stream_pivot_late: same staging
         // and plan as Queries.streamPivotLate, but holding the query handle
@@ -2279,24 +1767,6 @@ object Scratch {
           graft.kv.KvTable.lineitemAsCells(spark, sfDir), schemaCols,
           rowKeyCol = Some("KEY"), family = Some("c")).queryExecution.executedPlan)
 
-      case "explain21" =>
-        // r21 deliverable: dump explain("formatted") for the queries named
-        // in GRAFT_EXPLAIN_QUERIES to plans/r21/<q>_<GRAFT_EXPLAIN_SUFFIX>.txt
-        val names = sys.env.getOrElse("GRAFT_EXPLAIN_QUERIES", "")
-          .split(",").map(_.trim).filter(_.nonEmpty)
-        val suffix = sys.env.getOrElse("GRAFT_EXPLAIN_SUFFIX", "after")
-        val dir = new java.io.File("plans/r21"); dir.mkdirs(): Unit
-        for (n <- names) {
-          val fn = SparkEntry.queries(n)
-          val df = fn(spark, sfDir)
-          val out = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"plans/r21/${n}_$suffix.txt"),
-            out.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-          println(s"[explain21] wrote plans/r21/${n}_$suffix.txt")
-        }
-
       case "balprobe" =>
         // r21: why do small map-only queries regress under ScanBalance?
         // A/B the raw vs balanced docs scan through three downstream shapes.
@@ -2328,24 +1798,6 @@ object Scratch {
             .filter(col("doc_id") === col("_canonical"))
             .select(col("doc_id"), col("lang_pred"), col("quality"), col("ws_tokens"))
         })
-
-      case "explain22" =>
-        // r22 deliverable: dump explain("formatted") for the queries named
-        // in GRAFT_EXPLAIN_QUERIES to plans/r22/<q>_<GRAFT_EXPLAIN_SUFFIX>.txt
-        val names = sys.env.getOrElse("GRAFT_EXPLAIN_QUERIES", "")
-          .split(",").map(_.trim).filter(_.nonEmpty)
-        val suffix = sys.env.getOrElse("GRAFT_EXPLAIN_SUFFIX", "after")
-        val dir = new java.io.File("plans/r22"); dir.mkdirs(): Unit
-        for (n <- names) {
-          val fn = SparkEntry.queries(n)
-          val df = fn(spark, sfDir)
-          val out = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"plans/r22/${n}_$suffix.txt"),
-            out.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-          println(s"[explain22] wrote plans/r22/${n}_$suffix.txt")
-        }
 
       case "streamfloor" =>
         // r22 verdict #1: WHERE does the multi-batch replay floor go?
@@ -2440,242 +1892,6 @@ object Scratch {
         }
         Thread.sleep(2000)
         counts.forEach((k, v) => println(s"[batchcount] $k -> $v progress events"))
-
-      case "imgcache" =>
-        // r22: mm_resize shows 0.37-1.75 s same-tree spread across bench
-        // windows. Hypothesis: ImageIO's default disk-backed stream cache
-        // (FileCacheImage{In,Out}putStream) creates+deletes one temp FILE
-        // per encode and per decode — two per image row in mm_resize —
-        // making the query disk-latency-bound, not compute-bound.
-        // A/B: toggle ImageIO.setUseCache between reps (global static;
-        // streams pick it up at creation), interleaved to decouple from
-        // window drift, noop sink per guide §1.4.
-        def noopW(df: org.apache.spark.sql.DataFrame): Unit =
-          df.write.format("noop").mode("overwrite").save()
-        for (rep <- 1 to 5; useCache <- Seq(true, false)) {
-          javax.imageio.ImageIO.setUseCache(useCache)
-          time(s"mm_resize   cache=$useCache rep$rep")(
-            noopW(Queries.mmResize(spark, sfDir)))
-          time(s"mm_features cache=$useCache rep$rep")(
-            noopW(Queries.mmFeatures(spark, sfDir)))
-        }
-        javax.imageio.ImageIO.setUseCache(true)
-
-      case "imgmicro" =>
-        // r22: per-image cost decomposition of the ImageCodec hot path on
-        // corpus-representative dims (32x32..144x80). Single-threaded loop;
-        // measures (a) encodeBmp as shipped, (b) ImageIO.read convenience,
-        // (c) reader reused via setInput/read(0), (d) bulk-getRGB band fold,
-        // (e) direct 3BYTE_BGR raster band fold (sum of the 3 channel bytes
-        // is channel-order-independent, so identical sums by construction).
-        val codec = new graft.ext.Multimodal.ImageCodec
-        val dims = Seq((32, 32), (80, 64), (144, 80))
-        val payloads = dims.map { case (w, h) => codec.encodeBmp(w, h, 42L) }
-        val n = 2000
-        def bench(name: String)(f: => Unit): Unit = {
-          var k = 0; while (k < 200) { f; k += 1 } // warm JIT
-          val t0 = System.nanoTime()
-          k = 0; while (k < n) { f; k += 1 }
-          println(f"[imgmicro] $name%-28s ${(System.nanoTime() - t0) / 1e3 / n}%8.1f us/img")
-        }
-        for (((w, h), p) <- dims.zip(payloads)) {
-          bench(s"encodeBmp ${w}x$h")(codec.encodeBmp(w, h, 42L): Unit)
-          bench(s"ImageIO.read ${w}x$h")(
-            javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(p)): Unit)
-          val reader = javax.imageio.ImageIO.getImageReadersByFormatName("bmp").next()
-          bench(s"reader reuse ${w}x$h") {
-            val iis = javax.imageio.ImageIO.createImageInputStream(
-              new java.io.ByteArrayInputStream(p))
-            reader.setInput(iis)
-            reader.read(0): Unit
-            iis.close()
-          }
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(p))
-          println(s"[imgmicro] decoded type ${w}x$h = ${img.getType}") // 5 = TYPE_3BYTE_BGR
-          bench(s"bandFeatures(full) ${w}x$h")(codec.bandFeatures(p): Unit)
-          bench(s"fold getRGB ${w}x$h") {
-            val px = img.getRGB(0, 0, w, h, null, 0, w)
-            var s = 0L; var i = 0
-            while (i < px.length) {
-              val v = px(i); s += ((v >> 16) & 0xFF) + ((v >> 8) & 0xFF) + (v & 0xFF); i += 1
-            }
-            if (s == -1) println(s)
-          }
-          val raster = img.getRaster.getDataBuffer
-            .asInstanceOf[java.awt.image.DataBufferByte].getData
-          bench(s"fold raster ${w}x$h") {
-            var s = 0L; var i = 0
-            while (i < raster.length) { s += raster(i) & 0xFF; i += 1 }
-            if (s == -1) println(s)
-          }
-        }
-
-      case "imgmicro2" =>
-        // r22 follow-up: (a) does reusing a BMP ImageWriter instance cut the
-        // encode cost? (b) is a handwritten 24-bit BI_RGB encoder
-        // byte-identical to the JDK BMPImageWriter (header fields included)?
-        // (c) decodeResize full cost per image.
-        val codec = new graft.ext.Multimodal.ImageCodec
-        val dims = Seq((32, 32), (80, 64), (144, 80), (1, 1), (33, 17))
-        def mkImg(w: Int, h: Int, seed: Long) = {
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val px = img.getRaster.getDataBuffer
-            .asInstanceOf[java.awt.image.DataBufferInt].getData
-          var y = 0; var i = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              px(i) = java.lang.Math.floorMod(seed * 31 + x * 131 + y * 52501, 0x1000000L).toInt
-              i += 1; x += 1
-            }
-            y += 1
-          }
-          img
-        }
-        // handwritten 24-bit BI_RGB bottom-up BMP off the int raster
-        def handBmp(w: Int, h: Int, seed: Long): Array[Byte] = {
-          val stride = (w * 3 + 3) & ~3
-          val imgSize = stride * h
-          val fileSize = 54 + imgSize
-          val out = new Array[Byte](fileSize)
-          val bb = java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          bb.put('B'.toByte).put('M'.toByte).putInt(fileSize)
-            .putShort(0).putShort(0).putInt(54)
-          bb.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24)
-            .putInt(0).putInt(imgSize).putInt(0).putInt(0).putInt(0).putInt(0)
-          var y = h - 1
-          var off = 54
-          while (y >= 0) {
-            var x = 0
-            var o = off
-            while (x < w) {
-              val v = java.lang.Math.floorMod(seed * 31 + x * 131 + y * 52501, 0x1000000L).toInt
-              out(o) = (v & 0xFF).toByte
-              out(o + 1) = ((v >> 8) & 0xFF).toByte
-              out(o + 2) = ((v >> 16) & 0xFF).toByte
-              o += 3; x += 1
-            }
-            off += stride
-            y -= 1
-          }
-          out
-        }
-        for ((w, h) <- dims) {
-          val ref = codec.encodeBmp(w, h, 42L)
-          val hand = handBmp(w, h, 42L)
-          val same = java.util.Arrays.equals(ref, hand)
-          println(s"[imgmicro2] handBmp ${w}x$h identical=$same (ref ${ref.length} B, hand ${hand.length} B)")
-          if (!same) {
-            val n0 = math.min(ref.length, hand.length)
-            val firstDiff = (0 until n0).find(i => ref(i) != hand(i)).getOrElse(n0)
-            println(s"[imgmicro2]   first diff at byte $firstDiff: " +
-              s"ref=${ref.slice(firstDiff, firstDiff + 8).map(b => f"${b & 0xFF}%02x").mkString(" ")} " +
-              s"hand=${hand.slice(firstDiff, firstDiff + 8).map(b => f"${b & 0xFF}%02x").mkString(" ")}")
-          }
-        }
-        val n = 2000
-        def bench(name: String)(f: => Unit): Unit = {
-          var k = 0; while (k < 200) { f; k += 1 }
-          val t0 = System.nanoTime()
-          k = 0; while (k < n) { f; k += 1 }
-          println(f"[imgmicro2] $name%-28s ${(System.nanoTime() - t0) / 1e3 / n}%8.1f us/img")
-        }
-        val writer = javax.imageio.ImageIO.getImageWritersByFormatName("bmp").next()
-        for ((w, h) <- Seq((32, 32), (144, 80))) {
-          val img = mkImg(w, h, 42L)
-          bench(s"encode shipped ${w}x$h")(codec.encodeBmp(w, h, 42L): Unit)
-          bench(s"encode writer-reuse ${w}x$h") {
-            val bos = new java.io.ByteArrayOutputStream()
-            val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-            writer.setOutput(ios)
-            writer.write(img)
-            ios.close()
-          }
-          bench(s"encode handwritten ${w}x$h")(handBmp(w, h, 42L): Unit)
-          val p = codec.encodeBmp(w, h, 42L)
-          bench(s"decodeResize ${w}x$h")(codec.decodeResize(p, 64): Unit)
-        }
-
-      case "featdecomp" =>
-        // r22: where does mm_features' ~1.0 s warm go — which modality's
-        // encode leg, the feature fold, or the query scaffolding?
-        import org.apache.spark.sql.functions._
-        def noopW(df: org.apache.spark.sql.DataFrame): Unit =
-          df.write.format("noop").mode("overwrite").save()
-        val docsB = Queries.docsBalanced(spark, sfDir)
-        def media = graft.ext.Multimodal.syntheticMedia(docsB)
-        for (rep <- 1 to 3) {
-          time(s"synthetic only      rep$rep")(noopW(media.toDF()))
-          time(s"+image payloads     rep$rep")(noopW(
-            graft.ext.Multimodal.withRealImagePayloads(media).toDF()))
-          time(s"+audio payloads     rep$rep")(noopW(
-            graft.ext.Multimodal.withRealAudioPayloads(media).toDF()))
-          time(s"+video payloads     rep$rep")(noopW(
-            graft.ext.Multimodal.withRealVideoPayloads(media).toDF()))
-          val all = graft.ext.Multimodal.withRealVideoPayloads(
-            graft.ext.Multimodal.withRealAudioPayloads(
-              graft.ext.Multimodal.withRealImagePayloads(media)))
-          time(s"all payloads        rep$rep")(noopW(all.toDF()))
-          time(s"payloads+features   rep$rep")(noopW(
-            graft.ext.Multimodal.extractFeatures(all).toDF()))
-          time(s"full mm_features    rep$rep")(noopW(Queries.mmFeatures(spark, sfDir)))
-        }
-
-      case "wavmicro" =>
-        // r22: is a handwritten canonical-RIFF WAV encoder byte-identical
-        // to AudioSystem.write's WaveFileWriter output, and how much does
-        // it save per track at corpus-representative sample counts?
-        val codec = new graft.ext.Multimodal.AudioCodec
-        def handWav(seed: Long, nSamples: Int, rate: Int): Array[Byte] = {
-          val dataSize = nSamples * 2
-          val out = new Array[Byte](44 + dataSize)
-          val bb = java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          bb.put('R'.toByte).put('I'.toByte).put('F'.toByte).put('F'.toByte)
-            .putInt(36 + dataSize)
-            .put('W'.toByte).put('A'.toByte).put('V'.toByte).put('E'.toByte)
-            .put('f'.toByte).put('m'.toByte).put('t'.toByte).put(' '.toByte)
-            .putInt(16).putShort(1).putShort(1) // PCM, mono
-            .putInt(rate).putInt(rate * 2) // byte rate
-            .putShort(2).putShort(16) // block align, bits
-            .put('d'.toByte).put('a'.toByte).put('t'.toByte).put('a'.toByte)
-            .putInt(dataSize)
-          var i = 0
-          var o = 44
-          while (i < nSamples) {
-            val s = java.lang.Math.floorMod(seed * (i + 1), 65536L).toInt - 32768
-            out(o) = (s & 0xFF).toByte
-            out(o + 1) = ((s >> 8) & 0xFF).toByte
-            o += 2; i += 1
-          }
-          out
-        }
-        for ((seed, n, rate) <- Seq((42L, 512, 16000), (7L, 2500, 16000),
-            (-3L, 4607, 16000), (1L, 1, 8000))) {
-          val ref = codec.encodeWav(seed, n, rate)
-          val hand = handWav(seed, n, rate)
-          val same = java.util.Arrays.equals(ref, hand)
-          println(s"[wavmicro] n=$n rate=$rate identical=$same (ref ${ref.length} B, hand ${hand.length} B)")
-          if (!same) {
-            val n0 = math.min(ref.length, hand.length)
-            val fd = (0 until n0).find(i => ref(i) != hand(i)).getOrElse(n0)
-            println(s"[wavmicro]   first diff at $fd: " +
-              s"ref=${ref.slice(fd, fd + 8).map(b => f"${b & 0xFF}%02x").mkString(" ")} " +
-              s"hand=${hand.slice(fd, fd + 8).map(b => f"${b & 0xFF}%02x").mkString(" ")}")
-          }
-        }
-        val reps = 2000
-        def bench(name: String)(f: => Unit): Unit = {
-          var k = 0; while (k < 200) { f; k += 1 }
-          val t0 = System.nanoTime()
-          k = 0; while (k < reps) { f; k += 1 }
-          println(f"[wavmicro] $name%-28s ${(System.nanoTime() - t0) / 1e3 / reps}%8.1f us/track")
-        }
-        bench("encodeWav shipped n=2500")(codec.encodeWav(7L, 2500, 16000): Unit)
-        bench("encodeWav handwritten n=2500")(handWav(7L, 2500, 16000): Unit)
-        val p = codec.encodeWav(7L, 2500, 16000)
-        bench("octileFeatures n=2500")(codec.octileFeatures(p): Unit)
-        bench("decodeResample n=2500")(codec.decodeResample(p, 8000): Unit)
 
       case "retdecomp" =>
         // r22 verdict #6: decompose kv_state_merge_retention /

@@ -38,22 +38,17 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, usage)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .withExtensions(new GraftExtensions) // SQL surface for graft functions
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .appName(s"graft-${args.head}")
-      .getOrCreate()
+    val spark = sessionBuilder(args.head).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, args.head, args.tail)
     finally spark.stop()
   }
+
+  private[graft] def sessionBuilder(command: String): SparkSession.Builder =
+    GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
+      .withExtensions(new GraftExtensions) // SQL surface for graft functions
+      .appName(s"graft-$command")
 
   private val arity = Map(
     "CreateTable" -> 3, "PopulateTable" -> 6,

@@ -4,6 +4,9 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private[graft] def sessionBuilder: SparkSession.Builder =
+    GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // Optional extra args: run only the named queries (local iteration aid;
@@ -15,18 +18,7 @@ object Verify {
       System.err.println(s"[verify] unknown queries: ${unknown.mkString(", ")}")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = sessionBuilder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // FIXTURE PREFLIGHT (round-9 lesson: the harness regenerates
     // /root/testdata and can silently change physical encodings — r8→9

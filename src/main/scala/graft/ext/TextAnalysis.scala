@@ -39,12 +39,6 @@ object TextAnalysis {
     */
   def bpeishTokenCount(text: Column): Column = stats(text).getField("bpe")
 
-  /** Punctuation/symbol character count (`[^a-z0-9\s]` on lowered text). */
-  def punctCount(text: Column): Column = stats(text).getField("punct")
-
-  /** English stop-word occurrences (word-boundary matched). */
-  def stopCount(text: Column): Column = stats(text).getField("stop")
-
   // ---- real BPE subword tokenization (merges-table greedy; see Bpe doc)
 
   import graft.functions.{Bpe, BpeCountExpr, BpeTokensExpr}
@@ -88,11 +82,9 @@ object TextAnalysis {
 
   /** Quality facets, integer-scaled (‰ and ×100) for oracle stability:
     * punct per 1000 chars, stop words per 1000 tokens, average token length
-    * ×100. `DIV` (integer division) keeps every value exact.
+    * ×100. `DIV` (integer division) keeps every value exact. `st` is the
+    * fused [[stats]] struct.
     */
-  def qualityFacets(text: Column): Seq[(String, Column)] =
-    qualityFacetsFrom(stats(text))
-
   def qualityFacetsFrom(st: Column): Seq[(String, Column)] = {
     val nChars = st.getField("chars")
     val nTokens = st.getField("ws_tokens")
@@ -112,8 +104,6 @@ object TextAnalysis {
     * mid-range word lengths, some stop-word mass, little punctuation. A
     * deterministic, cheap analog of fastText-style quality filters.
     */
-  def qualityScore(text: Column): Column = qualityScoreFrom(stats(text))
-
   def qualityScoreFrom(st: Column): Column = {
     val f = qualityFacetsFrom(st).toMap
     val lengthPts = least(f("n_tokens").cast("long"), lit(250L)) // up to 250
@@ -130,8 +120,6 @@ object TextAnalysis {
     * *shape* (per-language evidence, arg-max, abstain on zero) is the same.
     */
   val LangMarkers: Seq[String] = Seq("en", "de", "es", "fr")
-
-  def langScores(text: Column): Seq[(String, Column)] = langScoresFrom(stats(text))
 
   def langScoresFrom(st: Column): Seq[(String, Column)] =
     LangMarkers.map(lang => s"score_$lang" -> st.getField(lang))

@@ -211,8 +211,8 @@ private[sources] class KvCellTable(path: String,
       snapshot match {
         case Some(name) =>
           KvSnapshot.get(fsx, dir, name) match {
-            case Some(info) if info.configRecorded => info.salt
-            case _ => KvSalt.resolveAt(fsx, dir, None)
+            case Some(info) => info.salt
+            case None => KvSalt.resolveAt(fsx, dir, None)
           }
         case None => KvSalt.resolveAt(fsx, dir, pinnedAsOf)
       }

@@ -467,7 +467,7 @@ object KvCompactor {
           adds = merged.map(_._1) ++ carrySet ++ extraAdds,
           removes = mergeSet.map(_._1), compact = true,
           expectSeq = Some(expect), floor = Some(floor), stats = entryStats,
-          carriedRemovals = Some(pending),
+          carriedRemovals = pending,
           // A retention policy that DROPPED current cells flags the
           // entry ([[KvLog.Entry.contentDrop]]) and references the drop
           // records it staged, so change feeds crossing it ship the

@@ -110,7 +110,7 @@ object KvIndex {
     * joined frame already holds both sides); `Some(0)` is the O(1)
     * proof that lets BARE top-n serve index-first in both directions
     * ([[topNCoveredWide]]/[[topNComposite]] docs). None = unknown
-    * (pre-r19 metas, shells): the serve guards simply fall back.
+    * (shells): the serve guards simply fall back.
     */
   case class Meta(name: String, family: String, qualifier: String,
       pad: Int, asOfSeq: Long, include: Seq[String] = Nil,
@@ -731,7 +731,7 @@ object KvIndex {
       // includeOnly delta over the SAME touched-key joined frame: the
       // untouched population cannot have changed, so
       // new = old - (include-only among touched, pre) + (…, post).
-      // None (pre-r19 meta) propagates — the serve guards keep falling
+      // None (a shell) propagates — the serve guards keep falling
       // back until a full build re-bases the stat.
       val newStat =
         if (!trackPartial) m.includeOnly
@@ -765,20 +765,15 @@ object KvIndex {
   /** Whether the log cannot serve the base span `(since, latest]` as a
     * CDC read: it crosses a salt declaration the scan refuses (same
     * boundary rule — a declaration at exactly `since + 1` has nothing
-    * below it and passes), it dips below the compaction floor (the
+    * below it and passes), or it dips below the compaction floor (the
     * merged-away segments' change sets are not reconstructible —
-    * `KvLog.changedFiles` throws on the same condition), or it crosses
-    * an OPAQUE retention compaction (a pre-r17 drop entry with no
-    * drop-record files — the incremental refresh would silently keep
-    * dead index entries and the covered fast path would then serve them
-    * unverified; the rebuild re-derives the exact post-retention
-    * state). Retention entries WITH drop files serve incrementally: the
-    * feed ships the drops as exact-version markers, the touched-key
-    * probe sees their rowKeys, and the post-image re-read at `latest`
-    * reflects the post-retention state — refresh stays O(changes)
-    * across a retention pass. Probed EAGERLY because the scan's
-    * refusals only fire at plan time, far from the decision points
-    * here.
+    * `KvLog.changedFiles` throws on the same condition). Retention
+    * entries serve incrementally: the feed ships the drops as
+    * exact-version markers, the touched-key probe sees their rowKeys,
+    * and the post-image re-read at `latest` reflects the post-retention
+    * state — refresh stays O(changes) across a retention pass. Probed
+    * EAGERLY because the scan's refusals only fire at plan time, far
+    * from the decision points here.
     */
   private def spanUnservable(fs: FileSystem, table: Path, since: Long,
       latest: Long): Boolean =
@@ -795,7 +790,6 @@ object KvIndex {
     if (KvSalt.declsIn(fs, table, since, latest).exists(_ != since + 1))
       return None
     val entries = (since + 1 to latest).flatMap(KvLog.read(fs, table, _))
-    if (entries.exists(e => e.contentDrop && e.dropFiles.isEmpty)) return None
     // PRE-IMAGE SURVIVAL: when the span CARRIES CONTENT (appends, or a
     // retention pass's drop records), the exact incremental diff
     // time-travels to `since` for the touched keys' pre-image — and a

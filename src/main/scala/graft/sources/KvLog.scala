@@ -55,7 +55,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *   !<fileName>[\t<stat>...]                 // retention drop records (CDC side feed)
   * }}}
   *
-  * A compact entry additionally carries the PENDING REMOVALS it
+  * Every compact entry additionally carries the PENDING REMOVALS it
   * checkpoints over (`~<fileName>\t<removedAtMs>` lines, plus a `pend`
   * header token marking the entry as carrying a complete pending set):
   * every file some EARLIER entry removed that is still awaiting vacuum,
@@ -63,6 +63,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * anchor for garbage attribution — [[removalTimes]] replays from the
   * horizon instead of seq 0, and [[truncate]] may drop expired pre-floor
   * entries entirely without vacuum losing grace clocks.
+  *
+  * [[append]] writes only these shapes and [[read]] accepts only them: a
+  * compact header without `pend`, or a `drop` header with no `!` lines,
+  * is refused with an error naming the entry file.
   *
   * An add line may carry MANIFEST-LEVEL FILE STATISTICS, tab-separated
   * after the name: `r=<rows>`, `b=<bytes>`, `k=<b64(minKey)>,<b64(maxKey)>`
@@ -73,9 +77,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * pruning, LIMIT planning, pushed COUNT/MIN/MAX(ts), and maintenance
   * sizing all read the log instead of opening one parquet footer (an
   * object-store round-trip) per segment per query — the Delta/Iceberg
-  * stats-in-manifest shape. Entries without stats (legacy tables, seeded
-  * migrations) degrade per-file to the footer path, never fail. Unknown
-  * tokens are ignored on read (forward compatibility).
+  * stats-in-manifest shape. Only the entry seeded from a log-less
+  * external directory ([[seedFromDirIfNeeded]]) lists files without
+  * stats; those degrade per-file to the footer path, never fail. Unknown
+  * stat tokens are ignored on read (forward compatibility).
   *
   * The writer tag makes streaming epoch re-commits IDEMPOTENT: a recovered
   * query re-running `commit(epoch)` finds its own tag on the latest entry
@@ -174,15 +179,10 @@ private[graft] object KvLog {
       adds: Seq[String], removes: Seq[String],
       stats: Map[String, FileStat] = Map.empty,
       /** Pre-entry removals still awaiting vacuum, name → removal time —
-        * present (possibly empty) iff `carriesPending`.
+        * the complete pending set on every compact entry (the `pend`
+        * header token), empty on appends.
         */
       carriedRemovals: Map[String, Long] = Map.empty,
-      /** Whether this entry checkpoints the complete pending-removal set
-        * (the `pend` header token): anchored replay and truncation are
-        * only sound when true — a pre-round-11 compact entry removes
-        * without carrying, and must keep the full replay.
-        */
-      carriesPending: Boolean = false,
       /** SALT-LAYOUT DECLARATION (the `salt=` header token): this entry's
         * adds — and every later entry's, until a newer declaration — store
         * rowKeys under this salt layout (`Some(n)` = [[KvSalt]]-prefixed
@@ -206,11 +206,8 @@ private[graft] object KvLog {
         * entry must also carry the change: [[dropFiles]] record the
         * dropped coordinates as exact-version delete markers (the Delta
         * CDF delete-row shape), and change feeds ship them like any
-        * other marker. A drop entry WITHOUT drop files (pre-r17 logs)
-        * stays opaque: every CDC span crossing it refuses loudly
-        * ([[changedFiles]]) and incremental consumers (index refresh,
-        * incremental pivots) re-baseline from a full read instead of
-        * silently missing the drops.
+        * other marker. A drop entry always carries drop files: [[append]]
+        * refuses one without, and [[read]] refuses to parse one.
         */
       contentDrop: Boolean = false,
       /** RETENTION DROP-RECORD side files (the `!` line kind): parquet
@@ -311,10 +308,8 @@ private[graft] object KvLog {
     * the floor, contiguous from the current start — a gap would make
     * "first retained" meaningless) and records the new start in `_trunc`.
     *
-    * Refused (returns 0) when the horizon entry does not carry its
-    * pending set: dropping history the vacuum still replays would turn
-    * grace-from-removal into grace-from-mtime and reclaim too early.
-    * Driver-side, O(truncated entries), idempotent.
+    * Returns 0 while the table has no checkpoint. Driver-side,
+    * O(truncated entries), idempotent.
     */
   def truncate(fs: FileSystem, table: Path, retentionMs: Long): Int = {
     require(retentionMs >= 0, "graft-kv log: retention must be non-negative")
@@ -331,7 +326,7 @@ private[graft] object KvLog {
       .filter(st => st.isFile && st.getModificationTime < cutoff)
       .foreach(st => fs.delete(st.getPath, false): Unit)
     val h = horizon(fs, table)
-    if (h < 0 || !read(fs, table, h).exists(_.carriesPending)) return 0
+    if (h < 0) return 0
     val fl = floor(fs, table)
     // NAMED SNAPSHOTS are durable CDC anchors (r18, [[changedFiles]]):
     // entries ABOVE the oldest snapshot seq are never truncated — their
@@ -385,6 +380,7 @@ private[graft] object KvLog {
       val lines = t.split("\n").toSeq.filter(_.nonEmpty)
       val header = lines.head.split(" ")
       require(header(0) == "v1", s"graft-kv log: unknown entry version in $p")
+      val compact = header(1) == "compact"
       val writer = header.drop(2).collectFirst {
         case w if w.startsWith("writer=") => w.stripPrefix("writer=")
       }
@@ -396,7 +392,17 @@ private[graft] object KvLog {
         val toks = l.tail.split("\t")
         toks.head -> parseStat(toks.tail)
       }
-      Entry(seq, compact = header(1) == "compact", writer,
+      // Shapes no writer of this engine produces are refused, not guessed
+      // at: a checkpoint without its pending set cannot anchor removal
+      // attribution, and a retention drop without drop records cannot be
+      // expressed as a change feed.
+      def refuse(what: String): Nothing = throw new IllegalStateException(
+        s"graft-kv log: $p is $what, a shape this engine does not read")
+      if (compact && !header.contains("pend"))
+        refuse("a compact entry without its pending-removal set (`pend`)")
+      if (header.contains("drop") && dropLines.isEmpty)
+        refuse("a retention-drop entry without drop files")
+      Entry(seq, compact, writer,
         adds = addLines.map(_._1),
         removes = lines.tail.collect { case l if l.startsWith("-") => l.tail },
         stats = (addLines ++ dropLines)
@@ -405,7 +411,6 @@ private[graft] object KvLog {
           val Array(n, t) = l.tail.split("\t", 2)
           n -> t.toLong
         }.toMap,
-        carriesPending = header.contains("pend"),
         saltDecl = header.drop(2).collectFirst {
           case s if s.startsWith("salt=") => s.stripPrefix("salt=").toInt
         },
@@ -473,29 +478,40 @@ private[graft] object KvLog {
     * then the `_latest` hint). Returns the allocated seq. When `writer` is
     * set and already tags the latest entry, the append is a streaming epoch
     * REPLAY and is skipped (returns the existing seq).
+    *
+    * A compact entry always records `carriedRemovals` as its complete
+    * pending set (empty when nothing awaits vacuum); an append entry
+    * carries none. A `contentDrop` entry must be a compact one that
+    * references its drop files — the only shapes [[read]] accepts.
     */
   def append(fs: FileSystem, table: Path, adds: Seq[String],
       removes: Seq[String] = Nil, compact: Boolean = false,
       writer: Option[String] = None, expectSeq: Option[Long] = None,
       floor: Option[Long] = None,
       stats: Map[String, FileStat] = Map.empty,
-      carriedRemovals: Option[Map[String, Long]] = None,
+      carriedRemovals: Map[String, Long] = Map.empty,
       saltDecl: Option[Int] = None,
       layoutExpect: Option[Option[Int]] = None,
       contentDrop: Boolean = false,
-      dropFiles: Seq[String] = Nil): Long =
+      dropFiles: Seq[String] = Nil): Long = {
+    require(compact || carriedRemovals.isEmpty,
+      s"graft-kv log: only a compact entry carries pending removals ($table)")
+    require(!contentDrop || (compact && dropFiles.nonEmpty),
+      s"graft-kv log: a retention-drop entry on $table must be a compact " +
+        "entry that references its drop files")
     appendLocks.computeIfAbsent(table.toString, _ => new Object).synchronized {
       appendLocked(fs, table, adds, removes, compact, writer, expectSeq,
         floor, stats, carriedRemovals, saltDecl, layoutExpect, contentDrop,
         dropFiles)
     }
+  }
 
   private def appendLocked(fs: FileSystem, table: Path, adds: Seq[String],
       removes: Seq[String], compact: Boolean,
       writer: Option[String], expectSeq: Option[Long],
       floor: Option[Long],
       stats: Map[String, FileStat],
-      carriedRemovals: Option[Map[String, Long]],
+      carriedRemovals: Map[String, Long],
       saltDecl: Option[Int],
       layoutExpect: Option[Option[Int]],
       contentDrop: Boolean,
@@ -538,14 +554,14 @@ private[graft] object KvLog {
     }
     val kind = if (compact) "compact" else "append"
     val tag = writer.fold("")(w => s" writer=$w")
-    val pend = if (carriedRemovals.isDefined) " pend" else ""
+    val pend = if (compact) " pend" else ""
     val salt = saltDecl.fold("")(n => s" salt=$n")
     val drop = if (contentDrop) " drop" else ""
     val body = (s"v1 $kind$tag$pend$salt$drop" +:
       (adds.map(n => "+" + n + stats.get(n).fold("")(statSuffix)) ++
         removes.map("-" + _) ++
         dropFiles.map(n => "!" + n + stats.get(n).fold("")(statSuffix)) ++
-        carriedRemovals.getOrElse(Map.empty).toSeq.sorted
+        carriedRemovals.toSeq.sorted
           .map { case (n, t) => s"~$n\t$t" })).mkString("", "\n", "\n")
     val tmp = new Path(logDir(table), s".tmp-${UUID.randomUUID().toString.take(8)}")
     writeText(fs, tmp, body)
@@ -733,8 +749,7 @@ private[graft] object KvLog {
       // directory, the loser's append throws and finds the winner's
       // identical seed already published.
       try {
-        append(fs, table, adds = preexisting, compact = true,
-          carriedRemovals = Some(Map.empty))
+        append(fs, table, adds = preexisting, compact = true)
         true
       } catch {
         case e: ConcurrentCommitException =>
@@ -836,17 +851,15 @@ private[graft] object KvLog {
     * finish (the read-grace contract [[KvCompactor]]'s deferred deletes
     * rely on).
     *
-    * ANCHORED REPLAY: when the horizon checkpoint carries its pending-
-    * removal set (`pend` entries, written by every current compaction),
-    * attribution starts there — O(commits since checkpoint) probes, and
-    * pre-floor entries may have been [[truncate]]d away entirely. A
-    * pre-`pend` checkpoint (or no checkpoint) keeps the full O(log
-    * length) replay, still only on the GC path.
+    * ANCHORED REPLAY: the horizon checkpoint carries its pending-removal
+    * set, so attribution starts there — O(commits since checkpoint)
+    * probes, and pre-floor entries may have been [[truncate]]d away
+    * entirely. A table with no checkpoint replays from seq 0.
     */
   def removalTimes(fs: FileSystem, table: Path): Map[String, Long] = {
     val latest = latestSeq(fs, table)
     val h = horizon(fs, table)
-    val anchor = if (h >= 0) read(fs, table, h).filter(_.carriesPending) else None
+    val anchor = if (h >= 0) read(fs, table, h) else None
     val from = anchor.fold(0L)(_ => h)
     val out = scala.collection.mutable.HashMap.empty[String, Long]
     anchor.foreach(e => out ++= e.carriedRemovals)
@@ -920,9 +933,9 @@ private[graft] object KvLog {
 
   /** Manifest-carried [[FileStat]]s for the live file set — the planning
     * side's zero-footer-open source of row counts, byte sizes, and
-    * rowKey/ts bounds. Files whose publishing entry carried no stats
-    * (legacy tables, seeded migrations) are absent; consumers fall back
-    * per-file.
+    * rowKey/ts bounds. Files without stats — only a log-less external
+    * directory's seed entry produces them — are absent; consumers fall
+    * back per-file.
     */
   def liveFileStats(fs: FileSystem, table: Path): Map[String, FileStat] =
     replayLive(fs, table, math.max(horizon(fs, table), 0L),
@@ -1044,34 +1057,11 @@ private[graft] object KvLog {
     val files = (sinceSeq + 1 to asOf).flatMap { seq =>
       val entry = read(fs, table, seq)
       if (belowFloor) requireNoSpanGap(table, sinceSeq, asOf, seq, fl, entry)
-      entry.toSeq.flatMap { e =>
-        requireNoOpaqueDrop(table, e)
-        if (e.compact) e.dropFiles else e.adds
-      }
+      entry.toSeq.flatMap(e => if (e.compact) e.dropFiles else e.adds)
     }.sorted
     if (belowFloor) requireSpanFiles(fs, table, sinceSeq, asOf, files)
     files
   }
-
-  /** A CDC span crossing an OPAQUE retention compaction — an
-    * [[Entry.contentDrop]] entry with no [[Entry.dropFiles]] (pre-r17
-    * logs) — refuses: the pass physically removed current cells and left
-    * no record of which, a change the feed cannot express. Entries that
-    * DO carry drop files are servable: the feed ships the drop records
-    * as exact-version delete markers and consumers absorb them like any
-    * other marker cell.
-    */
-  private def requireNoOpaqueDrop(table: Path, e: Entry): Unit =
-    if (e.contentDrop && e.dropFiles.isEmpty) throw new IllegalStateException(
-      s"graft-kv log: the change span over $table crosses a retention " +
-        s"compaction at seq ${e.seq} (ttl/versions dropped current " +
-        "cells) that recorded no drop files — a pre-r17 (legacy) pass " +
-        "whose drops are not expressible as a change feed. To recover: " +
-        "re-baseline this consumer from a full scan or an asOfSeq read " +
-        s"at or after seq ${e.seq} (secondary indexes recover themselves " +
-        "— CALL sys.refresh_index detects the opaque span and rebuilds). " +
-        "Passes staged from this release always record drop files, so " +
-        "the refusal cannot recur on new entries.")
 
   /** Floor admission for a change span (r18): a below-floor span refuses
     * UNLESS a named snapshot at seq ≤ `since` anchors it — snapshots are
@@ -1184,7 +1174,6 @@ private[graft] object KvLog {
         val entry = read(fs, table, seq)
         if (belowFloor) requireNoSpanGap(table, s, upTo, seq, fl, entry)
         entry.toSeq.flatMap { e =>
-          requireNoOpaqueDrop(table, e)
           // A compact entry's adds re-publish already-consumed data and
           // are skipped; its DROP FILES are the span's delete records
           // (exact-version markers) and ship like any other file — the

@@ -161,7 +161,7 @@ object KvResalt {
         adds = staged.map(_._1), removes = live,
         compact = true, expectSeq = Some(expect), floor = Some(expect),
         stats = staged.collect { case (n, Some(st)) => n -> st }.toMap,
-        carriedRemovals = Some(pending),
+        carriedRemovals = pending,
         saltDecl = Some(to.getOrElse(0)))
       // Durable fallback + write-injection source: the recorded
       // `salt_buckets` table property follows the layout. A crash before

@@ -212,11 +212,6 @@ object KvSalt {
     */
   private val DeclDirName = "_saltdecl"
 
-  /** Pre-markers hint file (one mutable space-separated seq list) — read
-    * for tables written by earlier engine versions, never written.
-    */
-  private val LegacyDeclSeqName = "_saltseq"
-
   private def declDir(table: Path) =
     new Path(new Path(table, KvLog.LogDirName), DeclDirName)
 
@@ -224,21 +219,12 @@ object KvSalt {
     * every table whose layout never changed (then [[resolveAt]] is a
     * marker-dir probe + a `_salt` probe — still O(1) metadata reads).
     */
-  private[sources] def declSeqs(fs: FileSystem, table: Path): Seq[Long] = {
-    val markers = try {
+  private[sources] def declSeqs(fs: FileSystem, table: Path): Seq[Long] =
+    try {
       fs.listStatus(declDir(table)).toSeq.map(_.getPath.getName)
         .filter(n => n.nonEmpty && n.forall(c => c >= '0' && c <= '9'))
-        .map(_.toLong)
+        .map(_.toLong).sorted(Ordering[Long].reverse)
     } catch { case _: java.io.FileNotFoundException => Nil }
-    val legacy = {
-      val p = new Path(new Path(table, KvLog.LogDirName), LegacyDeclSeqName)
-      val text = try Some(KvLog.readText(fs, p)) catch {
-        case _: java.io.FileNotFoundException => None
-      }
-      text.toSeq.flatMap(_.trim.split("\\s+")).filter(_.nonEmpty).map(_.toLong)
-    }
-    (markers ++ legacy).distinct.sorted(Ordering[Long].reverse)
-  }
 
   /** Record `seq` as a (pending) declaration seq: create the immutable
     * per-seq marker. Call BEFORE publishing the declaring entry — see

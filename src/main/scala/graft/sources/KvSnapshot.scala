@@ -45,19 +45,18 @@ object KvSnapshot {
 
   /** One snapshot: `seq` is the log version it pinned (informational once
     * created — reads use the stored list), `files` the complete live set
-    * at create time with its manifest stats. `configRecorded` snapshots
-    * (every snapshot from round 12 on) also capture the table CONFIG at
-    * create time — the salt registration and catalog properties — so a
-    * clone reproduces the snapshot's world, not the source's CURRENT one
-    * (a table converted to a different salt after the snapshot would
-    * otherwise stamp the clone with a bucket count its pinned files were
-    * never written under — silently empty point lookups).
+    * at create time with its manifest stats. Every snapshot also
+    * captures the table CONFIG at create time — the salt registration and
+    * catalog properties — so a clone reproduces the snapshot's world, not
+    * the source's CURRENT one (a table converted to a different salt
+    * after the snapshot would otherwise stamp the clone with a bucket
+    * count its pinned files were never written under — silently empty
+    * point lookups).
     */
   case class Info(name: String, seq: Long, createdAt: Long,
       files: Seq[(String, Option[KvLog.FileStat])],
       salt: Option[Int] = None,
-      props: Map[String, String] = Map.empty,
-      configRecorded: Boolean = false)
+      props: Map[String, String] = Map.empty)
 
   private def snapDir(table: Path) = new Path(table, DirName)
   private def snapPath(table: Path, name: String) = new Path(snapDir(table), name)
@@ -84,9 +83,9 @@ object KvSnapshot {
     require(seq >= 0, s"graft-kv snapshot: $path is empty — nothing to pin")
     val files = KvLog.liveFilesWithStats(fs, dir)
     val now = System.currentTimeMillis()
-    // cfg marks a config-recording manifest (Info doc); salt= carries the
-    // registration the pinned files were written under; `p<TAB>k=v` lines
-    // carry the catalog properties. Legacy readers ignore unknown tokens.
+    // cfg marks a config-recording manifest (the only shape [[get]]
+    // reads); salt= carries the registration the pinned files were
+    // written under; `p<TAB>k=v` lines carry the catalog properties.
     val salt = KvSalt.resolveAt(fs, dir, None)
     val props = KvTableProps.read(fs, dir)
     val header = s"v1 snapshot seq=$seq at=$now cfg" +
@@ -107,10 +106,12 @@ object KvSnapshot {
       throw new IllegalStateException(
         s"graft-kv snapshot: concurrent create of '$name' on $path")
     }
-    Info(name, seq, now, files)
+    Info(name, seq, now, files, salt, props)
   }
 
-  /** Read one snapshot's manifest; None when it doesn't exist. */
+  /** Read one snapshot's manifest; None when it doesn't exist. A manifest
+    * without the `cfg` token records no table config and is refused.
+    */
   def get(fs: FileSystem, table: Path, name: String): Option[Info] = {
     requireValidName(name)
     val p = snapPath(table, name)
@@ -122,6 +123,9 @@ object KvSnapshot {
       val header = lines.head.split(" ")
       require(header(0) == "v1" && header(1) == "snapshot",
         s"graft-kv snapshot: unknown manifest version in $p")
+      if (!header.contains("cfg")) throw new IllegalStateException(
+        s"graft-kv snapshot: $p is a manifest without its table config " +
+          "(`cfg`), a shape this engine does not read")
       val seq = header.collectFirst { case h if h.startsWith("seq=") =>
         h.stripPrefix("seq=").toLong }.getOrElse(-1L)
       val at = header.collectFirst { case h if h.startsWith("at=") =>
@@ -137,8 +141,7 @@ object KvSnapshot {
           case Array(k, v) => k -> v
         }
       }.toMap
-      Info(name, seq, at, files, salt, props,
-        configRecorded = header.contains("cfg"))
+      Info(name, seq, at, files, salt, props)
     }
   }
 
@@ -213,18 +216,13 @@ object KvSnapshot {
     // before any file lands, so the copy window never looks like a
     // log-less migration to a concurrent committer.
     KvLog.ensureLogDir(dfs, dest)
-    // The clone gets the SNAPSHOT-TIME table config (a config-recording
-    // manifest carries the salt registration and catalog properties the
-    // pinned files were written under); the source's CURRENT config may
-    // have diverged since — e.g. a salt conversion — and stamping it on
-    // the clone would mis-route every read of the pinned data. Legacy
-    // (pre-cfg) manifests fall back to the source's current config, the
-    // best information available.
-    val salt = if (info.configRecorded) info.salt
-      else KvSalt.resolveAt(fs, src, None)
-    val props = if (info.configRecorded) info.props else KvTableProps.read(fs, src)
-    salt.foreach(n => KvSalt.register(dfs, dest, n))
-    KvTableProps.write(dfs, dest, props)
+    // The clone gets the SNAPSHOT-TIME table config (the manifest carries
+    // the salt registration and catalog properties the pinned files were
+    // written under); the source's CURRENT config may have diverged since
+    // — e.g. a salt conversion — and stamping it on the clone would
+    // mis-route every read of the pinned data.
+    info.salt.foreach(n => KvSalt.register(dfs, dest, n))
+    KvTableProps.write(dfs, dest, info.props)
     val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
     val srcStr = src.toString
     val destStr = dest.toString
@@ -242,8 +240,7 @@ object KvSnapshot {
       }
     KvLog.append(dfs, dest, adds = info.files.map(_._1), removes = Nil,
       compact = true,
-      stats = info.files.collect { case (n, Some(st)) => n -> st }.toMap,
-      carriedRemovals = Some(Map.empty))
+      stats = info.files.collect { case (n, Some(st)) => n -> st }.toMap)
   }
 
   /** Roll the table back to `name`'s state by publishing one checkpoint
@@ -287,24 +284,21 @@ object KvSnapshot {
       val removes = KvLog.liveFiles(fs, dir).filterNot(snapSet)
       val pending = KvLog.removalTimes(fs, dir)
         .filter { case (n, _) => fs.exists(new Path(dir, n)) }
-      // A config-recording snapshot pinned the salt layout its files were
-      // written under; when the table's layout has since changed (a
-      // [[KvResalt]]), the restore entry must DECLARE the pinned layout —
-      // it is re-publishing old-layout files, and a reader resolving the
-      // current declaration over them would strip and expand wrongly.
-      // Same atomicity as resalt: hint first, declaration on the entry,
-      // property after. Legacy (pre-cfg) snapshots can't know — current
-      // layout stands, which is also the pre-resalt status quo.
+      // The snapshot pinned the salt layout its files were written under;
+      // when the table's layout has since changed (a [[KvResalt]]), the
+      // restore entry must DECLARE the pinned layout — it is re-publishing
+      // old-layout files, and a reader resolving the current declaration
+      // over them would strip and expand wrongly. Same atomicity as
+      // resalt: hint first, declaration on the entry, property after.
       val declaring: Option[Int] =
-        if (info.configRecorded &&
-            KvSalt.resolveAt(fs, dir, None) != info.salt)
+        if (KvSalt.resolveAt(fs, dir, None) != info.salt)
           Some(info.salt.getOrElse(0))
         else None
       declaring.foreach(_ => KvSalt.declare(fs, dir, expect))
       try {
         val seq = KvLog.append(fs, dir, adds = snapNames, removes = removes,
           compact = true, expectSeq = Some(expect), floor = Some(expect),
-          stats = entryStats, carriedRemovals = Some(pending),
+          stats = entryStats, carriedRemovals = pending,
           saltDecl = declaring)
         declaring.foreach(d => KvSalt.recordLayoutProperty(fs, dir,
           if (d == 0) None else Some(d)))

@@ -154,35 +154,14 @@ private[sources] class KvTailStream(
     * unambiguous because [[advance]] admits a drop entry ATOMICALLY
     * (never parks at `(seq, idx > 0)` inside one), so `idx > 0` on a
     * compact entry still means "fresh-start mid-delivery of the adds".
-    *
-    * A PRE-R17 retention entry (drop flag, no drop files) REFUSES
-    * instead of skipping: the drop is a change it cannot express, and
-    * skipping would leave every downstream consumer holding the dropped
-    * cells as live state forever — the same silent divergence the batch
-    * CDC paths refuse (`KvLog.requireNoOpaqueDrop`). Registered tails
-    * gate compaction BELOW their position, so the refused entry is
-    * always AHEAD of what the consumer holds: the stream fails loudly at
-    * the exact position where its state stopped being reconstructible,
-    * and the recovery is a re-baseline from the horizon (full current
-    * state), like a floor crossing. A FRESH start at the entry (the
-    * `InitIdx` sentinel, or resuming its own mid-delivery) is fine
-    * either way — the entry's adds ARE the post-retention current
-    * state, exactly the baseline a new stream wants.
     */
-  private def visibleAdds(entry: KvLog.Entry, cur: LogPos): Seq[String] = {
+  private def visibleAdds(entry: KvLog.Entry, cur: LogPos): Seq[String] =
     if (!entry.compact || cur.idx != 0) entry.adds
-    else if (entry.contentDrop && entry.dropFiles.isEmpty)
-      throw new IllegalStateException(
-        s"graft-kv tail: log entry ${entry.seq} of $path is a RETENTION " +
-          "compaction (ttl/versions dropped current cells) that recorded " +
-          "no drop files — not expressible as a change feed. Restart the " +
-          "stream from a fresh checkpoint at the horizon to re-baseline " +
-          "on the current state.")
     else entry.dropFiles // advanced past: the drop feed (Nil for plain merges)
-  }
 
   /** One admitted file's size: the entry's manifest stat (free), or a
-    * `getFileStatus` probe for stat-less legacy entries.
+    * `getFileStatus` probe for the stat-less seed entry of a log-less
+    * external directory.
     */
   private def fileSize(entry: KvLog.Entry, name: String): Long =
     entry.stats.get(name).map(_.bytes)

@@ -32,7 +32,7 @@ import org.apache.spark.sql.SparkSession
   * metadata, driver-side — the same cost every scan-planning pass pays)
   * plus a CHECKPOINT-ANCHORED removal-attribution replay (the horizon
   * entry carries its pending set, [[KvLog.removalTimes]] — O(commits
-  * since checkpoint), full replay only on pre-anchor legacy logs);
+  * since checkpoint), full replay only before the first checkpoint);
   * deletes are per-stray, not per-live-file. Requires a manifest: on a legacy
   * directory every file is only discoverable by listing, so "unreferenced"
   * is undefined and vacuum refuses rather than guesses.

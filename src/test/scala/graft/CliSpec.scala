@@ -152,4 +152,17 @@ class CliSpec extends SparkSpec {
     }
     e.getMessage should include("dedup_exact") // the listing names the registry
   }
+
+  test("the Cli session carries the same SQL conf as Verify's") {
+    // create() builds a fresh session on the shared context without
+    // replacing the suite's session; only session-level conf differs.
+    def sqlConf(b: org.apache.spark.sql.SparkSession.Builder) =
+      try b.create().conf.getAll.filter(_._1.startsWith("spark.sql."))
+      finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    val cli = sqlConf(Cli.sessionBuilder("CreateTable"))
+    cli shouldBe sqlConf(Verify.sessionBuilder)
+    cli.get("spark.sql.session.timeZone") shouldBe Some("UTC")
+    cli.get("spark.sql.sources.v2.bucketing.shuffle.enabled") shouldBe
+      Some("true")
+  }
 }

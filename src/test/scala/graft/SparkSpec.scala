@@ -9,26 +9,7 @@ import org.scalatest.matchers.should.Matchers
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      // Storage-partitioned joins over the graft-kv connector's reported
-      // KeyGroupedPartitioning (KvRegionLayout): the main opt-in plus
-      // partition-value padding so pruned/missing regions on one side
-      // zip against empties instead of forcing a shuffle.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-      // The connector clusters by REGION-OF-rowKey; joins on
-      // (rowKey, qualifier) are still co-located by it (equal pairs are a
-      // fortiori equal on rowKey), but the default co-partition check
-      // demands partition keys == join keys exactly — relax it.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val s = GraftSession.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

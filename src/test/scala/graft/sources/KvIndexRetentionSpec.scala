@@ -280,17 +280,26 @@ class KvIndexRetentionSpec extends graft.SparkSpec {
     c2.asInstanceOf[KvCompactor.Compacted].dropped shouldBe 0L
     spark.read.format("graft-kv").option("sinceSeq", "0").load(dir2)
       .count() shouldBe 0L // the merge re-publishes, it does not change
-    // a LEGACY drop entry (flag, no drop files — the pre-r17 shape)
-    // still refuses: the change is real and unrecorded
+    // an OPAQUE drop entry (flag, no drop files) cannot be published:
+    // the change would be real and unrecorded
     val dir3 = freshDir("cdc_opaque")
     twoVersions(50).write.format("graft-kv").option("regions", 1)
       .mode("overwrite").save(dir3)
     val fs3 = fsOf(dir3)
-    KvLog.append(fs3, new Path(dir3), adds = Nil, removes = Nil,
-      compact = true, contentDrop = true)
+    val t3 = new Path(dir3)
+    val refused = intercept[IllegalArgumentException] {
+      KvLog.append(fs3, t3, adds = Nil, removes = Nil,
+        compact = true, contentDrop = true)
+    }
+    refused.getMessage should include("drop files")
+    KvLog.latestSeq(fs3, t3) shouldBe 0L
+    // ...and one written by hand is refused on read, so the CDC span
+    // over it fails instead of silently skipping the drops
+    KvLog.writeText(fs3, new Path(s"$dir3/_log", f"${1L}%020d"),
+      "v1 compact pend drop\n")
     val e = intercept[Exception] {
       spark.read.format("graft-kv").option("sinceSeq", "0").load(dir3).count()
     }
-    e.getMessage should include("retention compaction")
+    e.getMessage should include("retention-drop entry without drop files")
   }
 }

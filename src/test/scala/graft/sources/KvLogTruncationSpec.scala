@@ -40,7 +40,7 @@ class KvLogTruncationSpec extends graft.SparkSpec {
     KvCompactor.compact(spark, d, regions = 2) // removes the 6 originals
     val seq1 = KvLog.latestSeq(fs, table)
     val e1 = KvLog.read(fs, table, seq1).get
-    e1.carriesPending shouldBe true
+    e1.compact shouldBe true
     e1.carriedRemovals shouldBe Map.empty // nothing pending BEFORE this one
     val t1 = fs.getFileStatus(new Path(s"$d/_log", f"$seq1%020d")).getModificationTime
     // a second compaction (after two more commits) must CARRY the first
@@ -52,7 +52,7 @@ class KvLogTruncationSpec extends graft.SparkSpec {
     KvCompactor.compact(spark, d, regions = 2)
     val seq2 = KvLog.latestSeq(fs, table)
     val e2 = KvLog.read(fs, table, seq2).get
-    e2.carriesPending shouldBe true
+    e2.compact shouldBe true
     e2.carriedRemovals.size shouldBe 6
     e2.carriedRemovals.values.foreach(_ shouldBe t1)
     // anchored attribution equals the carried + own removes

@@ -404,11 +404,5 @@ class KvSaltSpec extends graft.SparkSpec {
     KvSalt.declSeqs(fs, t) should contain(seq)
     KvSalt.undeclare(fs, t, 7L) // unpublished leftover cleans up fine
     KvSalt.declSeqs(fs, t) shouldBe Seq(seq)
-
-    // Legacy single-file hints (pre-marker tables) are still discovered,
-    // unioned with markers.
-    KvLog.writeText(fs, new Path(new Path(t, KvLog.LogDirName), "_saltseq"),
-      "3")
-    KvSalt.declSeqs(fs, t).toSet shouldBe Set(seq, 3L)
   }
 }
