@@ -3,9 +3,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JVM/codegen/FS-listing costs land here, not on the
     // first query of the run.
@@ -42,7 +42,7 @@ object Bench {
     // BASELINE.md next to the per-query baselines it scales.
     def canary(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 8000000L, 1L, cpus.toInt)
+      spark.range(0L, 8000000L, 1L, cpus)
         .selectExpr("id % 997 AS k", "id AS v")
         .groupBy("k").agg(org.apache.spark.sql.functions.sum("v").as("s"))
         .agg(org.apache.spark.sql.functions.sum("s")).collect(): Unit
@@ -70,7 +70,7 @@ object Bench {
       val t0 = System.nanoTime()
       // xxhash64 values are incompressible: 4M rows × 2 high-entropy int64
       // columns ≈ 64 MB on disk regardless of parquet encoding/compression.
-      spark.range(0L, 4000000L, 1L, cpus.toInt)
+      spark.range(0L, 4000000L, 1L, cpus)
         .selectExpr("xxhash64(id) AS a", "xxhash64(id, 1) AS b")
         .write.mode("overwrite").parquet(path)
       spark.read.parquet(path).selectExpr("bit_xor(a)").collect(): Unit
@@ -136,27 +136,17 @@ object Bench {
       if (s.size % 2 == 1) s(s.size / 2)
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
-    Legs.reset() // process-global buffer: a prior run in this JVM must
-                 // not leak samples or stale has() hits (ADVICE r19)
-    def onePass(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        instrumented: Boolean): Double = {
-      Legs.enabled = instrumented
+    def onePass(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try {
-        val df = fn(spark, sfDir)
-        val tBuilt = System.nanoTime()
-        df.count()
-        val tDone = System.nanoTime()
-        // the count IS the read-back leg for queries whose build
-        // phase recorded pivot/write legs (the export round-trips)
-        if (instrumented && Legs.has(name))
-          Legs.record(name, "read", (tDone - tBuilt) / 1e9)
-        (tDone - t0) / 1e9
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           -1.0
-      } finally Legs.enabled = false
+      }
     }
     // REPS ARE SPREAD ACROSS THE SUITE (r20, verdict #1): rep 1 of every
     // query, then rep 2, … — adjacent samples of ONE query no longer
@@ -182,23 +172,11 @@ object Bench {
         canaryStreamSamples += canaryStream()
       }
     }
-    // Sweep 1 runs instrumented. If a query recorded legs, its plan was
-    // STAGED (the pivot cache adds a pass) — discard that timing so
-    // totals stay comparable with every pre-instrumentation baseline;
-    // legs are the instrumented pass's one sample per leg. Queries that
-    // record nothing ran the normal plan, so the timing counts as rep 1.
-    ordered.foreach { case (name, fn) =>
-      val t = onePass(name, fn, instrumented = true)
-      if (t < 0) failed += name
-      else if (!Legs.has(name)) samples(name) += t
-      tick()
-    }
-    // Fused sweeps until every live query holds `reps` samples (leg
-    // queries need all `reps` here; the rest need `reps - 1`).
+    // `reps` sweeps; a query that fails is not run again.
     (1 to reps).foreach { _ =>
       ordered.foreach { case (name, fn) =>
-        if (!failed(name) && samples(name).size < reps) {
-          val t = onePass(name, fn, instrumented = false)
+        if (!failed(name)) {
+          val t = onePass(name, fn)
           if (t < 0) failed += name else samples(name) += t
           tick()
         }
@@ -235,19 +213,8 @@ object Bench {
     val canaryJson = samplesJson(canaryMed, canarySamples.toSeq)
     val canaryIoJson = samplesJson(canaryIoMed, canaryIoSamples.toSeq)
     val canaryStreamJson = samplesJson(canaryStreamMed, canaryStreamSamples.toSeq)
-    // Per-leg medians for the export round-trips (Legs doc): pivot (CPU,
-    // normalize by canary), write + read (IO, normalize by canary_io).
-    // Legs sum ≈ the query total (the total additionally carries plan
-    // build + output wipe); the TOTAL stays the gate, legs adjudicate.
-    val legsJson = Legs.snapshot().toSeq.sortBy(_._1).map { case (q, legs) =>
-      val inner = legs.toSeq.sortBy(_._1).map { case (l, xs) =>
-        s"\"" + l + "\":" + String.format(java.util.Locale.ROOT, "%.4f",
-          Double.box(medianOf(xs)))
-      }.mkString("{", ",", "}")
-      s"\"" + q + "\":" + inner
-    }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$qsMin,"canary":$canaryJson,"canary_io":$canaryIoJson,"canary_stream":$canaryStreamJson,"legs":$legsJson,"sf":"$sfDir","reps":$reps,"stat":"median","reps_spread":true}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$qsMin,"canary":$canaryJson,"canary_io":$canaryIoJson,"canary_stream":$canaryStreamJson,"sf":"$sfDir","cpus":$cpus,"reps":$reps,"stat":"median","reps_spread":true}"""
     println(line)
     // Also persist the full per-query record: the driver captures only a
     // bounded stdout tail, which truncated r6's 103-query line. The file is

@@ -62,8 +62,8 @@ object Export {
   /** Run the full export: plan + sink. */
   def run(cells: DataFrame, cfg: Config): Unit = write(plan(cells, cfg), cfg)
 
-  /** Sink an ALREADY-BUILT export plan — exposed so a leg-timed bench can
-    * cache the pivot and time the write alone ([[Legs]]).
+  /** Sink an already-built export plan. Public so a caller can build the
+    * plan with [[plan]] and run the sink as its own step.
     */
   def write(df: DataFrame, cfg: Config): Unit = {
     cfg.format match {

@@ -2802,27 +2802,6 @@ object Queries
   private[graft] def tmpOut(name: String): String =
     s"${sys.props("java.io.tmpdir")}/graft_export/$name"
 
-  /** Export write with optional LEG staging ([[Legs]], bench-only): when
-    * leg timing is on, the pivot materializes through a cache (the
-    * "pivot" leg, CPU) so the sink write (the "write" leg) times IO
-    * alone; Bench adds the read-back leg from its own phase timer. Off
-    * (Verify, tests, library callers), the plan stays fused exactly as
-    * before — pivot and write in one pass. Only the FOUR record-format
-    * round-trips stage (the ~5 s queries the flap arguments were about):
-    * the staging cache costs one extra pass, which DOUBLED the
-    * sub-second txt/seq/reader exports for no adjudication value — those
-    * stay fused (r19 mid-round bench).
-    */
-  private def exportStaged(name: String, cells: DataFrame, cfg: Export.Config): Unit =
-    if (!Legs.enabled) Export.run(cells, cfg)
-    else {
-      val planned = Export.plan(cells, cfg).cache()
-      try {
-        Legs.timed(name, "pivot")(planned.count(): Unit)
-        Legs.timed(name, "write")(Export.write(planned, cfg))
-      } finally planned.unpersist(false): Unit
-    }
-
   /** The CSV-dialect delimited schema used by the text/seq round-trips. */
   private[graft] val DelimSchema = "click,view,KEY"
 
@@ -2868,7 +2847,7 @@ object Queries
     val cfg = Export.Config(Export.Avro, TypedAvroSchema, tmpOut("avro"),
       columnFamily = Some("c"), rowKeyColumn = Some("KEY"), compression = Some("snappy"))
     graft.sinks.Sinks.deleteRecursive(spark, cfg.outputPath)
-    exportStaged("export_avro_roundtrip", cells, cfg)
+    Export.run(cells, cfg)
     graft.sinks.AvroIO.read(spark, cfg.outputPath, SchemaFile.parseAvroJson(TypedAvroSchema))
   }
 
@@ -2881,7 +2860,7 @@ object Queries
     val cfg = Export.Config(Export.Parquet, TypedAvroSchema, tmpOut("parquet"),
       columnFamily = Some("c"), rowKeyColumn = Some("KEY"), compression = Some("snappy"))
     graft.sinks.Sinks.deleteRecursive(spark, cfg.outputPath)
-    exportStaged("export_parquet_roundtrip", cells, cfg)
+    Export.run(cells, cfg)
     Export.readParquet(spark, cfg.outputPath)
   }
 
@@ -2895,7 +2874,7 @@ object Queries
     val cfg = Export.Config(Export.Orc, TypedAvroSchema, tmpOut("orc"),
       columnFamily = Some("c"), rowKeyColumn = Some("KEY"), compression = Some("zlib"))
     graft.sinks.Sinks.deleteRecursive(spark, cfg.outputPath)
-    exportStaged("export_orc_roundtrip", cells, cfg)
+    Export.run(cells, cfg)
     Export.readOrc(spark, cfg.outputPath)
   }
 
@@ -2907,7 +2886,7 @@ object Queries
     val cfg = Export.Config(Export.JsonLines, TypedAvroSchema, tmpOut("jsonl"),
       columnFamily = Some("c"), rowKeyColumn = Some("KEY"), compression = Some("gzip"))
     graft.sinks.Sinks.deleteRecursive(spark, cfg.outputPath)
-    exportStaged("export_json_roundtrip", cells, cfg)
+    Export.run(cells, cfg)
     Export.readJsonLines(spark, cfg.outputPath, TypedAvroSchema)
   }
 

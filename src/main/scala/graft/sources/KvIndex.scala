@@ -1003,7 +1003,7 @@ object KvIndex {
     * bounds, so the candidate count is the row sum of index files
     * overlapping `[loPad, hiPad)` (conservative: a partly-overlapping
     * file counts whole), and the base row count comes from the base
-    * manifest. Route to the index when candidates ≤ `maxSelectivity` ×
+    * manifest. Route to the index when candidates ≤ [[MaxSelectivity]] ×
     * base rows. The unabsorbed CDC tail rides the verified lookup as
     * always and is not part of the estimate (bounded by maintenance
     * lag).
@@ -1014,7 +1014,6 @@ object KvIndex {
     */
   def autoLookup(spark: SparkSession, path: String, family: String,
       qualifier: String, lo: String, hi: String, pad: Int = 0,
-      maxSelectivity: Double = 0.2,
       inPushdownCap: Int = InPushdownCap): DataFrame = {
     val table = new Path(path)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
@@ -1030,7 +1029,7 @@ object KvIndex {
         require(pad == 0 || pad == m.pad,
           s"graft-kv index: autoLookup pad=$pad contradicts index " +
             s"'${m.name}' (pad=${m.pad}) on ($family, $qualifier)")
-        if (rangeIsSelective(spark, fs, table, m, lo, hi, maxSelectivity))
+        if (rangeIsSelective(fs, table, m, lo, hi))
           lookup(spark, path, m.name, lo, hi, inPushdownCap)
         else scanLookup(spark, path, m.copy(name = "<scan>"), lo, hi)
       case None =>
@@ -1073,13 +1072,22 @@ object KvIndex {
       _ => KvLog.liveFilesWithStats(fs, dir))
   }
 
-  private[sources] def rangeIsSelective(spark: SparkSession, fs: FileSystem,
-      table: Path, m: Meta, lo: String, hi: String,
-      maxSelectivity: Double): Boolean = {
+  /** The routing threshold: an index serves a range when its estimated
+    * candidates are at most this share of the base rows.
+    */
+  val MaxSelectivity = 0.2
+
+  private[sources] def rangeIsSelective(fs: FileSystem, table: Path, m: Meta,
+      lo: String, hi: String): Boolean = {
     val (candidates, baseRows, _) = rangeEstimate(fs, table, m, lo, hi)
-    if (baseRows <= 0) return true // empty/stat-less base: index is free
-    candidates <= maxSelectivity * baseRows
+    isSelective(candidates, baseRows)
   }
+
+  /** [[MaxSelectivity]] applied to a [[rangeEstimate]]; an empty or
+    * stat-less base always routes (the index is free).
+    */
+  private[sources] def isSelective(candidates: Double, baseRows: Long): Boolean =
+    baseRows <= 0 || candidates <= MaxSelectivity * baseRows
 
   /** Manifest-stat cost estimate shared by [[rangeIsSelective]] and the
     * routed-plan statistics ([[KvRoutedLookup]]): (estimated candidate
@@ -1959,7 +1967,6 @@ object KvIndex {
     */
   def autoLookupComposite(spark: SparkSession, path: String, family: String,
       preds: Seq[(String, String, String)], pads: Seq[Int] = Nil,
-      maxSelectivity: Double = 0.2,
       inPushdownCap: Int = InPushdownCap): DataFrame = {
     require(preds.nonEmpty, "graft-kv index: autoLookupComposite needs at " +
       "least one (qualifier, lo, hi) predicate")
@@ -1990,7 +1997,7 @@ object KvIndex {
         }
         val (lo1, hi1) = (padBound(ordered.head._1, m.pad),
           padBound(ordered.head._2, m.pad))
-        if (rangeIsSelective(spark, fs, table, m, lo1, hi1, maxSelectivity))
+        if (rangeIsSelective(fs, table, m, lo1, hi1))
           lookupComposite(spark, path, m.name, ordered, inPushdownCap)
         else {
           val pb = m.keyQuals.zip(m.pads).map { case (q, p) =>

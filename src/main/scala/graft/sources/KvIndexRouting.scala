@@ -382,7 +382,6 @@ case class KvIndexRouting(session: SparkSession)
   private def route(cond: Expression, s: PivotShape): Option[LogicalPlan] = {
     val table = new Path(s.path)
     val fs = table.getFileSystem(session.sessionState.newHadoopConf())
-    val maxSel = session.conf.get(MaxSelectivityKey, "0.2").toDouble
     val conjuncts = splitConjunctivePredicates(cond)
     val indexes = KvIndex.list(fs, table).filter(_.family == s.family)
 
@@ -403,7 +402,7 @@ case class KvIndexRouting(session: SparkSession)
         .flatMap { m =>
           bounds(conjuncts, valOut, m.pad).flatMap { case (lo, hi) =>
             val (cand, baseRows, _) = KvIndex.rangeEstimate(fs, table, m, lo, hi)
-            if (baseRows <= 0 || cand <= maxSel * baseRows)
+            if (KvIndex.isSelective(cand, baseRows))
               Some((m, (lo, hi), cand))
             else None
           }
@@ -433,7 +432,7 @@ case class KvIndexRouting(session: SparkSession)
           }).flatMap { pc =>
             val (cand, baseRows, _) = KvIndex.rangeEstimate(
               fs, table, m, pc.head._1, pc.head._2)
-            if (baseRows <= 0 || cand <= maxSel * baseRows)
+            if (KvIndex.isSelective(cand, baseRows))
               Some((m, pc, cand))
             else None
           }
@@ -965,7 +964,6 @@ object KvIndexRouting {
     * non-digit value where the unrouted CAST would null it out.
     */
   val EnabledKey = "spark.graft.kv.index.routing.enabled"
-  val MaxSelectivityKey = "spark.graft.kv.index.routing.maxSelectivity"
 
   /** Idempotently append the rule to the session's experimental
     * optimizations — the runtime installation path for sessions not

@@ -278,11 +278,6 @@ private[sources] class KvReplaceDataBatchWrite(path: String,
     * the table columns (`__row_operation` in Spark 4's rewrite plans) —
     * writers consume the CELL columns by name and ignore the rest.
     */
-  if (sys.env.contains("GRAFT_RLO_DEBUG"))
-    // scalastyle:off println
-    println(s"[rlo-debug] write schema: ${writeSchema.fieldNames.mkString(",")}")
-    // scalastyle:on println
-
   private val cellIdx: Array[Int] = graft.kv.Cell.schema.fieldNames.map { n =>
     val i = writeSchema.fieldNames.indexOf(n)
     require(i >= 0,

@@ -109,6 +109,50 @@ class KvIndexRoutingSpec extends graft.SparkSpec {
     df.count() shouldBe 390L
   }
 
+  test("the routing threshold: an estimate at 0.2 × base rows routes, just above keeps the scan") {
+    KvIndex.MaxSelectivity shouldBe 0.2
+    val path = s"$base/threshold"
+    graft.sinks.Sinks.deleteRecursive(spark, path)
+    spark.range(1000).selectExpr(
+      "lpad(CAST(id AS STRING), 6, '0') AS rowKey",
+      "'f' AS family", "'v' AS qualifier",
+      "encode(CAST(id AS STRING), 'UTF-8') AS value", "id AS ts")
+      .write.format("graft-kv").option("regions", 4).mode("overwrite").save(path)
+    // ten index files keep the interpolated estimate within ~1% of the
+    // true count, so "just above" is one step past the threshold
+    KvIndex.create(spark, path, "by_v", "f", "v", pad = 6, regions = 10)
+    KvIndexRouting.install(spark)
+    val table = new org.apache.hadoop.fs.Path(path)
+    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
+    val m = KvIndex.list(fs, table).head
+    def estimate(hi: Int): Double =
+      KvIndex.rangeEstimate(fs, table, m, "0", hi.toString)._1
+    KvIndex.rangeEstimate(fs, table, m, "0", "1")._2 shouldBe 1000L
+    // [0, over) is the first range priced above 0.2 × 1000 rows;
+    // [0, at) is the widest at or under it
+    val over = (1 to 1000).find(hi => estimate(hi) > 200.0).get
+    val at = over - 1
+    estimate(at) should (be <= 200.0 and be >= 190.0)
+    estimate(over) should be <= 210.0
+
+    def auto(hi: Int): DataFrame = KvIndex.autoLookup(spark, path, "f", "v", "0", hi.toString)
+    def autoRouted(df: DataFrame): Boolean =
+      df.queryExecution.executedPlan.toString.contains("In(rowKey")
+    assert(autoRouted(auto(at)), s"autoLookup [0, $at) kept the scan")
+    assert(!autoRouted(auto(over)), s"autoLookup [0, $over) routed")
+    auto(at).count() shouldBe at.toLong
+    auto(over).count() shouldBe over.toLong
+
+    pivotView(path).createOrReplaceTempView("rt_threshold")
+    def sqlRange(hi: Int): DataFrame = spark.sql(
+      s"""SELECT rowKey, value FROM rt_threshold
+         |WHERE CAST(value AS BIGINT) >= 0 AND CAST(value AS BIGINT) < $hi""".stripMargin)
+    assert(routed(planOf(sqlRange(at))), s"SQL [0, $at) kept the scan")
+    assert(!routed(planOf(sqlRange(over))), s"SQL [0, $over) routed")
+    sqlRange(at).count() shouldBe at.toLong
+    sqlRange(over).count() shouldBe over.toLong
+  }
+
   test("string-mode index routes exact [lo, hi) string bounds") {
     val path = s"$base/str"
     graft.sinks.Sinks.deleteRecursive(spark, path)
