@@ -101,16 +101,6 @@ object Dedup {
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"), explode(shingles(col("t"))).as("s"))
 
-  /** N-gram Jaccard near-dup pairs via an inverted index: doc pairs that
-    * share ≥1 shingle, scored |A∩B| / |A∪B|, kept at ≥ `threshold`/1000.
-    *
-    * Pair generation is one `groupBy(shingle)` + in-row pair fan-out rather
-    * than a two-sided self-join — the shingle relation is shuffled ONCE
-    * (a self-join ships it twice and re-partitions both sides). Posting
-    * lists are sorted so pairs come out (a < b) directly; Σ|posting|² is the
-    * inherent cost of exact Jaccard — the sub-quadratic escape is
-    * [[minhashLshPairs]].
-    */
   /** Posting lists longer than this are dropped from pair generation (not
     * from set sizes): a boilerplate shingle shared by 100k docs would emit
     * |ids|²/2 pairs — quadratic WORK no fan-out shape can hide. The cap
@@ -122,6 +112,16 @@ object Dedup {
     */
   val MaxPosting = 10000
 
+  /** N-gram Jaccard near-dup pairs via an inverted index: doc pairs that
+    * share ≥1 shingle, scored |A∩B| / |A∪B|, kept at ≥ `threshold`/1000.
+    *
+    * Pair generation is one `groupBy(shingle)` + in-row pair fan-out rather
+    * than a two-sided self-join — the shingle relation is shuffled ONCE
+    * (a self-join ships it twice and re-partitions both sides). Posting
+    * lists are sorted so pairs come out (a < b) directly; Σ|posting|² is the
+    * inherent cost of exact Jaccard — the sub-quadratic escape is
+    * [[minhashLshPairs]].
+    */
   def jaccardPairs(docs: DataFrame, threshold: Long = 800L,
       maxDf: Int = Int.MaxValue): DataFrame = {
     // `sh` feeds two consumers (per-doc sizes, posting lists), so the scan +
@@ -382,6 +382,21 @@ object Dedup {
 
   // ------------------------------------------------- cluster assignment
 
+  /** Edge-count ceiling for the driver-side union-find fast path. Same
+    * reasoning as a broadcast join's autoBroadcastJoinThreshold: when the
+    * *derived* relation (near-dup edges, a few % of the corpus) fits
+    * comfortably in driver memory, one collect + linear union-find beats
+    * distributed rounds; past the ceiling the distributed large/small-star
+    * contraction runs instead. 2^20 edges ≈ 16 MB collected.
+    */
+  val DriverCcMaxEdges: Long = 1L << 20
+
+  /** Diagnostics only: rounds the last distributed contraction took to
+    * converge (−1 when the driver fast path served the call). Read by the
+    * scale-evidence harness; not part of the result contract.
+    */
+  @volatile var lastDistributedRounds: Int = -1
+
   /** Connected-component clustering over a near-dup pair relation: every
     * document is labeled with the minimum doc_id reachable through pair
     * edges (its cluster's canonical id); documents in no pair keep their own
@@ -404,21 +419,6 @@ object Dedup {
     * exact set compare; if `maxRounds` passes without one the operator
     * throws rather than return a silently-partial clustering.
     */
-  /** Edge-count ceiling for the driver-side union-find fast path. Same
-    * reasoning as a broadcast join's autoBroadcastJoinThreshold: when the
-    * *derived* relation (near-dup edges, a few % of the corpus) fits
-    * comfortably in driver memory, one collect + linear union-find beats
-    * distributed rounds; past the ceiling the distributed large/small-star
-    * contraction runs instead. 2^20 edges ≈ 16 MB collected.
-    */
-  val DriverCcMaxEdges: Long = 1L << 20
-
-  /** Diagnostics only: rounds the last distributed contraction took to
-    * converge (−1 when the driver fast path served the call). Read by the
-    * scale-evidence harness; not part of the result contract.
-    */
-  @volatile var lastDistributedRounds: Int = -1
-
   def clusters(docs: DataFrame, pairs: DataFrame, maxRounds: Int = 20,
       driverMaxEdges: Long = DriverCcMaxEdges): DataFrame = {
     // Pairs materialized BEFORE any reuse — self-unioning the plan would run
@@ -530,10 +530,6 @@ object Dedup {
 
   // ----------------------------------------------------- embedding cosine
 
-  /** Embedding near-dup pairs: brute-force cosine ≥ threshold/1000. The
-    * oracle-checkable baseline; the sub-quadratic path is
-    * [[embeddingLshPairs]].
-    */
   /** Paragraph-granular exact dedup with document reconstruction (the
     * "deduplicating training data" substring-dedup shape, at fixed
     * `chunkWords`-word granularity): every chunk keeps only its FIRST
@@ -601,6 +597,10 @@ object Dedup {
         col("kept_by").isNotNull.as("is_dup"))
   }
 
+  /** Embedding near-dup pairs: brute-force cosine ≥ threshold/1000. The
+    * oracle-checkable baseline; the sub-quadratic path is
+    * [[embeddingLshPairs]].
+    */
   def embeddingPairs(embeddings: DataFrame, threshold: Long = 400L): DataFrame = {
     val e = embeddings.select(col("vec_id"),
       VectorOps.toDoubleArray(col("embedding")).as("v"))

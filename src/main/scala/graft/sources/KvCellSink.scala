@@ -13,6 +13,7 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
@@ -300,14 +301,14 @@ private[sources] class KvStreamingWrite(path: String, schema: StructType,
         // already); the deterministic epoch-scoped name is assigned at
         // commit like every streaming seal.
         KvStreamSaltedWriterFactory(KvProjectingWriterFactory(
-          stagingDir, conf,
+          stagingDir, KvScanBuilder.broadcastConf(conf),
           cellIdx = graft.kv.Cell.schema.fieldNames
             .map(schema.fieldNames.indexOf(_)).toArray,
           declaredLen = schema.length, codec, saltBuckets = Some(n),
           allowTombstones = allowTombstones))
       case None =>
-        KvStreamWriterFactory(stagingDir, schema.fieldNames.toSeq, conf, codec,
-          allowTombstones, saltCheck)
+        KvStreamWriterFactory(stagingDir, schema.fieldNames.toSeq,
+          KvScanBuilder.broadcastConf(conf), codec, allowTombstones, saltCheck)
     }
 
   /** Stable per-QUERY name token: sealed names are deterministic per
@@ -431,7 +432,8 @@ private[sources] case class KvEpochCommit(file: String, partition: Int,
     extends WriterCommitMessage
 
 private[sources] case class KvStreamWriterFactory(
-    stagingDir: String, fieldNames: Seq[String], conf: SerializableConfiguration,
+    stagingDir: String, fieldNames: Seq[String],
+    conf: Broadcast[SerializableConfiguration],
     codec: CompressionCodecName = CompressionCodecName.SNAPPY,
     allowTombstones: Boolean = false,
     saltCheck: Option[Int] = None)
@@ -442,7 +444,7 @@ private[sources] case class KvStreamWriterFactory(
     */
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : DataWriter[InternalRow] =
-    new KvDataWriter(stagingDir, fieldNames, partitionId, taskId, conf,
+    new KvDataWriter(stagingDir, fieldNames, partitionId, taskId, conf.value,
       commitAs = (f, st) => KvEpochCommit(f, partitionId, st), codec = codec,
       allowTombstones = allowTombstones, saltCheck = saltCheck)
 }
@@ -501,14 +503,14 @@ private[sources] class KvBatchWrite(path: String, schema: StructType,
         // distribution contract, demux into one stored-sorted file per
         // (partition, bucket) — the replacement write's factory, with the
         // identity projection (no rewrite-plan extras on this path).
-        KvProjectingWriterFactory(stagingDir, conf,
+        KvProjectingWriterFactory(stagingDir, KvScanBuilder.broadcastConf(conf),
           cellIdx = graft.kv.Cell.schema.fieldNames
             .map(n => schema.fieldNames.indexOf(n)).toArray,
           declaredLen = schema.length, codec, saltBuckets = Some(n),
           allowTombstones = allowTombstones)
       case None =>
-        KvWriterFactory(stagingDir, schema.fieldNames.toSeq, conf, codec,
-          allowTombstones, saltCheck)
+        KvWriterFactory(stagingDir, schema.fieldNames.toSeq,
+          KvScanBuilder.broadcastConf(conf), codec, allowTombstones, saltCheck)
     }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -619,13 +621,13 @@ private[sources] class KvBatchWrite(path: String, schema: StructType,
 }
 
 private[sources] case class KvWriterFactory(stagingDir: String,
-    fieldNames: Seq[String], conf: SerializableConfiguration,
+    fieldNames: Seq[String], conf: Broadcast[SerializableConfiguration],
     codec: CompressionCodecName = CompressionCodecName.SNAPPY,
     allowTombstones: Boolean = false,
     saltCheck: Option[Int] = None)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new KvDataWriter(stagingDir, fieldNames, partitionId, taskId, conf,
+    new KvDataWriter(stagingDir, fieldNames, partitionId, taskId, conf.value,
       commitAs = (f, st) => KvFileCommit(f, partitionId, st), codec = codec,
       allowTombstones = allowTombstones, saltCheck = saltCheck)
 }

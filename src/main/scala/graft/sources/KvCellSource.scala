@@ -13,6 +13,7 @@ import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
 import org.apache.parquet.schema.MessageType
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -73,9 +74,10 @@ private[sources] class KvCellTable(path: String,
 
   /** The SESSION's Hadoop conf (spark.hadoop.* settings, filesystem
     * credentials, defaultFS), captured driver-side at builder time and
-    * shipped to executors via a serializable wrapper — `new Configuration()`
-    * would silently drop cluster credentials/filesystem config (works in
-    * local tests, misroutes I/O on a configured cluster).
+    * shipped to executors by broadcast ([[KvScanBuilder.broadcastConf]]) —
+    * `new Configuration()` would silently drop cluster credentials/
+    * filesystem config (works in local tests, misroutes I/O on a
+    * configured cluster).
     */
   private def sessionConf: SerializableConfiguration =
     new SerializableConfiguration(
@@ -547,6 +549,14 @@ private[sources] object KvScanBuilder {
   def activeConf: SerializableConfiguration =
     new SerializableConfiguration(
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+
+  /** `conf` broadcast once per reader/writer factory (Spark's `ParquetScan`
+    * pattern): embedded in a factory, a conf of about 1,100 entries is
+    * deserialized again inside every task.
+    */
+  def broadcastConf(conf: SerializableConfiguration)
+      : Broadcast[SerializableConfiguration] =
+    org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(conf)
 }
 
 /** Metadata-only scan serving pushed aggregates from parquet footers. */
@@ -928,12 +938,6 @@ private[sources] class KvScan(path: String, required: StructType, pushed: Array[
     (kept.map { case (f, st) => (f.toString, st) }, all.length)
   }
 
-  /** With a pushed limit and NO filters, manifest/footer row counts are
-    * exact: stop planning files once they cover the limit — a LIMIT 20
-    * console dump of a 1000-region table schedules one task. Filters make
-    * a file's matching-row count unknowable from metadata, so every kept
-    * file stays planned and the cap moves into the readers.
-    */
   /** The kept files that carry delete markers ([[KvDelete]]) — read-time
     * masking activates iff any survive pruning and the scan is not a raw
     * `readTombstones` view. Marker-free tables (the overwhelmingly common
@@ -1116,6 +1120,12 @@ private[sources] class KvScan(path: String, required: StructType, pushed: Array[
     }.toMap)
   }
 
+  /** With a pushed limit and NO filters, manifest/footer row counts are
+    * exact: stop planning files once they cover the limit — a LIMIT 20
+    * console dump of a 1000-region table schedules one task. Filters make
+    * a file's matching-row count unknowable from metadata, so every kept
+    * file stays planned and the cap moves into the readers.
+    */
   private lazy val plannedFiles: Seq[String] = limit match {
     // ordered (top-n) scans must keep EVERY file: commits overlap like LSM
     // runs, so any file may hold globally-small keys — the cap lives in
@@ -1309,7 +1319,7 @@ private[sources] class KvScan(path: String, required: StructType, pushed: Array[
       else if (KvFilters.allExact(pushed) && !scoped) limit else None
     KvReaderFactory(projNames, innerNames,
       if (groupPruneOnly) None else KvFilters.toParquet(pushed),
-      sconf, readerLimit,
+      KvScanBuilder.broadcastConf(sconf), readerLimit,
       desc = descending,
       // tail row-group planning needs RAW row counts to be the bound —
       // only sound with no record filter at all, and never under masking
@@ -1398,11 +1408,6 @@ private[sources] class KvScan(path: String, required: StructType, pushed: Array[
   }
 }
 
-/** One region file — or, under `splitRegionBytes`, one byte range of one:
-  * `[rangeStart, rangeEnd)` selects the row groups whose midpoints fall
-  * inside (the parquet file-range contract). The defaults cover the whole
-  * file.
-  */
 /** Sum-aggregated scan metrics (driver-reported, so the "sum" is one
   * value). One concrete zero-arg class per metric: Spark's status
   * listener re-instantiates CustomMetric classes REFLECTIVELY by name, so
@@ -1426,6 +1431,11 @@ private[sources] case class KvScanTaskMetric(metricName: String, v: Long)
   override def value(): Long = v
 }
 
+/** One region file — or, under `splitRegionBytes`, one byte range of one:
+  * `[rangeStart, rangeEnd)` selects the row groups whose midpoints fall
+  * inside (the parquet file-range contract). The defaults cover the whole
+  * file.
+  */
 private[sources] case class KvFilePartition(file: String,
     rangeStart: Long = 0L, rangeEnd: Long = Long.MaxValue,
     /** This file's region-scoped marker slice under sliced masking
@@ -1457,7 +1467,7 @@ private[sources] case class KvFilePartition(file: String,
 private[sources] case class KvReaderFactory(
     projNames: Seq[String], outNames: Seq[String],
     predicate: Option[FilterPredicate],
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     limit: Option[Int] = None,
     desc: Boolean = false,
     tailPlan: Boolean = false,
@@ -1478,10 +1488,10 @@ private[sources] case class KvReaderFactory(
       new KvRowScope(lo, hi, outNames, emitCols) }
     if (desc && limit.exists(_ > 0))
       new KvTailPartitionReader(p.file,
-        projNames, outNames, predicate, conf.value, limit.get, tailPlan,
+        projNames, outNames, predicate, conf.value.value, limit.get, tailPlan,
         effSaltLen, masker, scoper)
     else new KvPartitionReader(p.file,
-      projNames, outNames, predicate, conf.value, limit, effSaltLen,
+      projNames, outNames, predicate, conf.value.value, limit, effSaltLen,
       range = if (p.wholeFile) None else Some((p.rangeStart, p.rangeEnd)),
       masker = masker, scoper = scoper)
   }
@@ -1795,9 +1805,6 @@ private[sources] class KvMaterializer(schema: MessageType, outNames: Seq[String]
   }
 }
 
-/** Filter triage + translation shared by the scan builder, the region
-  * pruner, and the reader factory.
-  */
 /** Driver-side memo for [[KvScan.liveMarkers]] — keyed by
   * (path, salt width, sorted marker-file set), which uniquely determines
   * the marker contents (segments are immutable once published). Small
@@ -1900,6 +1907,9 @@ private[sources] object KvMaskSliceCache {
   }
 }
 
+/** Filter triage + translation shared by the scan builder, the region
+  * pruner, and the reader factory.
+  */
 private[sources] object KvFilters {
 
   private val stringCols = Set("rowKey", "family", "qualifier")

@@ -3,6 +3,7 @@ package graft.sources
 import java.util.UUID
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, WriteBuilder, WriterCommitMessage}
@@ -289,8 +290,8 @@ private[sources] class KvReplaceDataBatchWrite(path: String,
   override def createBatchWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DataWriterFactory =
-    KvProjectingWriterFactory(stagingDir, conf, cellIdx,
-      writeSchema.length, codec, saltBuckets)
+    KvProjectingWriterFactory(stagingDir, KvScanBuilder.broadcastConf(conf),
+      cellIdx, writeSchema.length, codec, saltBuckets)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     KvRowLevelOps.preCommitHook()
@@ -459,7 +460,7 @@ private[sources] class KvReplaceDataBatchWrite(path: String,
   * unchanged.
   */
 private[sources] case class KvProjectingWriterFactory(stagingDir: String,
-    conf: SerializableConfiguration, cellIdx: Array[Int],
+    conf: Broadcast[SerializableConfiguration], cellIdx: Array[Int],
     declaredLen: Int,
     codec: org.apache.parquet.hadoop.metadata.CompressionCodecName =
       org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY,
@@ -491,7 +492,7 @@ private[sources] case class KvProjectingWriterFactory(stagingDir: String,
       if (inners(bucket) == null) {
         val slot = if (n == 0) partitionId else partitionId * n + bucket
         inners(bucket) = new KvDataWriter(stagingDir, cellNames, slot, taskId,
-          conf, commitAs = (f, st) => KvFileCommit(f, slot, st),
+          conf.value, commitAs = (f, st) => KvFileCommit(f, slot, st),
           codec = codec, allowTombstones = allowTombstones,
           saltCheck = saltBuckets)
       }

@@ -223,13 +223,14 @@ object KvSnapshot {
     // mis-route every read of the pinned data.
     info.salt.foreach(n => KvSalt.register(dfs, dest, n))
     KvTableProps.write(dfs, dest, info.props)
-    val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val sconf = KvScanBuilder.broadcastConf(
+      new org.apache.spark.util.SerializableConfiguration(conf))
     val srcStr = src.toString
     val destStr = dest.toString
     spark.sparkContext
       .parallelize(info.files.map(_._1), math.max(1, info.files.size))
       .foreach { n =>
-        val c = sconf.value
+        val c = sconf.value.value
         val from = new Path(srcStr, n)
         val to = new Path(destStr, n)
         if (!org.apache.hadoop.fs.FileUtil.copy(

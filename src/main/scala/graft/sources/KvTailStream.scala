@@ -67,18 +67,14 @@ import org.apache.spark.util.SerializableConfiguration
   */
 private[sources] class KvTailStream(
     path: String, required: StructType, pushed: Array[Filter],
-    maxFilesPerBatch: Option[Int], confBroadcast: SerializableConfiguration,
+    maxFilesPerBatch: Option[Int], sconf: SerializableConfiguration,
     tailId: Option[String] = None,
     maxBytesPerBatch: Option[Long] = None,
     saltLen: Int = 0,
     sinceSeq: Option[Long] = None)
     extends MicroBatchStream with SupportsTriggerAvailableNow with Logging {
 
-  def this(path: String, required: StructType, pushed: Array[Filter],
-      maxFilesPerBatch: Option[Int]) =
-    this(path, required, pushed, maxFilesPerBatch, KvScanBuilder.activeConf)
-
-  private def conf: Configuration = confBroadcast.value
+  private def conf: Configuration = sconf.value
   private val tableDir = new Path(path)
   private def fs = tableDir.getFileSystem(conf)
 
@@ -441,7 +437,8 @@ private[sources] class KvTailStream(
     val filterCols = pushed.toSeq.flatMap(_.references).distinct
     val projNames = (required.fieldNames ++ filterCols).distinct.toSeq
     KvReaderFactory(projNames, required.fieldNames.toSeq,
-      KvFilters.toParquet(pushed), confBroadcast, saltLen = saltLen)
+      KvFilters.toParquet(pushed), KvScanBuilder.broadcastConf(sconf),
+      saltLen = saltLen)
   }
 
   /** A fresh tail starts at the compaction HORIZON when one exists (the

@@ -130,7 +130,8 @@ class KvStreamSpec extends graft.SparkSpec {
   }
 
   test("offset watermark is the last consumed segment name; admission caps each batch") {
-    val stream = new KvTailStream(walDir, Cell.schema, Array.empty, Some(1))
+    val stream = new KvTailStream(walDir, Cell.schema, Array.empty, Some(1),
+      KvScanBuilder.activeConf)
     stream.prepareForTriggerAvailableNow()
     val start = stream.initialOffset()
     val o1 = stream.latestOffset(start, ReadLimit.maxFiles(1))
@@ -652,7 +653,8 @@ class KvStreamSpec extends graft.SparkSpec {
     val pushed: Array[org.apache.spark.sql.sources.Filter] = Array(
       org.apache.spark.sql.sources.GreaterThanOrEqual("rowKey", "00100"),
       org.apache.spark.sql.sources.LessThan("rowKey", "00200"))
-    val stream = new KvTailStream(d, Cell.schema, pushed, None)
+    val stream = new KvTailStream(d, Cell.schema, pushed, None,
+      KvScanBuilder.activeConf)
     val start = stream.initialOffset()
     val end = stream.latestOffset(start, ReadLimit.allAvailable())
     val parts = stream.planInputPartitions(start, end)
