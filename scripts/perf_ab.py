@@ -3,7 +3,8 @@
 
     python3 scripts/perf_ab.py --workload mixed_rw --pairs 10 --base HEAD~1 --seed0 11
 
-The base revision is checked out into a temporary `git worktree`. Each pair
+The base revision is exported (`git archive`) into a temporary directory,
+so the repository's own git metadata is left untouched. Each pair
 runs `perfbench/run.py --workload W --seed S --seconds <run_seconds> --trace 0`
 once on each side with the same seed (seed0, seed0 + 1, ...); the side that
 runs first flips every pair. Every run is printed, then per end-to-end metric
@@ -11,7 +12,10 @@ of BENCHMARK.json (read only): both sides' median and quartiles, how many
 pairs the change won, the base's quartile spread (Q3 - Q1), whether the
 median gap exceeds that spread, and whether the change's median stays within
 the metric's bound. A gain is resolved when the change wins at least 9 of 10
-pairs and its median gap exceeds the base's quartile spread.
+pairs and its median gap exceeds the base's quartile spread. Each side's
+attempted and failed ops, summed over its runs, close the report with the
+failed share, so a change that fails a larger share of ops than the base
+shows.
 """
 import argparse
 import json
@@ -37,16 +41,37 @@ def load_spec(path):
 
 def parse_result(stdout):
     """The result line (the last line perfbench prints) as
-    {"correct", "failed", "metrics": {name: value}, "failures"}, where
-    "failures" are the run record's (the line before) failure notes."""
+    {"correct", "attempted", "failed", "metrics": {name: value}, "failures"},
+    where "failures" are the run record's (the line before) failure notes."""
     lines = stdout.strip().splitlines()
     if not lines:
         raise ValueError("no output")
     res = json.loads(lines[-1])
     record = json.loads(lines[-2])["run_record"] if len(lines) > 1 else {}
-    return {"correct": res["correct"], "failed": res["failed"],
+    return {"correct": res["correct"], "attempted": res["attempted"],
+            "failed": res["failed"],
             "metrics": {k: v["value"] for k, v in res["metrics"].items()},
             "failures": record.get("failures", [])}
+
+
+def op_tally(results):
+    """(attempted, failed, failed share) summed over one side's results; a
+    side that attempted nothing counts as all failed, as perfbench's
+    error_rate does."""
+    attempted = sum(r["attempted"] for r in results)
+    failed = sum(r["failed"] for r in results)
+    return attempted, failed, failed / attempted if attempted else 1.0
+
+
+def report_ops(base_results, change_results):
+    """Per side: attempted ops, failed ops and the failed share; then
+    whether the change's failed share is no larger than the base's."""
+    tallies = {"base": op_tally(base_results), "change": op_tally(change_results)}
+    for side, (attempted, failed, share) in tallies.items():
+        print(f"ops {side:6} attempted={attempted} failed={failed} failed_share={share:.2%}")
+    ok = tallies["change"][2] <= tallies["base"][2]
+    print(f"failed share no larger than base: {'yes' if ok else 'NO'}")
+    return ok
 
 
 def order(pair):
@@ -144,31 +169,35 @@ def main():
     seconds, spec = load_spec(os.path.join(ROOT, "BENCHMARK.json"))
     holder = tempfile.mkdtemp(prefix="perf_ab_")
     base_tree = os.path.join(holder, "base")
-    subprocess.run(["git", "-C", ROOT, "worktree", "add", "--detach", base_tree, args.base],
-                   check=True, stdout=subprocess.DEVNULL)
+    os.mkdir(base_tree)
+    archive = subprocess.Popen(["git", "-C", ROOT, "archive", args.base],
+                               stdout=subprocess.PIPE)
+    subprocess.run(["tar", "-x", "-C", base_tree], stdin=archive.stdout, check=True)
+    archive.stdout.close()
+    if archive.wait() != 0:
+        sys.exit(f"perf_ab: git archive {args.base} failed")
     trees = {"base": base_tree, "change": ROOT}
-    runs = {"base": [], "change": []}
-    failed = 0
+    results = {"base": [], "change": []}
     try:
         for pair in range(args.pairs):
             seed = args.seed0 + pair
             for side in order(pair):
                 res = run_one(trees[side], args.workload, seed, seconds)
-                runs[side].append(res["metrics"])
-                failed += res["failed"]
+                results[side].append(res)
                 ms = " ".join(f"{k}={fmt(v)}" for k, v in res["metrics"].items())
                 print(f"pair {pair + 1} seed {seed} {side:6} first={order(pair)[0]:6} "
-                      f"correct={res['correct']} failed={res['failed']} {ms}", flush=True)
+                      f"correct={res['correct']} attempted={res['attempted']} "
+                      f"failed={res['failed']} {ms}", flush=True)
                 for note in res["failures"]:
                     print(f"  failure: {note}", flush=True)
     finally:
-        subprocess.run(["git", "-C", ROOT, "worktree", "remove", "--force", base_tree],
-                       stdout=subprocess.DEVNULL)
         shutil.rmtree(holder, ignore_errors=True)
 
     print(f"\n{args.workload}: {args.pairs} pairs, base {args.base}, seeds "
-          f"{args.seed0}-{args.seed0 + args.pairs - 1}, failed ops {failed}")
-    report(compare(spec, runs["base"], runs["change"]))
+          f"{args.seed0}-{args.seed0 + args.pairs - 1}")
+    report(compare(spec, [r["metrics"] for r in results["base"]],
+                   [r["metrics"] for r in results["change"]]))
+    report_ops(results["base"], results["change"])
 
 
 if __name__ == "__main__":

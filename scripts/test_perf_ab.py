@@ -2,6 +2,8 @@
 
     python3 -m unittest scripts/test_perf_ab.py
 """
+import contextlib
+import io
 import json
 import os
 import sys
@@ -14,8 +16,8 @@ SPEC = [("op_p50_ms", "lower", 0.25), ("work_per_s", "higher", 0.25),
         ("recall", "higher", 0.1)]
 
 
-def line(p50, work, recall=1.0, failed=0):
-    return json.dumps({"correct": failed == 0, "attempted": 40, "failed": failed, "metrics": {
+def line(p50, work, recall=1.0, failed=0, attempted=40):
+    return json.dumps({"correct": failed == 0, "attempted": attempted, "failed": failed, "metrics": {
         "op_p50_ms": {"value": p50, "unit": "ms"},
         "work_per_s": {"value": work, "unit": "1/s"},
         "recall": {"value": recall, "unit": "ratio"}}})
@@ -35,6 +37,7 @@ class PerfAbTest(unittest.TestCase):
         res = perf_ab.parse_result('{"run_record": {"failures": ["get#7 wrong: value"]}}\n'
                                    + line(250.0, 2.0, failed=1))
         self.assertEqual(res["failed"], 1)
+        self.assertEqual(res["attempted"], 40)
         self.assertFalse(res["correct"])
         self.assertEqual(res["metrics"]["op_p50_ms"], 250.0)
         self.assertEqual(res["failures"], ["get#7 wrong: value"])
@@ -93,6 +96,29 @@ class PerfAbTest(unittest.TestCase):
         self.assertEqual(row(rows, "op_p50_ms")["wins"], 0)
         self.assertEqual(row(rows, "work_per_s")["worse_share"], 0.0)
         self.assertTrue(row(rows, "work_per_s")["within_bound"])
+
+    def test_op_tally_sums_a_side_and_reports_the_failed_share(self):
+        side = [perf_ab.parse_result('{"run_record": {}}\n' + line(250, 2.0, failed=f, attempted=a))
+                for f, a in ((0, 30), (1, 29), (2, 41))]
+        attempted, failed, share = perf_ab.op_tally(side)
+        self.assertEqual((attempted, failed), (100, 3))
+        self.assertAlmostEqual(share, 0.03)
+        self.assertEqual(perf_ab.op_tally([]), (0, 0, 1.0))
+
+    def test_report_ops_flags_a_larger_failed_share(self):
+        def side(*fa):
+            return [perf_ab.parse_result('{"run_record": {}}\n' + line(250, 2.0, failed=f, attempted=a))
+                    for f, a in fa]
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            self.assertTrue(perf_ab.report_ops(side((1, 40), (0, 40)), side((0, 40), (0, 41))))
+        text = out.getvalue()
+        self.assertIn("ops base   attempted=80 failed=1 failed_share=1.25%", text)
+        self.assertIn("ops change attempted=81 failed=0 failed_share=0.00%", text)
+        self.assertIn("failed share no larger than base: yes", text)
+        with contextlib.redirect_stdout(io.StringIO()):
+            # equal counts, fewer attempts: a larger share
+            self.assertFalse(perf_ab.report_ops(side((1, 40)), side((1, 20))))
 
     def test_spec_comes_from_benchmark_json(self):
         seconds, spec = perf_ab.load_spec(os.path.join(perf_ab.ROOT, "BENCHMARK.json"))

@@ -12,9 +12,17 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 /** Hash-aggregable last-write-wins: the value bytes of the cell with the
   * largest non-null ordering (`max_by(value, ord)` for binary values).
   *
+  * It serves single-value LWW: one value per group (snapshot diff, a
+  * single-qualifier read), or one column spelled per aggregate in SQL,
+  * the shape [[graft.sources.KvIndexRouting]] recognizes. A pivot of N
+  * qualifiers does not run N of these: [[LwwPivotAgg]] holds all N slots
+  * in one buffer and finds a cell's slot with one lookup, where N
+  * conditional `max_by_ts` aggregates evaluate N `CASE WHEN`s per cell
+  * and keep N buffers per group.
+  *
   * Why not the built-in `max_by`: it is a `DeclarativeAggregate` whose
   * buffer holds the BinaryType value, and `HashAggregateExec` requires
-  * mutable fixed-width buffer fields — so every pivot planned as
+  * mutable fixed-width buffer fields — so a pivot spelled with it plans as
   * SortAggregate, sorting the full cell relation on both sides of the
   * exchange (measured ~2× the pivot cost at sf0.1). A
   * `TypedImperativeAggregate` runs in `ObjectHashAggregateExec`: hash-based

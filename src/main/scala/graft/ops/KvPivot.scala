@@ -17,7 +17,8 @@ import org.apache.spark.sql.types.StringType
   *
   * Last-write-wins (A2): the reference's per-row `HashMap.put` lets the later
   * cell in scan order overwrite (Txt:159-163). We make that explicit and
-  * deterministic with `max_by(value, ts)` per qualifier.
+  * deterministic: per qualifier, the value of the max-ts cell
+  * ([[graft.functions.LwwSlots]]).
   */
 object KvPivot {
 
@@ -42,17 +43,13 @@ object KvPivot {
       rowKeyCol: Option[String] = None,
       family: Option[String] = None): DataFrame = {
     val scan = family.foldLeft(cells)((df, cf) => df.filter(col("family") === cf))
-    // One agg per schema column: value of the max-ts cell having that
-    // qualifier. Rows with a null ordering (other qualifiers) are ignored,
-    // so each agg only sees "its" cells. maxByTs (not built-in max_by): a
-    // binary-value max_by plans as SortAggregate — the custom
-    // TypedImperativeAggregate keeps the whole pivot hash-based
-    // (ObjectHashAggregateExec), no sort on either side of the exchange.
-    val aggs = columns.map { c =>
-      graft.functions.MaxByTsAgg.maxByTs(
-        col("value"), when(col("qualifier") === c, col("ts"))).as(c)
-    }
-    val pivoted = scan.groupBy(col("rowKey")).agg(aggs.head, aggs.tail: _*)
+    // ONE aggregate for all schema columns: per row key, one slot per
+    // distinct qualifier holding its max-ts cell's value; cells of other
+    // qualifiers are skipped inside it. A TypedImperativeAggregate, so the
+    // whole pivot is hash-based (ObjectHashAggregateExec), no sort on
+    // either side of the exchange; the slots are projected back to the
+    // schema columns after it.
+    val pivoted = graft.functions.LwwSlots.byRowKey(scan, columns.map(c => (c, c)))
     rowKeyCol match {
       // P4: rowKey injection — only for the named column, only when absent.
       case Some(k) if columns.contains(k) =>

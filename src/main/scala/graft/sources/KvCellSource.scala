@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader => PqReader}
@@ -605,7 +606,7 @@ private[sources] class KvStatsScan(path: String, specs: Seq[KvStatsScan.Spec],
         // Stat-less legacy file: footer fallback serves count and ts (int64
         // footer stats are exact); key bounds never get here — the builder
         // only accepts key aggregates when every file carries stats.
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        val r = KvFilters.openFooter(HadoopInputFile.fromPath(f, conf), conf)
         try r.getRowGroups.asScala.foreach { block =>
           count += block.getRowCount
           block.getColumns.asScala.find(_.getPath.toDotString == "ts").foreach { c =>
@@ -1583,7 +1584,9 @@ private[sources] final class KvRowMasker(mask: KvDelete.Mask,
   * one converter per projected column writing straight into the row buffer.
   * Spark's vectorized reader is still faster on wide numeric scans, but the
   * point here is OWNERSHIP of the pushdown surface; cells are 5 narrow
-  * columns and the export path is aggregation-bound, not scan-bound.
+  * columns. The scan is a real share of an export (its map stage runs
+  * before any sink), so the reader's fixed per-file cost matters: it is
+  * built through [[KvReaderBuilder]], never from a bare path.
   */
 private[sources] class KvPartitionReader(
     file: String, projNames: Seq[String], outNames: Seq[String],
@@ -1596,9 +1599,9 @@ private[sources] class KvPartitionReader(
     extends PartitionReader[InternalRow] {
 
   private val reader: PqReader[InternalRow] = {
-    val b0 = PqReader.builder(new KvReadSupport(projNames, outNames, saltLen),
-      new Path(file))
-      .withConf(conf)
+    val b0: PqReader.Builder[InternalRow] = new KvReaderBuilder(
+      HadoopInputFile.fromPath(new Path(file), conf),
+      new KvReadSupport(projNames, outNames, saltLen))
     val b = range.fold(b0) { case (s, e) => b0.withFileRange(s, e) }
     predicate.fold(b)(p => b.withFilter(FilterCompat.get(p))).build()
   }
@@ -1661,13 +1664,13 @@ private[graft] class KvTailPartitionReader(
     extends PartitionReader[InternalRow] {
 
   private val reader: PqReader[InternalRow] = {
-    val p = new Path(file)
-    var b = PqReader.builder(new KvReadSupport(projNames, outNames, saltLen), p)
-      .withConf(conf)
+    val in = HadoopInputFile.fromPath(new Path(file), conf)
+    var b: PqReader.Builder[InternalRow] =
+      new KvReaderBuilder(in, new KvReadSupport(projNames, outNames, saltLen))
     if (tailPlan) {
       // Footer pass to find the tail row groups covering >= n rows; the
       // range's midpoint rule selects exactly the groups at/after `start`.
-      val fr = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      val fr = KvFilters.openFooter(in, conf)
       val start = try {
         val blocks = fr.getRowGroups.asScala
         var need = n.toLong
@@ -1720,6 +1723,19 @@ private[graft] class KvTailPartitionReader(
   override def get(): InternalRow = current
 
   override def close(): Unit = reader.close()
+}
+
+/** A parquet reader builder over one file whose only Hadoop
+  * `Configuration` is the task's (broadcast) `conf`.
+  * `ParquetReader.builder(readSupport, path)` builds a fresh
+  * `Configuration` and reads from it, which parses the Hadoop default XML
+  * resources again for every file a task opens; the `InputFile`
+  * constructor takes the conf of the `HadoopInputFile` instead.
+  */
+private[sources] final class KvReaderBuilder(
+    file: HadoopInputFile, readSupport: KvReadSupport)
+    extends PqReader.Builder[InternalRow](file) {
+  override protected def getReadSupport: ReadSupport[InternalRow] = readSupport
 }
 
 /** Projection + direct-to-InternalRow assembly. The requested schema is
@@ -2142,11 +2158,19 @@ private[sources] object KvFilters {
     if (sets.isEmpty) None else Some(sets.reduce(_ & _))
   }
 
+  /** Open one file's footer with read options from `conf`. The
+    * one-argument `ParquetFileReader.open(file)` builds its options from
+    * a fresh default `Configuration`, parsing the Hadoop XML resources
+    * again for every file.
+    */
+  def openFooter(file: HadoopInputFile, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(file, HadoopReadOptions.builder(conf).build())
+
   /** rowKey [min, max] of one region file from its footer stats (union over
     * row groups); None when stats are missing.
     */
   def fileRowKeyRange(f: Path, conf: Configuration): Option[(String, String)] = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+    val r = openFooter(HadoopInputFile.fromPath(f, conf), conf)
     try {
       val ranges = r.getRowGroups.asScala.flatMap { block =>
         block.getColumns.asScala
@@ -2167,7 +2191,7 @@ private[sources] object KvFilters {
 
   /** Exact row count of one region file from its footer. */
   def fileRowCount(f: Path, conf: Configuration): Long = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+    val r = openFooter(HadoopInputFile.fromPath(f, conf), conf)
     try r.getRecordCount finally r.close()
   }
 }

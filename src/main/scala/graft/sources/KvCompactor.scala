@@ -400,9 +400,9 @@ object KvCompactor {
           // the rare policy-compact path): with r=/b= on the `!` line,
           // the tail's size-capped admission reads the manifest instead
           // of paying a getFileStatus per drop file per batch plan.
-          val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
+          val fr = KvFilters.openFooter(
             org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(st.getPath, conf))
+              .fromPath(st.getPath, conf), conf)
           val rows = try fr.getRecordCount finally fr.close()
           if (!fs.rename(st.getPath, target)) throw new IllegalStateException(
             s"graft-kv compaction: drop-record rename to $target failed")

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.LwwSlots
+
 /** MAINTAINED GLOBAL SECONDARY INDEXES for `graft-kv` tables — the
   * Phoenix global-index shape (an index IS another HBase table whose row
   * key leads with the indexed value), built Spark-native on the engine's
@@ -471,8 +473,8 @@ object KvIndex {
   /** The relevant qualifiers' CURRENT values per base key as one wide
     * row: `rowKey, _v0.. (key components in order), then includes` —
     * binary values, null where the key has no such qualifier. The same
-    * conditional-LWW shape [[graft.ops.KvPivot.pivot]] uses
-    * (hash-aggregable, one exchange); delete masking and time travel
+    * LWW pivot [[graft.ops.KvPivot.pivot]] uses ([[LwwSlots]]:
+    * hash-aggregable, one exchange); delete masking and time travel
     * ride the scan options. Rows lacking ANY key component are dropped —
     * a composite entry is the inner join of its components ([[Meta]]
     * doc); for a single-component index this is the old "rows without
@@ -492,14 +494,18 @@ object KvIndex {
   private def currentWideAny(spark: SparkSession, path: String, m: Meta,
       options: Map[String, String]): DataFrame = {
     val quals = m.keyQuals ++ m.include
-    val aggs = quals.zipWithIndex.map { case (q, i) =>
-      graft.functions.MaxByTsAgg.maxByTs(
-        col("value"), when(col("qualifier") === q, col("ts"))).as(s"_v$i")
-    }
-    KvRead.cells(spark, path, options) // catalog-resolved: baseCells doc
-      .filter(col("family") === m.family && col("qualifier").isin(quals: _*))
-      .groupBy(col("rowKey")).agg(aggs.head, aggs.tail: _*)
+    LwwSlots.byRowKey(
+      KvRead.cells(spark, path, options) // catalog-resolved: baseCells doc
+        .filter(col("family") === m.family && col("qualifier").isin(quals: _*)),
+      quals.zipWithIndex.map { case (q, i) => (q, s"_v$i") })
   }
+
+  /** The `(qualifier, column)` pairs of an index entry's cells: `k` (base
+    * key) as `_k`, `v` (leading value) as `_v`, then `q:<qual>` as
+    * `_q<qual>` per payload qualifier.
+    */
+  private def entryColumns(payload: Seq[String]): Seq[(String, String)] =
+    ("k", "_k") +: ("v", "_v") +: payload.map(q => (s"q:$q", s"_q$q"))
 
   /** One component column, NUL-refused and (decimal mode) guarded. */
   private def checkedComponent(raw: org.apache.spark.sql.Column,
@@ -1348,14 +1354,11 @@ object KvIndex {
     */
   private def coveredRead(spark: SparkSession, table: Path, m: Meta,
       loPad: String, hiPad: String): DataFrame = {
-    def lww(q: String) = graft.functions.MaxByTsAgg.maxByTs(
-      col("value"), when(col("qualifier") === q, col("ts")))
     val extra = m.rest.map(_._1) ++ m.include
-    val aggs = lww("k").as("_k") +: lww("v").as("_v") +:
-      extra.map(q => lww(s"q:$q").as(s"_q$q"))
-    spark.read.format("graft-kv").load(indexDir(table, m.name).toString)
-      .filter(col("rowKey") >= loPad && col("rowKey") < hiPad)
-      .groupBy(col("rowKey")).agg(aggs.head, aggs.tail: _*)
+    LwwSlots.byRowKey(
+      spark.read.format("graft-kv").load(indexDir(table, m.name).toString)
+        .filter(col("rowKey") >= loPad && col("rowKey") < hiPad),
+      entryColumns(extra))
       .filter(col("_k").isNotNull)
       .select(decode(col("_k"), "UTF-8").as("rowKey") +:
         decode(col("_v"), "UTF-8").as("value") +:
@@ -1507,8 +1510,6 @@ object KvIndex {
         "for result sets this large")
     val latest = KvLog.latestSeq(fs, table)
     val key = if (desc) col("rowKey").desc else col("rowKey").asc
-    def lww(q: String) = graft.functions.MaxByTsAgg.maxByTs(
-      col("value"), when(col("qualifier") === q, col("ts")))
     // The prefix-free NUL encoding makes the encoded-key range exactly
     // the leading-value range ([[coveredRead]]), so the bounds are a
     // pruned rowKey predicate on the index scan.
@@ -1519,9 +1520,9 @@ object KvIndex {
       hiPad.foldLeft(lod)((df, h) => df.filter(col("rowKey") < h))
     }
     // Top `n` complete index entries' BASE keys plus (fresh path) values.
-    def indexTop(n: Long, cells: Long) = indexScan
-      .orderBy(key).limit(cells.toInt) // pushed TopN: O(k) rows per file
-      .groupBy(col("rowKey")).agg(lww("k").as("_k"), lww("v").as("_v"))
+    def indexTop(n: Long, cells: Long) = LwwSlots.byRowKey(
+        indexScan.orderBy(key).limit(cells.toInt), // pushed TopN: O(k) rows per file
+        entryColumns(Nil))
       .filter(col("_k").isNotNull && col("_v").isNotNull)
       .orderBy(key).limit(n.toInt)
 
@@ -1546,10 +1547,9 @@ object KvIndex {
     def wideFrame(opts: Map[String, String],
         narrow: DataFrame => DataFrame): DataFrame = {
       val quals = m.qualifier +: m.include
-      val aggs = quals.zipWithIndex.map { case (q, i) => lww(q).as(s"_w$i") }
-      narrow(KvRead.cells(spark, path, opts)
-        .filter(col("family") === m.family && col("qualifier").isin(quals: _*)))
-        .groupBy(col("rowKey")).agg(aggs.head, aggs.tail: _*)
+      LwwSlots.byRowKey(narrow(KvRead.cells(spark, path, opts)
+          .filter(col("family") === m.family && col("qualifier").isin(quals: _*))),
+        quals.zipWithIndex.map { case (q, i) => (q, s"_w$i") })
         .select(col("rowKey") +: quals.zipWithIndex.map { case (q, i) =>
           decode(col(s"_w$i"), "UTF-8").as(if (i == 0) "value" else q) }: _*)
     }
@@ -1573,10 +1573,8 @@ object KvIndex {
         return indexTop(k, fetch)
           .select(decode(col("_k"), "UTF-8").as("rowKey"),
             decode(col("_v"), "UTF-8").as("value"))
-      val aggsW = lww("k").as("_k") +: lww("v").as("_v") +:
-        m.include.map(q => lww(s"q:$q").as(s"_q$q"))
-      val head = indexScan.orderBy(key).limit(fetch.toInt)
-        .groupBy(col("rowKey")).agg(aggsW.head, aggsW.tail: _*)
+      val head = LwwSlots.byRowKey(indexScan.orderBy(key).limit(fetch.toInt),
+          entryColumns(m.include))
         .filter(col("_k").isNotNull && col("_v").isNotNull)
         .orderBy(key).limit(k)
         .select(decode(col("_k"), "UTF-8").as("rowKey") +:
@@ -1743,8 +1741,6 @@ object KvIndex {
         "for result sets this large")
     val latest = KvLog.latestSeq(fs, table)
     val key = if (desc) col("rowKey").desc else col("rowKey").asc
-    def lww(q: String) = graft.functions.MaxByTsAgg.maxByTs(
-      col("value"), when(col("qualifier") === q, col("ts")))
     val payloadQuals = m.rest.map(_._1) ++ m.include
 
     // Bounded index scan: the leading bound IS an encoded-key range (a
@@ -1767,10 +1763,8 @@ object KvIndex {
     // Top `n` complete in-bounds entries (grouped cells; `_k`/`_v`
     // non-null drops the one possibly-truncated boundary entry).
     def indexTopEntries(n: Long, cells: Long) = {
-      val aggs = lww("k").as("_k") +: lww("v").as("_v") +:
-        payloadQuals.map(q => lww(s"q:$q").as(s"_q$q"))
-      indexScan.orderBy(key).limit(cells.toInt)
-        .groupBy(col("rowKey")).agg(aggs.head, aggs.tail: _*)
+      LwwSlots.byRowKey(indexScan.orderBy(key).limit(cells.toInt),
+          entryColumns(payloadQuals))
         .filter(col("_k").isNotNull && col("_v").isNotNull)
         .orderBy(key).limit(n.toInt)
     }
@@ -1957,8 +1951,8 @@ object KvIndex {
     * on one family, served through a matching composite index
     * ([[lookupComposite]]) when one exists AND the manifest-stat cost
     * call says the LEADING component's range is selective — otherwise
-    * through the index-free plan (one wide scan, conditional LWW per
-    * component, all bounds filtered). Both plans compute the same
+    * through the index-free plan (one wide scan, one LWW pivot over the
+    * components, all bounds filtered). Both plans compute the same
     * inner-join row set (rows carrying ALL the named qualifiers), so the
     * decision is purely cost, like [[autoLookup]]. `pads` declares each
     * component's collation for the NO-INDEX fallback only (defaults to

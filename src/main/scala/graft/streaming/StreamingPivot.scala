@@ -71,11 +71,8 @@ object StreamingPivot {
       watermark: String = "1 hour"): DataFrame = {
     // Same hash-aggregable LWW as the batch pivot (KvPivot): the custom
     // aggregate keeps the stateful agg ObjectHash-based instead of sorting
-    // every micro-batch.
-    val aggs = columns.map { c =>
-      graft.functions.MaxByTsAgg.maxByTs(
-        col("value"), when(col("qualifier") === c, col("ts"))).as(c)
-    }
+    // every micro-batch, and holds one state buffer per (window, rowKey).
+    val lww = new graft.functions.LwwSlots(columns)
     // NB a pre-watermark filter would not shield late-replay punctuation
     // anyway: Catalyst pushes qualifier predicates below EventTimeWatermark
     // to the scan, so punctuation rows must survive the schema filter on
@@ -84,9 +81,10 @@ object StreamingPivot {
       .filter(col("qualifier").isin(columns: _*))
       .withWatermark("eventTime", watermark)
       .groupBy(window(col("eventTime"), windowDur), col("rowKey"))
-      .agg(aggs.head, aggs.tail: _*)
+      .agg(lww.agg.as("_lww"))
       .select(unix_micros(col("window.start")).as("win_start_us") +:
-        col("rowKey") +: columns.map(c => decode(col(c), "UTF-8").as(c)): _*)
+        col("rowKey") +:
+        columns.map(c => decode(lww.get(col("_lww"), c), "UTF-8").as(c)): _*)
   }
 
   /** Stream-static enrichment: the event stream joined to a STATIC dim

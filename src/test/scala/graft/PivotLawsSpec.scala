@@ -85,6 +85,52 @@ class PivotLawsSpec extends SparkSpec {
     got.head.toSeq shouldBe Seq("hot", "499998", "499999", "499997")
   }
 
+  /** Cells with every edge the N-slot pivot must match the per-column
+    * formulation on: equal-ts ties between different values, null values,
+    * null ts, null and out-of-schema qualifiers.
+    */
+  private val edgeCellsGen: Gen[List[(String, Option[String], Option[String], Option[Long])]] =
+    Gen.choose(0, 60).flatMap(n => Gen.listOfN(n, for {
+      k <- Gen.choose(0, 5)
+      q <- Gen.oneOf(Schema.map(Some(_)) :+ Some("OUT") :+ None)
+      v <- Gen.oneOf(None, Some("a"), Some("b"), Some("ab"), Some(""))
+      ts <- Gen.frequency(1 -> Gen.const(None), 5 -> Gen.choose(0L, 3L).map(Some(_)))
+    } yield (s"key$k", q, v, ts)))
+
+  /** The per-column formulation the pivot replaced: one `maxByTs` per
+    * schema column, ordered by ts where the qualifier matches.
+    */
+  private def perColumnPivot(cells: org.apache.spark.sql.DataFrame,
+      columns: Seq[String]): org.apache.spark.sql.DataFrame = {
+    val aggs = columns.map(c => MaxByTsAgg.maxByTs(col("value"),
+      when(col("qualifier") === c, col("ts"))).as(c))
+    cells.groupBy(col("rowKey")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** rowKey -> the row's remaining columns, by position (schema columns may
+    * repeat a name), value bytes as sequences.
+    */
+  private def byKey(df: org.apache.spark.sql.DataFrame): Map[String, Seq[Option[Seq[Byte]]]] =
+    df.collect().map(r => r.getString(0) -> (1 until r.length).map(i =>
+      Option(r.getAs[Array[Byte]](i)).map(_.toSeq))).toMap
+
+  test("law: the one-aggregate pivot equals the per-column maxByTs pivot, edge cells included") {
+    val columns = Seq("C1", "C0", "C2", "C0") // a duplicate schema column
+    // fallback threshold 1: the partial aggregates also take the
+    // sort-based path, which serializes and merges buffers within a task
+    for (threshold <- Seq(None, Some("1"))) {
+      val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+      threshold.foreach(spark.conf.set(key, _))
+      try run(s"slots-vs-per-column(threshold=$threshold)", Prop.forAll(edgeCellsGen) { raw =>
+        val cells = spark.sparkContext.parallelize(raw, 3)
+          .toDF("rowKey", "qualifier", "v", "ts")
+          .select(col("rowKey"), col("qualifier"),
+            encode(col("v"), "UTF-8").as("value"), col("ts"))
+        byKey(KvPivot.pivot(cells, columns)) == byKey(perColumnPivot(cells, columns))
+      }) finally spark.conf.unset(key)
+    }
+  }
+
   test("law: MaxByTsAgg agrees with built-in max_by wherever ties cannot occur") {
     run("maxByTs", Prop.forAll(cellsGen) { cells =>
       val df = toCells(cells)

@@ -67,6 +67,20 @@ class PlanSpec extends SparkSpec {
     plan should not include "SortAggregate"
   }
 
+  test("pivot runs ONE aggregate function per ObjectHashAggregate, whatever the column count") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    val cells = KvTable.eventsAsCells(spark, sfDir)
+    val df = KvPivot.pivot(cells, Seq("click", "view", "purchase"))
+    val plan = executedPlan(df)
+    val aggs = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case a: ObjectHashAggregateExec => a
+    }
+    aggs should have length 2 // partial + final
+    all(aggs.map(_.aggregateExpressions.length)) shouldBe 1
+    plan should not include "SortAggregate"
+  }
+
   test("pivot runs exactly one exchange (the groupBy on rowKey)") {
     val cells = KvTable.eventsAsCells(spark, sfDir)
     val plan = executedPlan(KvPivot.pivot(cells, Seq("click", "view")))
