@@ -5,12 +5,13 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Last-write-wins pivot of a group's cells into one slot per qualifier:
@@ -24,8 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * probe instead of N interpreted CASE WHENs, and per group one buffer
   * instead of N. Cells with a null qualifier, a qualifier outside
   * `slots` or a null ts are skipped; a null value with a ts competes like
-  * any other. Equal-ts ties follow [[MaxByTsAgg]]: the lexicographically
-  * largest value bytes win (null smallest), whatever the merge order.
+  * any other. The winner per slot is [[MaxByTsAgg.wins]], whatever the
+  * merge order.
   * Like [[MaxByTsAgg]] it runs in `ObjectHashAggregateExec`.
   *
   * `slots` must be distinct; [[LwwSlots]] dedupes them.
@@ -70,16 +71,14 @@ case class LwwPivotAgg(
         if (t != null) {
           val ts = t.asInstanceOf[Long]
           val s: Int = i
-          if (!b.set(s) || ts > b.ts(s)) {
-            val v = valueExpr.eval(input)
-            b.set(s) = true
-            b.ts(s) = ts
-            // copy: the evaluated bytes may alias reused row memory
-            b.values(s) = if (v == null) null else v.asInstanceOf[Array[Byte]].clone()
-          } else if (ts == b.ts(s)) {
-            val v = valueExpr.eval(input)
-            val vb = if (v == null) null else v.asInstanceOf[Array[Byte]]
-            if (MaxByTsAgg.lexGt(vb, b.values(s))) b.values(s) = vb.clone()
+          if (MaxByTsAgg.canWin(ts, b.set(s), b.ts(s))) {
+            val v = valueExpr.eval(input).asInstanceOf[Array[Byte]]
+            if (MaxByTsAgg.wins(ts, v, b.set(s), b.ts(s), b.values(s))) {
+              b.set(s) = true
+              b.ts(s) = ts
+              // copy: the evaluated bytes may alias reused row memory
+              b.values(s) = if (v == null) null else v.clone()
+            }
           }
         }
       }
@@ -90,8 +89,7 @@ case class LwwPivotAgg(
   override def merge(b: LwwPivotAgg.Buf, o: LwwPivotAgg.Buf): LwwPivotAgg.Buf = {
     var s = 0
     while (s < b.set.length) {
-      if (o.set(s) && (!b.set(s) || o.ts(s) > b.ts(s) ||
-          (o.ts(s) == b.ts(s) && MaxByTsAgg.lexGt(o.values(s), b.values(s))))) {
+      if (o.set(s) && MaxByTsAgg.wins(o.ts(s), o.values(s), b.set(s), b.ts(s), b.values(s))) {
         b.set(s) = true; b.ts(s) = o.ts(s); b.values(s) = o.values(s)
       }
       s += 1
@@ -157,6 +155,47 @@ object LwwPivotAgg {
   }
 }
 
+/** [[LwwPivotAgg]] streamed over cells whose equal rowKeys are adjacent
+  * in their partition: one (`rowKey`, `_lww`) row per run of equal keys,
+  * no exchange. Stateful like a Hive UDTF: each task evaluates its own
+  * deserialized copy in partition order, and Spark calls [[terminate]]
+  * after the last row (interpreted path only, hence no codegen).
+  */
+case class LwwAdjacentGroups(rowKey: Expression, value: Expression,
+    qualifier: Expression, ts: Expression, slots: Seq[String])
+  extends Generator with CodegenFallback {
+
+  override def children: Seq[Expression] = Seq(rowKey, value, qualifier, ts)
+  override def checkInputDataTypes(): TypeCheckResult = agg.checkInputDataTypes()
+  override def elementSchema: StructType =
+    new StructType().add("rowKey", StringType).add("_lww", agg.dataType, nullable = false)
+  override def supportCodegen: Boolean = false
+
+  @transient private lazy val agg = LwwPivotAgg(value, qualifier, ts, slots)
+  @transient private var key: UTF8String = _
+  @transient private var buf: LwwPivotAgg.Buf = _
+
+  override def eval(row: InternalRow): IterableOnce[InternalRow] = {
+    val k = rowKey.eval(row).asInstanceOf[UTF8String]
+    val done = if (buf != null && k == key) Nil else terminate()
+    if (buf == null) {
+      key = Option(k).map(_.clone()).orNull // may alias reused row memory
+      buf = agg.createAggregationBuffer()
+    }
+    agg.update(buf, row)
+    done
+  }
+
+  override def terminate(): IterableOnce[InternalRow] = {
+    val out = if (buf == null) Nil else InternalRow(key, agg.eval(buf)) :: Nil
+    buf = null
+    out
+  }
+
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): LwwAdjacentGroups =
+    copy(rowKey = c(0), value = c(1), qualifier = c(2), ts = c(3))
+}
+
 /** The one way graft computes a last-write-wins pivot of cells
   * (`value`, `qualifier`, `ts` columns): [[agg]] is a single
   * [[LwwPivotAgg]] over the distinct `qualifiers`, and [[get]] reads one
@@ -183,10 +222,21 @@ object LwwSlots {
     * null where the key has no cell of that qualifier. Pairs may repeat a
     * qualifier; it still takes one slot.
     */
-  def byRowKey(cells: DataFrame, columns: Seq[(String, String)]): DataFrame = {
+  def byRowKey(cells: DataFrame, columns: Seq[(String, String)]): DataFrame =
+    pivot(columns)(lww => cells.groupBy(col("rowKey")).agg(lww.agg.as("_lww")))
+
+  /** [[byRowKey]] with no exchange, for `cells` whose equal rowKeys are
+    * adjacent in one partition (unchecked: [[LwwAdjacentGroups]]).
+    */
+  def byAdjacentRowKey(cells: DataFrame, columns: Seq[(String, String)]): DataFrame =
+    pivot(columns) { lww =>
+      val e = Seq("rowKey", "value", "qualifier", "ts").map(c => bridge.toExpression(col(c)))
+      cells.select(bridge.toColumn(LwwAdjacentGroups(e(0), e(1), e(2), e(3), lww.slots)))
+    }
+
+  private def pivot(columns: Seq[(String, String)])(slotted: LwwSlots => DataFrame) = {
     val lww = new LwwSlots(columns.map(_._1))
-    cells.groupBy(col("rowKey")).agg(lww.agg.as("_lww"))
-      .select(col("rowKey") +: columns.map { case (q, name) =>
-        lww.get(col("_lww"), q).as(name) }: _*)
+    slotted(lww).select(col("rowKey") +: columns.map { case (q, name) =>
+      lww.get(col("_lww"), q).as(name) }: _*)
   }
 }

@@ -32,11 +32,10 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * keys per partition — size shuffle partitions so the per-task group count
   * stays under it, exactly the spill discipline a 100-TB pivot needs.
   *
-  * Tie policy: equal-ordering ties resolve to the lexicographically-largest
-  * value bytes (unsigned compare, null smallest) — fully deterministic
-  * whatever the partition-merge order. The engine's LWW contract (cell ts
-  * strictly orders versions of one cell) makes ties unreachable in practice;
-  * the tie-break guarantees run-to-run stability anyway.
+  * Winner test: [[MaxByTsAgg.wins]]. Equal-ordering ties — reachable, as
+  * two writes of one cell may carry one ts — resolve to the
+  * lexicographically-largest value bytes (unsigned compare, null
+  * smallest), whatever the partition-merge order.
   */
 case class MaxByTsAgg(
     valueExpr: Expression,
@@ -65,24 +64,21 @@ case class MaxByTsAgg(
     val ord = ordExpr.eval(input)
     if (ord != null) {
       val ts = ord.asInstanceOf[Long]
-      if (!b.set || ts > b.ts) {
-        val v = valueExpr.eval(input)
-        b.set = true
-        b.ts = ts
-        // copy: the evaluated bytes may alias reused row memory
-        b.value = if (v == null) null else v.asInstanceOf[Array[Byte]].clone()
-      } else if (ts == b.ts) {
-        val v = valueExpr.eval(input)
-        val vb = if (v == null) null else v.asInstanceOf[Array[Byte]]
-        if (MaxByTsAgg.lexGt(vb, b.value)) b.value = vb.clone()
+      if (MaxByTsAgg.canWin(ts, b.set, b.ts)) {
+        val v = valueExpr.eval(input).asInstanceOf[Array[Byte]]
+        if (MaxByTsAgg.wins(ts, v, b.set, b.ts, b.value)) {
+          b.set = true
+          b.ts = ts
+          // copy: the evaluated bytes may alias reused row memory
+          b.value = if (v == null) null else v.clone()
+        }
       }
     }
     b
   }
 
   override def merge(b: MaxByTsAgg.Buf, o: MaxByTsAgg.Buf): MaxByTsAgg.Buf = {
-    if (o.set && (!b.set || o.ts > b.ts ||
-        (o.ts == b.ts && MaxByTsAgg.lexGt(o.value, b.value)))) {
+    if (o.set && MaxByTsAgg.wins(o.ts, o.value, b.set, b.ts, b.value)) {
       b.set = true; b.ts = o.ts; b.value = o.value
     }
     b
@@ -128,10 +124,24 @@ object MaxByTsAgg {
     var value: Array[Byte] = null
   }
 
+  /** The engine's one last-write-wins rule: does a cell (`ts`, `value`)
+    * beat the winner held so far, if `held`? A higher ts wins; on equal ts
+    * the lexicographically largest value ([[lexGt]]). A null ts never
+    * wins: callers skip such a cell.
+    */
+  def wins(ts: Long, value: Array[Byte],
+      held: Boolean, heldTs: Long, heldValue: Array[Byte]): Boolean =
+    !held || ts > heldTs || (ts == heldTs && lexGt(value, heldValue))
+
+  /** False when a cell at `ts` loses whatever its value: checked first, a
+    * losing cell's value is never read.
+    */
+  def canWin(ts: Long, held: Boolean, heldTs: Long): Boolean = !held || ts >= heldTs
+
   /** Unsigned lexicographic `a > b`; null sorts smallest. The equal-ts
     * tie-break — an arbitrary but total and merge-order-independent order.
     */
-  private[functions] def lexGt(a: Array[Byte], b: Array[Byte]): Boolean = {
+  private def lexGt(a: Array[Byte], b: Array[Byte]): Boolean = {
     if (a == null) return false
     if (b == null) return true
     val n = math.min(a.length, b.length)

@@ -41,23 +41,14 @@ object KvPivot {
       cells: DataFrame,
       columns: Seq[String],
       rowKeyCol: Option[String] = None,
-      family: Option[String] = None): DataFrame = {
-    val scan = family.foldLeft(cells)((df, cf) => df.filter(col("family") === cf))
+      family: Option[String] = None): DataFrame =
     // ONE aggregate for all schema columns: per row key, one slot per
     // distinct qualifier holding its max-ts cell's value; cells of other
     // qualifiers are skipped inside it. A TypedImperativeAggregate, so the
     // whole pivot is hash-based (ObjectHashAggregateExec), no sort on
     // either side of the exchange; the slots are projected back to the
     // schema columns after it.
-    val pivoted = graft.functions.LwwSlots.byRowKey(scan, columns.map(c => (c, c)))
-    rowKeyCol match {
-      // P4: rowKey injection — only for the named column, only when absent.
-      case Some(k) if columns.contains(k) =>
-        val vt = cells.schema("value").dataType
-        pivoted.withColumn(k, coalesce(col(k), col("rowKey").cast(vt)))
-      case _ => pivoted
-    }
-  }
+    slotted(cells, columns, rowKeyCol, family)(graft.functions.LwwSlots.byRowKey)
 
   /** A1 WITHOUT a shuffle — the reference's map-only export restated
     * (SURVEY §7.4 optional strategy; Txt:85 `setNumReduceTasks(0)`).
@@ -68,56 +59,30 @@ object KvPivot {
     * same invariant — range-partitioned by rowKey, sorted within partitions
     * (e.g. [[graft.kv.RangeLayout.layout]] output, or a bucketed/sorted
     * table) — this operator pivots with a per-partition streaming group:
-    * zero exchanges, O(one row's cells) memory, any scale.
+    * zero exchanges, O(one row's cells) memory, any scale. It fills the
+    * same slots by the same winner test as [[pivot]]; only the grouping
+    * differs.
     *
     * PRECONDITION (unchecked, like the reference's reliance on scan order):
-    * all cells of a rowKey live in one partition, sorted by rowKey within it.
+    * all cells of a rowKey live in one partition, adjacent within it.
     * Use [[pivot]] when the invariant is not known to hold.
     */
   def pivotPresorted(
       cells: DataFrame,
       columns: Seq[String],
       rowKeyCol: Option[String] = None,
-      family: Option[String] = None): DataFrame = {
-    val spark = cells.sparkSession
-    import spark.implicits._
-    val wanted = columns.toSet
+      family: Option[String] = None): DataFrame =
+    slotted(cells, columns, rowKeyCol, family)(graft.functions.LwwSlots.byAdjacentRowKey)
+
+  /** S2 family filter, `group` into the schema columns, P4 rowKey fill. */
+  private def slotted(cells: DataFrame, columns: Seq[String], rowKeyCol: Option[String],
+      family: Option[String])(group: (DataFrame, Seq[(String, String)]) => DataFrame) = {
     val scan = family.foldLeft(cells)((df, cf) => df.filter(col("family") === cf))
-      .select(col("rowKey"), col("qualifier"), col("value"), col("ts"))
-      .as[(String, String, Array[Byte], Long)]
-    val grouped = scan.mapPartitions { it =>
-      new Iterator[(String, Map[String, Array[Byte]])] {
-        private var pending: Option[(String, String, Array[Byte], Long)] = None
-        def hasNext: Boolean = pending.isDefined || it.hasNext
-        def next(): (String, Map[String, Array[Byte]]) = {
-          val first = pending.getOrElse(it.next())
-          pending = None
-          val key = first._1
-          // qualifier -> (value, ts); LWW by ts like the declarative pivot.
-          // Out-of-schema qualifiers are skipped but still anchor the row —
-          // one emit per scanned rowKey, like the reference (Txt:148-164).
-          var acc = Map.empty[String, (Array[Byte], Long)]
-          def put(c: (String, String, Array[Byte], Long)): Unit =
-            if (wanted.contains(c._2)) acc.get(c._2) match {
-              case Some((_, ts)) if ts >= c._4 => // stale write loses
-              case _ => acc = acc.updated(c._2, (c._3, c._4))
-            }
-          put(first)
-          var done = false
-          while (!done && it.hasNext) {
-            val c = it.next()
-            if (c._1 == key) put(c)
-            else { pending = Some(c); done = true }
-          }
-          key -> acc.map { case (q, (v, _)) => q -> v }
-        }
-      }
-    }
-    val pivoted = grouped.toDF("rowKey", "kv")
-      .select(col("rowKey") +: columns.map(c => col("kv").getItem(c).as(c)): _*)
+    val pivoted = group(scan, columns.map(c => (c, c)))
     rowKeyCol match {
-      case Some(k) if columns.contains(k) =>
-        pivoted.withColumn(k, coalesce(col(k), encode(col("rowKey"), "UTF-8")))
+      // P4: rowKey injection — only for the named column, only when absent.
+      case Some(k) if columns.contains(k) => pivoted.withColumn(k,
+        coalesce(col(k), col("rowKey").cast(cells.schema("value").dataType)))
       case _ => pivoted
     }
   }
@@ -218,12 +183,13 @@ object KvPivot {
     * implicitly by CreateTable.java:48-52) and its exporters read only the
     * newest — this is the retention/compaction step between those two
     * facts: rank a cell coordinate's versions newest-first and keep
-    * `rank <= k`. `k = 1` is exactly the A2 last-write-wins the pivot
-    * applies; larger k preserves history the way the store does.
+    * `rank <= k`; larger k preserves history the way the store does.
     *
     * One shuffle on (rowKey, qualifier); rank ties on equal ts break by
-    * value bytes so retention is deterministic (HBase itself breaks equal-ts
-    * ties by memstore sequence id, which no replay can reproduce).
+    * value bytes ASCENDING so retention is deterministic (HBase itself
+    * breaks equal-ts ties by memstore sequence id, which no replay can
+    * reproduce) — the pivot's winner test keeps the LARGEST, so `k = 1` is
+    * its last-write-wins only where no two versions share a ts.
     */
   def retainVersions(cells: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "retention must keep at least one version")

@@ -26,8 +26,9 @@ object Sinks {
   /** K2: SequenceFile<Text, NullWritable> — line as key, null value
     * (ExportHBaseTableToDelimiteredSeq.java:85-98, 186-188). No DataFrame
     * writer exists for sequence files; the RDD Hadoop API is the idiomatic
-    * route. `Text` is created inside the final pipelined map, never shuffled
-    * (Writables are not serializable).
+    * route. Like [[AvroIO.write]] it reads `queryExecution.toRdd`: each
+    * `Text` takes the line's UTF-8 bytes inside the final pipelined map,
+    * never shuffled (Writables are not serializable).
     *
     * @param codec "gzip" | "snappy" | "default" | None — the reference's
     *              codec menu (ExportHBaseTableToDelimiteredSeq.java:88-94).
@@ -46,8 +47,8 @@ object Sinks {
         case _        => classOf[DefaultCodec]
       })
     }
-    lines.rdd
-      .map(r => (new Text(r.getString(0)), NullWritable.get()))
+    lines.queryExecution.toRdd
+      .map(r => (new Text(r.getUTF8String(0).getBytes), NullWritable.get()))
       .saveAsNewAPIHadoopFile(path, classOf[Text], classOf[NullWritable],
         classOf[SequenceFileOutputFormat[Text, NullWritable]], job.getConfiguration)
   }

@@ -1821,38 +1821,18 @@ private[sources] class KvMaterializer(schema: MessageType, outNames: Seq[String]
   }
 }
 
-/** Driver-side memo for [[KvScan.liveMarkers]] — keyed by
-  * (path, salt width, sorted marker-file set), which uniquely determines
-  * the marker contents (segments are immutable once published). Small
-  * LRU: entries are ≤ [[KvDelete.MaxLiveMarkers]] rows each, and masked
-  * reads between commits reuse instead of re-reading every marker
-  * segment serially on the driver.
+/** Driver-side memo: a small LRU whose values ride SoftReferences, so
+  * under real memory pressure the GC can reclaim an entry the LRU hasn't —
+  * a re-load is a slower scan, an OOM is an outage. At most `maxEntries`
+  * entries, and the live values' total `weight` stays within `budget`;
+  * a freshly loaded value is always kept, so it must fit the budget alone.
   */
-private[sources] object KvMarkerCache {
-  private type Markers = Array[(String, String, String, Long, Array[Byte], String)]
+private[sources] class SoftLru[K, V](maxEntries: Int,
+    budget: Long = Long.MaxValue, weight: V => Long = (_: V) => 0L) {
+  private val cache =
+    new java.util.LinkedHashMap[K, java.lang.ref.SoftReference[V]](16, 0.75f, true)
 
-  /** Budget is TOTAL cached marker tuples, not entry count (ADVICE r18:
-    * an entry-count cap let four heavily-tombstoned tables pin
-    * ~4 × MaxLiveMarkers of driver heap permanently). Each single load
-    * is ≤ [[KvDelete.MaxLiveMarkers]] (the read refuses past it), so
-    * the freshly-inserted entry always fits the budget alone. Values
-    * ride SoftReferences besides: under real memory pressure the GC can
-    * reclaim an entry the LRU hasn't — a re-load is a slower scan, an
-    * OOM is an outage.
-    */
-  private val MaxTotalMarkers: Long = KvDelete.MaxLiveMarkers
-  /** Entry-count cap besides the tuple budget: every commit changes the
-    * marker-file-set key, so without it a long-lived driver scanning many
-    * small-marker tables would grow the MAP (keys carry the sorted file
-    * list) without ever tripping the tuple budget.
-    */
-  private val MaxEntries = 64
-  private val cache = new java.util.LinkedHashMap[
-    (String, String, Int, Seq[String]),
-    java.lang.ref.SoftReference[Markers]](16, 0.75f, true)
-
-  def get(key: (String, String, Int, Seq[String]),
-      load: () => Markers): Markers = {
+  def get(key: K, load: () => V): V = {
     cache.synchronized {
       val ref = cache.get(key)
       if (ref != null) {
@@ -1861,67 +1841,56 @@ private[sources] object KvMarkerCache {
         cache.remove(key): Unit // GC-cleared: drop the shell
       }
     }
-    // load OUTSIDE the lock (driver IO); a racing duplicate load is
-    // harmless — last writer wins, both arrays are identical
+    // load OUTSIDE the lock (driver IO or CPU); a racing duplicate load is
+    // harmless — last writer wins, both values are identical
     val v = load()
     cache.synchronized {
       cache.put(key, new java.lang.ref.SoftReference(v)): Unit
-      // Evict from the LRU-eldest end until the LIVE total fits the
-      // marker budget; GC-cleared shells drop on the way. The iterator
-      // reaches the just-inserted (newest) entry last, and it fits the
-      // budget alone, so the loop always terminates keeping it.
-      var total = cache.values.asScala
-        .foldLeft(0L)((a, r) => a + Option(r.get()).fold(0L)(_.length.toLong))
+      // Evict from the LRU-eldest end until both limits hold; GC-cleared
+      // shells drop on the way. The iterator reaches the just-inserted
+      // (newest) entry last, and it fits alone, so the loop always
+      // terminates keeping it.
+      def live(r: java.lang.ref.SoftReference[V]) = Option(r.get()).fold(0L)(weight)
+      var total = cache.values.asScala.foldLeft(0L)(_ + live(_))
       val it = cache.entrySet().iterator()
-      while ((total > MaxTotalMarkers || cache.size > MaxEntries) &&
-          it.hasNext) {
+      while ((total > budget || cache.size > maxEntries) && it.hasNext) {
         val e = it.next()
-        val live = Option(e.getValue.get()).fold(0L)(_.length.toLong)
-        if (!(e.getKey == key)) { it.remove(); total -= live }
+        if (!(e.getKey == key)) { total -= live(e.getValue); it.remove() }
       }
     }
     v
   }
 }
+
+/** Driver-side memo for [[KvScan.liveMarkers]] — keyed by
+  * (path, salt width, sorted marker-file set), which uniquely determines
+  * the marker contents (segments are immutable once published). Masked
+  * reads between commits reuse instead of re-reading every marker segment
+  * serially on the driver.
+  *
+  * Budget is TOTAL cached marker tuples, not entry count (ADVICE r18: an
+  * entry-count cap let four heavily-tombstoned tables pin
+  * ~4 × MaxLiveMarkers of driver heap permanently). Each single load is
+  * ≤ [[KvDelete.MaxLiveMarkers]] (the read refuses past it), so it fits
+  * the budget alone. The 64-entry cap besides: every commit changes the
+  * marker-file-set key, so without it a long-lived driver scanning many
+  * small-marker tables would grow the map (keys carry the sorted file
+  * list) without ever tripping the tuple budget.
+  */
+private[sources] object KvMarkerCache extends SoftLru[
+    (String, String, Int, Seq[String]),
+    Array[(String, String, String, Long, Array[Byte], String)]](
+  maxEntries = 64, budget = KvDelete.MaxLiveMarkers, weight = _.length.toLong)
 
 /** Driver-side memo for [[KvScan.maskSlices]] — the BUILT per-file mask
   * slices, keyed by the marker-cache key plus the planned file set (file
   * names uniquely determine their immutable manifest stats, so equal keys
-  * always reproduce identical slices). Values ride SoftReferences in a
-  * tiny LRU: each entry's masks hold at most the table's live markers
-  * (≤ [[KvDelete.MaxLiveMarkers]]), and under memory pressure the GC can
-  * reclaim them — a rebuild is driver CPU, an OOM is an outage.
+  * always reproduce identical slices). A tiny LRU: each entry's masks hold
+  * at most the table's live markers (≤ [[KvDelete.MaxLiveMarkers]]).
   */
-private[sources] object KvMaskSliceCache {
-  private type Key = (String, String, Int, Seq[String], Seq[String])
-  private type Slices = Option[Map[String, KvDelete.Mask]]
-  private val MaxEntries = 8
-  private val cache = new java.util.LinkedHashMap[
-    Key, java.lang.ref.SoftReference[Slices]](16, 0.75f, true)
-
-  def get(key: Key, load: () => Slices): Slices = {
-    cache.synchronized {
-      val ref = cache.get(key)
-      if (ref != null) {
-        val hit = ref.get()
-        if (hit != null) return hit
-        cache.remove(key): Unit
-      }
-    }
-    // load OUTSIDE the lock (driver CPU); a racing duplicate build is
-    // harmless — both produce identical immutable slices
-    val v = load()
-    cache.synchronized {
-      cache.put(key, new java.lang.ref.SoftReference(v)): Unit
-      val it = cache.entrySet().iterator()
-      while (cache.size > MaxEntries && it.hasNext) {
-        val e = it.next()
-        if (!(e.getKey == key)) it.remove()
-      }
-    }
-    v
-  }
-}
+private[sources] object KvMaskSliceCache extends SoftLru[
+    (String, String, Int, Seq[String], Seq[String]),
+    Option[Map[String, KvDelete.Mask]]](maxEntries = 8)
 
 /** Filter triage + translation shared by the scan builder, the region
   * pruner, and the reader factory.

@@ -141,9 +141,9 @@ object KvRegionLayout {
     FnNameRe.pattern.matcher(name).matches()
 
   /** Derive the certified layout + per-file region ordinals from a live
-    * (file, stat) set. None when the set doesn't certify (the
-    * [[KvTableInfo.storedDisjointSortedFrom]] conditions: all files
-    * stat-carrying with key bounds, ranges strictly disjoint).
+    * (file, stat) set. None when the set doesn't certify: a file lacks
+    * stats or key bounds, or the ranges (UTF-8 byte order, as the sink's
+    * stats) are not strictly disjoint. The one disjointness check.
     */
   def fromStats(salt: Option[Int],
       entries: Seq[(String, Option[KvLog.FileStat])])

@@ -75,19 +75,9 @@ object KvTableInfo {
   /** The certification applied to an ALREADY-REPLAYED live (name, stat)
     * set — lets one manifest replay serve several layout consults
     * ([[graft.ops.KvPivot.autoStrategy]] also needs the tombstone stats
-    * from the same replay).
+    * from the same replay). The check is [[KvRegionLayout.fromStats]]'s.
     */
   private[graft] def storedDisjointSortedFrom(
-      entries: Seq[(String, Option[KvLog.FileStat])]): Boolean = {
-    if (entries.isEmpty || entries.exists(_._2.isEmpty)) return false
-    val ranges =
-      entries.flatMap { case (_, st) => st.get.minKey.zip(st.get.maxKey) }
-    if (ranges.size != entries.size) return false // an all-null-key file: no bounds
-    // UTF-8 byte order — matches the sink's byte-ordered stats and the
-    // byte-order key sort that produced the files (graft.kv.Utf8Order doc)
-    ranges.sortBy(_._1)(graft.kv.Utf8Order).sliding(2).forall {
-      case Seq((_, hiA), (loB, _)) => graft.kv.Utf8Order.compare(hiA, loB) < 0
-      case _ => true // single file
-    }
-  }
+      entries: Seq[(String, Option[KvLog.FileStat])]): Boolean =
+    KvRegionLayout.fromStats(None, entries).isDefined
 }

@@ -645,9 +645,10 @@ object StreamingPivot {
     * multiple versions per cell until compaction, not just the newest:
     * each arriving cell insert-sorts into its qualifier's history, which
     * is trimmed to the newest `k` ([[graft.ops.KvPivot.retainVersions]] is
-    * the batch/compaction counterpart of the same retention rule, and
-    * [[LatestCells]] is the k=1 special case). Ties on equal ts break by
-    * value, matching the batch oracle's deterministic rank.
+    * the batch/compaction counterpart of the same retention rule). Ties on
+    * equal ts break by value ascending, matching the batch oracle's
+    * deterministic rank — so on a tie its newest version is not
+    * [[LatestCells]]'s winner, which follows the pivot's winner test.
     */
   object VersionedCells {
 
@@ -675,17 +676,22 @@ object StreamingPivot {
 
     type State = (Long, Map[String, (String, Long)]) // (version, cells)
 
-    /** LWW merge of new cells into the per-key state. */
+    /** LWW merge of new cells into the per-key state, by the batch pivot's
+      * winner test on the values' UTF-8 bytes.
+      */
     def update(
         key: String,
         events: Iterator[CellEvent],
         state: GroupState[State]): RowSnapshot = {
       val (version, prev) = state.getOption.getOrElse((0L, Map.empty[String, (String, Long)]))
+      def utf8(v: String) = if (v == null) null else v.getBytes("UTF-8")
       val next = events.foldLeft(prev) { (m, e) =>
-        m.get(e.qualifier) match {
-          case Some((_, ts)) if ts >= e.cellTs => m // stale write loses
-          case _ => m.updated(e.qualifier, (e.value, e.cellTs))
-        }
+        val held = m.get(e.qualifier)
+        val (hv, hts) = held.getOrElse((null, 0L))
+        if (graft.functions.MaxByTsAgg.wins(
+            e.cellTs, utf8(e.value), held.isDefined, hts, utf8(hv)))
+          m.updated(e.qualifier, (e.value, e.cellTs))
+        else m
       }
       state.update((version + 1, next))
       RowSnapshot(key, next.map { case (q, (v, _)) => q -> v },

@@ -126,7 +126,8 @@ class KvPivotSpec extends SparkSpec {
   }
 
   test("presorted pivot == shuffled pivot on range-laid-out input") {
-    val in = KvTableFixtures.randomCells(spark, 500, seed = 11) // dup keys, unique ts
+    // dup keys, unique ts; equal-ts ties: PivotLawsSpec's presorted law
+    val in = KvTableFixtures.randomCells(spark, 500, seed = 11)
     val cols = Seq("c0", "c1", "c2")
     val laid = graft.kv.RangeLayout.layout(in, 4)
     val a = str(KvPivot.pivotPresorted(laid, cols, rowKeyCol = Some("c2")), cols: _*)
@@ -164,7 +165,7 @@ class KvPivotSpec extends SparkSpec {
       ("k1", "C0", 1L, "v2", 30L), ("k1", "C0", 2L, "v3", 20L), // v1 evicted
       ("k1", "C1", 1L, "w1", 5L),
       ("k2", "C0", 1L, "x1", 99L))
-    // k = 1 is exactly the LWW the pivot applies
+    // k = 1 is the LWW the pivot applies while no two versions share a ts
     KvPivot.retainVersions(cells, k = 1)
       .filter(col("rowKey") === "k1" && col("qualifier") === "C0")
       .select(decode(col("value"), "UTF-8")).as[String].collect() shouldBe Array("v2")

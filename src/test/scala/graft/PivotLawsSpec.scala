@@ -18,8 +18,9 @@ class PivotLawsSpec extends SparkSpec {
   private val Schema = Seq("C0", "C1", "C2")
 
   /** Random cell sets: ≤8 keys × 3 qualifiers, ts unique per (key, qual)
-    * occurrence (exact-tie LWW is deliberately unspecified, like the
-    * reference's scan-order overwrite).
+    * occurrence, so the built-in `max_by` is a valid reference. Equal-ts
+    * ties are specified ([[MaxByTsAgg.wins]]) and covered by the edge-cell
+    * laws below.
     */
   private val cellsGen: Gen[List[(String, String, String, String, Long)]] = for {
     n <- Gen.choose(0, 50)
@@ -129,6 +130,23 @@ class PivotLawsSpec extends SparkSpec {
         byKey(KvPivot.pivot(cells, columns)) == byKey(perColumnPivot(cells, columns))
       }) finally spark.conf.unset(key)
     }
+  }
+
+  test("law: the presorted pivot equals the hash pivot on key-contiguous input, edge cells included") {
+    val columns = Seq("C1", "C0", "C2", "C0")
+    run("presorted-vs-hash", Prop.forAll(edgeCellsGen) { raw =>
+      // one partition, each key's cells adjacent — in generation order and
+      // reversed, so an equal-ts tie reaches the group in both orders
+      val byKeyRuns = raw.groupBy(_._1).toSeq.sortBy(_._1).map(_._2)
+      Seq(byKeyRuns.flatten, byKeyRuns.flatMap(_.reverse)).forall { ordered =>
+        val cells = spark.sparkContext.parallelize(ordered, 1)
+          .toDF("rowKey", "qualifier", "v", "ts")
+          .select(col("rowKey"), col("qualifier"),
+            encode(col("v"), "UTF-8").as("value"), col("ts"))
+        byKey(KvPivot.pivotPresorted(cells, columns, rowKeyCol = Some("C2"))) ==
+          byKey(KvPivot.pivot(cells, columns, rowKeyCol = Some("C2")))
+      }
+    })
   }
 
   test("law: MaxByTsAgg agrees with built-in max_by wherever ties cannot occur") {

@@ -66,6 +66,27 @@ class StreamingPivotSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("memstore: an equal-ts tie resolves to the batch pivot's winner, in either arrival order") {
+    import org.apache.spark.sql.functions.{col, decode, encode}
+    implicit val ctx = spark.sqlContext
+    val tie = Seq(CellEvent("r1", "a", "aa", 5), CellEvent("r1", "a", "ab", 5))
+    val batch = graft.ops.KvPivot.pivot(tie.toDF()
+        .select(col("rowKey"), col("qualifier"), encode(col("value"), "UTF-8").as("value"),
+          col("cellTs").as("ts")), Seq("a"))
+      .select(decode(col("a"), "UTF-8")).as[String].head()
+    batch shouldBe "ab"
+    for ((arrival, i) <- Seq(tie, tie.reverse).zipWithIndex) {
+      val in = MemoryStream[CellEvent]
+      val q = LatestCells(in.toDS()).writeStream.format("memory")
+        .queryName(s"ms_tie_$i").outputMode(OutputMode.Update()).start()
+      try {
+        arrival.foreach { e => in.addData(e); q.processAllAvailable() }
+        spark.table(s"ms_tie_$i").as[StreamingPivot.RowSnapshot].collect()
+          .maxBy(_.version).qualifiers shouldBe Map("a" -> batch)
+      } finally q.stop()
+    }
+  }
+
   test("versioned memstore: newest k per qualifier across batches, old versions evicted") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[CellEvent]
