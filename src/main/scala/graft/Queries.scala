@@ -445,7 +445,7 @@ object Queries
   /** r18: WIDE (multi-qualifier) index-served top-n — the pivot carries
     * click AND view, ordered by click: the covered index on click with
     * `include = view` serves the whole k-row answer index-only
-    * ([[graft.sources.KvIndex.topNCoveredWide]] via the routing rule's
+    * ([[graft.sources.KvIndex.topNCovered]] `wide`, via the routing rule's
     * TopN arm), include payload riding the entries. The null-ordering
     * boundary (view-only rows pivot with NULL click) is guarded inside
     * the lookup: bare DESC proves k full rows or answers from the exact

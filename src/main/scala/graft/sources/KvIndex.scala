@@ -111,7 +111,7 @@ object KvIndex {
     * and maintained incrementally by the exact refresh (the touched-key
     * joined frame already holds both sides); `Some(0)` is the O(1)
     * proof that lets BARE top-n serve index-first in both directions
-    * ([[topNCoveredWide]]/[[topNComposite]] docs). None = unknown
+    * ([[topNCovered]] `wide`/[[topNComposite]] docs). None = unknown
     * (shells): the serve guards simply fall back.
     */
   case class Meta(name: String, family: String, qualifier: String,
@@ -1030,18 +1030,16 @@ object KvIndex {
     val matching = list(fs, table)
       .find(m => m.family == family && m.qualifier == qualifier &&
         !m.composite)
-    matching match {
-      case Some(m) =>
-        require(pad == 0 || pad == m.pad,
-          s"graft-kv index: autoLookup pad=$pad contradicts index " +
-            s"'${m.name}' (pad=${m.pad}) on ($family, $qualifier)")
-        if (rangeIsSelective(fs, table, m, lo, hi))
-          lookup(spark, path, m.name, lo, hi, inPushdownCap)
-        else scanLookup(spark, path, m.copy(name = "<scan>"), lo, hi)
-      case None =>
-        scanLookup(spark, path,
-          Meta("<scan>", family, qualifier, pad, -1L), lo, hi)
-    }
+    matching.foreach(m => require(pad == 0 || pad == m.pad,
+      s"graft-kv index: autoLookup pad=$pad contradicts index " +
+        s"'${m.name}' (pad=${m.pad}) on ($family, $qualifier)"))
+    val m = matching.getOrElse(Meta("<scan>", family, qualifier, pad, -1L))
+    // bounds validate before the cost call: the index and the scan plan
+    // refuse the same inputs, so the answer never depends on the estimate
+    requireValidBounds(m, lo, hi)
+    if (matching.exists(rangeIsSelective(fs, table, _, lo, hi)))
+      lookup(spark, path, m.name, lo, hi, inPushdownCap)
+    else scanLookup(spark, path, m.copy(name = "<scan>"), lo, hi)
   }
 
   /** Driver-side memo for [[rangeIsSelective]]'s manifest replays, keyed
@@ -1102,9 +1100,7 @@ object KvIndex {
     */
   private[sources] def rangeEstimate(fs: FileSystem, table: Path, m: Meta,
       lo: String, hi: String): (Double, Long, Long) = {
-    def padded(v: String) =
-      if (m.pad > 0) ("0" * math.max(0, m.pad - v.length)) + v else v
-    val (loPad, hiPad) = (padded(lo), padded(hi))
+    val (loPad, hiPad) = (padBound(lo, m.pad), padBound(hi, m.pad))
     val idxStats = cachedLiveStats(fs, indexDir(table, m.name))
     val baseStats = cachedLiveStats(fs, table)
     val baseRows = baseStats.flatMap(_._2).map(_.rows).sum
@@ -1160,19 +1156,12 @@ object KvIndex {
   /** The index-free plan for the same answer: one pruned family scan,
     * LWW per key, the range filter on the current value — what a
     * low-selectivity range SHOULD do (reading the table once beats the
-    * index's per-candidate verification there).
+    * index's per-candidate verification there). Bounds arrive validated
+    * ([[autoLookup]]).
     */
   private def scanLookup(spark: SparkSession, path: String, m: Meta,
       lo: String, hi: String): DataFrame = {
-    def padded(v: String) =
-      if (m.pad > 0) ("0" * math.max(0, m.pad - v.length)) + v else v
-    val (loPad, hiPad) = (padded(lo), padded(hi))
-    if (m.pad > 0) Seq("lo" -> lo, "hi" -> hi).foreach { case (which, v) =>
-      require(v.length <= m.pad && v.nonEmpty &&
-        v.forall(c => c >= '0' && c <= '9'),
-        s"graft-kv index: decimal-mode $which bound '$v' must be a " +
-          s"non-negative decimal string of at most ${m.pad} digits")
-    }
+    val (loPad, hiPad) = (padBound(lo, m.pad), padBound(hi, m.pad))
     val pv = paddedValue(guardedValue(col("value"), m.pad), m.pad)
     baseCells(spark, path, m, Map.empty)
       .groupBy(col("rowKey"))
@@ -1205,32 +1194,41 @@ object KvIndex {
     requireValidBound(pad, "hi", hi)
   }
 
-  private def requireValidBound(pad: Int, which: String, v: String): Unit = {
+  private def requireValidBound(pad: Int, which: String, v: String): Unit =
+    boundProblem(pad, which, v).foreach(p => require(false, p))
+
+  /** Whether `v` can bound a key component of width `pad` (0 = string
+    * order) — the acceptance every lookup entry point enforces, asked
+    * by [[KvIndexRouting]] so a plan-time decision never routes a bound
+    * the execution-time lookup would refuse.
+    */
+  private[sources] def validBound(pad: Int, v: String): Boolean =
+    boundProblem(pad, "", v).isEmpty
+
+  private def boundProblem(pad: Int, which: String, v: String): Option[String] =
     // NUL is the KEY SEPARATOR: values are refused at build time
     // (checkedComponent), and BOUNDS must be too — a NUL-carrying bound
     // compares differently against the raw value ("b" < "b<NUL>z") than
     // against the NUL-joined encoded key ("b<NUL><suffix>" vs
     // "b<NUL>z" decides on the suffix), so the index-only fast path
     // would silently disagree with the verified path on range edges.
-    require(!v.contains(Sep),
-      s"graft-kv index: $which bound contains NUL (the key separator) " +
+    if (v.contains(Sep))
+      Some(s"graft-kv index: $which bound contains NUL (the key separator) " +
         "— unsupported for a string-ordered index")
-    if (pad > 0) {
-      require(v.length <= pad,
-        s"graft-kv index: $which bound '$v' exceeds the index's decimal " +
-          s"width pad=$pad — no indexed value can reach it")
-      // Decimal mode orders CANONICAL NON-NEGATIVE decimals; a
-      // non-digit bound (negative, signed, alpha) would compare
-      // lexically against zero-padded keys in an order that diverges
-      // from the numeric intent — refused rather than silently odd.
-      // (Non-digit VALUES are refused at build/refresh/verification
-      // time by guardedValue — they do NOT reliably sort outside padded
-      // ranges: pad=3 puts 'ab' → '0ab' inside ['000','999').)
-      require(v.nonEmpty && v.forall(c => c >= '0' && c <= '9'),
-        s"graft-kv index: decimal-mode $which bound '$v' must be a " +
-          "non-negative decimal string")
-    }
-  }
+    else if (pad > 0 && v.length > pad)
+      Some(s"graft-kv index: $which bound '$v' exceeds the index's decimal " +
+        s"width pad=$pad — no indexed value can reach it")
+    // Decimal mode orders CANONICAL NON-NEGATIVE decimals; a non-digit
+    // bound (negative, signed, alpha) would compare lexically against
+    // zero-padded keys in an order that diverges from the numeric intent
+    // — refused rather than silently odd. (Non-digit VALUES are refused
+    // at build/refresh/verification time by guardedValue — they do NOT
+    // reliably sort outside padded ranges: pad=3 puts 'ab' → '0ab'
+    // inside ['000','999').)
+    else if (pad > 0 && !(v.nonEmpty && v.forall(c => c >= '0' && c <= '9')))
+      Some(s"graft-kv index: decimal-mode $which bound '$v' must be a " +
+        "non-negative decimal string")
+    else None
 
   /** Left-zero-pad one validated bound to the component's width (0 = raw
     * string order, identity). Callers run [[requireValidBoundsAt]] first
@@ -1451,15 +1449,15 @@ object KvIndex {
     * direction. Decimal mode (pad > 0) orders numerically (padded keys);
     * string mode orders lexicographically — the same collation contract
     * as [[lookup]] bounds, which `range` shares.
-    */
-  /** [[topNCovered]] over the MULTI-qualifier pivot (r18): rows are the
-    * base rows carrying ANY of (leading qualifier ∪ `include`), output is
+    *
+    * `wide` serves the MULTI-qualifier pivot (r18): rows are the base
+    * rows carrying ANY of (leading qualifier ∪ `include`), output is
     * `(rowKey, value, <include columns>)`, ordered by the LEADING value.
     * The null-ordering boundary is where this differs from the
     * single-qualifier shape: a row with only include qualifiers pivots
     * with a NULL leading value, which the index (entries exist only for
     * leading-carrying rows) cannot see. Served index-first exactly where
-    * nulls provably cannot reach the k-set:
+    * nulls provably cannot reach the k-set (the wide null guards):
     *  - any `[lo, hi)` bound excludes null-leading rows on BOTH sides
     *    (the pivot's CAST comparison nulls them out too) — both
     *    directions serve;
@@ -1473,11 +1471,6 @@ object KvIndex {
     * Unlike the single-qualifier fresh path, wide mode may run bounded
     * probe jobs at call time (the lookup-shape contract).
     */
-  def topNCoveredWide(spark: SparkSession, path: String, name: String,
-      k: Int, desc: Boolean = true,
-      lo: Option[String] = None, hi: Option[String] = None): DataFrame =
-    topNCovered(spark, path, name, k, desc, lo, hi, wide = true)
-
   def topNCovered(spark: SparkSession, path: String, name: String, k: Int,
       desc: Boolean = true,
       lo: Option[String] = None, hi: Option[String] = None,
@@ -1526,8 +1519,8 @@ object KvIndex {
       .filter(col("_k").isNotNull && col("_v").isNotNull)
       .orderBy(key).limit(n.toInt)
 
-    // ---- WIDE machinery ([[topNCoveredWide]] doc): the multi-qualifier
-    // pivot's output, ranking, and exact fallback. ----
+    // ---- WIDE machinery ([[topNCovered]] `wide` doc): the
+    // multi-qualifier pivot's output, ranking, and exact fallback. ----
     val pvW = paddedValue(guardedValue(col("value"), m.pad), m.pad)
     /** Bounds + order + limit over a wide (rowKey, value, includes)
       * frame; null leading values sort with the direction default
@@ -1555,9 +1548,9 @@ object KvIndex {
     }
     def wideExact(opts: Map[String, String]): DataFrame =
       rankWide(wideFrame(opts, identity))
-    // Wide null guards ([[topNCoveredWide]] doc), applied at each serve
-    // site: any bound excludes null-leading rows on both sides; bare
-    // DESC serves only a k-full probed set; bare ASC never serves.
+    // Wide null guards ([[topNCovered]] `wide` doc), applied at each
+    // serve site: any bound excludes null-leading rows on both sides;
+    // bare DESC serves only a k-full probed set; bare ASC never serves.
 
     // Serve the PROBE's own rows when a k-full check had to run (the
     // bare-DESC wide guard): re-executing the probed frame would pay
@@ -1627,7 +1620,7 @@ object KvIndex {
       // candidate-restricted wide pivot, pinned; superset of the true
       // non-null-leading top-k by the same over-fetch argument, so the
       // k-set is exact exactly where the null guards prove nulls out
-      // ([[topNCoveredWide]] doc); the bare-DESC guard serves its own
+      // ([[topNCovered]] `wide` doc); the bare-DESC guard serves its own
       // probed rows (`served`) instead of re-running the ranked job
       def narrow(cells: DataFrame): DataFrame =
         if (small) cells.filter(col("rowKey").isin(candKeys.toIndexedSeq: _*))

@@ -15,6 +15,8 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, Data
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.kv.Utf8Order
+
 /** SQL-SURFACE AUTOMATIC INDEX ROUTING — the Phoenix-optimizer behavior
   * lifted into Catalyst: a plain SQL range predicate over the PIVOTED
   * VIEW of one or more qualifiers' current values,
@@ -50,20 +52,35 @@ import org.apache.spark.unsafe.types.UTF8String
   * composite composing, one index scan on the fresh path).
   *
   * Correctness boundary — why the rewrite can never change an answer:
-  *  - the original `Filter` stays ON TOP of the spliced lookup, so the
-  *    lookup only has to produce a SUPERSET of the rows the predicate
-  *    selects; bounds the extractor cannot map (IS NOT NULL debris,
-  *    extra conjuncts) simply stay residual;
-  *  - bounds are extracted only from conjuncts whose comparison
-  *    semantics PROVABLY match the component's collation: integral
-  *    `CAST(col AS BIGINT/INT)` comparisons for a decimal-mode
-  *    (`pad > 0`) component — numeric order IS padded-string order for
-  *    the canonical digit strings decimal mode enforces — and exact
-  *    `[lo, hi)` string comparisons for a string-mode component;
-  *  - the composite route requires an extractable range on EVERY key
-  *    component: those comparisons force each column non-null, so the
-  *    predicate's row set lies inside the index's inner-join row set
-  *    (rows carrying ALL components) — the superset argument again;
+  *  - the original `Filter` (and `Sort`/`Limit`) stays ON TOP of the
+  *    spliced lookup, so the lookup only has to produce a SUPERSET of
+  *    the rows the predicate selects (for top-n, of its top k);
+  *  - ONE extractor ([[valueRanges]]) reads a predicate's value range
+  *    for every route. It drops `IS NOT NULL` debris on a key component,
+  *    gives each remaining conjunct to the one component it references
+  *    and reads it only where the comparison semantics PROVABLY match
+  *    that component's collation: integral `CAST(col AS BIGINT/INT)`
+  *    comparisons (`=` included, either operand first) for a
+  *    decimal-mode (`pad > 0`) component — numeric order IS
+  *    padded-string order for the canonical digit strings decimal mode
+  *    enforces — and the four exact `[lo, hi)` spellings (`col >= 'x'`,
+  *    `col < 'y'` and their literal-first mirrors) under UTF-8 byte
+  *    order for a string-mode component. It reports what it cannot
+  *    read: a bound [[KvIndex.validBound]] refuses (a NUL literal), a
+  *    side past `Long.MaxValue`, a conjunct over several columns, any
+  *    other shape. Decimal ranges normalize once: a lo ≤ 0 or an
+  *    over-width hi is open, an over-width lo or an empty range declines;
+  *  - the range and composite routes need a closed range on EVERY key
+  *    component (a decimal open lo is the exact floor 0 — values are
+  *    non-negative) and leave unread conjuncts to the retained Filter.
+  *    Each comparison forces its column non-null, so the predicate's
+  *    rows all carry every component: the composite index's inner-join
+  *    row set holds them — the superset argument again;
+  *  - the top-n routes need EVERY conjunct read (an unread one would let
+  *    the re-applied Filter cut spliced rows and under-produce the
+  *    limit) and allow open sides; the composite top-n also needs a side
+  *    on each component (a fully open one admits NULL-component rows the
+  *    index cannot rank), bar the stat-proven bare sort;
   *  - the matched subtree must be EXACTLY the LWW pivot shape (one
   *    grouping key = rowKey, per-column utf8-decoded
   *    [[graft.functions.MaxByTsAgg]] — unconditional, or conditioned on
@@ -128,41 +145,38 @@ case class KvIndexRouting(session: SparkSession)
       case lim @ GlobalLimit(IntegerLiteral(k),
           ll @ LocalLimit(_, srt @ Sort(orders, true, child, _))) =>
         val (filt, pivotChild) = child match {
-          case f @ Filter(cond, fc) => (Some((f, cond)), fc)
+          case f: Filter => (Some(f), f.child)
           case other => (None, other)
         }
-        pivotShape(pivotChild) match {
-          case Some(shape) =>
-            try routeTopN(k, orders, filt.map(_._2), shape)
-              .map { sp =>
-                val inner = filt.fold(sp) { case (f, _) => f.copy(child = sp) }
-                lim.copy(child = ll.copy(child = srt.copy(child = inner)))
-              }
-              .getOrElse(lim)
-            catch {
-              case NonFatal(e) =>
-                logWarning(s"graft-kv index routing: falling back to the " +
-                  s"unrouted top-n of ${shape.path} (${e.getMessage})")
-                lim
-            }
-          case None => lim
-        }
+        rewrite(pivotChild, "top-n")(routeTopN(k, orders, filt.map(_.condition), _))
+          .map { sp =>
+            val inner = filt.fold(sp)(_.copy(child = sp))
+            lim.copy(child = ll.copy(child = srt.copy(child = inner)))
+          }
+          .getOrElse(lim)
     }
     topRouted.transformUp {
       case f @ Filter(cond, child) =>
-        pivotShape(child) match {
-          case Some(shape) =>
-            try route(cond, shape).map(Filter(cond, _)).getOrElse(f)
-            catch {
-              case NonFatal(e) =>
-                logWarning(s"graft-kv index routing: falling back to the " +
-                  s"unrouted scan of ${shape.path} (${e.getMessage})")
-                f
-            }
-          case None => f
-        }
+        rewrite(child, "scan")(route(cond, _)).map(Filter(cond, _)).getOrElse(f)
     }
   }
+
+  /** Match the pivot shape at `child` and run one route over it. The
+    * rewrite decision is never load-bearing: any internal error
+    * (filesystem hiccup, unreadable index meta) logs and keeps the
+    * unrouted plan.
+    */
+  private def rewrite(child: LogicalPlan, what: String)(
+      routeOf: PivotShape => Option[LogicalPlan]): Option[LogicalPlan] =
+    pivotShape(child).flatMap { shape =>
+      try routeOf(shape)
+      catch {
+        case NonFatal(e) =>
+          logWarning(s"graft-kv index routing: falling back to the " +
+            s"unrouted $what of ${shape.path} (${e.getMessage})")
+          None
+      }
+    }
 
   /** The matched LWW-pivot subtree: table path, family, and the
     * Aggregate's output attributes IN THEIR ORIGINAL ORDER — each tagged
@@ -375,124 +389,101 @@ case class KvIndexRouting(session: SparkSession)
     for {f <- fam; qs <- quals} yield (f, qs)
   }
 
-  /** The rewrite proper: find a matching index, extract collation-safe
-    * bounds, make the manifest-stat cost call, splice the verified
-    * lookup. None = keep the plan (which IS the correct scan plan).
+  /** The range rewrite: find an index keyed on exactly the predicated
+    * columns, read a closed range per key component, make the
+    * manifest-stat cost call, splice the verified lookup. None = keep
+    * the plan (which IS the correct scan plan).
     */
   private def route(cond: Expression, s: PivotShape): Option[LogicalPlan] = {
     val table = new Path(s.path)
     val fs = table.getFileSystem(session.sessionState.newHadoopConf())
     val conjuncts = splitConjunctivePredicates(cond)
-    val indexes = KvIndex.list(fs, table).filter(_.family == s.family)
-
-    if (s.cols.length == 1) {
-      val (qual, valOut) = s.cols.head
-      // EVERY matching index gets a shot (cost-only choice, never a
-      // correctness one): indexes on the same qualifier can differ in
-      // pad mode — one whose mode can't extract bounds from these
-      // conjuncts, or whose range prices unselective, must not veto a
-      // sibling that can serve. Among the serving candidates the
-      // CHEAPEST wins — smallest manifest-stat candidate estimate
-      // (r18; the memoized replay already priced each one), name as
-      // the deterministic tie-break.
-      // Composite indexes are inner joins of their components — wrong
-      // row set for a single-qualifier pivot; never route through one.
-      indexes
-        .filter(i => i.qualifier == qual && !i.composite)
-        .flatMap { m =>
-          bounds(conjuncts, valOut, m.pad).flatMap { case (lo, hi) =>
-            val (cand, baseRows, _) = KvIndex.rangeEstimate(fs, table, m, lo, hi)
-            if (KvIndex.isSelective(cand, baseRows))
-              Some((m, (lo, hi), cand))
-            else None
-          }
-        }
-        .sortBy { case (m, _, cand) => (cand, m.name) }
-        .headOption.map { case (m, (lo, hi), _) =>
-          logInfo(s"graft-kv index routing: serving value range [$lo, $hi) " +
-            s"on ${s.path} (${s.family}, $qual) through index '${m.name}'")
-          val node = lookupNode(s, m, KvRoutedLookup.Range,
-            Seq((Some(lo), Some(hi))))
-          splice(s, node, _ => node.output(1))
-        }
-    } else {
-      val byQual = s.cols.toMap
-      // Same serving-candidate iteration over the composite indexes
-      // whose key components are exactly the predicated columns: an
-      // extractable range on EVERY key component, in key order — each
-      // range forces its column non-null, so the predicate's rows all
-      // carry every component (the index's inner-join row set). The
-      // cheapest leading-bound estimate wins (r18), name tie-break.
-      indexes
-        .filter(i => i.composite && i.keyQuals.length == s.cols.length &&
-          i.keyQuals.toSet == s.cols.map(_._1).toSet)
-        .flatMap { m =>
-          sequence(m.keyQuals.zip(m.pads).map { case (q, p) =>
-            bounds(conjuncts, byQual(q), p)
-          }).flatMap { pc =>
-            val (cand, baseRows, _) = KvIndex.rangeEstimate(
-              fs, table, m, pc.head._1, pc.head._2)
-            if (KvIndex.isSelective(cand, baseRows))
-              Some((m, pc, cand))
-            else None
-          }
-        }
-        .sortBy { case (m, _, cand) => (cand, m.name) }
-        .headOption.map { case (m, perComp, _) =>
-          logInfo(s"graft-kv index routing: serving composite ranges " +
-            s"${m.keyQuals.zip(perComp).map { case (q, (l, h)) => s"$q:[$l,$h)" }
-              .mkString(", ")} on ${s.path} through index '${m.name}'")
-          val node = lookupNode(s, m, KvRoutedLookup.Composite,
-            perComp.map { case (l, h) => (Some(l), Some(h)) })
-          // lookupComposite output is POSITIONAL: rowKey, value (leading
-          // component), the non-leading components in index order, then
-          // includes — resolve by position, never by name (a component
-          // qualifier literally named 'rowKey' or 'value' would otherwise
-          // bind the wrong column)
-          splice(s, node, q =>
-            if (q == m.qualifier) node.output(1)
-            else {
-              val i = m.rest.indexWhere(_._1 == q)
-              require(i >= 0, s"graft-kv index routing: '$q' is not a " +
-                s"component of index '${m.name}'")
-              node.output(2 + i)
+    val byQual = s.cols.toMap
+    // EVERY index whose key components are exactly the predicated
+    // columns gets a shot (cost-only choice, never a correctness one):
+    // indexes on the same columns can differ in pad mode — one whose
+    // mode can't read these conjuncts, or whose range prices
+    // unselective, must not veto a sibling that can serve. So a
+    // single-column pivot never routes through a composite index (an
+    // inner join of its components — the wrong row set). Among the
+    // serving candidates the CHEAPEST leading-component estimate wins
+    // (r18; the memoized replay already priced each one), name as the
+    // deterministic tie-break.
+    KvIndex.list(fs, table)
+      .filter(i => i.family == s.family && i.keyQuals.length == byQual.size &&
+        i.keyQuals.forall(byQual.contains))
+      .flatMap { m =>
+        valueRanges(conjuncts, m.keyQuals.map(byQual).zip(m.pads))
+          .flatMap { case (ranges, _) =>
+            sequence(ranges.zip(m.pads).map { case ((lo, hi), pad) =>
+              // a decimal open lo is the exact floor: values are >= 0
+              for (l <- lo.orElse(if (pad > 0) Some("0") else None); h <- hi)
+                yield (l, h)
             })
-        }
-    }
+          }
+          .flatMap { closed =>
+            val (cand, baseRows, _) =
+              KvIndex.rangeEstimate(fs, table, m, closed.head._1, closed.head._2)
+            if (KvIndex.isSelective(cand, baseRows)) Some((m, closed, cand))
+            else None
+          }
+      }
+      .sortBy { case (m, _, cand) => (cand, m.name) }
+      .headOption.map { case (m, closed, _) =>
+        val bounds = closed.map { case (l, h) => (Option(l), Option(h)) }
+        logInfo(s"graft-kv index routing: serving value ranges " +
+          s"${describe(m, bounds)} on ${s.path} through index '${m.name}'")
+        splice(s, m, lookupNode(s, m,
+          if (m.composite) KvRoutedLookup.Composite else KvRoutedLookup.Range,
+          bounds))
+      }
   }
 
-  /** Rebuild EXACTLY the original output list over the lookup plan —
+  /** Rebuild EXACTLY the original output list over the routed node —
     * same order, same arity, same exprIds — so the routed and unrouted
     * plans are indistinguishable to everything above the matched node.
+    * The node's output is POSITIONAL: rowKey, the leading component's
+    * value, the other key components in index order, then the covered
+    * includes — resolved by position, never by name (a qualifier
+    * literally named 'rowKey' or 'value' would otherwise bind the wrong
+    * column).
     */
-  private def splice(s: PivotShape, lp: LogicalPlan,
-      compCol: String => Attribute): LogicalPlan =
+  private def splice(s: PivotShape, m: KvIndex.Meta,
+      node: KvRoutedLookup): LogicalPlan = {
+    val cols = m.keyQuals ++ m.include
     Project(s.outs.map {
-      case (a, None) => Alias(lp.output.head, a.name)(exprId = a.exprId)
-      case (a, Some(q)) => Alias(compCol(q), a.name)(exprId = a.exprId)
-    }, lp)
+      case (a, None) => Alias(node.output.head, a.name)(exprId = a.exprId)
+      case (a, Some(q)) =>
+        val i = cols.indexOf(q)
+        require(i >= 0, s"graft-kv index routing: '$q' is not a component " +
+          s"of or covered by index '${m.name}'")
+        Alias(node.output(1 + i), a.name)(exprId = a.exprId)
+    }, node)
+  }
 
-  /** The top-n rewrite decision: a single-qualifier pivot ordered by its
-    * value column — in the INDEX'S OWN COLLATION (bare string attr for a
-    * string-mode index, `CAST(value AS integral)` for decimal mode) with
-    * the direction's default null ordering (the pivot value is provably
-    * non-null, but default-only keeps the proof local) — optionally
-    * tie-broken by rowKey in the SAME direction (the order the encoded
-    * index key implies). Routes through any COVERED index regardless of
-    * freshness ([[KvIndex.topNCovered]] serves a stale index by
-    * verified over-fetch against the CDC tail — r18; degraded cases
-    * fall back to the pinned base pivot INSIDE the call, still k-exact).
-    * No selectivity call — a k-row index head is at most O(k + changes)
+  /** The top-n rewrite: `ORDER BY c1[, c2...] [DESC] LIMIT k` over the
+    * pivot — bare, or range-restricted (`Limit(Sort(Filter(cond,
+    * pivot)))`) — served by a COVERED index whose key components equal
+    * the sort columns IN ORDER (an exact list, not a prefix: a shorter
+    * sort would leave ties the encoded key breaks by components the
+    * query never named): [[KvIndex.topNCovered]] for one column,
+    * [[KvIndex.topNComposite]] (r19) for several. Every sort expression
+    * must order its column in the component's own collation
+    * ([[sortedColumn]]), all in ONE direction with its default null
+    * ordering (the pivot value is provably non-null, but default-only
+    * keeps the proof local), optionally tie-broken by rowKey in the
+    * same direction (the order the encoded index key implies). Routes
+    * regardless of freshness (a stale index serves by verified
+    * over-fetch against the CDC tail — r18; degraded cases fall back to
+    * the pinned base pivot INSIDE the call, still k-exact). No
+    * selectivity call — a k-row index head is at most O(k + changes)
     * base work against the pivot's O(table).
     *
-    * `cond` carries the RANGE-RESTRICTED variant
-    * (`Limit(Sort(Filter(range, pivot)))`): it routes only when EVERY
-    * material conjunct is an extractable value-range comparison — the
+    * `cond` routes only when [[valueRanges]] reads EVERY conjunct: the
     * spliced k-row set must be exactly the top-k of the cond-satisfying
-    * rows, so one residual conjunct (which the re-applied Filter would
-    * use to CUT spliced rows) could under-produce the limit. Either
-    * bound may be open; IsNotNull(value) debris is tautological on the
-    * spliced rows (lookup values are non-null) and is ignored.
+    * rows, so one unread conjunct (which the re-applied Filter would use
+    * to CUT spliced rows) could under-produce the limit. Open sides are
+    * fine (`value >= x ... LIMIT k`).
     */
   private def routeTopN(k: Int, orders: Seq[SortOrder],
       cond: Option[Expression], s: PivotShape): Option[LogicalPlan] = {
@@ -519,183 +510,82 @@ case class KvIndexRouting(session: SparkSession)
       case _ => false
     })
     val valOrders = if (rowKeyTie) orders.dropRight(1) else orders
-    if (valOrders.isEmpty) return None // ORDER BY rowKey alone: not ours
-    // A MULTI-column value sort routes through a composite index whose
-    // key components equal the sort columns in order (r19).
-    if (valOrders.length >= 2)
-      return routeTopNComposite(k, valOrders, desc, cond, s)
-    // the ordered expression names which pivot column the index must key
-    // on — bare attr (string collation) or integral cast (decimal)
-    val orderedAttr: Option[AttributeReference] = valOrders.headOption
-      .map(_.child).flatMap {
-        case a: AttributeReference => Some(a)
-        case c: Cast if c.dataType == LongType || c.dataType == IntegerType ||
-            c.dataType == ShortType =>
-          c.child match {
-            case a: AttributeReference => Some(a)
-            case _ => None
-          }
-        case _ => None
-      }
-    val ordered = orderedAttr.flatMap(a =>
-      s.cols.find(_._2.exprId == a.exprId))
-    if (ordered.isEmpty) return None
-    val (qual, valOut) = ordered.get
-    // the OTHER pivoted columns (multi-qualifier shape, r18): served
-    // from a covered index whose include set is EXACTLY these — a
-    // superset index would add include-only rows the pivot lacks on the
-    // wide fallback path
-    val others = s.cols.collect {
-      case (q, a) if a.exprId != valOut.exprId => q }
-    val wide = others.nonEmpty
-    // The sort expression decides which index MODE may serve: numeric
-    // order equals padded-key order only for decimal mode, raw string
-    // order only for string mode.
-    def collationOk(pad: Int): Boolean = orders.head.child match {
-      case a: AttributeReference if a.exprId == valOut.exprId => pad == 0
-      case c: Cast =>
-        c.child match {
-          case a: AttributeReference if a.exprId == valOut.exprId => pad > 0
-          case _ => false
-        }
-      case _ => false
+    val sorted = sequence(valOrders.map(o => sortedColumn(o.child, s))) match {
+      case Some(cs) if cs.map(_._1).distinct.length == cs.length => cs
+      case _ => return None // ORDER BY rowKey alone, or an unservable sort
     }
-    val table = new Path(s.path)
-    val fs = table.getFileSystem(session.sessionState.newHadoopConf())
-    // Cost tie-break (r18): a top-n fetch reads (2 + |include|) cells
-    // per entry, so among serving covered indexes the narrowest payload
-    // wins; name as the deterministic tie-break.
-    KvIndex.list(fs, table)
-      .filter(i => i.family == s.family && i.qualifier == qual &&
-        !i.composite && i.covered && collationOk(i.pad) &&
-        (!wide || i.include.toSet == others.toSet) &&
-        (k.toLong + 1) * (2 + i.include.length) <= KvIndex.MaxTopNFetch)
-      .flatMap { m =>
-        cond match {
-          case None =>
-            Some((m, Option.empty[String], Option.empty[String]))
-          case Some(c) =>
-            boundsTopN(splitConjunctivePredicates(c), valOut, m.pad)
-              .map { case (lo, hi) => (m, lo, hi) }
-        }
-      }
-      // multi-qualifier + bare + ASC: nulls rank FIRST and the index
-      // only sees leading-carrying rows ([[KvIndex.topNCoveredWide]]
-      // doc) — routes ONLY when the maintained includeOnly stat proves
-      // no such row exists (r19; the stat is re-proven inside the
-      // lookup at execution, so a stale plan-time read stays exact —
-      // the node falls back to the wide pivot, never wrong)
-      .filterNot { case (m, lo, hi) =>
-        wide && !desc && lo.isEmpty && hi.isEmpty &&
-          !m.includeOnly.contains(0L) }
-      .sortBy { case (m, _, _) => (m.include.length, m.name) }
-      .headOption.map { case (m, lo, hi) =>
-        val rng = if (lo.isEmpty && hi.isEmpty) ""
-          else s" in [${lo.getOrElse("")}, ${hi.getOrElse("inf")})"
-        logInfo(s"graft-kv index routing: serving ORDER BY value " +
-          s"${if (desc) "DESC " else ""}LIMIT $k$rng on ${s.path} " +
-          s"(${s.family}, $qual${if (wide) s" + ${others.mkString(",")}"
-            else ""}) through index '${m.name}'")
-        val node = lookupNode(s, m, KvRoutedLookup.TopN, Seq((lo, hi)),
-          topK = k, desc = desc, wide = wide)
-        splice(s, node, q =>
-          if (q == qual) node.output(1)
-          else {
-            val i = m.include.indexOf(q)
-            require(i >= 0, s"graft-kv index routing: '$q' is not " +
-              s"covered by index '${m.name}'")
-            node.output(2 + i)
-          })
-      }
-  }
-
-  /** [[routeTopN]]'s COMPOSITE branch (r19): `ORDER BY c1, c2... [DESC]
-    * LIMIT k` routes through a composite index whose key components
-    * equal the sort columns IN ORDER (exact list, not a prefix — a
-    * shorter sort would leave ties the encoded key breaks by components
-    * the query never named), each sort expression in its component's own
-    * collation (bare attr = string mode, integral cast = decimal mode),
-    * and — the null wall ([[KvIndex.topNComposite]] doc) — an
-    * extractable bound with at least one side on EVERY component, every
-    * material conjunct consumed. Served via the NUL-joined encoded key
-    * order with the same stale tolerance as the single-column route.
-    */
-  private def routeTopNComposite(k: Int, valOrders: Seq[SortOrder],
-      desc: Boolean, cond: Option[Expression], s: PivotShape)
-      : Option[LogicalPlan] = {
-    // each sort expression → (qualifier, pivot attr, decimal collation?)
-    def sortComp(e: Expression): Option[(Attribute, Boolean)] = e match {
-      case a: AttributeReference => Some((a, false))
-      case c: Cast if c.dataType == LongType || c.dataType == IntegerType ||
-          c.dataType == ShortType =>
-        c.child match {
-          case a: AttributeReference => Some((a, true))
-          case _ => None
-        }
-      case _ => None
-    }
-    val comps: Seq[(String, Attribute, Boolean)] = valOrders.flatMap(o =>
-      sortComp(o.child).flatMap { case (a, cast) =>
-        s.cols.find(_._2.exprId == a.exprId).map { case (q, v) => (q, v, cast) }
-      })
-    if (comps.length != valOrders.length) return None // unrecognized expr
-    if (comps.map(_._1).distinct.length != comps.length) return None
-    val keyQualList = comps.map(_._1)
-    // pivot columns beyond the key components must come from the include
-    // payload (rows are the same either way: the per-component bounds
-    // already pin the row set to the index's inner-join entries)
-    val extras = s.cols.collect {
-      case (q, _) if !keyQualList.contains(q) => q }
+    val keyQuals = sorted.map(_._1)
+    val composite = sorted.length > 1
+    // Pivot columns beyond the sort components come from the covered
+    // include payload. One sort column over a multi-qualifier pivot is
+    // the WIDE lookup (r18), whose rows carry ANY of (leading ∪
+    // include): its include set must be EXACTLY the other columns, or
+    // include-only rows the pivot lacks join the wide fallback. A
+    // composite's per-component bounds pin its rows to the index's
+    // inner-join entries, so any include superset serves.
+    val extras = s.cols.map(_._1).filterNot(keyQuals.contains)
+    val wide = !composite && extras.nonEmpty
     val conjuncts = cond.map(splitConjunctivePredicates).getOrElse(Nil)
     val table = new Path(s.path)
     val fs = table.getFileSystem(session.sessionState.newHadoopConf())
     KvIndex.list(fs, table)
-      .filter { i =>
-        i.family == s.family && i.composite && i.covered &&
-          i.keyQuals == keyQualList &&
-          i.pads.zip(comps).forall { case (p, (_, _, cast)) =>
-            (p > 0) == cast } &&
-          extras.forall(i.include.contains) &&
-          (k.toLong + 1) * (1 + i.keyQuals.length + i.include.length) <=
-            KvIndex.MaxTopNFetch
-      }
+      .filter(i => i.family == s.family && i.covered &&
+        i.keyQuals == keyQuals &&
+        i.pads.zip(sorted).forall { case (p, (_, _, dec)) => (p > 0) == dec } &&
+        (if (wide) i.include.toSet == extras.toSet
+          else extras.forall(i.include.contains)) &&
+        (k.toLong + 1) * (1 + i.keyQuals.length + i.include.length) <=
+          KvIndex.MaxTopNFetch)
       .flatMap { m =>
-        if (conjuncts.isEmpty) {
-          // BARE multi-column sort (r19): only a PARTIAL-FREE index can
-          // serve — a row missing a component ranks mid-stream and is
-          // invisible to the inner-join index. The maintained stat
-          // ([[KvIndex.Meta.includeOnly]]) is the plan-time gate; the
-          // lookup re-proves it at execution and falls back to the
-          // exact any-frame pivot if the world moved — never wrong.
-          if (m.includeOnly.contains(0L))
-            Some((m, m.keyQuals.map(_ =>
-              (Option.empty[String], Option.empty[String]))))
-          else None
-        } else boundsTopNMulti(conjuncts, comps.map(_._2), m.pads)
-          .map(pb => (m, pb))
+        val bounds = valueRanges(conjuncts, sorted.map(_._2).zip(m.pads))
+          .collect { case (ranges, true) => ranges }
+        // The null walls — rows missing a sort column rank among the
+        // k-set where the index (entries only for rows carrying every
+        // component) cannot see them. Composite: every component needs a
+        // bound side ([[KvIndex.topNComposite]] doc), bar a BARE sort
+        // over a PARTIAL-FREE index. Wide: nulls rank FIRST under a bare
+        // ASC sort ([[KvIndex.topNCovered]] `wide` doc), which serves
+        // only on the same proof. The proof is the maintained
+        // [[KvIndex.Meta.includeOnly]] stat (r19); the lookup re-proves
+        // it at execution and falls back to the exact pivot if the world
+        // moved — a stale plan-time read is never wrong.
+        val complete = m.includeOnly.contains(0L)
+        bounds.filter { bs =>
+          val open = bs.map { case (lo, hi) => lo.isEmpty && hi.isEmpty }
+          if (composite) !open.exists(identity) || (conjuncts.isEmpty && complete)
+          else !(wide && !desc && open.head && !complete)
+        }.map(bs => (m, bs))
       }
-      .sortBy { case (m, _) => (m.include.length, m.name) }
-      .headOption.map { case (m, pb) =>
+      .sortBy { case (m, _) => (m.include.length, m.name) } // narrowest payload
+      .headOption.map { case (m, bs) =>
         logInfo(s"graft-kv index routing: serving ORDER BY " +
-          s"${m.keyQuals.mkString(", ")} ${if (desc) "DESC " else ""}" +
-          s"LIMIT $k in ${m.keyQuals.zip(pb).map { case (q, (l, h)) =>
-            s"$q:[${l.getOrElse("")},${h.getOrElse("inf")})" }
-            .mkString(", ")} on ${s.path} through index '${m.name}'")
-        val node = lookupNode(s, m, KvRoutedLookup.TopNComposite, pb,
-          topK = k, desc = desc)
-        splice(s, node, q =>
-          if (q == m.qualifier) node.output(1)
-          else {
-            val r = m.rest.indexWhere(_._1 == q)
-            if (r >= 0) node.output(2 + r)
-            else {
-              val j = m.include.indexOf(q)
-              require(j >= 0, s"graft-kv index routing: '$q' is not a " +
-                s"component of or covered by index '${m.name}'")
-              node.output(2 + m.rest.length + j)
-            }
-          })
+          s"${keyQuals.mkString(", ")} ${if (desc) "DESC " else ""}LIMIT $k " +
+          s"in ${describe(m, bs)}" +
+          s"${if (wide) s" + ${extras.mkString(",")}" else ""} on ${s.path} " +
+          s"through index '${m.name}'")
+        splice(s, m, lookupNode(s, m,
+          if (composite) KvRoutedLookup.TopNComposite else KvRoutedLookup.TopN,
+          bs, topK = k, desc = desc, wide = wide))
       }
+  }
+
+  /** One ORDER BY expression as (qualifier, pivot column, decimal
+    * collation?): a bare pivot column sorts in string order, an
+    * integral cast of one numerically — which is padded-key order only
+    * for a decimal-mode component, as raw string order is only for a
+    * string-mode one. Any other expression no index order serves.
+    */
+  private def sortedColumn(e: Expression,
+      s: PivotShape): Option[(String, Attribute, Boolean)] = {
+    val (inner, decimal) = e match {
+      case c: Cast if integral(c.dataType) => (c.child, true)
+      case other => (other, false)
+    }
+    inner match {
+      case a: AttributeReference =>
+        s.cols.find(_._2.exprId == a.exprId).map { case (q, v) => (q, v, decimal) }
+      case _ => None
+    }
   }
 
   /** Manufacture the LAZY routed-lookup node ([[KvRoutedLookup]]) — the
@@ -737,219 +627,126 @@ case class KvIndexRouting(session: SparkSession)
       wide = wide)
   }
 
+  private def describe(m: KvIndex.Meta,
+      bounds: Seq[(Option[String], Option[String])]): String =
+    m.keyQuals.zip(bounds).map { case (q, (l, h)) =>
+      s"$q:[${l.getOrElse("")},${h.getOrElse("inf")})" }.mkString(", ")
+
   private def sequence[T](xs: Seq[Option[T]]): Option[Seq[T]] =
     if (xs.exists(_.isEmpty)) None else Some(xs.flatten)
 
-  /** Extract a [lo, hi) value range from the conjuncts that compare the
-    * given column in the component's OWN collation (class doc). Both
-    * bounds must materialize (decimal mode floors a missing lo at 0 —
-    * values are canonical non-negative decimals), fit the declared
-    * width, and leave a non-empty range; otherwise no routing.
+  /** THE value-range extractor every route shares (class doc): reads
+    * the conjuncts into one `[lo, hi)` per key component `(column,
+    * pad)` — an open side is None — and says whether it read EVERY
+    * conjunct. `IS NOT NULL` debris on a component is dropped (it holds
+    * on every spliced row); each other conjunct belongs to the single
+    * component it references, or to none (unread). None = some
+    * component's range is provably empty or above every indexed value:
+    * no route serves it (the unrouted plan computes the same empty or
+    * rare answer).
     */
-  private def bounds(conjuncts: Seq[Expression], v: Attribute,
-      pad: Int): Option[(String, String)] = {
-    def isV(e: Expression): Boolean = e match {
-      case a: AttributeReference => a.exprId == v.exprId
-      case _ => false
-    }
-    if (pad > 0) {
-      def castOfV(e: Expression): Boolean = e match {
-        case c: Cast if isV(c.child) && (c.dataType == LongType ||
-          c.dataType == IntegerType || c.dataType == ShortType) => true
-        case _ => false
-      }
-      def litLong(e: Expression): Option[Long] = e match {
-        case Literal(x: Long, LongType) => Some(x)
-        case Literal(x: Int, IntegerType) => Some(x.toLong)
-        case Literal(x: Short, ShortType) => Some(x.toLong)
-        case _ => None
-      }
-      var lo = 0L // decimal values are non-negative: 0 is an exact floor
-      var hi = Option.empty[Long]
-      def addLo(x: Long): Unit = lo = math.max(lo, x)
-      def addHi(x: Long): Unit = hi = Some(hi.fold(x)(math.min(_, x)))
-      def excl(x: Long): Unit = if (x < Long.MaxValue) addLo(x + 1)
-      def incl(x: Long): Unit = if (x < Long.MaxValue) addHi(x + 1)
-      conjuncts.foreach {
-        case GreaterThanOrEqual(l, r) if castOfV(l) => litLong(r).foreach(addLo)
-        case GreaterThan(l, r) if castOfV(l) => litLong(r).foreach(excl)
-        case LessThan(l, r) if castOfV(l) => litLong(r).foreach(addHi)
-        case LessThanOrEqual(l, r) if castOfV(l) => litLong(r).foreach(incl)
-        case EqualTo(l, r) if castOfV(l) =>
-          litLong(r).foreach { x => addLo(x); incl(x) }
-        case EqualTo(l, r) if castOfV(r) =>
-          litLong(l).foreach { x => addLo(x); incl(x) }
-        // literal-first spellings mirror
-        case GreaterThanOrEqual(l, r) if castOfV(r) => litLong(l).foreach(incl)
-        case GreaterThan(l, r) if castOfV(r) => litLong(l).foreach(addHi)
-        case LessThan(l, r) if castOfV(r) => litLong(l).foreach(excl)
-        case LessThanOrEqual(l, r) if castOfV(r) => litLong(l).foreach(addLo)
-        case _ => ()
-      }
-      hi.filter(h => h > lo && h >= 1).flatMap { h =>
-        val (ls, hs) = (lo.toString, h.toString)
-        if (ls.length <= pad && hs.length <= pad) Some((ls, hs)) else None
-      }
-    } else {
-      // String collation: only the two exact-[lo, hi) spellings are
-      // provably range-equivalent; >/<= on strings have no closed-form
-      // exclusive twin, so they stay residual and block routing.
-      // NUL-carrying literals never extract (r18): the lazy routed node
-      // defers the lookup's NUL-bound refusal to EXECUTION time, where
-      // no unrouted fallback exists — the rewrite decision must stay
-      // non-load-bearing, so an inexpressible bound declines HERE.
-      // Dropping the literal widens or voids the range — a superset
-      // either way, and the retained Filter keeps the answer exact.
-      var lo = Option.empty[String]
-      var hi = Option.empty[String]
-      def litStr(e: Expression): Option[String] = e match {
-        case Literal(s: UTF8String, StringType) =>
-          Some(s.toString).filterNot(_.contains("\u0000"))
-        case _ => None
-      }
-      // Bound tightening under UTF-8 BYTE order (graft.kv.Utf8Order) —
-      // the ordering the index's encoded keys and Spark's UTF8String
-      // filters use; JVM String order can pick a non-superset bound.
-      def addLo(x: String): Unit = lo = Some(lo.fold(x)(graft.kv.Utf8Order.max(x, _)))
-      def addHi(x: String): Unit = hi = Some(hi.fold(x)(graft.kv.Utf8Order.min(x, _)))
-      conjuncts.foreach {
-        case GreaterThanOrEqual(l, r) if isV(l) => litStr(r).foreach(addLo)
-        case LessThan(l, r) if isV(l) => litStr(r).foreach(addHi)
-        case LessThanOrEqual(l, r) if isV(r) => litStr(l).foreach(addLo)
-        case GreaterThan(l, r) if isV(r) => litStr(l).foreach(addHi)
-        case _ => ()
-      }
-      for {l <- lo; h <- hi if graft.kv.Utf8Order.compare(h, l) > 0} yield (l, h)
-    }
-  }
-
-  /** [[boundsTopN]] per key COMPONENT for the composite top-n route
-    * ([[routeTopNComposite]]): every material conjunct must be a bound
-    * on exactly ONE of the sort components (a leftover conjunct would
-    * let the re-applied Filter cut spliced rows and under-produce the
-    * limit; a conjunct touching several columns has no per-component
-    * reading), and every component must end with at least one bound
-    * side — a fully-open component admits NULL-component rows the index
-    * cannot rank ([[KvIndex.topNComposite]] doc). A decimal `>= 0` is
-    * dropped as tautological by [[boundsTopN]] and so reads as open
-    * here: sound (we decline), just conservative.
-    */
-  private def boundsTopNMulti(conjuncts: Seq[Expression],
-      vs: Seq[Attribute], pads: Seq[Int])
-      : Option[Seq[(Option[String], Option[String])]] = {
-    val ids = vs.map(_.exprId)
-    val material = conjuncts.filterNot {
+  private def valueRanges(conjuncts: Seq[Expression],
+      comps: Seq[(Attribute, Int)])
+      : Option[(Seq[(Option[String], Option[String])], Boolean)] = {
+    val ids = comps.map(_._1.exprId)
+    val byComp = conjuncts.filterNot {
       case IsNotNull(a: AttributeReference) => ids.contains(a.exprId)
       case _ => false
-    }
-    val buckets = Array.fill(vs.length)(List.empty[Expression])
-    material.foreach { e =>
+    }.groupBy { e =>
       val refs = e.references.toSeq.map(_.exprId).distinct
-      val hit = if (refs.length == 1) ids.indexOf(refs.head) else -1
-      if (hit < 0) return None // references none, several, or a non-sort col
-      buckets(hit) ::= e
+      if (refs.length == 1) ids.indexOf(refs.head) else -1
     }
-    val per = vs.indices.map(i => boundsTopN(buckets(i), vs(i), pads(i)))
-    if (per.exists(_.isEmpty)) return None
-    val out = per.map(_.get)
-    if (out.exists { case (lo, hi) => lo.isEmpty && hi.isEmpty }) None
-    else Some(out)
+    val read = comps.zipWithIndex.map { case ((v, pad), i) =>
+      val cs = byComp.getOrElse(i, Nil)
+      if (pad > 0) decimalRange(cs, v, pad) else stringRange(cs, v)
+    }
+    sequence(read.map(_._1)).map((_, !byComp.contains(-1) && read.forall(_._2)))
   }
 
-  /** STRICT, open-ended variant of [[bounds]] for the range-restricted
-    * top-n ([[routeTopN]] doc): EVERY material conjunct must be
-    * consumed into the range — a leftover conjunct would let the
-    * re-applied Filter cut spliced rows and under-produce the limit —
-    * and either bound may stay open (`value >= x ... LIMIT k`).
-    * `IsNotNull(value)` debris is dropped (tautological on lookup
-    * rows); tautological bounds (decimal lo <= 0, hi wider than the
-    * declared width) are dropped as open; a provably-empty or
-    * overflow-adjacent range declines (the unrouted plan computes the
-    * same empty/rare answer). Returns `Some((lo, hi))` to route, None
-    * to leave the plan alone.
+  /** A decimal component's range: integral-cast comparisons against
+    * integral literals, each read as sides of an inclusive lo and an
+    * exclusive hi. A side past `Long.MaxValue` has no such form — it is
+    * left out, and its conjunct counts unread. Then the one
+    * normalization: values are canonical non-negative decimals of at
+    * most `pad` digits, so a lo ≤ 0 or a hi wider than that is open, and
+    * an empty range or a lo wider than that declines.
     */
-  private def boundsTopN(conjuncts: Seq[Expression], v: Attribute,
-      pad: Int): Option[(Option[String], Option[String])] = {
-    def isV(e: Expression): Boolean = e match {
-      case a: AttributeReference => a.exprId == v.exprId
+  private def decimalRange(cs: Seq[Expression], v: Attribute, pad: Int)
+      : (Option[(Option[String], Option[String])], Boolean) = {
+    def subject(e: Expression): Boolean = e match {
+      case c: Cast => integral(c.dataType) && isAttr(c.child, v)
       case _ => false
     }
-    val material = conjuncts.filterNot {
-      case IsNotNull(a: AttributeReference) => a.exprId == v.exprId
-      case _ => false
+    def succ(x: Long) = if (x < Long.MaxValue) Some(x + 1) else None
+    val read = cs.map(e => compared(e, subject).collect {
+      case (">=", LongLit(x)) => Seq((true, Some(x)))
+      case (">", LongLit(x)) => Seq((true, succ(x)))
+      case ("<", LongLit(x)) => Seq((false, Some(x)))
+      case ("<=", LongLit(x)) => Seq((false, succ(x)))
+      case ("=", LongLit(x)) => Seq((true, Some(x)), (false, succ(x)))
+    })
+    val sides = read.flatten.flatten
+    val lo = sides.collect { case (true, Some(x)) => x }.maxOption.filter(_ > 0)
+    val hi = sides.collect { case (false, Some(x)) => x }.minOption
+    val range =
+      if (hi.exists(_ <= lo.getOrElse(0L))) None
+      else if (lo.exists(l => !KvIndex.validBound(pad, l.toString))) None
+      else Some((lo.map(_.toString),
+        hi.map(_.toString).filter(KvIndex.validBound(pad, _))))
+    (range, read.forall(_.exists(_.forall(_._2.isDefined))))
+  }
+
+  /** A string component's range: the four exact `[lo, hi)` spellings,
+    * tightened under UTF-8 BYTE order ([[graft.kv.Utf8Order]] — the
+    * order of the index's encoded keys and of Spark's UTF8String
+    * filters; JVM String order could pick a non-superset bound). `>` and
+    * `<=` have no closed-form exclusive twin in string order and stay
+    * unread, as does a literal [[KvIndex.validBound]] refuses (NUL, the
+    * key separator): the lazy routed node would meet the lookup's
+    * refusal at EXECUTION, where no unrouted fallback exists. An empty
+    * range declines.
+    */
+  private def stringRange(cs: Seq[Expression], v: Attribute)
+      : (Option[(Option[String], Option[String])], Boolean) = {
+    val read = cs.map(e => compared(e, isAttr(_, v)).collect {
+      case (op @ (">=" | "<"), Literal(x: UTF8String, StringType))
+          if KvIndex.validBound(0, x.toString) => (op == ">=", x.toString)
+    })
+    val lo = read.flatten.collect { case (true, x) => x }.maxOption(Utf8Order)
+    val hi = read.flatten.collect { case (false, x) => x }.minOption(Utf8Order)
+    val empty = lo.zip(hi).exists { case (l, h) => Utf8Order.compare(h, l) <= 0 }
+    (if (empty) None else Some((lo, hi)), read.forall(_.isDefined))
+  }
+
+  /** A comparison with `subject` on either side, read subject-first:
+    * `5 > CAST(v AS BIGINT)` is `("<", 5)`.
+    */
+  private def compared(e: Expression,
+      subject: Expression => Boolean): Option[(String, Expression)] = e match {
+    case b: BinaryComparison if subject(b.left) => Some((b.symbol, b.right))
+    case b: BinaryComparison if subject(b.right) =>
+      Mirrored.get(b.symbol).map((_, b.left))
+    case _ => None
+  }
+
+  private val Mirrored =
+    Map(">=" -> "<=", ">" -> "<", "<=" -> ">=", "<" -> ">", "=" -> "=")
+
+  private object LongLit {
+    def unapply(e: Expression): Option[Long] = e match {
+      case Literal(x: Long, LongType) => Some(x)
+      case Literal(x: Int, IntegerType) => Some(x.toLong)
+      case Literal(x: Short, ShortType) => Some(x.toLong)
+      case _ => None
     }
-    var ok = true
-    if (pad > 0) {
-      def castOfV(e: Expression): Boolean = e match {
-        case c: Cast if isV(c.child) && (c.dataType == LongType ||
-          c.dataType == IntegerType || c.dataType == ShortType) => true
-        case _ => false
-      }
-      def litLong(e: Expression): Option[Long] = e match {
-        case Literal(x: Long, LongType) => Some(x)
-        case Literal(x: Int, IntegerType) => Some(x.toLong)
-        case Literal(x: Short, ShortType) => Some(x.toLong)
-        case _ => None
-      }
-      var lo = Option.empty[Long]
-      var hi = Option.empty[Long]
-      def addLo(x: Long): Unit = lo = Some(lo.fold(x)(math.max(_, x)))
-      def addHi(x: Long): Unit = hi = Some(hi.fold(x)(math.min(_, x)))
-      def excl(x: Long): Unit = if (x < Long.MaxValue) addLo(x + 1) else ok = false
-      def incl(x: Long): Unit = if (x < Long.MaxValue) addHi(x + 1) else ok = false
-      material.foreach { e =>
-        val consumed: Option[Unit] = e match {
-          case GreaterThanOrEqual(l, r) if castOfV(l) => litLong(r).map(addLo)
-          case GreaterThan(l, r) if castOfV(l) => litLong(r).map(excl)
-          case LessThan(l, r) if castOfV(l) => litLong(r).map(addHi)
-          case LessThanOrEqual(l, r) if castOfV(l) => litLong(r).map(incl)
-          case EqualTo(l, r) if castOfV(l) =>
-            litLong(r).map { x => addLo(x); incl(x) }
-          case EqualTo(l, r) if castOfV(r) =>
-            litLong(l).map { x => addLo(x); incl(x) }
-          // literal-first spellings mirror
-          case GreaterThanOrEqual(l, r) if castOfV(r) => litLong(l).map(incl)
-          case GreaterThan(l, r) if castOfV(r) => litLong(l).map(addHi)
-          case LessThan(l, r) if castOfV(r) => litLong(l).map(excl)
-          case LessThanOrEqual(l, r) if castOfV(r) => litLong(l).map(addLo)
-          case _ => None
-        }
-        if (consumed.isEmpty) ok = false
-      }
-      if (!ok) return None
-      val loC = lo.filter(_ > 0) // lo <= 0 is a tautology: values >= 0
-      if (hi.exists(h => h <= loC.getOrElse(0L))) return None // provably empty
-      if (loC.exists(_.toString.length > pad)) return None // above every value
-      val hiC = hi.filter(_.toString.length <= pad) // wider hi = tautology
-      Some((loC.map(_.toString), hiC.map(_.toString)))
-    } else {
-      def litStr(e: Expression): Option[String] = e match {
-        case Literal(s: UTF8String, StringType) => Some(s.toString)
-        case _ => None
-      }
-      var lo = Option.empty[String]
-      var hi = Option.empty[String]
-      // UTF-8 byte order, matching the index's key encoding (see the
-      // sibling bounds() comment / graft.kv.Utf8Order doc).
-      def addLo(x: String): Unit = lo = Some(lo.fold(x)(graft.kv.Utf8Order.max(x, _)))
-      def addHi(x: String): Unit = hi = Some(hi.fold(x)(graft.kv.Utf8Order.min(x, _)))
-      material.foreach { e =>
-        val consumed: Option[Unit] = e match {
-          case GreaterThanOrEqual(l, r) if isV(l) => litStr(r).map(addLo)
-          case LessThan(l, r) if isV(l) => litStr(r).map(addHi)
-          case LessThanOrEqual(l, r) if isV(r) => litStr(l).map(addLo)
-          case GreaterThan(l, r) if isV(r) => litStr(l).map(addHi)
-          case _ => None
-        }
-        if (consumed.isEmpty) ok = false
-      }
-      if (!ok) return None
-      if (lo.zip(hi).exists { case (l, h) => graft.kv.Utf8Order.compare(h, l) <= 0 })
-        return None
-      // a NUL-carrying bound would throw inside topNCovered; decline
-      if ((lo ++ hi).exists(_.contains("\u0000"))) return None
-      Some((lo, hi))
-    }
+  }
+
+  private def integral(t: DataType): Boolean =
+    t == LongType || t == IntegerType || t == ShortType
+
+  private def isAttr(e: Expression, v: Attribute): Boolean = e match {
+    case a: AttributeReference => a.exprId == v.exprId
+    case _ => false
   }
 }
 

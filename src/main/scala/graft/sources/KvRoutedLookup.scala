@@ -37,8 +37,11 @@ case class KvRoutedLookup(
     path: String,
     index: String,
     kind: KvRoutedLookup.Kind,
-    /** One `[lo, hi)` per key component (single-entry for range/top-n);
-      * open ends are None (top-n only — lookups require both bounds).
+    /** One `[lo, hi)` per key component, in index key order, as the
+      * routing rule's one value-range extractor read them — every side
+      * a bound [[KvIndex.validBound]] accepts. Range and Composite carry
+      * both sides (a decimal open lo as the exact floor "0"); TopN and
+      * TopNComposite leave an open side None.
       */
     bounds: Seq[(Option[String], Option[String])],
     topK: Int,
@@ -48,8 +51,8 @@ case class KvRoutedLookup(
     output: Seq[Attribute],
     /** TopN only: the MULTI-qualifier pivot shape — output carries the
       * covered include columns and the lookup runs
-      * [[KvIndex.topNCoveredWide]] (null-ordering guards documented
-      * there).
+      * [[KvIndex.topNCovered]] with `wide` (null-ordering guards
+      * documented there).
       */
     wide: Boolean = false) extends LeafNode {
   override def computeStats(): Statistics = Statistics(

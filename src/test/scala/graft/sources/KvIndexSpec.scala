@@ -322,6 +322,30 @@ class KvIndexSpec extends graft.SparkSpec {
     }.getMessage should include("contradicts")
   }
 
+  test("autoLookup refuses a NUL bound whatever the range prices, indexed or not") {
+    val dir = freshDir("auto_nul")
+    spark.range(300).selectExpr(
+      "lpad(CAST(id AS STRING), 6, '0') AS rowKey",
+      "'f' AS family", "'name' AS qualifier",
+      "encode(concat('u', lpad(CAST(id AS STRING), 5, '0')), 'UTF-8') AS value",
+      "id AS ts")
+      .write.format("graft-kv").option("regions", 2).mode("overwrite").save(dir)
+    KvIndex.create(spark, dir, "by_name", "f", "name", pad = 0)
+    val table = new Path(dir)
+    val m = KvIndex.list(fsOf(dir), table).head
+    val lo = "u00010\u0000"
+    // the same NUL-carrying lo on a range the index would serve and on
+    // one it would leave to the scan
+    KvIndex.rangeIsSelective(fsOf(dir), table, m, lo, "u00020") shouldBe true
+    KvIndex.rangeIsSelective(fsOf(dir), table, m, lo, "v") shouldBe false
+    for ((qualifier, hi) <- Seq(("name", "u00020"), ("name", "v"), ("other", "v")))
+      withClue(s"$qualifier [lo, $hi): ") {
+        intercept[IllegalArgumentException] {
+          KvIndex.autoLookup(spark, dir, "f", qualifier, lo, hi).collect()
+        }.getMessage should include("contains NUL")
+      }
+  }
+
   /** Two-qualifier cells for covered-index tests: every key has an `amt`
     * (value 3i), even keys also a `tag` (value "t<i>").
     */
