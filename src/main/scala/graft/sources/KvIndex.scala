@@ -33,21 +33,9 @@ import graft.functions.LwwSlots
   *    compaction floor — triggers a REBUILD, staged beside the live
   *    index and swapped in, so a failed rebuild never leaves the table
   *    index-less.
-  *  - Correctness does NOT depend on freshness. A lookup is
-  *    index-candidates ∪ tail-candidates, then VERIFY:
-  *      1. index range scan → candidate base keys (the index may be
-  *         STALE — updated rows leave old-value entries behind, deletes
-  *         leave entries for masked rows; both are filtered next),
-  *      2. base CDC tail `(indexed seq, latest]` → candidates the index
-  *         has not absorbed yet (bounded by maintenance lag; served from
-  *         a full base scan when the log cannot replay the span),
-  *      3. re-read the candidates from the BASE table (bounded `In`
-  *         pushdown → per-key bloom-pruned gets; join fallback above the
-  *         cap), compute the current last-write-wins value, and keep only
-  *         rows whose CURRENT value matches.
-  *    Stale entries can only cost false candidates, never wrong results —
-  *    the non-transactional-index contract Phoenix documents, made safe
-  *    by verification instead of a synchronous write path.
+  *  - Correctness does NOT depend on freshness: every read is index
+  *    candidates ∪ CDC-tail candidates, verified against the base pinned
+  *    at one seq ([[Candidates]] — the candidate-and-verify contract).
   *
   * Values are compared as strings; `pad > 0` declares DECIMAL mode:
   * values are canonical non-negative decimal strings of at most `pad`
@@ -60,7 +48,9 @@ import graft.functions.LwwSlots
   *
   * Scale shape: the index is a fraction of one column's bytes; refresh
   * is one bounded CDC read + one sorted append; a lookup is two pruned
-  * scans plus candidate-count driver work capped at `InPushdownCap`.
+  * scans, then either at most [[InPushdownCap]] per-key base gets or one
+  * left-semi join over the pinned family scan — the one decision
+  * [[Candidates]] makes.
   */
 object KvIndex {
 
@@ -69,9 +59,10 @@ object KvIndex {
   /** Key separator between padded value and base key (class doc). */
   private val Sep = "\u0000"
 
-  /** Default bound on candidates routed through the pushed `In` filter
-    * (per-key bloom-pruned gets). Above it the verification joins instead
-    * — one base family scan, still correct, no driver blow-up.
+  /** The most distinct candidate keys a verification sends back as a
+    * pushed `In` filter (per-key bloom-pruned gets); a larger set joins
+    * instead — one base family scan, still correct, no driver blow-up.
+    * The one In-or-join decision is [[Candidates.inList]].
     */
   val InPushdownCap = 5000
 
@@ -310,60 +301,107 @@ object KvIndex {
         e.stats.get(n).fold(Double.MaxValue / 1024)(_.rows.toDouble))
     }.sum
 
-  /** The stale span's distinct touched base keys, capped at
-    * [[InPushdownCap]] — None when the cap is exceeded (callers fall
-    * back to the exact pivot). When the manifest-stat row bound already
-    * proves T <= cap (`spanRows` upper-bounds the distinct key count),
-    * the distinct SHUFFLE is skipped entirely: the raw feed keys collect
-    * and dedupe driver-side — the common small-span case pays one feed
-    * scan and ZERO exchanges (r19). Bigger spans keep the capped
-    * distinct probe.
+  // ------------------------------------------ candidate-and-verify core
+
+  /** One resolved index call: the base table, its file system, the index
+    * meta and the base seq `latest` the whole call is pinned to — tail
+    * span, touched keys and every verification re-read end at it, so the
+    * answer is snapshot-consistent as of one version even under
+    * concurrent commits.
     */
-  private def staleTouchedKeys(spark: SparkSession, path: String,
-      sinceSeq: Long, latest: Long,
-      spanRows: Double): Option[Array[String]] = {
-    val feed = spark.read.format("graft-kv")
-      .option("sinceSeq", sinceSeq.toString)
+  private case class Target(path: String, table: Path, fs: FileSystem,
+      m: Meta, latest: Long) {
+    def fresh: Boolean = latest <= m.asOfSeq
+    def dir: Path = indexDir(table, m.name)
+    def pinned: Map[String, String] = Map("asOfSeq" -> latest.toString)
+    /** The stale span's log entries, None when the log cannot serve it
+      * ([[servableSpan]]).
+      */
+    lazy val span: Option[Seq[KvLog.Entry]] =
+      servableSpan(fs, table, m.asOfSeq, latest)
+    /** The span's raw change feed `(m.asOfSeq, latest]`, markers included. */
+    def feed(spark: SparkSession): DataFrame = spark.read.format("graft-kv")
+      .option("sinceSeq", m.asOfSeq.toString)
       .option("asOfSeq", latest.toString).load(path)
-      .select(col("rowKey"))
-    val touched =
-      if (spanRows <= InPushdownCap)
-        feed.collect().map(_.getString(0)).distinct
-      else feed.distinct()
-        .limit(InPushdownCap + 1).collect().map(_.getString(0))
-    if (touched.length > InPushdownCap) None else Some(touched)
   }
 
-  /** The stale top-n candidate inputs — (touched keys, index over-fetch
-    * cells) — or None when any gate says the exact pivot is the honest
-    * plan: unservable span, manifest-priced span too big for the
-    * touched probe (the pre-gate: a distinct cannot stop early, so a
-    * million-change span must not pay a feed-sized shuffle to learn
-    * "too many"; stat-less legacy files price as huge), touched set
-    * past [[InPushdownCap]], or over-fetch past [[MaxTopNFetch]].
-    * SHARED by the single-column and composite top-n routes so the
-    * gates can never silently diverge.
+  /** Resolve index `name` on `path` and pin the base's latest seq. `heal`
+    * restores a crashed rebuild swap before concluding "no index".
     */
-  private def staleTopNInputs(spark: SparkSession, path: String,
-      fs: FileSystem, table: Path, m: Meta, latest: Long, k: Int,
-      perEntry: Int): Option[(Array[String], Long)] = {
-    val entries = servableSpan(fs, table, m.asOfSeq, latest) match {
-      case Some(es) => es
-      case None => return None
-    }
-    val spanRows = spanRowBound(entries)
-    if (spanRows > 16.0 * InPushdownCap) return None
-    // T = the span's distinct touched base keys — RAW feed, so deletes
-    // (marker rows) count as touches too ([[staleTouchedKeys]]: the
-    // common small span skips the distinct shuffle outright)
-    val touched = staleTouchedKeys(spark, path, m.asOfSeq, latest,
-      spanRows) match {
-      case Some(t) => t
-      case None => return None
-    }
-    val overFetch = (k.toLong + touched.length + 1) * perEntry
-    if (overFetch > MaxTopNFetch) None else Some((touched, overFetch))
+  private def resolve(spark: SparkSession, path: String, name: String,
+      heal: Boolean = false): Target = {
+    val table = new Path(path)
+    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
+    val m = meta(fs, table, name).orElse {
+      if (heal && recoverOrphans(fs, table) > 0) meta(fs, table, name) else None
+    }.getOrElse(throw new IllegalArgumentException(
+      s"graft-kv index: no index '$name' on $path"))
+    Target(path, table, fs, m, KvLog.latestSeq(fs, table))
   }
+
+  /** CANDIDATE-AND-VERIFY — the one contract under every index read and
+    * the exact refresh. An index may be STALE: updated rows leave
+    * old-value entries behind, deletes leave entries for masked rows, and
+    * the CDC span `(covered seq, latest]` holds changes it has not
+    * absorbed yet (bounded by maintenance lag). So a read never trusts an
+    * entry. It
+    *  1. collects CANDIDATE base keys — the index head (the entries in
+    *     the bounds, or the top `k + T` for a top-n) ∪ the span's tail
+    *     (its in-range cells, or every key it touched) — into `keys`;
+    *  2. VERIFIES them ([[verify]]): re-reads the candidates from the
+    *     base PINNED at the call's one `latest` seq ([[Target]]) and
+    *     recomputes the answer from their current last-write-wins values.
+    * Stale entries can only add false candidates, never wrong rows — the
+    * non-transactional-index contract Phoenix documents, made safe by
+    * verification instead of a synchronous write path. A span the log
+    * cannot serve verifies over the whole pinned frame instead (no
+    * Candidates): slower, never wrong; the next refresh rebuilds.
+    *
+    * The In-or-join decision is made here, once per candidate set
+    * ([[inList]]): at most `cap` distinct keys go back as a pushed `In`
+    * (per-key bloom-pruned gets, the point-lookup shape); a larger set
+    * verifies through one left-semi join over the pinned scan (still
+    * correct — the index then only saved the driver the value filter, the
+    * honest cost of a low-selectivity read). A known a-priori `bound` on
+    * the rows of `keys` decides without looking, and a set within it is
+    * collected whole, never truncated. Without one, a truncating
+    * `limit(cap + 1)` probe decides — a plain limit, no shuffle, so
+    * duplicate keys count against the cap; the `In` list dedupes
+    * driver-side and the join by construction, and the join path
+    * re-evaluates only the truncated prefix the probe already read.
+    */
+  private case class Candidates(keys: DataFrame, bound: Option[Long],
+      cap: Int = InPushdownCap) {
+    /** The distinct keys when they fit `cap` (verify by `In`), None when
+      * verification joins.
+      */
+    lazy val inList: Option[Array[String]] = (bound match {
+      case Some(b) => if (b <= cap) Some(keys.collect()) else None
+      case None => Some(keys.limit(cap + 1).collect()).filter(_.length <= cap)
+    }).map(_.map(_.getString(0)).distinct)
+  }
+
+  /** The rows of `cells` whose `rowKey` is a candidate ([[Candidates]]);
+    * None verifies over the whole pinned frame. No candidates is the
+    * empty frame with `cells`' schema: the optimizer folds the read away.
+    */
+  private def verify(cells: DataFrame, c: Option[Candidates]): DataFrame =
+    c.fold(cells)(c => c.inList match {
+      case Some(keys) if keys.isEmpty => cells.filter(lit(false))
+      case Some(keys) => cells.filter(col("rowKey").isin(keys.toIndexedSeq: _*))
+      case None => cells.join(c.keys, Seq("rowKey"), "left_semi")
+    })
+
+  /** The span's touched base keys as [[Candidates]] — the one probe the
+    * stale top-n and the exact refresh share. When the manifest-stat row
+    * bound `spanRows` ([[spanRowBound]]) already proves the raw feed fits
+    * the cap, its keys collect and dedupe driver-side with ZERO exchanges
+    * — the common small span pays one feed scan. Bigger spans dedupe
+    * first, so a key's many versions count once against the cap.
+    */
+  private def touchedKeys(feedKeys: DataFrame, spanRows: Double): Candidates =
+    if (spanRows <= InPushdownCap) Candidates(feedKeys, Some(spanRows.toLong))
+    else Candidates(feedKeys.distinct(), None)
 
   /** Base reads go through the CATALOG-RESOLVED path ([[KvRead]]): same
     * rows and pushdown, plus a resolvable region function — a certified
@@ -572,39 +610,24 @@ object KvIndex {
     * commit, one add commit. Accumulated markers compact away
     * opportunistically once they outnumber a quarter of the index.
     */
-  private def refreshExactCovered(spark: SparkSession, path: String,
-      m: Meta, latest: Long, dir: Path, fs: FileSystem,
+  private def refreshExactCovered(spark: SparkSession, t: Target,
       spanBound: Double): RefreshResult = {
-    import spark.implicits._
+    val (path, m, latest, dir, fs) = (t.path, t.m, t.latest, t.dir, t.fs)
     val quals = m.keyQuals ++ m.include
     val n = quals.length
     // The raw change feed ships markers too — a row/column delete is a
-    // change the index must absorb as a tombstone.
-    val r = spark.read.format("graft-kv")
-      .option("sinceSeq", m.asOfSeq.toString).option("asOfSeq", latest.toString)
-    val feed = r.load(path).filter(
+    // change the index must absorb as a tombstone. `spanBound` was priced
+    // once by the caller's servability probe.
+    val feed = t.feed(spark).filter(
       (col("family") === m.family && col("qualifier").isin(quals: _*)) ||
         col("qualifier").startsWith(KvDelete.MarkerPrefix))
-    // Touched-key probe: when the manifest row bound (`spanBound`, priced
-    // once by the caller's servability probe) already proves the span
-    // fits the cap, the raw feed keys collect and dedupe driver-side
-    // with ZERO exchanges (the r19 staleTouchedKeys rule — the bound is
-    // a priori, so the collect can never surprise).
-    val touchedProbe =
-      if (spanBound <= InPushdownCap)
-        feed.select(col("rowKey")).collect().map(_.getString(0)).distinct
-      else feed.select(col("rowKey")).distinct()
-        .limit(InPushdownCap + 1).collect().map(_.getString(0))
-    if (touchedProbe.isEmpty) {
+    val touched = touchedKeys(feed.select(col("rowKey")), spanBound)
+    if (touched.inList.exists(_.isEmpty)) {
       writeMeta(fs, dir, m.copy(asOfSeq = latest))
       return Refreshed(m.asOfSeq, latest)
     }
-    val small = touchedProbe.length <= InPushdownCap
-    def restrict(df: DataFrame): DataFrame =
-      if (small)
-        df.filter(col("rowKey").isin(touchedProbe.toIndexedSeq: _*))
-      else df.join(feed.select(col("rowKey")).distinct(),
-        Seq("rowKey"), "left_semi")
+    val small = touched.inList.isDefined
+    def restrict(df: DataFrame): DataFrame = verify(df, Some(touched))
     // Stat-tracking indexes ([[Meta.includeOnly]]) maintain the partial-
     // key count, so their pre/post frames keep PARTIAL keys (some key
     // component null) — dead/fresh below gate on full-row conjunctions,
@@ -615,14 +638,14 @@ object KvIndex {
       if (trackPartial) currentWideAny(spark, path, m, opts)
       else currentWide(spark, path, m, opts)
     val pre = restrict(wideOf(Map("asOfSeq" -> m.asOfSeq.toString)))
-    val post = restrict(wideOf(Map("asOfSeq" -> latest.toString)))
+    val post = restrict(wideOf(t.pinned))
     val preR = pre.select(col("rowKey") +:
       (0 until n).map(i => col(s"_v$i").as(s"_p$i")): _*)
     val joined0 = preR.join(post, Seq("rowKey"), "full_outer")
     if (small) {
       // SMALL-SPAN FAST PATH (r20, verdict #2): the joined diff frame is
       // bounded A PRIORI by the touched-key count (its join keys are a
-      // subset of `touchedProbe`, itself ≤ InPushdownCap) — so it
+      // subset of `touched.inList`, itself ≤ InPushdownCap) — so it
       // collects driver-side in ONE job: the pre and post table passes
       // run exactly once, and classification (dead / fresh / the
       // includeOnly delta) happens on local rows instead of as four more
@@ -768,27 +791,19 @@ object KvIndex {
     Refreshed(m.asOfSeq, latest)
   }
 
-  /** Whether the log cannot serve the base span `(since, latest]` as a
-    * CDC read: it crosses a salt declaration the scan refuses (same
-    * boundary rule — a declaration at exactly `since + 1` has nothing
-    * below it and passes), or it dips below the compaction floor (the
-    * merged-away segments' change sets are not reconstructible —
-    * `KvLog.changedFiles` throws on the same condition). Retention
-    * entries serve incrementally: the feed ships the drops as
-    * exact-version markers, the touched-key probe sees their rowKeys,
-    * and the post-image re-read at `latest` reflects the post-retention
-    * state — refresh stays O(changes) across a retention pass. Probed
-    * EAGERLY because the scan's refusals only fire at plan time, far
-    * from the decision points here.
-    */
-  private def spanUnservable(fs: FileSystem, table: Path, since: Long,
-      latest: Long): Boolean =
-    servableSpan(fs, table, since, latest).isEmpty
-
-  /** [[spanUnservable]] with the evidence kept: the span's log ENTRIES
-    * when it is servable (so callers can price it via [[spanRowBound]]
-    * without a second log replay — ADVICE-class finding, r20), None
-    * when it is not.
+  /** The base span `(since, latest]`'s log ENTRIES when the log can serve
+    * it as a CDC read (so callers price it via [[spanRowBound]] without a
+    * second log replay), None when it cannot: it crosses a salt
+    * declaration the scan refuses (same boundary rule — a declaration at
+    * exactly `since + 1` has nothing below it and passes), or it dips
+    * below the compaction floor (the merged-away segments' change sets
+    * are not reconstructible — `KvLog.changedFiles` throws on the same
+    * condition). Retention entries serve incrementally: the feed ships
+    * the drops as exact-version markers, the touched-key probe sees their
+    * rowKeys, and the post-image re-read at `latest` reflects the
+    * post-retention state — refresh stays O(changes) across a retention
+    * pass. Probed EAGERLY because the scan's refusals only fire at plan
+    * time, far from the decision points here.
     */
   private def servableSpan(fs: FileSystem, table: Path, since: Long,
       latest: Long): Option[Seq[KvLog.Entry]] = {
@@ -877,18 +892,10 @@ object KvIndex {
 
   /** Absorb the base span `(m.asOfSeq, latest]` into the index. */
   def refresh(spark: SparkSession, path: String, name: String): RefreshResult = {
-    val table = new Path(path)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val m = meta(fs, table, name).orElse {
-      // Self-heal a crashed rebuild swap before concluding "no index".
-      if (recoverOrphans(fs, table) > 0) meta(fs, table, name) else None
-    }.getOrElse(throw new IllegalArgumentException(
-      s"graft-kv index: no index '$name' on $path"))
-    val latest = KvLog.latestSeq(fs, table)
-    if (latest <= m.asOfSeq) return Fresh(m.asOfSeq)
-    val dir = indexDir(table, name)
-    val span = servableSpan(fs, table, m.asOfSeq, latest)
-    if (span.isEmpty) {
+    val t = resolve(spark, path, name, heal = true)
+    val (table, fs, m, latest, dir) = (t.table, t.fs, t.m, t.latest, t.dir)
+    if (t.fresh) return Fresh(m.asOfSeq)
+    if (t.span.isEmpty) {
       // Rebuild, STAGED BESIDE the live index and swapped in: a rebuild
       // that dies mid-build must leave the old index serving (lookups
       // degrade to the full-scan tail — they must not start throwing
@@ -922,8 +929,7 @@ object KvIndex {
       }
       Rebuilt(latest)
     } else if (m.covered) {
-      refreshExactCovered(spark, path, m, latest, dir, fs,
-        spanRowBound(span.get))
+      refreshExactCovered(spark, t, spanRowBound(t.span.get))
     } else {
       val delta = baseCells(spark, path, m, Map(
         "sinceSeq" -> m.asOfSeq.toString, "asOfSeq" -> latest.toString))
@@ -958,10 +964,8 @@ object KvIndex {
       stale: Long)
 
   def scrutiny(spark: SparkSession, path: String, name: String): Scrutiny = {
-    val table = new Path(path)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val m = meta(fs, table, name).getOrElse(throw new IllegalArgumentException(
-      s"graft-kv index: no index '$name' on $path"))
+    val t = resolve(spark, path, name)
+    val m = t.m
     // The base's current view AT the covered seq: post-covered changes
     // are legitimately absent from the index (the lookup tail serves
     // them) and must not count as missing. `pv` is the NUL-joined padded
@@ -977,8 +981,7 @@ object KvIndex {
       Map("asOfSeq" -> m.asOfSeq.toString))
       .select(col("rowKey"),
         parts.reduce((a, b) => concat(a, lit(Sep), b)).as("pv"))
-    val idxPairs = spark.read.format("graft-kv")
-      .load(indexDir(table, name).toString)
+    val idxPairs = spark.read.format("graft-kv").load(t.dir.toString)
       // `k` cells carry the base key; a covered index's `v`/`q:` payload
       // cells are not entries of their own.
       .filter(col("qualifier") === "k")
@@ -1019,8 +1022,7 @@ object KvIndex {
     * recorded pad wins and a contradicting argument is refused.
     */
   def autoLookup(spark: SparkSession, path: String, family: String,
-      qualifier: String, lo: String, hi: String, pad: Int = 0,
-      inPushdownCap: Int = InPushdownCap): DataFrame = {
+      qualifier: String, lo: String, hi: String, pad: Int = 0): DataFrame = {
     val table = new Path(path)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
     // Composite indexes are skipped: their entries exist only for rows
@@ -1036,10 +1038,10 @@ object KvIndex {
     val m = matching.getOrElse(Meta("<scan>", family, qualifier, pad, -1L))
     // bounds validate before the cost call: the index and the scan plan
     // refuse the same inputs, so the answer never depends on the estimate
-    requireValidBounds(m, lo, hi)
+    val b = padded(m, Seq((Some(lo), Some(hi))))
     if (matching.exists(rangeIsSelective(fs, table, _, lo, hi)))
-      lookup(spark, path, m.name, lo, hi, inPushdownCap)
-    else scanLookup(spark, path, m.copy(name = "<scan>"), lo, hi)
+      lookup(spark, path, m.name, lo, hi)
+    else plainAnswer(m, baseCells(spark, path, m, Map.empty), b)
   }
 
   /** Driver-side memo for [[rangeIsSelective]]'s manifest replays, keyed
@@ -1153,47 +1155,10 @@ object KvIndex {
     v
   }
 
-  /** The index-free plan for the same answer: one pruned family scan,
-    * LWW per key, the range filter on the current value — what a
-    * low-selectivity range SHOULD do (reading the table once beats the
-    * index's per-candidate verification there). Bounds arrive validated
-    * ([[autoLookup]]).
-    */
-  private def scanLookup(spark: SparkSession, path: String, m: Meta,
-      lo: String, hi: String): DataFrame = {
-    val (loPad, hiPad) = (padBound(lo, m.pad), padBound(hi, m.pad))
-    val pv = paddedValue(guardedValue(col("value"), m.pad), m.pad)
-    baseCells(spark, path, m, Map.empty)
-      .groupBy(col("rowKey"))
-      .agg(decode(graft.functions.MaxByTsAgg.maxByTs(col("value"), col("ts")),
-        "UTF-8").as("value"))
-      .filter(pv >= loPad && pv < hiPad)
-  }
-
-  /** Verified lookup: base keys and their current (last-write-wins,
-    * delete-masked) value for `m.qualifier`, restricted to values in
-    * `[lo, hi)` (string order; numeric order in decimal mode). Returns
-    * `(rowKey, value)` with the value decoded to a string. The whole
-    * lookup — tail span AND verification re-reads — is pinned to the one
-    * `latest` seq probed up front, so the answer is snapshot-consistent
-    * as of that version even under concurrent commits.
-    */
-  def lookup(spark: SparkSession, path: String, name: String,
-      lo: String, hi: String, inPushdownCap: Int = InPushdownCap): DataFrame =
-    lookupAt(spark, path, name, lo, hi, inPushdownCap, asOf = None)
-
-  /** Decimal-mode bound validation shared by every lookup entry point —
+  /** Decimal-mode bound validation shared by every read entry point —
     * the SAME refusal regardless of index freshness, so behavior never
     * depends on maintenance timing.
     */
-  private def requireValidBounds(m: Meta, lo: String, hi: String): Unit =
-    requireValidBoundsAt(m.pad, lo, hi)
-
-  private def requireValidBoundsAt(pad: Int, lo: String, hi: String): Unit = {
-    requireValidBound(pad, "lo", lo)
-    requireValidBound(pad, "hi", hi)
-  }
-
   private def requireValidBound(pad: Int, which: String, v: String): Unit =
     boundProblem(pad, which, v).foreach(p => require(false, p))
 
@@ -1231,255 +1196,322 @@ object KvIndex {
     else None
 
   /** Left-zero-pad one validated bound to the component's width (0 = raw
-    * string order, identity). Callers run [[requireValidBoundsAt]] first
-    * — the width check lives THERE, so this never has to silently clamp.
+    * string order, identity). Callers validate first ([[padded]]) — the
+    * width check lives THERE, so this never has to silently clamp.
     */
   private def padBound(v: String, pad: Int): String =
     if (pad > 0) ("0" * (pad - v.length)) + v else v
 
-  /** [[lookup]] with an optional PINNED version: `asOf = Some(seq)`
-    * makes the whole lookup (staleness check, tail span, verification
-    * re-reads) read as of that seq instead of probing latestSeq itself —
-    * the hook [[lookupCovered]] uses so its candidate selection and wide
-    * re-read share ONE version instead of racing two latestSeq probes
-    * against concurrent commits.
+  // ------------------------------------------------ shapes and outputs
+
+  /** A read's SHAPE: one `(lo, hi)` per key component in index order —
+    * one for a single-component index — padded to the component's width;
+    * an open side is None.
     */
-  private def lookupAt(spark: SparkSession, path: String, name: String,
-      lo: String, hi: String, inPushdownCap: Int,
-      asOf: Option[Long]): DataFrame = {
+  private type Bounds = Seq[(Option[String], Option[String])]
+
+  /** Validate (per component, lo before hi) and pad raw bounds. */
+  private def padded(m: Meta, raw: Seq[(Option[String], Option[String])]): Bounds =
+    raw.zip(m.pads).map { case ((lo, hi), p) =>
+      lo.foreach(requireValidBound(p, "lo", _))
+      hi.foreach(requireValidBound(p, "hi", _))
+      (lo.map(padBound(_, p)), hi.map(padBound(_, p)))
+    }
+
+  /** `df` within the bounds, component i read by `comp(i)`. */
+  private def within(df: DataFrame, b: Bounds,
+      comp: Int => org.apache.spark.sql.Column): DataFrame =
+    b.zipWithIndex.flatMap { case ((lo, hi), i) =>
+      lo.map(comp(i) >= _) ++ hi.map(comp(i) < _)
+    }.reduceOption(_ && _).fold(df)(df.filter)
+
+  /** A value column in its index collation: decimal-guarded and padded. */
+  private def collated(v: org.apache.spark.sql.Column, pad: Int) =
+    paddedValue(guardedValue(v, pad), pad)
+
+  /** The bounded index scan. The leading bounds are an encoded-key range
+    * — a no-NUL bound b satisfies `encoded >= b <=> v1 >= b` and
+    * `encoded < b <=> v1 < b` (the prefix-free NUL encoding: the
+    * terminator sorts below every bound byte) — so manifest bounds prune
+    * regions and the record filter prunes rows; non-leading bounds
+    * filter the key's NUL segments, stored padded (whole entries: every
+    * cell of an entry shares its key).
+    */
+  private def indexScan(spark: SparkSession, t: Target, b: Bounds): DataFrame =
+    within(spark.read.format("graft-kv").load(t.dir.toString), b, i =>
+      if (i == 0) col("rowKey") else element_at(split(col("rowKey"), Sep), i + 1))
+
+  /** Grouped index entries → `rowKey` (base key), `value` (leading
+    * component value) and one decoded column per `payload` qualifier.
+    */
+  private def entryAnswer(entries: DataFrame, payload: Seq[String]): DataFrame =
+    entries.select(decode(col("_k"), "UTF-8").as("rowKey") +:
+      decode(col("_v"), "UTF-8").as("value") +:
+      payload.map(q => decode(col(s"_q$q"), "UTF-8").as(q)): _*)
+
+  /** The INDEX-ONLY range read of a covered index: one bounded index
+    * scan (delete masking hides tombstoned entries inside the scan), one
+    * LWW group per entry — base table untouched. Output: `rowKey`,
+    * `value`, one column per non-leading key component (named by its
+    * qualifier, never null) and per `include` qualifier (null where the
+    * base row lacks it).
+    */
+  private def coveredRead(spark: SparkSession, t: Target, b: Bounds): DataFrame = {
+    val payload = t.m.rest.map(_._1) ++ t.m.include
+    entryAnswer(LwwSlots.byRowKey(indexScan(spark, t, b), entryColumns(payload))
+      .filter(col("_k").isNotNull), payload)
+  }
+
+  /** The top `n` complete entries of the bounded index scan in key order
+    * (scan direction `desc`): a pushed cell-level TopN of `cells` cells —
+    * O(n) rows per region file, never O(index) — grouped per entry. The
+    * cell limit can cut only the LAST entry of the prefix; the
+    * `_k AND _v present` filter drops it, and callers over-fetch one
+    * entry so n whole ones remain whenever the index has them.
+    */
+  private def indexHead(spark: SparkSession, t: Target, b: Bounds,
+      desc: Boolean, n: Long, cells: Long, payload: Seq[String]): DataFrame = {
+    val key = if (desc) col("rowKey").desc else col("rowKey").asc
+    LwwSlots.byRowKey(indexScan(spark, t, b).orderBy(key).limit(cells.toInt),
+        entryColumns(payload))
+      .filter(col("_k").isNotNull && col("_v").isNotNull)
+      .orderBy(key).limit(n.toInt)
+  }
+
+  /** One qualifier's cells → its current value per key, decoded. */
+  private def latestValue(cells: DataFrame): DataFrame =
+    cells.groupBy(col("rowKey"))
+      .agg(decode(graft.functions.MaxByTsAgg.maxByTs(col("value"), col("ts")),
+        "UTF-8").as("value"))
+
+  /** PLAIN output: `(rowKey, value)` — the current value of the leading
+    * qualifier, kept where it lies in the leading bounds.
+    */
+  private def plainAnswer(m: Meta, cells: DataFrame, b: Bounds): DataFrame =
+    within(latestValue(cells), b.take(1), _ => collated(col("value"), m.pad))
+
+  /** A wide current frame ([[currentWide]]) → `rowKey, value,
+    * <non-leading components...>, <includes...>`.
+    */
+  private def coveredColumns(m: Meta, wide: DataFrame): DataFrame =
+    wide.select(col("rowKey") +: (m.keyQuals ++ m.include).zipWithIndex.map {
+      case (q, i) => decode(col(s"_v$i"), "UTF-8").as(if (i == 0) "value" else q)
+    }: _*)
+
+  /** The key components of a wide current frame ([[currentWide]]) in
+    * their collations, one column per component: NUL-refused,
+    * decimal-guarded, padded.
+    */
+  private def components(m: Meta): IndexedSeq[org.apache.spark.sql.Column] =
+    m.keyQuals.indices.map(i =>
+      paddedValue(checkedComponent(col(s"_v$i"), m.pads(i)), m.pads(i)))
+
+  /** COVERED output: every component within its bounds, then
+    * [[coveredColumns]] — shared by the verified reads and the
+    * index-free composite plan.
+    */
+  private def compositeAnswer(m: Meta, wide: DataFrame, b: Bounds): DataFrame =
+    coveredColumns(m, within(wide, b, components(m)))
+
+  /** The verified RANGE read under [[lookup]], [[lookupCovered]] and
+    * [[lookupComposite]]: a shape (one component or composite) × an
+    * output (`covered`: [[compositeAnswer]], else [[plainAnswer]]). A
+    * covered index fresh at `latest` holds exactly one entry per current
+    * base row (the exact refresh invariant), so it serves INDEX-ONLY —
+    * zero base file opens, the Phoenix covered-read shape. Otherwise the
+    * [[Candidates]] are the index entries in the bounds ∪ the tail:
+    *  - one component: the span's cells of the indexed qualifier whose
+    *    value is in range — read from a full pinned base scan when the
+    *    span is unservable;
+    *  - composite: every key the span touched on ANY key component (a
+    *    change to component 2 can move a row INTO the range); an
+    *    unservable span verifies over the whole pinned wide frame.
+    */
+  private def rangeRead(spark: SparkSession, t: Target, b: Bounds,
+      covered: Boolean, cap: Int): DataFrame = {
     import spark.implicits._
-    val table = new Path(path)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val m = meta(fs, table, name).getOrElse(throw new IllegalArgumentException(
-      s"graft-kv index: no index '$name' on $path"))
-    require(!m.composite,
+    val m = t.m
+    if (m.covered && t.fresh) {
+      val served = coveredRead(spark, t, b)
+      return if (covered) served else served.select(col("rowKey"), col("value"))
+    }
+    // `k` cells carry the base key (a no-op filter on a plain index; it
+    // skips a covered index's value/include payload cells)
+    val head = indexScan(spark, t, b).filter(col("qualifier") === "k")
+      .select(decode(col("value"), "UTF-8").as("rowKey"))
+    val tail: Option[DataFrame] =
+      if (m.composite) t.span.map(_ => t.feed(spark)
+        .filter(col("family") === m.family && col("qualifier").isin(m.keyQuals: _*))
+        .select(col("rowKey")))
+      else if (t.fresh) Some(Seq.empty[String].toDF("rowKey"))
+      else {
+        val span = if (t.span.isEmpty) t.pinned
+          else t.pinned + ("sinceSeq" -> m.asOfSeq.toString)
+        Some(within(baseCells(spark, t.path, m, span), b.take(1),
+          _ => collated(decode(col("value"), "UTF-8"), m.pad)).select(col("rowKey")))
+      }
+    val candidates = tail.map(tl => Candidates(head.unionByName(tl), None, cap))
+    if (covered)
+      compositeAnswer(m, verify(currentWide(spark, t.path, m, t.pinned), candidates), b)
+    else plainAnswer(m, verify(baseCells(spark, t.path, m, t.pinned), candidates), b)
+  }
+
+  /** Verified range lookup: base keys and their current
+    * (last-write-wins, delete-masked) value for the index's qualifier,
+    * restricted to values in `[lo, hi)` (string order; numeric order in
+    * decimal mode). Returns `(rowKey, value)`, the value decoded to a
+    * string. One component × plain output of [[rangeRead]].
+    */
+  def lookup(spark: SparkSession, path: String, name: String,
+      lo: String, hi: String): DataFrame =
+    lookup(spark, path, name, lo, hi, InPushdownCap)
+
+  /** [[lookup]] with the `In` cap set ([[Candidates]]): the join
+    * verification on a small table.
+    */
+  private[sources] def lookup(spark: SparkSession, path: String, name: String,
+      lo: String, hi: String, cap: Int): DataFrame = {
+    val t = resolve(spark, path, name)
+    require(!t.m.composite,
       s"graft-kv index: '$name' is a composite index — a single-qualifier " +
         "lookup over it would drop rows lacking the other key components; " +
         "use lookupComposite() with one bound per component")
-    requireValidBounds(m, lo, hi)
-    val (loPad, hiPad) = (padBound(lo, m.pad), padBound(hi, m.pad))
-
-    // COVERED fast path: a covered index whose covered seq IS the base's
-    // latest seq holds exactly one entry per current base row (the exact
-    // refresh invariant), so the range answer is served INDEX-ONLY —
-    // zero base file opens, the Phoenix covered-read shape. The
-    // staleness check is the one latestSeq manifest read below.
-    val latest = asOf.getOrElse(KvLog.latestSeq(fs, table))
-    if (m.covered && latest <= m.asOfSeq)
-      return coveredRead(spark, table, m, loPad, hiPad)
-        .select(col("rowKey"), col("value"))
-
-    // 1. Index candidates: a rowKey range scan on the index table —
-    //    manifest bounds + record filter prune; value() carries the base
-    //    key so no string parsing on the hot path. The NUL separator
-    //    makes [loPad, hiPad) on index keys EXACTLY the value range.
-    //    (`qualifier = 'k'` is a no-op on plain indexes and skips a
-    //    covered index's value/include payload cells.)
-    val idxCand = spark.read.format("graft-kv")
-      .load(indexDir(table, name).toString)
-      .filter(col("rowKey") >= loPad && col("rowKey") < hiPad &&
-        col("qualifier") === "k")
-      .select(decode(col("value"), "UTF-8").as("rowKey"))
-
-    // 2. Tail candidates: base changes the index has not absorbed,
-    //    PINNED to the latest seq the unservable-span probe read — a
-    //    resalt landing between probe and plan time would otherwise fail
-    //    the read the fallback branch exists to serve. Unservable spans
-    //    are served from a full base scan instead: slower, never wrong;
-    //    the next refresh rebuilds.
-    def inRange(df: DataFrame): DataFrame = {
-      val pv = paddedValue(guardedValue(decode(col("value"), "UTF-8"), m.pad),
-        m.pad)
-      df.filter(pv >= loPad && pv < hiPad).select(col("rowKey"))
-    }
-    val tailCand =
-      if (latest <= m.asOfSeq) Seq.empty[String].toDF("rowKey")
-      else if (spanUnservable(fs, table, m.asOfSeq, latest))
-        inRange(baseCells(spark, path, m,
-          Map("asOfSeq" -> latest.toString)))
-      else inRange(baseCells(spark, path, m, Map(
-        "sinceSeq" -> m.asOfSeq.toString, "asOfSeq" -> latest.toString)))
-
-    // Duplicate keys (multiple versions) are NOT deduped here: the probe
-    // below is a plain limit (no shuffle), and both verification paths
-    // dedupe anyway — driver-side distinct for the In list, the
-    // left-semi join by construction. On the over-cap path the join
-    // re-evaluates `candidates` — the probe itself was limit-truncated
-    // (CollectLimit stops at cap+1 matches), so the repeat costs one
-    // truncated prefix, not a second full pass.
-    val candidates = idxCand.unionByName(tailCand)
-
-    // 3. Verify against the base AS OF the PINNED seq — the same `latest`
-    //    the tail span ends at, so the whole lookup is snapshot-consistent
-    //    as of one version (an unpinned current read here would let a
-    //    commit landing mid-lookup produce a mixed-version answer: a row
-    //    whose value left the range after `latest` excluded by the new
-    //    view while a row that entered after `latest` is missed by the
-    //    old one). Bounded candidate sets go back as a pushed In —
-    //    per-key bloom-pruned gets, the point-lookup shape; larger sets
-    //    verify via a join over one family scan (still correct — the
-    //    index then only saved the driver the value filter, which is the
-    //    honest cost of a low-selectivity query).
-    val pinned = Map("asOfSeq" -> latest.toString)
-    val probe = candidates.limit(inPushdownCap + 1).collect()
-    val verified =
-      if (probe.isEmpty)
-        return Seq.empty[(String, String)].toDF("rowKey", "value")
-      else if (probe.length <= inPushdownCap) {
-        val keys = probe.map(_.getString(0)).distinct
-        baseCells(spark, path, m, pinned)
-          .filter(col("rowKey").isin(keys.toIndexedSeq: _*))
-      } else {
-        baseCells(spark, path, m, pinned)
-          .join(candidates, Seq("rowKey"), "left_semi")
-      }
-    verified
-      .groupBy(col("rowKey"))
-      .agg(decode(graft.functions.MaxByTsAgg.maxByTs(col("value"), col("ts")),
-        "UTF-8").as("value"))
-      .filter(paddedValue(guardedValue(col("value"), m.pad), m.pad) >= loPad &&
-        paddedValue(guardedValue(col("value"), m.pad), m.pad) < hiPad)
-  }
-
-  /** The INDEX-ONLY range read of a covered index: one pruned index scan
-    * (delete masking hides tombstoned entries inside the scan), one LWW
-    * group per entry — base table untouched. `[loPad, hiPad)` bounds the
-    * LEADING component: the prefix-free NUL encoding makes the encoded
-    * range exactly the leading-component range. Output: `rowKey` (base
-    * key), `value` (leading component value), one decoded string column
-    * per non-leading key component (named by its qualifier, never null)
-    * and per `include` qualifier (null where the base row lacks it).
-    */
-  private def coveredRead(spark: SparkSession, table: Path, m: Meta,
-      loPad: String, hiPad: String): DataFrame = {
-    val extra = m.rest.map(_._1) ++ m.include
-    LwwSlots.byRowKey(
-      spark.read.format("graft-kv").load(indexDir(table, m.name).toString)
-        .filter(col("rowKey") >= loPad && col("rowKey") < hiPad),
-      entryColumns(extra))
-      .filter(col("_k").isNotNull)
-      .select(decode(col("_k"), "UTF-8").as("rowKey") +:
-        decode(col("_v"), "UTF-8").as("value") +:
-        extra.map(q => decode(col(s"_q$q"), "UTF-8").as(q)): _*)
+    rangeRead(spark, t, padded(t.m, Seq((Some(lo), Some(hi)))),
+      covered = false, cap)
   }
 
   /** Covered lookup: [[lookup]]'s answer plus one column per `include`
-    * qualifier (current value, null where absent). FRESH (covered seq ==
-    * latest): served index-only — the counting-FS spec pins zero base
-    * data-file opens. STALE: candidates come from the index ∪ CDC tail
-    * exactly like [[lookup]], and the verification re-read widens to the
-    * covered qualifiers so the answer's extra columns are as current as
-    * its rows.
+    * qualifier (current value, null where absent) — one component ×
+    * covered output of [[rangeRead]]: index-only when fresh (the
+    * counting-FS spec pins zero base data-file opens), else one
+    * verification of the wide frame so the extra columns are as current
+    * as the rows.
     */
   def lookupCovered(spark: SparkSession, path: String, name: String,
-      lo: String, hi: String, inPushdownCap: Int = InPushdownCap): DataFrame = {
-    val table = new Path(path)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val m = meta(fs, table, name).getOrElse(throw new IllegalArgumentException(
-      s"graft-kv index: no index '$name' on $path"))
-    require(m.covered,
+      lo: String, hi: String): DataFrame = {
+    val t = resolve(spark, path, name)
+    require(t.m.covered,
       s"graft-kv index: '$name' is not a covered index — create it with " +
         "include/covered, or use lookup()")
-    require(!m.composite,
+    require(!t.m.composite,
       s"graft-kv index: '$name' is a composite index — use " +
         "lookupComposite() with one bound per component")
-    // Same bound refusal as lookup(): an invalid decimal bound must fail
-    // identically on the fresh index-only path and the stale verified
-    // path — behavior must not depend on maintenance timing.
-    requireValidBounds(m, lo, hi)
-    val (loPad, hiPad) = (padBound(lo, m.pad), padBound(hi, m.pad))
-    val latest = KvLog.latestSeq(fs, table)
-    if (latest <= m.asOfSeq) return coveredRead(spark, table, m, loPad, hiPad)
-    // Stale: verified wide read over lookup's candidate keys, with the
-    // WHOLE covered lookup — candidate selection and wide re-read —
-    // pinned to the one `latest` probed above (lookupAt takes it as
-    // asOf rather than re-probing), so a commit landing between two
-    // latestSeq probes cannot yield a mixed-version answer.
-    val keys = lookupAt(spark, path, name, lo, hi, inPushdownCap,
-      asOf = Some(latest))
-      .select(col("rowKey"))
-    currentWide(spark, path, m, Map("asOfSeq" -> latest.toString))
-      .join(keys, Seq("rowKey"), "left_semi")
-      .select(col("rowKey") +:
-        decode(col("_v0"), "UTF-8").as("value") +:
-        m.include.zipWithIndex.map { case (q, i) =>
-          decode(col(s"_v${i + 1}"), "UTF-8").as(q)
-        }: _*)
+    rangeRead(spark, t, padded(t.m, Seq((Some(lo), Some(hi)))),
+      covered = true, InPushdownCap)
+  }
+
+  /** COMPOSITE lookup: one `[lo, hi)` bound per key component (string
+    * order; numeric order for decimal-mode components) — composite ×
+    * covered output of [[rangeRead]]. Returns `rowKey`, `value` (leading
+    * component), one column per non-leading key component and per
+    * `include` qualifier — always the CURRENT values. Only rows carrying
+    * every key component answer (the index's inner-join semantics).
+    */
+  def lookupComposite(spark: SparkSession, path: String, name: String,
+      bounds: Seq[(String, String)]): DataFrame = {
+    val t = resolve(spark, path, name)
+    require(t.m.composite,
+      s"graft-kv index: '$name' is a single-component index — use " +
+        "lookup()/lookupCovered()")
+    requireComponents(t.m, bounds.length)
+    rangeRead(spark, t, padded(t.m, bounds.map { case (lo, hi) =>
+      (Some(lo), Some(hi)) }), covered = true, InPushdownCap)
+  }
+
+  private def requireComponents(m: Meta, n: Int): Unit =
+    require(n == m.keyQuals.length,
+      s"graft-kv index: '${m.name}' has ${m.keyQuals.length} key components " +
+        s"(${m.keyQuals.mkString(", ")}); got $n bounds")
+
+  /** The cell prefix a top-n of `k` entries fetches — `k + 1` entries
+    * ([[indexHead]]) of `perEntry` cells — refused past [[MaxTopNFetch]].
+    */
+  private def topNFetch(k: Int, perEntry: Int): Long = {
+    require(k >= 1, s"graft-kv index: top-n k must be >= 1, got $k")
+    val fetch = (k.toLong + 1) * perEntry
+    require(fetch <= MaxTopNFetch,
+      s"graft-kv index: top-n k=$k needs a $fetch-cell index prefix — " +
+        s"beyond the $MaxTopNFetch inspection bound; run the pivot sort " +
+        "for result sets this large")
+    fetch
+  }
+
+  /** The STALE top-n [[Candidates]]: every base change since the covered
+    * seq lives in the span, so the true top k is covered by
+    *  - the top `k + T` stale index entries (T = distinct base keys the
+    *    span touched, deletes included): an unchanged row in the true
+    *    top k can be out-ranked in the index only by at most k-1 other
+    *    unchanged top rows plus at most T since-invalidated entries, and
+    *  - the T touched keys themselves (rows that moved INTO the top) —
+    * at most k + 2T keys, the a-priori bound. None — verify over the
+    * whole pinned frame — when a gate says the exact pivot is the honest
+    * plan: an unservable span, a span priced past 16 × the cap (a
+    * distinct cannot stop early, so a million-change span must not pay a
+    * feed-sized shuffle to learn "too many"; stat-less legacy files price
+    * as huge), a touched set past the cap, or an over-fetch past
+    * [[MaxTopNFetch]]. `head(n, cells)` is the shape's [[indexHead]].
+    */
+  private def topNCandidates(spark: SparkSession, t: Target, k: Int,
+      perEntry: Int, head: (Long, Long) => DataFrame): Option[Candidates] = {
+    import spark.implicits._
+    t.span.map(spanRowBound).filter(_ <= 16.0 * InPushdownCap)
+      .flatMap(rows => touchedKeys(t.feed(spark).select(col("rowKey")), rows).inList)
+      .flatMap { touched =>
+        val n = k.toLong + touched.length
+        val overFetch = (n + 1) * perEntry
+        if (overFetch > MaxTopNFetch) None
+        else Some(Candidates(
+          head(n, overFetch).select(decode(col("_k"), "UTF-8").as("rowKey"))
+            .unionByName(touched.toSeq.toDF("rowKey")),
+          Some(n + touched.length)))
+      }
   }
 
   /** INDEX-SERVED TOP-N — the Phoenix ORDER-BY-elimination shape: the k
     * extreme base rows by CURRENT value (optionally restricted to a
-    * `[lo, hi)` value `range`), served from the value-ordered COVERED
-    * index. FRESH (covered seq == base latest): exact maintenance means
-    * the index holds exactly one logical entry per current base row, so
-    * its key order IS the (value, rowKey) order and its head/tail IS
-    * the answer — ZERO base data-file opens, no verification read.
-    *
-    * STALE (r18): the answer no longer requires a refresh. Every base
-    * change since the covered seq lives in the CDC span
-    * `(asOfSeq, latest]`, so the true top-k is covered by
-    *  - the top `k + T` STALE index entries (T = distinct base keys the
-    *    span touched): an unchanged row in the true top-k can be
-    *    out-ranked in the index only by at-most-(k-1) other unchanged
-    *    top rows plus at most T since-invalidated entries, and
-    *  - the T touched keys themselves (rows that moved INTO the top).
-    * The union is verified against the base PINNED at the probed seq
-    * (re-pivot, re-rank, take k) — the same verified-candidate contract
-    * as [[lookup]], so the index serves O(k + changes) base gets on a
-    * LIVE table instead of silently demanding a refresh
+    * `[lo, hi)` value range), one component × top-n output. FRESH
+    * (covered seq == base latest): exact maintenance means the index
+    * holds exactly one logical entry per current base row, so its key
+    * order IS the (value, rowKey) order and its head IS the answer
+    * ([[indexHead]]) — ZERO base data-file opens. STALE: the verified
+    * re-rank of [[topNCandidates]], pinned — O(k + changes) base gets on
+    * a LIVE table instead of silently demanding a refresh
     * (AvroReader.java:27-30's limit semantics: inspection stays O(k)).
-    * Degraded paths are never wrong, only slower: an unservable CDC
-    * span, a touched set past [[InPushdownCap]], or an over-fetch past
-    * [[MaxTopNFetch]] all fall back to the pinned base pivot sort.
     * A PLAIN (append-only) index never serves: its superseded entries
     * accumulate without bound, so no CDC span bounds the invalidated
     * count (refused loudly — the fix is a covered index).
     *
-    * Scale shape (fresh path): the fetch is a pushed cell-level TopN
-    * over the index scan (each region file contributes O(L) rows from
-    * its head — or tail row groups for DESC), L = (k+1)·(2+|include|)
-    * cells, so the read is O(k·files), never O(index). The boundary
-    * entry of the fetched prefix may be cell-truncated; it is dropped
-    * by the `_k AND _v present` filter and the over-fetch guarantees k
-    * complete entries remain whenever the index has them. Ties in
-    * `value` break by base rowKey (the encoded key's suffix) — in scan
-    * direction, so DESC ties take the largest keys first.
-    *
     * Output: `(rowKey, value)`, ordered by the index key in scan
-    * direction. Decimal mode (pad > 0) orders numerically (padded keys);
-    * string mode orders lexicographically — the same collation contract
-    * as [[lookup]] bounds, which `range` shares.
+    * direction; ties in `value` break by base rowKey, DESC ties taking
+    * the largest keys first. Decimal mode (pad > 0) orders numerically;
+    * string mode lexicographically — the collation [[lookup]] bounds
+    * share.
     *
-    * `wide` serves the MULTI-qualifier pivot (r18): rows are the base
-    * rows carrying ANY of (leading qualifier ∪ `include`), output is
+    * `wide` serves the MULTI-qualifier pivot: rows are the base rows
+    * carrying ANY of (leading qualifier ∪ `include`), output is
     * `(rowKey, value, <include columns>)`, ordered by the LEADING value.
-    * The null-ordering boundary is where this differs from the
-    * single-qualifier shape: a row with only include qualifiers pivots
-    * with a NULL leading value, which the index (entries exist only for
-    * leading-carrying rows) cannot see. Served index-first exactly where
-    * nulls provably cannot reach the k-set (the wide null guards):
+    * A row with only include qualifiers pivots with a NULL leading value
+    * the index cannot see, so the index serves exactly where nulls
+    * provably cannot reach the k-set (the wide null guards):
     *  - any `[lo, hi)` bound excludes null-leading rows on BOTH sides
-    *    (the pivot's CAST comparison nulls them out too) — both
-    *    directions serve;
+    *    (the pivot's CAST comparison nulls them out too);
+    *  - a maintained `includeOnly == 0` ([[Meta]] doc) proves no such
+    *    row exists at the covered seq — any at `latest` is a touched
+    *    candidate — so both directions serve;
     *  - BARE + DESC (nulls last): the head serves IFF it yields k full
-    *    rows — fewer means the true answer pads with null-leading rows,
-    *    probed by one O(k·files) count and answered by the exact wide
-    *    pivot instead;
-    *  - BARE + ASC (nulls FIRST): the true head IS the null-leading
-    *    rows — always the exact wide pivot ([[KvIndexRouting]] declines
-    *    this shape, so routed plans never pay it blindly).
-    * Unlike the single-qualifier fresh path, wide mode may run bounded
-    * probe jobs at call time (the lookup-shape contract).
+    *    rows, probed by one O(k·files) collect whose rows ARE the answer;
+    *    fewer means the answer pads with null-leading rows, answered by
+    *    the exact wide pivot instead;
+    *  - BARE + ASC (nulls FIRST): the true head IS the null-leading rows
+    *    — always the exact wide pivot ([[KvIndexRouting]] declines this
+    *    shape, so routed plans never pay it blindly).
     */
   def topNCovered(spark: SparkSession, path: String, name: String, k: Int,
       desc: Boolean = true,
       lo: Option[String] = None, hi: Option[String] = None,
       wide: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val table = new Path(path)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val m = meta(fs, table, name).getOrElse(throw new IllegalArgumentException(
-      s"graft-kv index: no index '$name' on $path"))
+    val t = resolve(spark, path, name)
+    val m = t.m
     require(m.covered,
       s"graft-kv index: '$name' is not exactly maintained (covered) — a " +
         "plain index holds superseded entries whose stale values would " +
@@ -1488,456 +1520,121 @@ object KvIndex {
       s"graft-kv index: '$name' is a composite index — its entries exist " +
         "only for rows carrying ALL key components, the wrong row set for " +
         "a single-column top-n")
-    require(k >= 1, s"graft-kv index: top-n k must be >= 1, got $k")
-    // Either bound may be open (None): `value >= x ORDER BY value LIMIT
-    // k` has no upper bound. Validation and padding are per-bound.
-    lo.foreach(requireValidBound(m.pad, "lo", _))
-    hi.foreach(requireValidBound(m.pad, "hi", _))
-    val loPad = lo.map(padBound(_, m.pad))
-    val hiPad = hi.map(padBound(_, m.pad))
     val perEntry = 2 + m.include.length
-    val fetch = (k.toLong + 1) * perEntry
-    require(fetch <= MaxTopNFetch,
-      s"graft-kv index: top-n k=$k needs a $fetch-cell index prefix — " +
-        s"beyond the $MaxTopNFetch inspection bound; run the pivot sort " +
-        "for result sets this large")
-    val latest = KvLog.latestSeq(fs, table)
-    val key = if (desc) col("rowKey").desc else col("rowKey").asc
-    // The prefix-free NUL encoding makes the encoded-key range exactly
-    // the leading-value range ([[coveredRead]]), so the bounds are a
-    // pruned rowKey predicate on the index scan.
-    def indexScan = {
-      val base = spark.read.format("graft-kv")
-        .load(indexDir(table, m.name).toString)
-      val lod = loPad.foldLeft(base)((df, l) => df.filter(col("rowKey") >= l))
-      hiPad.foldLeft(lod)((df, h) => df.filter(col("rowKey") < h))
-    }
-    // Top `n` complete index entries' BASE keys plus (fresh path) values.
-    def indexTop(n: Long, cells: Long) = LwwSlots.byRowKey(
-        indexScan.orderBy(key).limit(cells.toInt), // pushed TopN: O(k) rows per file
-        entryColumns(Nil))
-      .filter(col("_k").isNotNull && col("_v").isNotNull)
-      .orderBy(key).limit(n.toInt)
-
-    // ---- WIDE machinery ([[topNCovered]] `wide` doc): the
-    // multi-qualifier pivot's output, ranking, and exact fallback. ----
-    val pvW = paddedValue(guardedValue(col("value"), m.pad), m.pad)
-    /** Bounds + order + limit over a wide (rowKey, value, includes)
-      * frame; null leading values sort with the direction default
-      * (DESC → last), matching the pivot's Sort.
-      */
-    def rankWide(df: DataFrame): DataFrame = {
-      val lod = loPad.foldLeft(df)((d, l) => d.filter(pvW >= l))
-      val both = hiPad.foldLeft(lod)((d, h) => d.filter(pvW < h))
-      val ordW = if (desc) Seq(pvW.desc, col("rowKey").desc)
-        else Seq(pvW.asc, col("rowKey").asc)
-      both.orderBy(ordW: _*).limit(k)
-    }
-    /** The EXACT wide pivot over (leading ∪ include) — rows carrying any
-      * of the qualifiers, null where absent — restricted by `narrow`
-      * (identity = the whole table: the exact fallback).
-      */
-    def wideFrame(opts: Map[String, String],
-        narrow: DataFrame => DataFrame): DataFrame = {
-      val quals = m.qualifier +: m.include
-      LwwSlots.byRowKey(narrow(KvRead.cells(spark, path, opts)
-          .filter(col("family") === m.family && col("qualifier").isin(quals: _*))),
-        quals.zipWithIndex.map { case (q, i) => (q, s"_w$i") })
-        .select(col("rowKey") +: quals.zipWithIndex.map { case (q, i) =>
-          decode(col(s"_w$i"), "UTF-8").as(if (i == 0) "value" else q) }: _*)
-    }
-    def wideExact(opts: Map[String, String]): DataFrame =
-      rankWide(wideFrame(opts, identity))
-    // Wide null guards ([[topNCovered]] `wide` doc), applied at each
-    // serve site: any bound excludes null-leading rows on both sides;
-    // bare DESC serves only a k-full probed set; bare ASC never serves.
-
-    // Serve the PROBE's own rows when a k-full check had to run (the
-    // bare-DESC wide guard): re-executing the probed frame would pay
-    // the whole ranked job twice — its ≤ k collected rows ARE the
-    // answer when the guard passes.
-    def served(rows: Array[org.apache.spark.sql.Row],
-        schema: org.apache.spark.sql.types.StructType): DataFrame =
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), schema)
-
-    if (latest <= m.asOfSeq) {
-      if (!wide)
-        return indexTop(k, fetch)
-          .select(decode(col("_k"), "UTF-8").as("rowKey"),
-            decode(col("_v"), "UTF-8").as("value"))
-      val head = LwwSlots.byRowKey(indexScan.orderBy(key).limit(fetch.toInt),
-          entryColumns(m.include))
-        .filter(col("_k").isNotNull && col("_v").isNotNull)
-        .orderBy(key).limit(k)
-        .select(decode(col("_k"), "UTF-8").as("rowKey") +:
-          decode(col("_v"), "UTF-8").as("value") +:
-          m.include.map(q => decode(col(s"_q$q"), "UTF-8").as(q)): _*)
-      if (lo.isDefined || hi.isDefined) return head // bounds exclude nulls
-      // includeOnly == 0 ([[Meta]] doc): no pivot row lacks the leading
-      // qualifier, so the index sees EVERY row — the bare head is exact
-      // in both directions, no probe, no fallback (r19: the ASC serve).
-      if (m.includeOnly.contains(0L)) return head
-      if (!desc) return wideExact(Map("asOfSeq" -> latest.toString))
-      val rows = head.collect()
-      return if (rows.length == k) served(rows, head.schema)
-        else wideExact(Map("asOfSeq" -> latest.toString))
-    }
-
-    // ---- STALE paths: pinned to `latest`, never wrong, k-exact. ----
-    val pinned = Map("asOfSeq" -> latest.toString)
-    val pv = paddedValue(guardedValue(col("value"), m.pad), m.pad)
+    val fetch = topNFetch(k, perEntry)
+    // Either bound may be open: `value >= x ORDER BY value LIMIT k` has
+    // no upper bound.
+    val b = padded(m, Seq((lo, hi)))
+    val bounded = lo.isDefined || hi.isDefined
+    val pv = collated(col("value"), m.pad)
     val ord = if (desc) Seq(pv.desc, col("rowKey").desc)
       else Seq(pv.asc, col("rowKey").asc)
-    def rankK(piv: DataFrame): DataFrame = {
-      val lod = loPad.foldLeft(piv)((df, l) => df.filter(pv >= l))
-      hiPad.foldLeft(lod)((df, h) => df.filter(pv < h))
-        .orderBy(ord: _*).limit(k).select(col("rowKey"), col("value"))
+    /** Bounds + order + limit; null leading values sort with the
+      * direction default (DESC → last), matching the pivot's Sort.
+      */
+    def rank(df: DataFrame): DataFrame =
+      within(df, b, _ => pv).orderBy(ord: _*).limit(k)
+    /** The pinned pivot over the cells `narrow` keeps: `(rowKey, value)`,
+      * or for `wide` one row per key carrying any of (leading ∪ include),
+      * null where absent.
+      */
+    def pivot(narrow: DataFrame => DataFrame): DataFrame =
+      if (!wide) latestValue(narrow(baseCells(spark, path, m, t.pinned)))
+      else {
+        val quals = m.qualifier +: m.include
+        LwwSlots.byRowKey(narrow(KvRead.cells(spark, path, t.pinned)
+            .filter(col("family") === m.family && col("qualifier").isin(quals: _*))),
+          quals.zipWithIndex.map { case (q, i) => (q, s"_w$i") })
+          .select(col("rowKey") +: quals.zipWithIndex.map { case (q, i) =>
+            decode(col(s"_w$i"), "UTF-8").as(if (i == 0) "value" else q) }: _*)
+      }
+    def exact: DataFrame = rank(pivot(identity))
+    /** The bare-DESC wide guard: serve the probe's own rows when they are
+      * k full ones — re-executing the probed frame would pay the ranked
+      * job twice.
+      */
+    def kFull(top: DataFrame): DataFrame = {
+      val rows = top.collect()
+      if (rows.length == k && rows.forall(!_.isNullAt(1)))
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), top.schema)
+      else exact
     }
-    def basePivot(): DataFrame =
-      if (wide) wideExact(pinned)
-      else rankK(
-        baseCells(spark, path, m, pinned)
-          .groupBy(col("rowKey"))
-          .agg(decode(graft.functions.MaxByTsAgg.maxByTs(
-            col("value"), col("ts")), "UTF-8").as("value")))
-    val (touched, overFetch) = staleTopNInputs(spark, path, fs, table, m,
-      latest, k, perEntry) match {
-      case Some(x) => x
-      case None => return basePivot()
+
+    if (t.fresh) {
+      if (!wide) return entryAnswer(indexHead(spark, t, b, desc, k, fetch, Nil), Nil)
+      val top = entryAnswer(indexHead(spark, t, b, desc, k, fetch, m.include),
+        m.include)
+      return if (bounded || m.includeOnly.contains(0L)) top
+        else if (!desc) exact
+        else kFull(top)
     }
-    val idxCand = indexTop(k.toLong + touched.length, overFetch)
-      .select(decode(col("_k"), "UTF-8").as("rowKey"))
-    // Candidate count is BOUNDED a priori (≤ k + 2T), so the In-vs-join
-    // decision needs no truncating probe (a truncated candidate list
-    // routed through `isin` would silently drop real candidates): small
-    // sets collect fully and push per-key gets, larger ones verify via
-    // one left-semi join over the pinned family scan.
-    val candidates = idxCand.unionByName(touched.toSeq.toDF("rowKey"))
-    val small = k.toLong + 2L * touched.length <= InPushdownCap
-    lazy val candKeys = candidates.collect().map(_.getString(0)).distinct
-    if (wide) {
-      // candidate-restricted wide pivot, pinned; superset of the true
-      // non-null-leading top-k by the same over-fetch argument, so the
-      // k-set is exact exactly where the null guards prove nulls out
-      // ([[topNCovered]] `wide` doc); the bare-DESC guard serves its own
-      // probed rows (`served`) instead of re-running the ranked job
-      def narrow(cells: DataFrame): DataFrame =
-        if (small) cells.filter(col("rowKey").isin(candKeys.toIndexedSeq: _*))
-        else cells.join(candidates, Seq("rowKey"), "left_semi")
-      val ranked = rankWide(wideFrame(pinned, narrow))
-      if (lo.isDefined || hi.isDefined) return ranked
-      // includeOnly == 0 AT asOfSeq: any null-leading pivot row at the
-      // probed version must have CHANGED in the span — it is a touched
-      // key, so it is in the candidate frame, which wideFrame keeps
-      // (no leading filter) and rankWide orders with the direction
-      // default. The ranked candidate set therefore contains the true
-      // top-k for BOTH directions — serve it without the probe.
-      if (m.includeOnly.contains(0L)) return ranked
-      if (!desc) return wideExact(pinned)
-      val rows = ranked.collect()
-      // any null leading value inside the k-set means fewer than k
-      // non-null rows exist globally (candidates ⊇ the non-null top-k),
-      // so the true answer pads with null rows only the exact pivot sees
-      return if (rows.length == k && rows.forall(!_.isNullAt(1)))
-        served(rows, ranked.schema)
-      else wideExact(pinned)
-    }
-    val verified =
-      if (small)
-        baseCells(spark, path, m, pinned)
-          .filter(col("rowKey").isin(candKeys.toIndexedSeq: _*))
-      else baseCells(spark, path, m, pinned)
-        .join(candidates, Seq("rowKey"), "left_semi")
-    rankK(verified.groupBy(col("rowKey"))
-      .agg(decode(graft.functions.MaxByTsAgg.maxByTs(
-        col("value"), col("ts")), "UTF-8").as("value")))
+    val c = topNCandidates(spark, t, k, perEntry,
+      indexHead(spark, t, b, desc, _, _, Nil))
+    // the candidate-restricted pivot is a superset of the true
+    // non-null-leading top k, so the k-set is exact exactly where the
+    // null guards prove nulls out
+    val ranked = rank(pivot(verify(_, c)))
+    if (!wide || c.isEmpty || bounded || m.includeOnly.contains(0L)) ranked
+    else if (!desc) exact
+    else kFull(ranked)
   }
 
-  /** INDEX-SERVED COMPOSITE TOP-N (r19 — the Phoenix ORDER-BY-elimination
-    * shape over a multi-column collation): `ORDER BY c1, c2... [DESC]
-    * LIMIT k` with a range bound on EVERY key component, served from a
-    * composite index. The NUL-joined prefix-free encoding makes encoded
-    * key order EXACTLY component-tuple order ([[Meta]] doc) — in both
-    * directions (the reverse of a total order reverses every component
-    * simultaneously) — so the ordered k-head of the bounded index range
-    * IS the pivot's top-k, ties broken by base rowKey in scan direction.
+  /** INDEX-SERVED COMPOSITE TOP-N — `ORDER BY c1, c2... [DESC] LIMIT k`
+    * over a composite index, composite × top-n output. The prefix-free
+    * encoding makes encoded key order EXACTLY component-tuple order
+    * ([[Meta]] doc) in both directions, so the ordered k-head of the
+    * bounded index range IS the pivot's top-k, ties broken by base rowKey
+    * in scan direction. FRESH: one index scan ([[indexHead]]); STALE: the
+    * verified re-rank of [[topNCandidates]] over the pinned wide frame.
     *
-    * NULL soundness — why >= 1 bound side per component is REQUIRED, not
-    * a cost choice: a pivot row missing SOME component pivots with NULL
-    * there and ranks mid-stream under a multi-column sort — e.g.
-    * `(9, NULL)` out-ranks `(5, 3)` under `DESC` nulls-last — while the
-    * index cannot see it (entries exist only for rows carrying ALL
-    * components), and no k-full probe can bound it the way the
-    * single-column wide guard does. Any one-sided bound on a component
-    * nulls such rows out of the pivot's own comparison too, so with a
-    * bound per component the pivot's qualifying rows are EXACTLY the
-    * index's in-bounds entries — both directions serve, no null left to
-    * order.
-    *
-    * FRESH (covered seq == latest): ONE index scan — the leading bound
-    * prunes through the encoded key range, non-leading bounds filter the
-    * entry key's NUL segments (whole entries, all cells share the key),
-    * and a pushed TopN fetches a `(k+1) * perEntry`-cell prefix (the
-    * same truncation-guard over-fetch as [[topNCovered]]: the limit can
-    * cut only the LAST entry of the prefix, so the first k are whole).
-    * STALE: the [[topNCovered]] over-fetch argument, component-agnostic —
-    * candidates = the bounded index head of `k + T` entries (an
-    * untouched true-top-k row sits above at most `k-1` untouched and `T`
-    * touched entries, so inside the head) ∪ the span's touched keys (any
-    * component change can move a row INTO the bounds), one verified wide
-    * re-read PINNED to the probed seq, exact re-rank. Degraded spans
-    * fall back to the pinned wide pivot: slower, never wrong.
+    * NULL soundness: a pivot row missing SOME component pivots with NULL
+    * there and ranks mid-stream under a multi-column sort — `(9, NULL)`
+    * out-ranks `(5, 3)` under `DESC` nulls-last — while the index cannot
+    * see it (entries exist only for rows carrying ALL components), and no
+    * k-full probe can bound it the way the single-column wide guard does.
+    * Any one-sided bound on a component nulls such rows out of the
+    * pivot's own comparison, so with a bound per component the pivot's
+    * rows are EXACTLY the index's in-bounds entries. A fully open
+    * component serves from the index only under the maintained
+    * no-partials proof (`includeOnly == 0` at the covered seq — any
+    * partial row at `latest` is then a touched candidate); otherwise the
+    * exact pivot over the frame that keeps partial rows answers.
     *
     * Output: `(rowKey, value, <non-leading components...>,
     * <includes...>)` — [[lookupComposite]]'s positional schema — the
-    * top-k rows in scan direction. Reference tie: the same
-    * AvroReader.java:27-30 inspection-limit semantics the single-column
-    * route serves, over a composite collation.
+    * top-k rows in scan direction.
     */
   def topNComposite(spark: SparkSession, path: String, name: String,
       k: Int, desc: Boolean,
       bounds: Seq[(Option[String], Option[String])]): DataFrame = {
-    import spark.implicits._
-    val table = new Path(path)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val m = meta(fs, table, name).getOrElse(throw new IllegalArgumentException(
-      s"graft-kv index: no index '$name' on $path"))
+    val t = resolve(spark, path, name)
+    val m = t.m
     require(m.composite,
       s"graft-kv index: '$name' is a single-component index — use " +
         "topNCovered()")
-    require(k >= 1, s"graft-kv index: top-n k must be >= 1, got $k")
-    require(bounds.length == m.keyQuals.length,
-      s"graft-kv index: '$name' has ${m.keyQuals.length} key components " +
-        s"(${m.keyQuals.mkString(", ")}); got ${bounds.length} bounds")
-    bounds.zip(m.pads).foreach { case ((lo, hi), p) =>
-      lo.foreach(requireValidBound(p, "lo", _))
-      hi.foreach(requireValidBound(p, "hi", _))
-    }
-    // A fully-open component admits PARTIAL rows (that component NULL)
-    // into the pivot — invisible to the inner-join index, mid-stream
-    // under a multi-column sort. With every component bounded the wall
-    // is the bounds themselves; open components serve only where the
-    // maintained partial-key stat ([[Meta.includeOnly]]) proves, or the
-    // candidate frame covers, those rows — tracked via `anyOpen` at each
-    // serve site below, with the exact any-frame pivot as the fallback.
+    val payload = m.rest.map(_._1) ++ m.include
+    val perEntry = 2 + payload.length
+    val fetch = topNFetch(k, perEntry)
+    requireComponents(m, bounds.length)
+    val b = padded(m, bounds)
     val anyOpen = bounds.exists { case (lo, hi) => lo.isEmpty && hi.isEmpty }
-    val pb = bounds.zip(m.pads).map { case ((lo, hi), p) =>
-      (lo.map(padBound(_, p)), hi.map(padBound(_, p)))
+    def head(n: Long, cells: Long) = indexHead(spark, t, b, desc, n, cells, payload)
+    // open components keep PARTIAL rows: the pivot ranks them
+    def frame =
+      if (anyOpen) currentWideAny(spark, path, m, t.pinned)
+      else currentWide(spark, path, m, t.pinned)
+    // bounds + tuple order + limit; open components contribute no filter
+    // and their NULLs order with the direction default — the pivot's Sort
+    def rank(wide: DataFrame): DataFrame = {
+      val comps = components(m)
+      coveredColumns(m, within(wide, b, comps)
+        .orderBy(comps.map(c => if (desc) c.desc else c.asc) :+
+          (if (desc) col("rowKey").desc else col("rowKey").asc): _*)
+        .limit(k))
     }
-    val nComp = m.keyQuals.length
-    val perEntry = 2 + (nComp - 1) + m.include.length
-    val fetch = (k.toLong + 1) * perEntry
-    require(fetch <= MaxTopNFetch,
-      s"graft-kv index: top-n k=$k needs a $fetch-cell index prefix — " +
-        s"beyond the $MaxTopNFetch inspection bound; run the pivot sort " +
-        "for result sets this large")
-    val latest = KvLog.latestSeq(fs, table)
-    val key = if (desc) col("rowKey").desc else col("rowKey").asc
-    val payloadQuals = m.rest.map(_._1) ++ m.include
-
-    // Bounded index scan: the leading bound IS an encoded-key range (a
-    // no-NUL bound b satisfies `encoded >= b <=> v1 >= b` and
-    // `encoded < b <=> v1 < b` — the NUL terminator sorts below every
-    // bound byte), non-leading bounds filter the key's NUL segments.
-    def indexScan = {
-      val base = spark.read.format("graft-kv")
-        .load(indexDir(table, m.name).toString)
-      val leadLo = pb.head._1.foldLeft(base)((df, l) =>
-        df.filter(col("rowKey") >= l))
-      val lead = pb.head._2.foldLeft(leadLo)((df, h) =>
-        df.filter(col("rowKey") < h))
-      (1 until nComp).foldLeft(lead) { (df, i) =>
-        val seg = element_at(split(col("rowKey"), Sep), i + 1)
-        val lod = pb(i)._1.foldLeft(df)((d, l) => d.filter(seg >= l))
-        pb(i)._2.foldLeft(lod)((d, h) => d.filter(seg < h))
-      }
-    }
-    // Top `n` complete in-bounds entries (grouped cells; `_k`/`_v`
-    // non-null drops the one possibly-truncated boundary entry).
-    def indexTopEntries(n: Long, cells: Long) = {
-      LwwSlots.byRowKey(indexScan.orderBy(key).limit(cells.toInt),
-          entryColumns(payloadQuals))
-        .filter(col("_k").isNotNull && col("_v").isNotNull)
-        .orderBy(key).limit(n.toInt)
-    }
-    def project(df: DataFrame): DataFrame =
-      df.select(decode(col("_k"), "UTF-8").as("rowKey") +:
-        decode(col("_v"), "UTF-8").as("value") +:
-        payloadQuals.map(q => decode(col(s"_q$q"), "UTF-8").as(q)): _*)
-
-    // Serve frames under open components must KEEP partial rows (the
-    // pivot ranks them; bounded components exclude them anyway).
-    def frame(opts: Map[String, String]): DataFrame =
-      if (anyOpen) currentWideAny(spark, path, m, opts)
-      else currentWide(spark, path, m, opts)
-    // no-partials proof for the open shapes: the stat at the covered seq
-    val provenFull = m.includeOnly.contains(0L)
-    // bounds + tuple order + limit over a wide frame, then the composite
-    // projection ([[compositeAnswer]]'s shape with rank); open components
-    // contribute no filter and their NULLs order with the direction
-    // default — exactly the pivot's Sort
-    def rankComposite(wide: DataFrame): DataFrame = {
-      val compPad = m.keyQuals.indices.map(i =>
-        paddedValue(checkedComponent(col(s"_v$i"), m.pads(i)), m.pads(i)))
-      val bounded = m.keyQuals.indices.foldLeft(wide) { (df, i) =>
-        val lod = pb(i)._1.foldLeft(df)((d, l) => d.filter(compPad(i) >= l))
-        pb(i)._2.foldLeft(lod)((d, h) => d.filter(compPad(i) < h))
-      }
-      val ord = compPad.map(c => if (desc) c.desc else c.asc) :+ key
-      bounded.orderBy(ord: _*).limit(k)
-        .select(col("rowKey") +:
-          decode(col("_v0"), "UTF-8").as("value") +:
-          (m.rest.map(_._1).zipWithIndex.map { case (q, i) =>
-            decode(col(s"_v${i + 1}"), "UTF-8").as(q)
-          } ++ m.include.zipWithIndex.map { case (q, i) =>
-            decode(col(s"_v${nComp + i}"), "UTF-8").as(q)
-          }): _*)
-    }
-
-    if (latest <= m.asOfSeq) {
-      if (!anyOpen || provenFull)
-        return project(indexTopEntries(k, fetch))
-      // open component, partials exist: the exact any-frame pivot IS the
-      // answer (the index cannot rank the partial rows)
-      return rankComposite(frame(Map("asOfSeq" -> latest.toString)))
-    }
-
-    // ---- STALE paths: pinned to `latest`, never wrong, k-exact. ----
-    val pinned = Map("asOfSeq" -> latest.toString)
-    def basePivot(): DataFrame = rankComposite(frame(pinned))
-    // open components without the no-partials proof: the candidate
-    // over-fetch argument needs "every partial row at `latest` is a
-    // touched key", which only holds from a partial-free covered seq —
-    // the exact pivot is the honest plan
-    if (anyOpen && !provenFull) return basePivot()
-    val (touched, overFetch) = staleTopNInputs(spark, path, fs, table, m,
-      latest, k, perEntry) match {
-      case Some(x) => x
-      case None => return basePivot()
-    }
-    val idxCand = indexTopEntries(k.toLong + touched.length, overFetch)
-      .select(decode(col("_k"), "UTF-8").as("rowKey"))
-    val candidates = idxCand.unionByName(touched.toSeq.toDF("rowKey"))
-    val small = k.toLong + 2L * touched.length <= InPushdownCap
-    val wideAll = frame(pinned)
-    val verified =
-      if (small) {
-        val candKeys = candidates.collect().map(_.getString(0)).distinct
-        wideAll.filter(col("rowKey").isin(candKeys.toIndexedSeq: _*))
-      } else wideAll.join(candidates, Seq("rowKey"), "left_semi")
-    rankComposite(verified)
-  }
-
-  /** COMPOSITE lookup: one `[lo, hi)` bound per key component (string
-    * order; numeric order for decimal-mode components). Returns `rowKey`,
-    * `value` (leading component), one column per non-leading key
-    * component and per `include` qualifier — always the CURRENT values.
-    *
-    * FRESH (covered seq == latest): served INDEX-ONLY in ONE index scan —
-    * the leading bound prunes the scan through the encoded key range
-    * (prefix-free NUL encoding), the remaining component predicates
-    * filter the entry payload; zero base file opens. STALE: candidates =
-    * index entries in the encoded range whose embedded components match
-    * (parsed from the entry key — already padded, so the comparison is
-    * direct) ∪ base keys the CDC tail touched on ANY key component (a
-    * change to component 2 can move a row INTO the range, so every
-    * touched key is a candidate), then one verified wide re-read PINNED
-    * to the probed seq — the same snapshot-consistency contract as
-    * [[lookup]]. An unservable tail span degrades to the full wide scan:
-    * slower, never wrong.
-    */
-  def lookupComposite(spark: SparkSession, path: String, name: String,
-      bounds: Seq[(String, String)],
-      inPushdownCap: Int = InPushdownCap): DataFrame = {
-    val table = new Path(path)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val m = meta(fs, table, name).getOrElse(throw new IllegalArgumentException(
-      s"graft-kv index: no index '$name' on $path"))
-    require(m.composite,
-      s"graft-kv index: '$name' is a single-component index — use " +
-        "lookup()/lookupCovered()")
-    require(bounds.length == m.keyQuals.length,
-      s"graft-kv index: '$name' has ${m.keyQuals.length} key components " +
-        s"(${m.keyQuals.mkString(", ")}); got ${bounds.length} bounds")
-    bounds.zip(m.pads).foreach { case ((lo, hi), p) =>
-      requireValidBoundsAt(p, lo, hi) }
-    val pb = bounds.zip(m.pads).map { case ((lo, hi), p) =>
-      (padBound(lo, p), padBound(hi, p))
-    }
-    val (lo1, hi1) = pb.head
-    val k = m.keyQuals.length
-    // Non-leading component predicates over PADDED string columns (the
-    // caller of `colOf` supplies each component already padded).
-    def restMatch(colOf: Int => org.apache.spark.sql.Column)
-        : org.apache.spark.sql.Column =
-      (1 until k).map { i =>
-        val (lo, hi) = pb(i)
-        colOf(i) >= lo && colOf(i) < hi
-      }.reduce(_ && _) // k >= 2: a composite index has at least two components
-
-    val latest = KvLog.latestSeq(fs, table)
-    if (latest <= m.asOfSeq)
-      return coveredRead(spark, table, m, lo1, hi1)
-        .filter(restMatch(i =>
-          paddedValue(col(m.keyQuals(i)), m.pads(i))))
-
-    // STALE path (doc above). Entry keys parse positionally: component i
-    // is the i-th NUL-separated segment, stored padded.
-    val idxCand = spark.read.format("graft-kv")
-      .load(indexDir(table, name).toString)
-      .filter(col("rowKey") >= lo1 && col("rowKey") < hi1 &&
-        col("qualifier") === "k")
-      .filter(restMatch(i => element_at(split(col("rowKey"), Sep), i + 1)))
-      .select(decode(col("value"), "UTF-8").as("rowKey"))
-    val pinned = Map("asOfSeq" -> latest.toString)
-    val wideAll = currentWide(spark, path, m, pinned)
-    val verifiedWide =
-      if (spanUnservable(fs, table, m.asOfSeq, latest)) wideAll
-      else {
-        val tailCand = spark.read.format("graft-kv")
-          .option("sinceSeq", m.asOfSeq.toString)
-          .option("asOfSeq", latest.toString).load(path)
-          .filter(col("family") === m.family &&
-            col("qualifier").isin(m.keyQuals: _*))
-          .select(col("rowKey"))
-        val candidates = idxCand.unionByName(tailCand)
-        val probe = candidates.limit(inPushdownCap + 1).collect()
-        if (probe.isEmpty)
-          // optimizer folds Filter(false) to an empty relation with the
-          // exact output schema of the fresh path
-          return coveredRead(spark, table, m, lo1, hi1).filter(lit(false))
-        else if (probe.length <= inPushdownCap) {
-          val keys = probe.map(_.getString(0)).distinct
-          wideAll.filter(col("rowKey").isin(keys.toIndexedSeq: _*))
-        } else wideAll.join(candidates, Seq("rowKey"), "left_semi")
-      }
-    compositeAnswer(m, verifiedWide, pb)
-  }
-
-  /** One wide relation → the composite answer: all component bounds
-    * applied over the padded (and decimal-guarded) current values, then
-    * the `rowKey, value, <components...>, <includes...>` projection —
-    * the tail both the stale verified path and the index-free scan plan
-    * share.
-    */
-  private def compositeAnswer(m: Meta, wide: DataFrame,
-      pb: Seq[(String, String)]): DataFrame = {
-    val k = m.keyQuals.length
-    val compPad = m.keyQuals.indices.map(i =>
-      paddedValue(checkedComponent(col(s"_v$i"), m.pads(i)), m.pads(i)))
-    wide
-      .filter(m.keyQuals.indices.map { i =>
-        compPad(i) >= pb(i)._1 && compPad(i) < pb(i)._2
-      }.reduce(_ && _))
-      .select(col("rowKey") +:
-        decode(col("_v0"), "UTF-8").as("value") +:
-        (m.rest.map(_._1).zipWithIndex.map { case (q, i) =>
-          decode(col(s"_v${i + 1}"), "UTF-8").as(q)
-        } ++
-          m.include.zipWithIndex.map { case (q, i) =>
-            decode(col(s"_v${k + i}"), "UTF-8").as(q)
-          }): _*)
+    if (anyOpen && !m.includeOnly.contains(0L)) rank(frame)
+    else if (t.fresh) entryAnswer(head(k, fetch), payload)
+    else rank(verify(frame, topNCandidates(spark, t, k, perEntry, head)))
   }
 
   /** [[autoLookup]]'s COMPOSITE twin: per-qualifier `[lo, hi)` predicates
@@ -1953,8 +1650,7 @@ object KvIndex {
     * contradicting declaration is refused.
     */
   def autoLookupComposite(spark: SparkSession, path: String, family: String,
-      preds: Seq[(String, String, String)], pads: Seq[Int] = Nil,
-      inPushdownCap: Int = InPushdownCap): DataFrame = {
+      preds: Seq[(String, String, String)], pads: Seq[Int] = Nil): DataFrame = {
     require(preds.nonEmpty, "graft-kv index: autoLookupComposite needs at " +
       "least one (qualifier, lo, hi) predicate")
     require(pads.isEmpty || pads.length == preds.length,
@@ -1967,6 +1663,9 @@ object KvIndex {
     val declaredPads = preds.map(_._1)
       .zip(if (pads.isEmpty) Seq.fill(preds.length)(0) else pads).toMap
     val byQual = preds.map(p => p._1 -> ((p._2, p._3))).toMap
+    // the index-free plan: one wide scan, every bound over the pivot
+    def scan(m: Meta, b: Bounds): DataFrame =
+      compositeAnswer(m, currentWide(spark, path, m, Map.empty), b)
     KvIndex.list(fs, table).find(i => i.family == family && i.composite &&
       i.keyQuals.length == preds.length && i.keyQuals.toSet == qualSet) match {
       case Some(m) =>
@@ -1976,35 +1675,19 @@ object KvIndex {
               s"contradicts index '${m.name}' (pad=$p)")
         }
         val ordered = m.keyQuals.map(byQual)
-        // bounds validate before padding — the cost probe must refuse the
-        // same inputs the lookup itself would
-        m.keyQuals.zip(m.pads).foreach { case (q, pd) =>
-          val (lo, hi) = byQual(q)
-          requireValidBoundsAt(pd, lo, hi)
-        }
-        val (lo1, hi1) = (padBound(ordered.head._1, m.pad),
-          padBound(ordered.head._2, m.pad))
-        if (rangeIsSelective(fs, table, m, lo1, hi1))
-          lookupComposite(spark, path, m.name, ordered, inPushdownCap)
-        else {
-          val pb = m.keyQuals.zip(m.pads).map { case (q, p) =>
-            val (lo, hi) = byQual(q)
-            (padBound(lo, p), padBound(hi, p))
-          }
-          compositeAnswer(m, currentWide(spark, path, m, Map.empty), pb)
-        }
+        // bounds validate before the cost probe: it must refuse the same
+        // inputs the lookup itself would
+        val b = padded(m, ordered.map { case (lo, hi) => (Some(lo), Some(hi)) })
+        if (rangeIsSelective(fs, table, m, ordered.head._1, ordered.head._2))
+          lookupComposite(spark, path, m.name, ordered)
+        else scan(m, b)
       case None =>
         // index-free: synthesize the meta in PREDICATE order
         val head = preds.head._1
         val m = Meta("<scan>", family, head, declaredPads(head), -1L,
           rest = preds.tail.map(p => (p._1, declaredPads(p._1))),
           covered = true)
-        val pb = m.keyQuals.zip(m.pads).map { case (q, p) =>
-          val (lo, hi) = byQual(q)
-          requireValidBoundsAt(p, lo, hi)
-          (padBound(lo, p), padBound(hi, p))
-        }
-        compositeAnswer(m, currentWide(spark, path, m, Map.empty), pb)
+        scan(m, padded(m, preds.map(p => (Some(p._2), Some(p._3)))))
     }
   }
 }

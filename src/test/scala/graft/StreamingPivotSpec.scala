@@ -11,7 +11,7 @@ import graft.streaming.StreamingPivot.{CellEvent, LatestCells, VersionedCells}
 class StreamingPivotSpec extends SparkSpec {
   import spark.implicits._
 
-  private case class TimedCell(
+  case class TimedCell(
       rowKey: String, qualifier: String, value: Array[Byte],
       ts: Long, eventTime: Timestamp)
 
@@ -266,7 +266,7 @@ class StreamingPivotSpec extends SparkSpec {
     out.count() shouldBe batch.count()
   }
 
-  private case class Ev(event_id: Long, ts: Long, user_id: Long,
+  case class Ev(event_id: Long, ts: Long, user_id: Long,
       event_type: String, value: Double, props: String)
 
   test("stream-stream interval join: state carries clicks across micro-batches") {

@@ -117,7 +117,7 @@ class KvDiffSpjSpec extends graft.SparkSpec {
     noBroadcast {
       // cap 1 forces the join verification path with 20 candidates
       val df = KvIndex.lookup(spark, dir, "by_amt", "600", "660",
-        inPushdownCap = 1)
+        cap = 1)
       val got = df.as[(String, String)].collect().toSet
       got.size shouldBe 20 // 3i in [600, 660): i in [200, 220)
       val plan = df.queryExecution.executedPlan.toString
