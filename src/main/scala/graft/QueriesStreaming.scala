@@ -258,7 +258,7 @@ private[graft] trait QueriesStreaming { self: Queries.type =>
   /** The replication pipe LANDING SALTED (r14): the same WAL tail as
     * [[streamKvPipe]], but `writeStream.toTable` into a `salt_buckets`
     * catalog table — the sink applies the salt per epoch
-    * ([[graft.sources.KvCellSink]] KvStreamSaltedWriterFactory), and the
+    * ([[graft.sources.KvTaskWriter]], the batch writer), and the
     * read-back by name strips it. Same oracle as the unsalted pipe: the
     * salt must be invisible end to end, streaming included.
     */

@@ -396,16 +396,15 @@ private[sources] object KvTableProps {
     props.get("codec").foreach(KvCodecs.parse(_): Unit)
   }
 
-  /** Recorded property name → write-option name for the maintenance knobs
-    * ([[KvWriteBuilder]] parses the option spellings).
+  /** Parse the recorded `maintain*` properties into the policy — None
+    * when maintenance is not declared. [[validate]] runs this at
+    * CREATE/ALTER DDL time, so a typo'd knob fails the statement that
+    * introduces it, not a later INSERT.
     */
-  val MaintainOptionOf: Map[String, String] = Map(
-    "maintain" -> "maintain",
-    "maintain_max_segments" -> "maintainMaxSegments",
-    "maintain_target_region_bytes" -> "maintainTargetRegionBytes",
-    "maintain_grace_ms" -> "maintainGraceMs",
-    "ttl_ms" -> "maintainTtlMs",
-    "versions" -> "maintainVersions")
+  def maintainPolicyOf(props: Map[String, String])
+      : Option[KvMaintenance.Policy] =
+    KvMaintenance.Policy.parse(props.get,
+      k => s"graft-kv catalog: table property $k")
 
   /** Whether one recorded maintain* value parses — the injection-time
     * LENIENT screen ([[KvCatalogTable.newWriteBuilder]]): values were
@@ -414,62 +413,7 @@ private[sources] object KvTableProps {
     * (maintenance is best-effort housekeeping by contract).
     */
   def wellFormedMaintain(key: String, value: String): Boolean =
-    try {
-      key match {
-        case "maintain" => Set("true", "false")(value.toLowerCase)
-        case "maintain_max_segments" => value.toInt >= 1
-        case "maintain_target_region_bytes" => value.toLong >= 1
-        case "maintain_grace_ms" => value.toLong >= 0
-        case "ttl_ms" => value.toLong >= 1
-        case "versions" => value.toInt >= 1
-        case _ => false
-      }
-    } catch { case _: NumberFormatException => false }
-
-  /** Parse the recorded `maintain*` properties into the policy — None
-    * when maintenance is not declared. Validation is EAGER AND LOUD:
-    * [[validate]] runs this at CREATE/ALTER DDL time, so a typo'd knob
-    * fails the statement that introduces it, not a later INSERT.
-    */
-  def maintainPolicyOf(props: Map[String, String])
-      : Option[KvMaintenance.Policy] = {
-    def fail(k: String, v: String, want: String): Nothing =
-      throw new IllegalArgumentException(
-        s"graft-kv catalog: table property $k must be $want, got '$v'")
-    val on = props.get("maintain").exists { v =>
-      v.toLowerCase match {
-        case "true" => true
-        case "false" => false
-        case other => fail("maintain", other, "true|false")
-      }
-    }
-    def longOf(k: String, min: Long): Option[Long] = props.get(k).map { v =>
-      val n = try v.toLong
-        catch { case _: NumberFormatException => fail(k, v, s"a number >= $min") }
-      if (n < min) fail(k, v, s"a number >= $min")
-      n
-    }
-    val maxSeg = longOf("maintain_max_segments", 1)
-    val target = longOf("maintain_target_region_bytes", 1)
-    val grace = longOf("maintain_grace_ms", 0)
-    // DECLARATIVE RETENTION (HBase pins TTL / VERSIONS per column family
-    // at create, CreateTable.java:48-52): recorded once on the table,
-    // enforced physically by every compacting maintenance pass through
-    // [[KvCompactor.CellPolicy]] — a self-maintaining (`maintain=true`)
-    // table ages out dead cells on its own, and an explicit
-    // `CALL sys.maintain` applies them on any table that declares them.
-    // Parsed BEFORE the enablement check so CREATE/ALTER validates them
-    // even on tables that are not (yet) self-maintaining.
-    val ttl = longOf("ttl_ms", 1)
-    val versions = longOf("versions", 1)
-    if (!on) None
-    else Some(KvMaintenance.Policy(
-      maxSegments = maxSeg.map(_.toInt).getOrElse(8),
-      targetRegionBytes = target.getOrElse(128L * 1024 * 1024),
-      vacuumGraceMs = grace.getOrElse(24L * 3600 * 1000),
-      ttlMs = ttl,
-      maxVersions = versions.map(_.toInt)))
-  }
+    scala.util.Try(maintainPolicyOf(Map(key -> value))).isSuccess
 
   private def propsPath(table: Path) =
     new Path(new Path(table, KvLog.LogDirName), "_table_props")
@@ -537,7 +481,7 @@ private[sources] object KvTableProps {
   * injects `saltWrite=<n>`, so plain SQL INSERT / CTAS / INSERT OVERWRITE
   * carry LOGICAL keys and the sink applies the salt per row while
   * demuxing into per-bucket stored-sorted files (the row-level
-  * replacement write's machinery — [[KvProjectingWriterFactory]]). The
+  * replacement write's writer — [[KvTaskWriter]]). The
   * SQL surface is therefore a logical-key surface on BOTH sides, like
   * Phoenix: reads strip the salt, writes add it, UPDATE/MERGE re-salt
   * their replacements. Pre-salted rows remain the PATH API's contract
@@ -579,7 +523,7 @@ private[sources] class KvCatalogTable(tableName: String, path: String,
       // injection so corruption cannot brick the table's INSERT surface,
       // while the write builder stays STRICT for values the caller
       // actually typed on a statement.
-      KvTableProps.MaintainOptionOf.get(k).foreach { opt =>
+      KvMaintenance.Policy.OptionSpelling.get(k).foreach { opt =>
         if (KvTableProps.wellFormedMaintain(k, v)) merged.put(opt, v)
         else logWarning(s"graft-kv catalog: ignoring malformed recorded " +
           s"property $k='$v' on $tableName — maintenance falls back; " +

@@ -1,46 +1,34 @@
 package graft.sources
 
-import java.util
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-/** The bulk-load WRITE path of the `graft-kv` connector — PopulateTable's
-  * HFile invariant (globally range-sorted region files,
-  * PopulateTable.java:68's `TotalOrderPartitioner` + sorting reducer) owned
-  * by the SINK, not trusted to the caller:
-  * [[RequiresDistributionAndOrdering]] makes Spark itself range-partition
-  * the input on rowKey into `regions` partitions and sort each by
-  * (rowKey, qualifier) before a single writer row is consumed. Any
-  * DataFrame written through `format("graft-kv").option("regions", n)`
-  * lands as the bulk-load layout — no `repartitionByRange`, no
-  * `sortWithinPartitions` at the call site, and no way to forget them.
-  *
-  * Commit protocol: writers stage in a `_tmp_<uuid>` dir; the driver-side
-  * commit renames the acknowledged files into place (one rename per region
-  * — metadata-only on HDFS-like stores), APPENDS A MANIFEST-LOG ENTRY
-  * listing the sealed files ([[KvLog]] — the atomic publish point every
-  * reader consumes), and clears the staging dir, so concurrent speculative
-  * attempts can never tear the table. Batch commits seal monotone names
-  * `part-b<seq>-<region>.parquet` keyed by the allocated log seq — names
-  * stay human-orderable by commit, though with the manifest present no
-  * reader depends on name order anymore.
+/** `format("graft-kv")` writes: resolves a statement's options into one
+  * [[KvWrite]] — cell columns, `regions`, `codec`, maintenance policy,
+  * tombstone admission and the salt contract (`saltedInput` pre-salted
+  * rows, `saltWrite` sink-side salting, and the layout checks between
+  * them and the table's declaration). The range-sort contract is
+  * [[KvRangeSortedWrite]]; staging, sealing and publishing are
+  * [[KvStagedCommit]].
   */
 private[sources] class KvWriteBuilder(path: String, info: LogicalWriteInfo,
     conf: SerializableConfiguration)
@@ -67,52 +55,17 @@ private[sources] class KvWriteBuilder(path: String, info: LogicalWriteInfo,
     // codec-agnostic (parquet self-describes per column chunk).
     val codec = KvCodecs.parse(
       Option(info.options.get("codec")).getOrElse("snappy"))
-    // Opt-in POST-EPOCH MAINTENANCE (`maintain=true` + policy knobs):
+    // Opt-in POST-COMMIT MAINTENANCE (`maintain=true` + policy knobs):
     // lifecycle hygiene wired into the write path itself, the HBase shape
-    // (region servers trigger compaction checks from the memstore flush)
-    // — so a long-lived streaming pipe keeps its segment count bounded
-    // without an operator remembering to schedule MaintainTable.
-    // Parsed STRICTLY: a malformed value HERE is a typo'd explicit write
-    // option, and silently running the write without the maintenance the
-    // user asked for would let a long-lived pipe's segment count grow
-    // unbounded while the operator believes self-maintenance is on. The
-    // other source of these options — catalog-RECORDED properties — is
-    // sanitized leniently at injection time ([[KvCatalogTable
-    // .newWriteBuilder]]), so out-of-band property corruption still
-    // cannot brick a table's INSERT surface; only a value the caller
-    // typed on THIS statement fails it.
-    def strict[T](key: String, expect: String, parse: String => T): Option[T] =
-      Option(info.options.get(key)).map { v =>
-        try parse(v) catch {
-          case scala.util.control.NonFatal(_) =>
-            throw new IllegalArgumentException(
-              s"graft-kv: maintenance option $key must be $expect, got '$v'")
-        }
-      }
-    val maintainOn = strict("maintain", "true|false", _.toLowerCase match {
-      case "true" => true
-      case "false" => false
-      case other => throw new IllegalArgumentException(other)
-    }).getOrElse(false)
-    val maintainPolicy =
-      if (!maintainOn) None
-      else Some(KvMaintenance.Policy(
-        maxSegments = strict("maintainMaxSegments", "an integer", _.toInt)
-          .getOrElse(8),
-        targetRegionBytes =
-          strict("maintainTargetRegionBytes", "a byte count", _.toLong)
-            .getOrElse(128L * 1024 * 1024),
-        vacuumGraceMs = strict("maintainGraceMs", "a duration in ms", _.toLong)
-          .getOrElse(24L * 3600 * 1000),
-        // Declarative retention (KvTableProps: `ttl_ms` / `versions`
-        // TBLPROPERTIES → these option spellings): enforced by the
-        // pass's compaction rewrite, HBase's TTL / VERSIONS contract.
-        ttlMs = strict("maintainTtlMs", "a positive duration in ms", { v =>
-          val n = v.toLong; require(n >= 1); n
-        }),
-        maxVersions = strict("maintainVersions", "a positive integer", { v =>
-          val n = v.toInt; require(n >= 1); n
-        })))
+    // (region servers trigger compaction checks from the memstore flush).
+    // Parsed STRICTLY: a malformed value here is a typo'd explicit write
+    // option, and running the write without the maintenance the user
+    // asked for would let segments pile up while the operator believes
+    // self-maintenance is on. Catalog-RECORDED properties are screened
+    // leniently at injection instead ([[KvCatalogTable.newWriteBuilder]]).
+    val maintainPolicy = KvMaintenance.Policy.parse(
+      k => Option(info.options.get(KvMaintenance.Policy.OptionSpelling(k))),
+      k => s"graft-kv: maintenance option ${KvMaintenance.Policy.OptionSpelling(k)}")
     // Reserved-qualifier admission ([[KvDelete]]): user writes must not
     // smuggle delete markers; the delete API, compaction rewrites, and
     // deliberate replication pipes set `allowTombstones=true`.
@@ -133,12 +86,11 @@ private[sources] class KvWriteBuilder(path: String, info: LogicalWriteInfo,
     // `saltWrite=<n>` (r13, injected by [[KvCatalogTable]] — never a user
     // option): the incoming rows carry LOGICAL keys and the SINK applies
     // the salt, demuxing each range partition into per-bucket stored-
-    // sorted files ([[KvProjectingWriterFactory]] — the same machinery
-    // the row-level replacement write uses). This is what makes plain
-    // SQL INSERT / CTAS / INSERT OVERWRITE work on `salt_buckets`
-    // tables: the SQL surface is a logical-key surface on BOTH sides
-    // (reads strip the salt, writes add it — the Phoenix contract),
-    // while the path API keeps its explicit pre-salted contract.
+    // sorted files ([[KvTaskWriter]], the writer every path shares). This
+    // is what makes plain SQL INSERT / CTAS / INSERT OVERWRITE work on
+    // `salt_buckets` tables: the SQL surface is a logical-key surface on
+    // BOTH sides (reads strip the salt, writes add it — the Phoenix
+    // contract), while the path API keeps its explicit pre-salted contract.
     val saltWrite = Option(info.options.get("saltWrite")).map(_.toInt)
     saltWrite.foreach(KvSalt.requireBuckets)
     require(saltWrite.isEmpty || saltedInput.isEmpty,
@@ -220,19 +172,21 @@ private[sources] object KvCodecs {
   }
 }
 
-private[sources] class KvWrite(
-    path: String, schema: StructType, regions: Int, truncate: Boolean,
-    queryId: String, conf: SerializableConfiguration,
-    maintainPolicy: Option[KvMaintenance.Policy] = None,
-    codec: CompressionCodecName = CompressionCodecName.SNAPPY,
-    allowTombstones: Boolean = false,
-    saltCheck: Option[Int] = None,
-    saltOnWrite: Option[Int] = None)
+
+/** The sink's range-sort contract, declared once for every graft-kv write
+  * (appends, overwrites, streaming epochs and row-level replacements):
+  * PopulateTable's HFile invariant (PopulateTable.java:68's
+  * `TotalOrderPartitioner` + sorting reducer) owned by the SINK, not
+  * trusted to the caller. Spark range-partitions the input on rowKey into
+  * `regions` partitions and sorts each by (rowKey, qualifier) before a
+  * writer sees a row, so every sealed file is a sorted region file — no
+  * `repartitionByRange` or `sortWithinPartitions` at any call site.
+  */
+private[sources] trait KvRangeSortedWrite
     extends Write with RequiresDistributionAndOrdering {
 
-  // The sink's contract: range distribution on rowKey across exactly
-  // `regions` partitions, each sorted by (rowKey, qualifier) — Spark plans
-  // the exchange + sort, the sink just streams rows into region files.
+  protected def regions: Int
+
   override def requiredDistribution(): Distribution =
     Distributions.ordered(Array(
       Expressions.sort(Expressions.column("rowKey"), SortDirection.ASCENDING)))
@@ -242,248 +196,125 @@ private[sources] class KvWrite(
     Expressions.sort(Expressions.column("qualifier"), SortDirection.ASCENDING))
 
   override def requiredNumPartitions(): Int = regions
-
-  override def toBatch: BatchWrite =
-    new KvBatchWrite(path, schema, truncate, conf, codec, allowTombstones,
-      saltCheck, saltOnWrite, maintainPolicy)
-
-  override def toStreaming
-      : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-    // Sink-side salting applies to streaming epochs too (r14 — the last
-    // salted asymmetry): `writeStream.toTable` into a `salt_buckets`
-    // catalog table carries LOGICAL keys and each epoch demuxes into
-    // per-bucket stored-sorted files through the same
-    // [[KvProjectingWriterFactory]] batch INSERT uses. Sealed names stay
-    // deterministic per (query, epoch, writer slot) — slots fold
-    // (partition, bucket) — so exactly-once replay recovery is
-    // unchanged. A pipeline that PRE-salts its rows (the path-API
-    // contract) declares `saltedInput=<n>`, exactly like batch.
-    new KvStreamingWrite(path, schema, queryId, conf, maintainPolicy, codec,
-      allowTombstones, saltCheck, saltOnWrite)
 }
 
-/** The WAL PRODUCER side of the connector — `writeStream.format("graft-kv")`
-  * seals one set of region files per micro-batch epoch (the memstore-flush
-  * analog: each epoch's state flushes as sorted immutable files).
-  *
-  * The same [[KvWrite]] distribution/ordering contract applies per epoch, so
-  * every sealed segment is range-partitioned and (rowKey, qualifier)-sorted.
-  * Each epoch commit appends one [[KvLog]] entry — a `graft-kv` tail of a
-  * `graft-kv` streaming sink is a working replication pipe whose admission
-  * cost is O(new epochs), not O(table history).
-  *
-  * Exactly-once: final names are DETERMINISTIC per (epoch, region) — no
-  * task id, no uuid — and the log entry carries a `queryId:epochId` writer
-  * tag. A replayed epoch after failure recovery first clears this epoch's
-  * targets, renames the replay's files over the same names, and the tagged
-  * log append deduplicates itself ([[KvLog.append]]), so re-commits are
-  * idempotent and a torn epoch is invisible: readers only ever see files
-  * named by a completed commit.
-  */
-private[sources] class KvStreamingWrite(path: String, schema: StructType,
-    queryId: String, conf: SerializableConfiguration,
+private[sources] class KvWrite(
+    path: String, schema: StructType, protected val regions: Int,
+    truncate: Boolean, queryId: String, conf: SerializableConfiguration,
     maintainPolicy: Option[KvMaintenance.Policy] = None,
     codec: CompressionCodecName = CompressionCodecName.SNAPPY,
     allowTombstones: Boolean = false,
     saltCheck: Option[Int] = None,
     saltOnWrite: Option[Int] = None)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
+    extends KvRangeSortedWrite {
 
-  private val stagingDir = s"$path/_tmp_${UUID.randomUUID().toString.take(8)}"
+  override def toBatch: BatchWrite =
+    new KvBatchWrite(path, schema, truncate, conf, codec, allowTombstones,
+      saltCheck, saltOnWrite, maintainPolicy)
 
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    saltOnWrite match {
-      case Some(n) =>
-        // Sink-side salting per epoch (KvWrite.toStreaming doc): the
-        // batch demux factory adapted to the streaming createWriter
-        // shape — epochId doesn't enter the STAGED names (task-unique
-        // already); the deterministic epoch-scoped name is assigned at
-        // commit like every streaming seal.
-        KvStreamSaltedWriterFactory(KvProjectingWriterFactory(
-          stagingDir, KvScanBuilder.broadcastConf(conf),
-          cellIdx = graft.kv.Cell.schema.fieldNames
-            .map(schema.fieldNames.indexOf(_)).toArray,
-          declaredLen = schema.length, codec, saltBuckets = Some(n),
-          allowTombstones = allowTombstones))
-      case None =>
-        KvStreamWriterFactory(stagingDir, schema.fieldNames.toSeq,
-          KvScanBuilder.broadcastConf(conf), codec, allowTombstones, saltCheck)
-    }
-
-  /** Stable per-QUERY name token: sealed names are deterministic per
-    * (query, epoch, region), so exactly-once recovery (rename-over-same-
-    * names) still holds per query while TWO streaming queries appending to
-    * one table can never collide — without it, both queries' epoch 0 would
-    * target the same names and each one's incomplete-commit hygiene could
-    * delete the other's committed files.
-    */
-  private val queryTok =
-    queryId.filter(_.isLetterOrDigit).take(16).padTo(4, '0')
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
-    fs.mkdirs(dir)
-    val writerTag = Some(s"$queryId:$epochId")
-    val prefix = f"part-e$epochId%010d-$queryTok-"
-    // Epoch REPLAY detection comes FIRST: the manifest entry is written
-    // after the renames, so proof that the original commit published means
-    // the replay must be a pure no-op (drop its staging, touch neither
-    // targets nor manifest). Deleting/re-renaming here instead would be
-    // wrong: a recovered attempt can seal a DIFFERENT non-empty region set
-    // (range boundaries are re-sampled), and rewriting targets while
-    // keeping the original entry would leave the manifest pointing at
-    // deleted files. Three layers, O(1) on the fresh-epoch path:
-    //  1. the WRITER HINT (last epoch this query committed, recorded right
-    //     after the entry append) — stays correct however many commits
-    //     from other writers or this commit's own maintenance pass landed
-    //     since (the case where the latest-entry check goes blind, and
-    //     where redoing the epoch would double cells AND hygiene-delete
-    //     pending-removal files still inside readers' vacuum grace);
-    //  2. the latest-entry tag (covers the hint-write crash window in the
-    //     single-writer case);
-    //  3. only when this epoch's query-unique targets are ON DISK (one
-    //     glob; a fresh epoch has none, so it never pays more) — the
-    //     bounded recent-entry tag scan, covering the hint-crash window
-    //     WITH interleaved commits. A replayed epoch whose targets were
-    //     compacted away still matches: deferred deletes keep them on
-    //     disk for a full vacuum grace, far longer than any replay gap.
-    val latest = KvLog.latestSeq(fs, dir)
-    val replayed =
-      KvLog.writerEpoch(fs, dir, queryTok).exists(_ >= epochId) ||
-        (latest >= 0 &&
-          (KvLog.read(fs, dir, latest).exists(_.writer == writerTag) ||
-            (fs.globStatus(new Path(dir, prefix + "*")).nonEmpty &&
-              KvLog.recentWriterTag(fs, dir, s"$queryId:$epochId"))))
-    if (replayed) {
-      fs.delete(new Path(stagingDir), true)
-      return
-    }
-    // First logged commit into a legacy directory: snapshot pre-existing
-    // segments into the manifest before this commit's entry (KvLog doc).
-    KvLog.seedFromDirIfNeeded(fs, dir)
-    // The log dir must exist BEFORE any data rename so a racing first
-    // committer can never mistake this epoch's files for a log-less
-    // migration (KvLog.ensureLogDir doc).
-    KvLog.ensureLogDir(fs, dir)
-    // A resalt that landed since this query resolved its layout fails the
-    // epoch before any rename (KvSalt.requireLayoutUnchanged): the stream
-    // restarts, re-resolves, and continues in the new layout.
-    KvSalt.requireLayoutUnchanged(fs, dir,
-      saltOnWrite.orElse(saltCheck), s"streaming query $queryId")
-    // Incomplete-commit hygiene: a crash between renames and the log append
-    // leaves this epoch's targets on disk with no manifest entry — clear
-    // every target this epoch could have written before renaming. One
-    // glob over the (query, epoch)-scoped prefix covers both writer
-    // shapes (one slot per partition, or the salted demux's
-    // partition×bucket grid), and can never touch a concurrent query's
-    // files. The replay guard above already proved this epoch never
-    // published, so anything under the prefix is a torn attempt.
-    fs.globStatus(new Path(dir, prefix + "*"))
-      .foreach(st => fs.delete(st.getPath, false): Unit)
-    val sealedOut = KvCommitMessages.sealedParts(messages.toSeq)
-      .map { case (f, slot, st) =>
-        val target = new Path(dir, f"$prefix$slot%05d.parquet")
-        require(fs.rename(new Path(f), target),
-          s"graft-kv: sealing rename $f -> $target failed (target exists " +
-            "or source missing) — aborting the epoch commit")
-        target.getName -> st
-      }
-    // Same optimistic entry-append loop as the batch path: losing a seq
-    // race to another writer (a second streaming query, a batch append, a
-    // compaction rebase) costs a retry of the ONE-entry append — never an
-    // epoch abort, and never a repeat of the data renames (targets are
-    // query-unique and already in place).
-    KvLog.appendRetrying(fs, dir, adds = sealedOut.map(_._1).toSeq,
-      writer = writerTag,
-      stats = sealedOut.collect { case (n, Some(st)) => n -> st }.toMap,
-      layoutExpect = Some(saltOnWrite.orElse(saltCheck))): Unit
-    // The O(1) replay guard for every future attempt of this epoch —
-    // written AFTER the entry so a crash in between falls back to the
-    // bounded tag scan, never to data loss.
-    KvLog.recordWriterEpoch(fs, dir, queryTok, epochId)
-    fs.delete(new Path(stagingDir), true)
-    // Post-epoch policy pass (opt-in): runs AFTER the epoch's entry is
-    // durable, so a crash mid-maintenance can never tear the commit — at
-    // worst the next epoch's pass redoes the housekeeping (idempotent).
-    // Under the threshold it parks at metadata cost; when it compacts,
-    // the trigger interval absorbs the merge, exactly like an HBase
-    // flush-path compaction. Skipped on the epoch-replay no-op path
-    // above: a recovery replay should re-ack, not re-maintain. Best-effort
-    // (maintainBestEffort): the epoch entry is durable, and a maintenance
-    // failure surfacing here would fail — and re-trigger — a committed
-    // epoch.
-    maintainPolicy.foreach { p =>
-      KvMaintenance.maintainBestEffort(
-        org.apache.spark.sql.SparkSession.active, path, p)
-    }
-  }
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val staging = new Path(stagingDir)
-    val fs = staging.getFileSystem(conf.value)
-    fs.delete(staging, true)
-  }
+  // Sink-side salting applies to streaming epochs too:
+  // `writeStream.toTable` into a `salt_buckets` catalog table carries
+  // LOGICAL keys and each epoch demuxes into per-bucket files. A pipeline
+  // that PRE-salts its rows (the path-API contract) declares
+  // `saltedInput=<n>`, exactly like batch.
+  override def toStreaming: StreamingWrite =
+    new KvStreamingWrite(path, schema, queryId, conf, maintainPolicy, codec,
+      allowTombstones, saltCheck, saltOnWrite)
 }
 
-private[sources] case class KvEpochCommit(file: String, partition: Int,
-    stat: Option[KvLog.FileStat] = None)
-    extends WriterCommitMessage
-
-private[sources] case class KvStreamWriterFactory(
-    stagingDir: String, fieldNames: Seq[String],
-    conf: Broadcast[SerializableConfiguration],
-    codec: CompressionCodecName = CompressionCodecName.SNAPPY,
-    allowTombstones: Boolean = false,
-    saltCheck: Option[Int] = None)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-
-  /** Attempts stage under task-unique names; the deterministic FINAL name is
-    * assigned at commit, so speculative/retried attempts can never collide.
-    */
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new KvDataWriter(stagingDir, fieldNames, partitionId, taskId, conf.value,
-      commitAs = (f, st) => KvEpochCommit(f, partitionId, st), codec = codec,
-      allowTombstones = allowTombstones, saltCheck = saltCheck)
-}
-
-private[sources] case class KvFileCommit(file: String, partition: Int,
-    stat: Option[KvLog.FileStat] = None)
-    extends WriterCommitMessage
-
-/** Adapts the batch demux factory ([[KvProjectingWriterFactory]]) to the
-  * streaming createWriter shape for sink-salted epochs — the inner
-  * writers are epoch-agnostic (staged names are task-unique; the
-  * epoch-scoped deterministic name is assigned at commit).
+/** The seal-and-publish step every graft-kv commit shares: batch appends
+  * and overwrites ([[KvBatchWrite]]), streaming epochs
+  * ([[KvStreamingWrite]]) and row-level replacements
+  * ([[KvReplaceDataBatchWrite]]).
+  *
+  * Writer tasks stage under task-unique names in this write's
+  * `_tmp_<uuid>` dir and ack with what they staged ([[KvWriteCommit]]).
+  * The driver-side commit then
+  *  1. SEALS each acknowledged file ([[seal]]): one rename into the table
+  *     under the protocol's final name — metadata-only on HDFS-like
+  *     stores. A failed rename (target exists or source missing) aborts
+  *     the commit before anything is published;
+  *  2. PUBLISHES by appending one [[KvLog]] entry listing the sealed names
+  *     and their in-stream stats — the atomic point every reader consumes,
+  *     so readers only ever see files named by a completed commit, and a
+  *     concurrent or speculative attempt can never tear the table. The
+  *     log dir exists before the first data rename, so a racing first
+  *     committer never mistakes sealed files for a log-less migration
+  *     ([[KvLog.ensureLogDir]]);
+  *  3. clears the staging dir, and only then runs the table's opt-in
+  *     maintenance pass ([[finish]]). That pass is best-effort
+  *     ([[KvMaintenance.maintainBestEffort]]): the entry is already
+  *     durable, so a housekeeping failure must not fail — and get retried
+  *     as — a committed write, and a crash mid-pass never tears it.
+  * An aborted write drops its staging dir ([[clear]]); nothing was
+  * published. Sealed names carry this write's token (the staging uuid),
+  * or for streaming a deterministic (query, epoch, slot) name, so they
+  * never collide across concurrent committers: losing the log-append race
+  * costs a retry of the one-entry append, never a rename of data.
   */
-private[sources] case class KvStreamSaltedWriterFactory(
-    inner: KvProjectingWriterFactory)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] = inner.createWriter(partitionId, taskId)
-}
+private[sources] final class KvStagedCommit(path: String,
+    conf: SerializableConfiguration) {
 
-private[sources] object KvCommitMessages {
-  /** Normalize writer acks to sealed (staged file, writer slot, stat)
-    * triples. Single-file and multi-file (salted demux) messages are
-    * accepted by BOTH the batch append commit and the row-level
-    * replacement commit through this one helper, so the two commit
-    * protocols cannot silently drift on message handling.
-    */
-  def sealedParts(messages: Seq[WriterCommitMessage])
-      : Seq[(String, Int, Option[KvLog.FileStat])] =
-    messages.flatMap {
-      case KvFileCommit(f, partition, st) if f.nonEmpty =>
-        Seq((f, partition, st))
-      case KvEpochCommit(f, partition, st) if f.nonEmpty =>
-        Seq((f, partition, st))
-      case KvMultiFileCommit(parts) => parts.filter(_._1.nonEmpty)
+  val stagingDir: String = s"$path/_tmp_${UUID.randomUUID().toString.take(8)}"
+
+  /** This write's writer-unique name token: the staging dir's uuid. */
+  val token: String = stagingDir.substring(stagingDir.lastIndexOf('_') + 1)
+
+  def writerFactory(schema: StructType, codec: CompressionCodecName,
+      allowTombstones: Boolean, saltCheck: Option[Int],
+      saltOnWrite: Option[Int]): KvWriterFactory =
+    KvWriterFactory(stagingDir, KvScanBuilder.broadcastConf(conf),
+      KvWriterFactory.cellOrdinals(schema), schema.length, codec,
+      allowTombstones, saltCheck, saltOnWrite)
+
+  /** The files the tasks staged, as (staged file, slot label, stat). */
+  def staged(messages: Array[WriterCommitMessage])
+      : Seq[(String, String, Option[KvLog.FileStat])] =
+    messages.toSeq.flatMap {
+      case KvWriteCommit(parts) => parts.map(p => (p.file, f"${p.slot}%05d", p.stat))
       case _ => Nil
     }
+
+  /** Step 1: renames each staged file to `name(label)` in `dir`; `what`
+    * names the commit in the failure.
+    */
+  def seal(fs: FileSystem, dir: Path,
+      parts: Seq[(String, String, Option[KvLog.FileStat])], what: String)(
+      name: String => String): KvStagedCommit.Sealed = {
+    val out = parts.map { case (staged, label, st) =>
+      val target = new Path(dir, name(label))
+      require(fs.rename(new Path(staged), target),
+        s"graft-kv: sealing rename $staged -> $target failed (target " +
+          s"exists or source missing) — aborting the $what")
+      target.getName -> st
+    }
+    KvStagedCommit.Sealed(out.map(_._1),
+      out.collect { case (n, Some(st)) => n -> st }.toMap)
+  }
+
+  def clear(): Unit = {
+    val staging = new Path(stagingDir)
+    staging.getFileSystem(conf.value).delete(staging, true): Unit
+  }
+
+  /** Step 3, once the entry is durable. */
+  def finish(maintainPolicy: Option[KvMaintenance.Policy]): Unit = {
+    clear()
+    maintainPolicy.foreach(p => KvMaintenance.maintainBestEffort(
+      org.apache.spark.sql.SparkSession.active, path, p))
+  }
 }
 
+private[sources] object KvStagedCommit {
+  /** What a commit publishes: the sealed names and their stats. */
+  final case class Sealed(adds: Seq[String], stats: Map[String, KvLog.FileStat])
+}
+
+/** A batch append or truncating overwrite, sealed as
+  * `part-b<seq>-<slot>-<token>.parquet`: the seq is the current log seq,
+  * a human-orderable label (no reader depends on name order), the token
+  * makes the name writer-unique.
+  */
 private[sources] class KvBatchWrite(path: String, schema: StructType,
     truncate: Boolean, conf: SerializableConfiguration,
     codec: CompressionCodecName = CompressionCodecName.SNAPPY,
@@ -493,25 +324,10 @@ private[sources] class KvBatchWrite(path: String, schema: StructType,
     maintainPolicy: Option[KvMaintenance.Policy] = None)
     extends BatchWrite {
 
-  private val stagingDir = s"$path/_tmp_${UUID.randomUUID().toString.take(8)}"
+  private val commitStep = new KvStagedCommit(path, conf)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    saltOnWrite match {
-      case Some(n) =>
-        // Sink-side salting (KvWriteBuilder doc): logical-key rows, range-
-        // partitioned and (rowKey, qualifier)-sorted by the ordinary
-        // distribution contract, demux into one stored-sorted file per
-        // (partition, bucket) — the replacement write's factory, with the
-        // identity projection (no rewrite-plan extras on this path).
-        KvProjectingWriterFactory(stagingDir, KvScanBuilder.broadcastConf(conf),
-          cellIdx = graft.kv.Cell.schema.fieldNames
-            .map(n => schema.fieldNames.indexOf(n)).toArray,
-          declaredLen = schema.length, codec, saltBuckets = Some(n),
-          allowTombstones = allowTombstones)
-      case None =>
-        KvWriterFactory(stagingDir, schema.fieldNames.toSeq,
-          KvScanBuilder.broadcastConf(conf), codec, allowTombstones, saltCheck)
-    }
+    commitStep.writerFactory(schema, codec, allowTombstones, saltCheck, saltOnWrite)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val dir = new Path(path)
@@ -569,94 +385,298 @@ private[sources] class KvBatchWrite(path: String, schema: StructType,
     // Truncating writes are exempt — the overwrite DEFINES the new layout.
     if (!truncate) KvSalt.requireLayoutUnchanged(fs, dir,
       saltOnWrite.orElse(saltCheck), "this batch write")
-    // Log dir before data renames — see the streaming commit's note.
     KvLog.ensureLogDir(fs, dir)
-    // Sealed names carry the current seq as a human-orderable label plus
-    // this commit's WRITER-UNIQUE token (the staging dir's uuid): names can
-    // never collide across concurrent committers, so losing the log-append
-    // race costs a retry of the one-entry append — never a rename of data.
     val seq = KvLog.latestSeq(fs, dir) + 1
-    val token = stagingDir.substring(stagingDir.lastIndexOf('_') + 1)
-    val sealedOut = KvCommitMessages.sealedParts(messages.toSeq)
-      .map { case (f, partition, st) =>
-        val target = new Path(dir, f"part-b$seq%010d-$partition%05d-$token.parquet")
-        require(fs.rename(new Path(f), target),
-          s"graft-kv: sealing rename $f -> $target failed (target exists " +
-            "or source missing) — aborting the commit")
-        target.getName -> st
-      }
+    val sealedOut = commitStep.seal(fs, dir, commitStep.staged(messages),
+      "commit")(slot => f"part-b$seq%010d-$slot-${commitStep.token}.parquet")
     // OPTIMISTIC CONCURRENCY on the entry append (the Delta commit-loop
     // shape): a concurrent committer winning the seq costs this one a
     // re-append under a fresh allocation — bounded attempts, data files
     // untouched. In-process writers never even conflict (KvLog's
     // per-table append lock); this loop is the cross-process path.
-    KvLog.appendRetrying(fs, dir, adds = sealedOut.map(_._1).toSeq,
-      stats = sealedOut.collect { case (n, Some(st)) => n -> st }.toMap,
+    KvLog.appendRetrying(fs, dir, adds = sealedOut.adds,
+      stats = sealedOut.stats,
       // In-lock twin of the early guard above (closes the rename-window
       // TOCTOU in-process); truncating writes DEFINE the layout instead.
       layoutExpect =
         if (truncate) None else Some(saltOnWrite.orElse(saltCheck))): Unit
-    fs.delete(new Path(stagingDir), true)
-    // Post-commit policy pass (opt-in `maintain=true` — the streaming
-    // epoch commit has run this since r9; batch writes previously parsed
-    // the option and silently dropped it). Runs AFTER the entry is
-    // durable, so a crash mid-maintenance never tears the commit; the
-    // pass is idempotent and parks at metadata cost under the threshold.
-    // Catalog tables declare it once as a TABLE property
+    // Catalog tables declare maintenance once as a TABLE property
     // ([[KvTableProps]]) and every INSERT keeps the table maintained —
     // the HBase stance (compaction is the store's job, not a scheduler's).
-    // Best-effort: the entry above is already durable, so a housekeeping
-    // failure must not fail the INSERT (KvMaintenance.maintainBestEffort).
-    maintainPolicy.foreach { p =>
-      KvMaintenance.maintainBestEffort(
-        org.apache.spark.sql.SparkSession.active, path, p)
+    commitStep.finish(maintainPolicy)
+  }
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    commitStep.clear()
+}
+
+/** The WAL PRODUCER side of the connector — `writeStream.format("graft-kv")`
+  * seals one set of region files per micro-batch epoch (the memstore-flush
+  * analog: each epoch's state flushes as sorted immutable files), one
+  * [[KvLog]] entry per epoch, so a `graft-kv` tail of a `graft-kv`
+  * streaming sink is a working replication pipe whose admission cost is
+  * O(new epochs), not O(table history).
+  *
+  * Exactly-once: final names are DETERMINISTIC per (query, epoch, slot) —
+  * `part-e<epoch>-<query token>-<slot>.parquet`, no task id, no uuid — and
+  * the log entry carries a `queryId:epochId` writer tag. A replayed epoch
+  * is detected before any rename and acks as a no-op; a torn epoch's
+  * targets are cleared before the renames, so re-commits are idempotent
+  * and a torn epoch is invisible.
+  */
+private[sources] class KvStreamingWrite(path: String, schema: StructType,
+    queryId: String, conf: SerializableConfiguration,
+    maintainPolicy: Option[KvMaintenance.Policy] = None,
+    codec: CompressionCodecName = CompressionCodecName.SNAPPY,
+    allowTombstones: Boolean = false,
+    saltCheck: Option[Int] = None,
+    saltOnWrite: Option[Int] = None)
+    extends StreamingWrite {
+
+  private val commitStep = new KvStagedCommit(path, conf)
+
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
+      : StreamingDataWriterFactory =
+    commitStep.writerFactory(schema, codec, allowTombstones, saltCheck, saltOnWrite)
+
+  /** Stable per-QUERY name token: sealed names are deterministic per
+    * (query, epoch, region), so exactly-once recovery (rename-over-same-
+    * names) still holds per query while TWO streaming queries appending to
+    * one table can never collide — without it, both queries' epoch 0 would
+    * target the same names and each one's incomplete-commit hygiene could
+    * delete the other's committed files.
+    */
+  private val queryTok =
+    queryId.filter(_.isLetterOrDigit).take(16).padTo(4, '0')
+
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(conf.value)
+    fs.mkdirs(dir)
+    val writerTag = Some(s"$queryId:$epochId")
+    val prefix = f"part-e$epochId%010d-$queryTok-"
+    // Epoch REPLAY detection comes FIRST: the manifest entry is written
+    // after the renames, so proof that the original commit published means
+    // the replay must be a pure no-op (drop its staging, touch neither
+    // targets nor manifest). Deleting/re-renaming here instead would be
+    // wrong: a recovered attempt can seal a DIFFERENT non-empty region set
+    // (range boundaries are re-sampled), and rewriting targets while
+    // keeping the original entry would leave the manifest pointing at
+    // deleted files. Three layers, O(1) on the fresh-epoch path:
+    //  1. the WRITER HINT (last epoch this query committed, recorded right
+    //     after the entry append) — stays correct however many commits
+    //     from other writers or this commit's own maintenance pass landed
+    //     since (the case where the latest-entry check goes blind, and
+    //     where redoing the epoch would double cells AND hygiene-delete
+    //     pending-removal files still inside readers' vacuum grace);
+    //  2. the latest-entry tag (covers the hint-write crash window in the
+    //     single-writer case);
+    //  3. only when this epoch's query-unique targets are ON DISK (one
+    //     glob; a fresh epoch has none, so it never pays more) — the
+    //     bounded recent-entry tag scan, covering the hint-crash window
+    //     WITH interleaved commits. A replayed epoch whose targets were
+    //     compacted away still matches: deferred deletes keep them on
+    //     disk for a full vacuum grace, far longer than any replay gap.
+    val latest = KvLog.latestSeq(fs, dir)
+    val replayed =
+      KvLog.writerEpoch(fs, dir, queryTok).exists(_ >= epochId) ||
+        (latest >= 0 &&
+          (KvLog.read(fs, dir, latest).exists(_.writer == writerTag) ||
+            (fs.globStatus(new Path(dir, prefix + "*")).nonEmpty &&
+              KvLog.recentWriterTag(fs, dir, s"$queryId:$epochId"))))
+    if (replayed) {
+      commitStep.clear() // a recovery replay re-acks, it does not re-maintain
+      return
+    }
+    // First logged commit into a legacy directory: snapshot pre-existing
+    // segments into the manifest before this commit's entry (KvLog doc).
+    KvLog.seedFromDirIfNeeded(fs, dir)
+    KvLog.ensureLogDir(fs, dir)
+    // A resalt that landed since this query resolved its layout fails the
+    // epoch before any rename (KvSalt.requireLayoutUnchanged): the stream
+    // restarts, re-resolves, and continues in the new layout.
+    KvSalt.requireLayoutUnchanged(fs, dir,
+      saltOnWrite.orElse(saltCheck), s"streaming query $queryId")
+    // Incomplete-commit hygiene: a crash between renames and the log append
+    // leaves this epoch's targets on disk with no manifest entry — clear
+    // every target this epoch could have written before renaming. One
+    // glob over the (query, epoch)-scoped prefix covers both writer
+    // shapes (one slot per partition, or the salted demux's
+    // partition×bucket grid), and can never touch a concurrent query's
+    // files. The replay guard above already proved this epoch never
+    // published, so anything under the prefix is a torn attempt.
+    fs.globStatus(new Path(dir, prefix + "*"))
+      .foreach(st => fs.delete(st.getPath, false): Unit)
+    val sealedOut = commitStep.seal(fs, dir, commitStep.staged(messages),
+      "epoch commit")(slot => s"$prefix$slot.parquet")
+    // Losing a seq race to another writer (a second streaming query, a
+    // batch append, a compaction rebase) costs a retry of the ONE-entry
+    // append — never an epoch abort, and never a repeat of the data
+    // renames (targets are query-unique and already in place).
+    KvLog.appendRetrying(fs, dir, adds = sealedOut.adds,
+      writer = writerTag, stats = sealedOut.stats,
+      layoutExpect = Some(saltOnWrite.orElse(saltCheck))): Unit
+    // The O(1) replay guard for every future attempt of this epoch —
+    // written AFTER the entry so a crash in between falls back to the
+    // bounded tag scan, never to data loss.
+    KvLog.recordWriterEpoch(fs, dir, queryTok, epochId)
+    // Under the threshold the policy pass parks at metadata cost; when it
+    // compacts, the trigger interval absorbs the merge, exactly like an
+    // HBase flush-path compaction.
+    commitStep.finish(maintainPolicy)
+  }
+
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    commitStep.clear()
+}
+
+/** A writer task's ack: the files it staged. An empty partition acks with
+  * no parts; a sink-salted task acks one part per salt bucket it touched.
+  */
+private[sources] case class KvWriteCommit(parts: Seq[KvStagedFile])
+    extends WriterCommitMessage
+
+/** One staged file: its path, the writer slot that names it at seal time,
+  * and the manifest stat its writer collected.
+  */
+private[sources] case class KvStagedFile(file: String, slot: Int,
+    stat: Option[KvLog.FileStat] = None)
+
+/** The one writer factory under every graft-kv write — batch and
+  * streaming, plain and sink-salted, appends and row-level replacements.
+  * An epoch's writer is the batch writer: staged names are task-unique,
+  * and the epoch-scoped final name is assigned at commit.
+  *
+  * `cellIdx` holds each `Cell.schema` column's ordinal in the declared
+  * write schema of `declaredLen` columns; `saltOnWrite` makes the sink
+  * apply the salt ([[KvTaskWriter]]); `saltCheck` admits only
+  * self-consistent stored keys ([[KvSalt.isStored]]).
+  */
+private[sources] case class KvWriterFactory(stagingDir: String,
+    conf: Broadcast[SerializableConfiguration], cellIdx: Array[Int],
+    declaredLen: Int, codec: CompressionCodecName,
+    allowTombstones: Boolean, saltCheck: Option[Int],
+    saltOnWrite: Option[Int])
+    extends DataWriterFactory with StreamingDataWriterFactory {
+
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    new KvTaskWriter(this, partitionId, taskId)
+
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
+      : DataWriter[InternalRow] =
+    createWriter(partitionId, taskId)
+}
+
+private[sources] object KvWriterFactory {
+  /** Each `Cell.schema` column's ordinal in `schema` (-1 when absent). */
+  def cellOrdinals(schema: StructType): Array[Int] =
+    graft.kv.Cell.schema.fieldNames.map(schema.fieldNames.indexOf(_))
+}
+
+/** One writer task: reads the five cell columns by ordinal from each row
+  * and streams it into its region file, created on the first row (empty
+  * partitions stage nothing, like Spark's own file sinks). Nothing is
+  * copied per row; a sink-salted write allocates only the prefixed key.
+  */
+private[sources] class KvTaskWriter(f: KvWriterFactory, partitionId: Int,
+    taskId: Long)
+    extends DataWriter[InternalRow] {
+
+  // SALTED writes: each range partition DEMUXES into one file per salt
+  // bucket. The partition's rows arrive sorted by LOGICAL (rowKey,
+  // qualifier) — the sink's required ordering — so a bucket's rows,
+  // sharing a constant stored prefix, are sorted by STORED key: every
+  // sealed file keeps the sink's file-sort contract and the
+  // bucket×partition grid is pairwise disjoint in stored space. Writer
+  // slots fold (partition, bucket) into one number so staged and sealed
+  // names can never collide.
+  private val n = f.saltOnWrite.getOrElse(0)
+  private val prefixes: Array[UTF8String] =
+    (0 until n).map(s => UTF8String.fromString(f"$s%03d|")).toArray
+  private val files = new Array[KvFileWriter](math.max(n, 1))
+
+  private def fileFor(bucket: Int): KvFileWriter = {
+    if (files(bucket) == null) {
+      val slot = if (n == 0) partitionId else partitionId * n + bucket
+      files(bucket) = new KvFileWriter(f.stagingDir, slot, taskId,
+        f.conf.value, f.cellIdx, f.codec, f.allowTombstones, f.saltCheck)
+    }
+    files(bucket)
+  }
+
+  // Leading-extras offset, resolved on the first row: Spark's rewrite
+  // plans PREPEND `__row_operation` to the data columns without
+  // declaring it in the write schema.
+  private var offset = -1
+  // DOUBLE-SALT guard (sink-salted writes only): rows here must carry
+  // LOGICAL keys — a pipeline built against the pre-salted contract that
+  // routes already-stored keys through the sink would get a second
+  // prefix the reads would never strip, silently, because the re-salted
+  // key is self-consistent. Tracked until the FIRST key that is not in
+  // stored form (one 4-byte shape check per row from then on); a
+  // non-empty task whose EVERY key already parses as a stored salted key
+  // is refused at commit, before any file seals. A table whose logical
+  // keys ALL coincidentally match `"%03d|" + suffix` with the matching
+  // hash is the (vanishing) false positive; such a pipeline pre-salts
+  // explicitly and declares `saltedInput` instead.
+  private var rowsIn = 0L
+  private var allStored = true
+
+  override def write(row: InternalRow): Unit = {
+    if (offset < 0) {
+      offset = row.numFields - f.declaredLen
+      require(offset == 0 || offset == 1,
+        s"graft-kv: row-level replacement rows carry ${row.numFields} " +
+          s"fields for a ${f.declaredLen}-column schema — unrecognized " +
+          "rewrite-plan layout")
+    }
+    val k = f.cellIdx(0) + offset
+    val key = if (row.isNullAt(k)) null else row.getUTF8String(k)
+    if (n == 0 || key == null) fileFor(0).write(row, offset, key)
+    else {
+      rowsIn += 1
+      if (allStored) allStored = KvSalt.isStored(key, n)
+      val bucket = KvSalt.saltOfUtf8(key, n)
+      fileFor(bucket).write(row, offset, UTF8String.concat(prefixes(bucket), key))
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val staging = new Path(stagingDir)
-    val fs = staging.getFileSystem(conf.value)
-    fs.delete(staging, true)
+  override def commit(): WriterCommitMessage = {
+    require(n == 0 || rowsIn == 0 || !allStored,
+      s"graft-kv: every rowKey this task wrote ($rowsIn rows) already " +
+        s"parses as a STORED salted key for $n buckets, but the sink " +
+        "was asked to salt (saltWrite) — these rows look PRE-salted, " +
+        "and salting them again would corrupt the key layout " +
+        "irreversibly. A pre-salted pipeline declares " +
+        "saltedInput=<n> (the path-API contract) instead of routing " +
+        "through the sink-salting surface.")
+    KvWriteCommit(files.toSeq.flatMap(w => if (w == null) None else w.finish()))
   }
+
+  override def abort(): Unit = close()
+
+  override def close(): Unit = files.foreach(w => if (w != null) w.close())
 }
 
-private[sources] case class KvWriterFactory(stagingDir: String,
-    fieldNames: Seq[String], conf: Broadcast[SerializableConfiguration],
-    codec: CompressionCodecName = CompressionCodecName.SNAPPY,
-    allowTombstones: Boolean = false,
-    saltCheck: Option[Int] = None)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new KvDataWriter(stagingDir, fieldNames, partitionId, taskId, conf.value,
-      commitAs = (f, st) => KvFileCommit(f, partitionId, st), codec = codec,
-      allowTombstones = allowTombstones, saltCheck = saltCheck)
-}
-
-/** One region file per partition, created lazily on the first row (empty
-  * regions produce no file, matching Spark's own file sinks).
-  *
-  * The writer also collects the file's MANIFEST STATISTICS in-stream
-  * (rows, rowKey min/max, ts min/max — [[KvLog.FileStat]]): it is the one
+/** One staged region file. It also collects the file's MANIFEST
+  * STATISTICS in-stream (rows, rowKey min/max, ts min/max, bloom,
+  * tombstones, families, qualifiers — [[KvLog.FileStat]]): it is the one
   * place every row passes anyway, so the values are exact and the commit
   * carries them to the log for free — no planning-side footer opens, ever,
   * for sink-written segments.
   */
-private[sources] class KvDataWriter(
-    stagingDir: String, fieldNames: Seq[String], partitionId: Int, taskId: Long,
-    conf: SerializableConfiguration,
-    commitAs: (String, Option[KvLog.FileStat]) => WriterCommitMessage,
-    codec: CompressionCodecName = CompressionCodecName.SNAPPY,
-    allowTombstones: Boolean = false,
-    saltCheck: Option[Int] = None)
-    extends DataWriter[InternalRow] {
+private[sources] class KvFileWriter(stagingDir: String, slot: Int,
+    taskId: Long, conf: SerializableConfiguration, cellIdx: Array[Int],
+    codec: CompressionCodecName, allowTombstones: Boolean,
+    saltCheck: Option[Int]) {
 
-  private val file = f"$stagingDir/part-r-$partitionId%05d-$taskId.parquet"
-  private var writer: ParquetWriter[InternalRow] = _
+  private val file = f"$stagingDir/part-r-$slot%05d-$taskId.parquet"
+  private var writer: ParquetWriter[CellRef] = _
+  private val cell = new CellRef
 
-  private val keyIdx = fieldNames.indexOf("rowKey")
-  private val tsIdx = fieldNames.indexOf("ts")
-  private val qualIdx = fieldNames.indexOf("qualifier")
-  private val famIdx = fieldNames.indexOf("family")
+  private val famIdx = cellIdx(1)
+  private val qualIdx = cellIdx(2)
+  private val tsIdx = cellIdx(4)
   // Distinct family/qualifier sets for file-level pruning
   // ([[KvLog.FileStat.families]]): bounded in-stream collection; past the
   // cap the stat degrades to unknown (null) — wide-domain tables carry no
@@ -667,8 +687,8 @@ private[sources] class KvDataWriter(
   // toString + TreeSet work.
   private var famSet = new java.util.TreeSet[String]()
   private var qualSet = new java.util.TreeSet[String]()
-  private var lastFam: org.apache.spark.unsafe.types.UTF8String = null
-  private var lastQual: org.apache.spark.unsafe.types.UTF8String = null
+  private var lastFam: UTF8String = null
+  private var lastQual: UTF8String = null
   private var tombstones = 0L
   private var rows = 0L
   // key bounds tracked as UTF8String: compareTo is unsigned UTF-8 BYTE
@@ -676,8 +696,8 @@ private[sources] class KvDataWriter(
   // and every manifest-stat consumer (prune, min/max pushdown, mask
   // slicing) use. JVM String order (UTF-16 code units) diverges for
   // supplementary-plane keys and would write non-superset bounds.
-  private var minKey: org.apache.spark.unsafe.types.UTF8String = null
-  private var maxKey: org.apache.spark.unsafe.types.UTF8String = null
+  private var minKey: UTF8String = null
+  private var maxKey: UTF8String = null
   private var minTs = Long.MaxValue
   private var maxTs = Long.MinValue
   private var sawTs = false
@@ -686,18 +706,23 @@ private[sources] class KvDataWriter(
   // Self-disables for keyful (post-compaction-sized) files — see KvBloom.
   private val bloom = new KvBloom.Builder
 
-  override def write(row: InternalRow): Unit = {
+  /** Writes `row`'s cell, every ordinal shifted by `offset`, with `key`
+    * (the row's own rowKey or its salted form; null for a null key) as
+    * the stored rowKey.
+    */
+  def write(row: InternalRow, offset: Int, key: UTF8String): Unit = {
     if (writer == null)
-      writer = new KvParquetWriterBuilder(new Path(file), fieldNames)
+      writer = new KvParquetWriterBuilder(new Path(file), cellIdx)
         .withConf(conf.value)
         .withCompressionCodec(codec)
         .build()
+    val q = qualIdx + offset
     // Reserved-qualifier admission + tombstone stat (KvDelete doc): a
     // one-byte probe per row, on the write path that already touches
     // every field for the other stats.
-    val isMarkerRow = qualIdx >= 0 && !row.isNullAt(qualIdx) && {
-      val q = row.getUTF8String(qualIdx)
-      q.numBytes() > 0 && q.getByte(0) == 0
+    val isMarkerRow = !row.isNullAt(q) && {
+      val u = row.getUTF8String(q)
+      u.numBytes() > 0 && u.getByte(0) == 0
     }
     if (isMarkerRow) {
       if (!allowTombstones) throw new IllegalArgumentException(
@@ -707,42 +732,45 @@ private[sources] class KvDataWriter(
           "writes (replication pipes, compaction rewrites)")
       tombstones += 1
     }
-    if (famSet != null && famIdx >= 0 && !row.isNullAt(famIdx)) {
-      val u = row.getUTF8String(famIdx)
+    val fam = famIdx + offset
+    if (famSet != null && !row.isNullAt(fam)) {
+      val u = row.getUTF8String(fam)
       if (lastFam == null || !u.equals(lastFam)) {
         lastFam = u.clone() // the row buffer is reused — copy before keeping
         famSet.add(lastFam.toString): Unit
         if (famSet.size > KvLog.MaxDistinctFamilies) famSet = null
       }
     }
-    if (qualSet != null && qualIdx >= 0 && !row.isNullAt(qualIdx)) {
-      val u = row.getUTF8String(qualIdx)
+    if (qualSet != null && !row.isNullAt(q)) {
+      val u = row.getUTF8String(q)
       if (lastQual == null || !u.equals(lastQual)) {
         lastQual = u.clone()
         qualSet.add(lastQual.toString): Unit
         if (qualSet.size > KvLog.MaxDistinctQualifiers) qualSet = null
       }
     }
-    writer.write(row)
+    cell.row = row
+    cell.offset = offset
+    cell.key = key
+    writer.write(cell)
     rows += 1
-    if (keyIdx >= 0 && !row.isNullAt(keyIdx)) {
+    if (key != null) {
       // A registered salted table admits only self-consistent stored keys
       // (KvWriteBuilder doc) — one bytes-hash per row, append paths only.
       saltCheck.foreach { n =>
-        if (!KvSalt.isStored(row.getUTF8String(keyIdx), n))
+        if (!KvSalt.isStored(key, n))
           throw new IllegalArgumentException(
             s"graft-kv: appending to a table registered as salted with $n " +
-              s"buckets, but rowKey '${row.getUTF8String(keyIdx)}' is not " +
+              s"buckets, but rowKey '$key' is not " +
               "a stored salted key — catalog writes (SQL INSERT and " +
               "writeStream.toTable) salt in the sink automatically; a " +
               "path-API append pre-salts through KvSalt.salted/saltedWrite " +
               "and declares saltedInput=<n>")
       }
-      val u = row.getUTF8String(keyIdx)
       // .clone() copies out of Spark's reused row buffer — required
-      if (minKey == null || u.compareTo(minKey) < 0) minKey = u.clone()
-      if (maxKey == null || u.compareTo(maxKey) > 0) maxKey = u.clone()
-      bloom.add(u.toString)
+      if (minKey == null || key.compareTo(minKey) < 0) minKey = key.clone()
+      if (maxKey == null || key.compareTo(maxKey) > 0) maxKey = key.clone()
+      bloom.add(key.toString)
     }
     // ts bounds cover PUT rows only: a delete marker's ts is a masking
     // bound, not data — folding it in would poison every consumer of
@@ -750,16 +778,20 @@ private[sources] class KvDataWriter(
     // later at-now SQL deletes to forever-deletes, KvDelete.currentMaxTs
     // doc). Metadata min/max(ts) aggregates never see marker-carrying
     // files anyway (the tombstone gate refuses them).
-    if (tsIdx >= 0 && !row.isNullAt(tsIdx) && !isMarkerRow) {
-      val t = row.getLong(tsIdx)
-      if (t < minTs) minTs = t
-      if (t > maxTs) maxTs = t
+    val t = tsIdx + offset
+    if (!row.isNullAt(t) && !isMarkerRow) {
+      val ts = row.getLong(t)
+      if (ts < minTs) minTs = ts
+      if (ts > maxTs) maxTs = ts
       sawTs = true
     }
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (writer == null) commitAs("", None)
+  /** Closes the file and returns it with its stat; None when no row
+    * arrived (nothing was staged).
+    */
+  def finish(): Option[KvStagedFile] =
+    if (writer == null) None
     else {
       writer.close()
       val bytes = new Path(file).getFileSystem(conf.value)
@@ -771,43 +803,49 @@ private[sources] class KvDataWriter(
           s.forEach(v => b += v)
           b.result()
         })
-      commitAs(file, Some(KvLog.FileStat(rows, bytes,
+      Some(KvStagedFile(file, slot, Some(KvLog.FileStat(rows, bytes,
         Option(minKey).map(_.toString), Option(maxKey).map(_.toString),
         if (sawTs) Some(minTs) else None, if (sawTs) Some(maxTs) else None,
         bloom.buildToken(), tombstones,
-        families = setOf(famSet), qualifiers = setOf(qualSet))))
+        families = setOf(famSet), qualifiers = setOf(qualSet)))))
     }
-  }
 
-  override def abort(): Unit = close()
-
-  override def close(): Unit = if (writer != null) writer.close()
+  def close(): Unit = if (writer != null) writer.close()
 }
 
-private[sources] class KvParquetWriterBuilder(p: Path, fieldNames: Seq[String])
-    extends ParquetWriter.Builder[InternalRow, KvParquetWriterBuilder](p) {
-  override def self(): KvParquetWriterBuilder = this
-  override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
-    new CellWriteSupport(fieldNames)
-}
-
-/** parquet-mr WriteSupport emitting cell rows in the INPUT's column order —
-  * physical types match what Spark's parquet writer produces for the cell
-  * schema (optional binary/UTF8 strings, optional binary value, optional
-  * int64 ts), so connector-written and Spark-written region files are
-  * interchangeable to every reader.
+/** The row a [[KvFileWriter]] hands to parquet: the incoming row, its
+  * ordinal offset and the rowKey to store. One per file writer, reused
+  * for every row.
   */
-private[sources] class CellWriteSupport(fieldNames: Seq[String])
-    extends WriteSupport[InternalRow] {
+private[sources] final class CellRef {
+  var row: InternalRow = _
+  var offset: Int = 0
+  var key: UTF8String = _
+}
 
-  private val types = {
-    val bySchema = graft.kv.Cell.schema.fields.map(f => f.name -> f.dataType).toMap
-    fieldNames.map(bySchema).toArray
-  }
+private[sources] class KvParquetWriterBuilder(p: Path, cellIdx: Array[Int])
+    extends ParquetWriter.Builder[CellRef, KvParquetWriterBuilder](p) {
+  override def self(): KvParquetWriterBuilder = this
+  override def getWriteSupport(conf: Configuration): WriteSupport[CellRef] =
+    new CellWriteSupport(cellIdx)
+}
+
+/** parquet-mr WriteSupport emitting cells in `Cell.schema` column order,
+  * each column read by ordinal from the incoming row and the rowKey from
+  * the [[CellRef]]. Physical types match what Spark's parquet writer
+  * produces for the cell schema (optional binary/UTF8 strings, optional
+  * binary value, optional int64 ts), so connector-written and
+  * Spark-written region files are interchangeable to every reader.
+  */
+private[sources] class CellWriteSupport(cellIdx: Array[Int])
+    extends WriteSupport[CellRef] {
+
+  private val names = graft.kv.Cell.schema.fieldNames
+  private val types = graft.kv.Cell.schema.fields.map(_.dataType)
 
   private val messageType: MessageType = {
     val b = Types.buildMessage()
-    fieldNames.zip(types).foreach {
+    names.zip(types).foreach {
       case (n, StringType) =>
         b.addField(Types.optional(PrimitiveTypeName.BINARY)
           .as(LogicalTypeAnnotation.stringType()).named(n))
@@ -828,22 +866,26 @@ private[sources] class CellWriteSupport(fieldNames: Seq[String])
 
   override def prepareForWrite(rc: RecordConsumer): Unit = consumer = rc
 
-  override def write(row: InternalRow): Unit = {
+  override def write(c: CellRef): Unit = {
+    val row = c.row
     consumer.startMessage()
     var i = 0
     while (i < types.length) {
-      if (!row.isNullAt(i)) {
-        consumer.startField(fieldNames(i), i)
+      val ord = cellIdx(i) + c.offset
+      val isKey = i == 0
+      if (if (isKey) c.key != null else !row.isNullAt(ord)) {
+        consumer.startField(names(i), i)
         types(i) match {
           case StringType =>
-            consumer.addBinary(Binary.fromReusedByteArray(row.getUTF8String(i).getBytes))
+            val u = if (isKey) c.key else row.getUTF8String(ord)
+            consumer.addBinary(Binary.fromReusedByteArray(u.getBytes))
           case BinaryType =>
-            consumer.addBinary(Binary.fromReusedByteArray(row.getBinary(i)))
+            consumer.addBinary(Binary.fromReusedByteArray(row.getBinary(ord)))
           case LongType =>
-            consumer.addLong(row.getLong(i))
+            consumer.addLong(row.getLong(ord))
           case _ => ()
         }
-        consumer.endField(fieldNames(i), i)
+        consumer.endField(names(i), i)
       }
       i += 1
     }

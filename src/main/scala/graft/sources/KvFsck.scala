@@ -179,7 +179,7 @@ object KvFsck {
 
   /** Full writer-grade [[KvLog.FileStat]] for a file the sink did NOT
     * stat (an adopted orphan): one sequential scan collecting exactly what
-    * [[KvDataWriter]] collects in-stream — row count, rowKey bounds +
+    * [[KvFileWriter]] collects in-stream — row count, rowKey bounds +
     * bloom, ts bounds over PUT rows only, and the tombstone count that
     * keeps the read path's masking gate sound for adopted files.
     */

@@ -134,6 +134,58 @@ object KvMaintenance extends org.apache.spark.internal.Logging {
       "graft-kv maintenance: splitFactor must be >= 1.0")
   }
 
+  object Policy {
+    /** Table-property spelling → write-option spelling of each knob. */
+    val OptionSpelling: Map[String, String] = Map(
+      "maintain" -> "maintain",
+      "maintain_max_segments" -> "maintainMaxSegments",
+      "maintain_target_region_bytes" -> "maintainTargetRegionBytes",
+      "maintain_grace_ms" -> "maintainGraceMs",
+      "ttl_ms" -> "maintainTtlMs",
+      "versions" -> "maintainVersions")
+
+    /** The one `maintain*` parser, for write options and recorded table
+      * properties alike. `lookup` reads a knob by its table-property
+      * spelling from whatever the caller holds; `spelled` names the knob
+      * as the caller spells it, for the error. Every knob present is
+      * parsed, maintenance on or off, so a typo fails the statement that
+      * carries it. Absent knobs take this class's defaults. None when
+      * `maintain` is not true.
+      */
+    def parse(lookup: String => Option[String],
+        spelled: String => String): Option[Policy] = {
+      def knob[T](property: String, expect: String)(read: String => T): Option[T] =
+        lookup(property).map { v =>
+          try read(v) catch {
+            case scala.util.control.NonFatal(_) =>
+              throw new IllegalArgumentException(
+                s"${spelled(property)} must be $expect, got '$v'")
+          }
+        }
+      def int(min: Int)(v: String): Int = { val n = v.toInt; require(n >= min); n }
+      def long(min: Long)(v: String): Long = { val n = v.toLong; require(n >= min); n }
+      val on = knob("maintain", "true|false")(_.toLowerCase match {
+        case "true" => true
+        case "false" => false
+      })
+      val maxSegments = knob("maintain_max_segments", "an integer >= 1")(int(1))
+      val target = knob("maintain_target_region_bytes", "a byte count >= 1")(long(1))
+      val grace = knob("maintain_grace_ms", "a duration in ms >= 0")(long(0))
+      // Declarative retention (HBase TTL / VERSIONS): enforced by the
+      // pass's compaction rewrite ([[KvCompactor.CellPolicy]]).
+      val ttl = knob("ttl_ms", "a duration in ms >= 1")(long(1))
+      val versions = knob("versions", "an integer >= 1")(int(1))
+      if (!on.contains(true)) None
+      else {
+        val d = Policy()
+        Some(d.copy(maxSegments = maxSegments.getOrElse(d.maxSegments),
+          targetRegionBytes = target.getOrElse(d.targetRegionBytes),
+          vacuumGraceMs = grace.getOrElse(d.vacuumGraceMs),
+          ttlMs = ttl, maxVersions = versions))
+      }
+    }
+  }
+
   case class Report(compaction: KvCompactor.Result, vacuum: KvVacuum.Result,
       logEntriesTruncated: Int = 0,
       split: KvCompactor.Result = KvCompactor.Parked("not attempted"))

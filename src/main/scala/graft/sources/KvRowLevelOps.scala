@@ -1,9 +1,7 @@
 package graft.sources
 
-import java.util.UUID
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.broadcast.Broadcast
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, WriteBuilder, WriterCommitMessage}
@@ -25,13 +23,11 @@ import org.apache.spark.util.SerializableConfiguration
   *     reports all filters as residual and the readers run filter-free.
   *  2. Catalyst computes the replacement rows (`ReplaceData`: matched
   *     rows modified, the group's other rows copied).
-  *  3. The write re-enters the ordinary sink contract —
-  *     `RequiresDistributionAndOrdering` range-sorts the replacement rows
-  *     into region files, so a rewrite PRESERVES the bulk-load layout —
-  *     and its commit publishes ONE manifest entry: adds = the new files,
-  *     removes = exactly the files the scan planned. Readers flip
-  *     atomically; vacuum reclaims the replaced files after grace, like
-  *     any compaction.
+  *  3. The write re-enters the ordinary sink ([[KvRangeSortedWrite]],
+  *     [[KvStagedCommit]]), so a rewrite PRESERVES the bulk-load layout,
+  *     and its ONE manifest entry adds the new files and removes exactly
+  *     the files the scan planned. Readers flip atomically; vacuum
+  *     reclaims the replaced files after grace, like any compaction.
   *
   * Concurrency: each publish attempt verifies every scanned group is
   * STILL LIVE — an interleaved compaction/restore that merged one away
@@ -60,14 +56,10 @@ import org.apache.spark.util.SerializableConfiguration
   *    unmask, because markers are purged only by the major compaction
   *    that drops their masked puts in the same rewrite.
   *
-  * SALTED tables compose too (r13 — the last salted/unsalted feature
-  * asymmetry): the operation's scan strips the salt and rewrites pruning
-  * predicates to stored space (conditions see LOGICAL keys), and the
-  * replacement write re-applies the salt per row by DEMUXING each range
-  * partition into per-bucket writers — Spark range-sorts the logical
-  * keys, a bucket's rows inherit that order under a constant prefix, so
-  * every sealed file is stored-key-sorted and the bucket×partition grid
-  * is pairwise disjoint in stored space. A full rewrite therefore
+  * SALTED tables compose too: the operation's scan strips the salt and
+  * rewrites pruning predicates to stored space (conditions see LOGICAL
+  * keys), and the replacement write re-applies the salt per row through
+  * the sink-salted writer ([[KvTaskWriter]]). A full rewrite therefore
   * re-certifies [[KvTableInfo.keyContiguousRegions]]; a single-group
   * rewrite stays inside its group's stored bounds and preserves the
   * certification; only a multi-group partial rewrite can interleave
@@ -235,27 +227,13 @@ private[sources] class KvReplaceDataWrite(path: String,
     scannedFiles: java.util.concurrent.atomic.AtomicReference[Seq[String]],
     props: Map[String, String] = Map.empty,
     saltBuckets: Option[Int] = None)
-    extends org.apache.spark.sql.connector.write.Write
-    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-
-  import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-  import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
+    extends KvRangeSortedWrite {
 
   // Statement options win; the table's RECORDED properties (regions laid
   // out at CREATE, codec) are the defaults a rewrite must preserve.
-  private val regions =
+  protected val regions: Int =
     Option(info.options.get("regions")).orElse(props.get("regions"))
       .map(_.toInt).getOrElse(8)
-
-  override def requiredDistribution(): Distribution =
-    Distributions.ordered(Array(
-      Expressions.sort(Expressions.column("rowKey"), SortDirection.ASCENDING)))
-
-  override def requiredOrdering(): Array[SortOrder] = Array(
-    Expressions.sort(Expressions.column("rowKey"), SortDirection.ASCENDING),
-    Expressions.sort(Expressions.column("qualifier"), SortDirection.ASCENDING))
-
-  override def requiredNumPartitions(): Int = regions
 
   override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
     new KvReplaceDataBatchWrite(path, info.schema(), conf, scannedFiles,
@@ -263,35 +241,37 @@ private[sources] class KvReplaceDataWrite(path: String,
       KvTableProps.maintainPolicyOf(props))
 }
 
+/** The replacement commit, sealed as `part-b<seq>-<slot>-<token>.parquet`
+  * like a batch append, plus the `-m-` marker sidecar. What is its own:
+  * the group-liveness publish loop and the sidecar.
+  */
 private[sources] class KvReplaceDataBatchWrite(path: String,
     writeSchema: org.apache.spark.sql.types.StructType,
     conf: SerializableConfiguration,
     scannedFiles: java.util.concurrent.atomic.AtomicReference[Seq[String]],
-    codec: org.apache.parquet.hadoop.metadata.CompressionCodecName =
-      org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY,
+    codec: CompressionCodecName = CompressionCodecName.SNAPPY,
     saltBuckets: Option[Int] = None,
     maintainPolicy: Option[KvMaintenance.Policy] = None)
     extends org.apache.spark.sql.connector.write.BatchWrite {
 
-  private val stagingDir = s"$path/_tmp_${UUID.randomUUID().toString.take(8)}"
+  private val commitStep = new KvStagedCommit(path, conf)
 
-  /** The ReplaceData query carries OPERATION metadata columns alongside
-    * the table columns (`__row_operation` in Spark 4's rewrite plans) —
-    * writers consume the CELL columns by name and ignore the rest.
-    */
-  private val cellIdx: Array[Int] = graft.kv.Cell.schema.fieldNames.map { n =>
-    val i = writeSchema.fieldNames.indexOf(n)
-    require(i >= 0,
+  // The ReplaceData query carries OPERATION metadata columns alongside
+  // the table columns (`__row_operation` in Spark 4's rewrite plans) —
+  // writers read the CELL columns by ordinal and ignore the rest.
+  graft.kv.Cell.schema.fieldNames.foreach { n =>
+    require(writeSchema.fieldNames.contains(n),
       s"graft-kv: row-level replacement schema ${writeSchema.fieldNames.mkString(",")} " +
         s"lacks cell column $n")
-    i
   }
 
+  // The replacement re-applies the table's salt per row (the sink-salted
+  // writer) and admits only the stored keys that produces.
   override def createBatchWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DataWriterFactory =
-    KvProjectingWriterFactory(stagingDir, KvScanBuilder.broadcastConf(conf),
-      cellIdx, writeSchema.length, codec, saltBuckets)
+    commitStep.writerFactory(writeSchema, codec, allowTombstones = false,
+      saltCheck = saltBuckets, saltOnWrite = saltBuckets)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     KvRowLevelOps.preCommitHook()
@@ -301,32 +281,22 @@ private[sources] class KvReplaceDataBatchWrite(path: String,
       throw new IllegalStateException(
         "graft-kv: row-level replacement committed before its scan " +
           "planned — no group set to retire"))
-    val token = stagingDir.substring(stagingDir.lastIndexOf('_') + 1)
     val seq0 = KvLog.latestSeq(fs, dir) + 1
     // The retired groups' delete markers RE-ENTER the table as one
     // compacted sidecar file sealed into the same entry (class doc):
     // dropping them with the groups would resurrect masked puts in
     // unscanned groups and re-open forever-masked coordinates.
-    val sidecar = markerSidecar(fs, dir, removes)
-    // The sidecar seals under a NON-NUMERIC label ("m"): demux writer
-    // slots are partitionId*buckets+bucket, an unbounded numeric space, so
-    // any reserved NUMBER could collide with a real slot at some
-    // (partitions, buckets) shape (391×256 reaches 99999) and the two
-    // renames would silently collapse into one target. A label outside
-    // the numeric namespace cannot; the rename check below is the
-    // backstop for every other unexpected clash.
-    def seal(staged: String, label: String,
-        st: Option[KvLog.FileStat]): (String, Option[KvLog.FileStat]) = {
-      val target = new Path(dir, f"part-b$seq0%010d-$label-$token.parquet")
-      require(fs.rename(new Path(staged), target),
-        s"graft-kv: sealing rename $staged -> $target failed (target " +
-          "exists or source missing) — aborting the replacement commit")
-      target.getName -> st
-    }
-    val sealedOut =
-      KvCommitMessages.sealedParts(messages.toSeq).map { case (f, slot, st) =>
-        seal(f, f"$slot%05d", st)
-      } ++ sidecar.map { case (f, st) => seal(f, "m", st) }
+    // The sidecar seals under a NON-NUMERIC label ("m"): writer slots are
+    // partitionId*buckets+bucket, an unbounded numeric space, so any
+    // reserved NUMBER could collide with a real slot at some (partitions,
+    // buckets) shape (391×256 reaches 99999) and the two renames would
+    // silently collapse into one target. A label outside the numeric
+    // namespace cannot; the seal's rename check is the backstop for every
+    // other unexpected clash.
+    val sidecar = markerSidecar(fs, dir, removes).map { case (f, st) => (f, "m", st) }
+    val sealedOut = commitStep.seal(fs, dir,
+      commitStep.staged(messages) ++ sidecar, "replacement commit")(label =>
+      f"part-b$seq0%010d-$label-${commitStep.token}.parquet")
     // Optimistic publish with a GROUP LIVENESS check per attempt, made
     // ATOMIC with the append via expectSeq (the compactor's shape): an
     // interleaved pure append composes (retry re-checks and republishes),
@@ -336,8 +306,8 @@ private[sources] class KvReplaceDataBatchWrite(path: String,
     // Without expectSeq, a commit landing between the liveness read and
     // the append would slip through and duplicate every rewritten row.
     def discard(): Unit = {
-      sealedOut.foreach { case (n, _) => fs.delete(new Path(dir, n), false): Unit }
-      fs.delete(new Path(stagingDir), true): Unit
+      sealedOut.adds.foreach(n => fs.delete(new Path(dir, n), false): Unit)
+      commitStep.clear()
     }
     var attempts = 0
     var committed = false
@@ -354,9 +324,9 @@ private[sources] class KvReplaceDataBatchWrite(path: String,
             "the replacement is stale; retry the statement")
       }
       try {
-        KvLog.append(fs, dir, adds = sealedOut.map(_._1).toSeq,
+        KvLog.append(fs, dir, adds = sealedOut.adds,
           removes = removes, expectSeq = Some(expect),
-          stats = sealedOut.collect { case (n, Some(st)) => n -> st }.toMap,
+          stats = sealedOut.stats,
           // The replacement rows were salted under the layout resolved at
           // operation creation; an insert-only MERGE (removes empty)
           // passes the group-liveness check trivially, so this in-lock
@@ -370,15 +340,11 @@ private[sources] class KvReplaceDataBatchWrite(path: String,
           if (attempts >= 20) { discard(); throw e }
       }
     }
-    fs.delete(new Path(stagingDir), true): Unit
     // Maintain-declared tables housekeep after rewrites too: a COW-heavy
     // UPDATE/MERGE workload retires whole groups per statement, and
     // without a pass here those files wait for an unrelated INSERT to be
-    // vacuumed. Best-effort — the replacement entry is already durable.
-    maintainPolicy.foreach { p =>
-      KvMaintenance.maintainBestEffort(
-        org.apache.spark.sql.SparkSession.active, path, p)
-    }
+    // vacuumed.
+    commitStep.finish(maintainPolicy)
   }
 
   /** Read every delete marker physically residing in the retired
@@ -426,158 +392,22 @@ private[sources] class KvReplaceDataBatchWrite(path: String,
     }).sortBy { case (rk, fam, q, ts, _) =>
       (rk, q, fam, ts)
     }
-    // partitionId -1 stages as "part-r--0001-…": the sign keeps the name
-    // outside the non-negative demux slot namespace, so a salted rewrite
-    // task staging slot 99998 can never collide with the sidecar.
-    val writer = new KvDataWriter(stagingDir,
-      graft.kv.Cell.schema.fieldNames.toSeq,
-      partitionId = -1, taskId = 0L, conf,
-      commitAs = (f, st) => KvFileCommit(f, 0, st),
-      codec = codec, allowTombstones = true)
+    // slot -1 stages as "part-r--0001-…": the sign keeps the name outside
+    // the non-negative writer slot namespace, so a salted rewrite task
+    // staging slot 99998 can never collide with the sidecar.
+    val writer = new KvFileWriter(commitStep.stagingDir, slot = -1,
+      taskId = 0L, conf, KvWriterFactory.cellOrdinals(graft.kv.Cell.schema),
+      codec, allowTombstones = true, saltCheck = None)
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.unsafe.types.UTF8String
     sorted.foreach { case (rk, fam, q, ts, v) =>
-      writer.write(new GenericInternalRow(Array[Any](
-        UTF8String.fromString(rk), UTF8String.fromString(fam),
-        UTF8String.fromString(q), v, ts)))
+      val key = UTF8String.fromString(rk)
+      writer.write(new GenericInternalRow(Array[Any](key,
+        UTF8String.fromString(fam), UTF8String.fromString(q), v, ts)), 0, key)
     }
-    writer.commit() match {
-      case KvFileCommit(f, _, st) if f.nonEmpty => Some((f, st))
-      case _ => None
-    }
+    writer.finish().map(p => (p.file, p.stat))
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val staging = new Path(stagingDir)
-    val fs = staging.getFileSystem(conf.value)
-    fs.delete(staging, true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    commitStep.clear()
 }
-
-/** Projects each replacement row down to the five cell columns (by the
-  * precomputed source indices) before the ordinary [[KvDataWriter]]
-  * consumes it — stats, blooms, and the tombstone/salt guards all apply
-  * unchanged.
-  */
-private[sources] case class KvProjectingWriterFactory(stagingDir: String,
-    conf: Broadcast[SerializableConfiguration], cellIdx: Array[Int],
-    declaredLen: Int,
-    codec: org.apache.parquet.hadoop.metadata.CompressionCodecName =
-      org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY,
-    saltBuckets: Option[Int] = None,
-    allowTombstones: Boolean = false)
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[
-        org.apache.spark.sql.catalyst.InternalRow] = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    import org.apache.spark.unsafe.types.UTF8String
-    val cellNames = graft.kv.Cell.schema.fieldNames.toSeq
-    // SALTED tables: each range partition DEMUXES into one writer per
-    // salt bucket. The partition's rows arrive sorted by LOGICAL
-    // (rowKey, qualifier) — Spark's required ordering — so a bucket's
-    // rows, sharing a constant stored prefix, are sorted by STORED key:
-    // every sealed file keeps the sink's file-sort contract and the
-    // bucket×partition grid is pairwise disjoint in stored space.
-    // Unsalted tables keep the single-writer path (buckets = 1 writer,
-    // no prefix). Writer slot ids fold (partition, bucket) into one
-    // number so staged and sealed names can never collide.
-    val n = saltBuckets.getOrElse(0)
-    val prefixes: Array[UTF8String] =
-      (0 until n).map(s => UTF8String.fromString(f"$s%03d|")).toArray
-    val inners = new Array[KvDataWriter](math.max(n, 1))
-    def innerFor(bucket: Int): KvDataWriter = {
-      if (inners(bucket) == null) {
-        val slot = if (n == 0) partitionId else partitionId * n + bucket
-        inners(bucket) = new KvDataWriter(stagingDir, cellNames, slot, taskId,
-          conf.value, commitAs = (f, st) => KvFileCommit(f, slot, st),
-          codec = codec, allowTombstones = allowTombstones,
-          saltCheck = saltBuckets)
-      }
-      inners(bucket)
-    }
-    new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-      // Leading-extras offset, resolved on the first row: Spark's
-      // rewrite plans PREPEND `__row_operation` to the data columns
-      // without declaring it in the write schema.
-      private var offset = -1
-      // DOUBLE-SALT guard (sink-salted paths only): rows here must carry
-      // LOGICAL keys — a pipeline built against the pre-salted contract
-      // (path API / pre-r14 streaming) that routes already-stored keys
-      // through the sink would get a second prefix the reads would never
-      // strip, silently, because the re-salted key is self-consistent.
-      // Tracked until the FIRST key that is not in stored form (one
-      // 4-byte shape check per row from then on — effectively free for
-      // genuine logical keys); a non-empty task whose EVERY key already
-      // parses as a stored salted key is refused at commit, before any
-      // file seals. A table whose logical keys ALL coincidentally match
-      // `"%03d|" + suffix` with the matching hash is the (vanishing)
-      // false positive; such a pipeline pre-salts explicitly and
-      // declares `saltedInput` instead.
-      private var rowsIn = 0L
-      private var allStored = true
-      override def write(row: InternalRow): Unit = {
-        if (offset < 0) {
-          offset = row.numFields - declaredLen
-          require(offset == 0 || offset == 1,
-            s"graft-kv: row-level replacement rows carry ${row.numFields} " +
-              s"fields for a $declaredLen-column schema — unrecognized " +
-              "rewrite-plan layout")
-        }
-        val out = new Array[Any](cellIdx.length)
-        var i = 0
-        while (i < cellIdx.length) {
-          val src = cellIdx(i) + offset
-          out(i) =
-            if (row.isNullAt(src)) null
-            else i match {
-              case 0 | 1 | 2 => row.getUTF8String(src).clone() // rowKey/family/qualifier
-              case 3 => row.getBinary(src).clone() // value
-              case _ => row.getLong(src) // ts
-            }
-          i += 1
-        }
-        var bucket = 0
-        if (n > 0 && out(0) != null) {
-          val key = out(0).asInstanceOf[UTF8String]
-          rowsIn += 1
-          if (allStored) allStored = KvSalt.isStored(key, n)
-          bucket = KvSalt.saltOfUtf8(key, n)
-          out(0) = UTF8String.concat(prefixes(bucket), key)
-        }
-        innerFor(bucket).write(new GenericInternalRow(out))
-      }
-      override def commit(): WriterCommitMessage = {
-        require(n == 0 || rowsIn == 0 || !allStored,
-          s"graft-kv: every rowKey this task wrote ($rowsIn rows) already " +
-            s"parses as a STORED salted key for $n buckets, but the sink " +
-            "was asked to salt (saltWrite) — these rows look PRE-salted, " +
-            "and salting them again would corrupt the key layout " +
-            "irreversibly. A pre-salted pipeline declares " +
-            "saltedInput=<n> (the path-API contract) instead of routing " +
-            "through the sink-salting surface.")
-        if (n == 0) {
-          // single-writer path: preserve the one-message shape (and an
-          // empty partition still acks with an empty commit)
-          innerFor(0).commit()
-        } else KvMultiFileCommit(
-          inners.toSeq.filter(_ != null).map(_.commit()).collect {
-            case KvFileCommit(f, slot, st) if f.nonEmpty => (f, slot, st)
-          })
-      }
-      override def abort(): Unit =
-        inners.foreach(w => if (w != null) w.abort())
-      override def close(): Unit =
-        inners.foreach(w => if (w != null) w.close())
-    }
-  }
-}
-
-/** A salted replacement task seals one file PER SALT BUCKET it touched —
-  * all carried in one commit message as (staged file, writer slot, stat).
-  */
-private[sources] case class KvMultiFileCommit(
-    parts: Seq[(String, Int, Option[KvLog.FileStat])])
-    extends WriterCommitMessage

@@ -55,6 +55,24 @@ class KvMaintenanceSpec extends graft.SparkSpec {
       KvLog.liveFiles(fsOf(d), new Path(d)).isEmpty)
   }
 
+  test("a malformed maintenance knob fails the write even with maintenance off") {
+    // every maintain* option the statement carries is parsed, on or off:
+    // a typo in a knob is refused before it can take effect silently the
+    // day `maintain` is switched on
+    val d = s"${sys.props("java.io.tmpdir")}/graft_test/kv_maint_typo_off"
+    graft.sinks.Sinks.deleteRecursive(spark, d)
+    val e = intercept[Exception] {
+      cells.write.format("graft-kv").option("regions", 1)
+        .option("maintain", "false").option("maintainMaxSegments", "8x")
+        .mode("append").save(d)
+    }
+    Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ") should
+      include("maintainMaxSegments must be an integer")
+    assert(!fsOf(d).exists(new Path(d)) ||
+      KvLog.liveFiles(fsOf(d), new Path(d)).isEmpty)
+  }
+
   test("a healthy table parks: under the threshold nothing compacts, nothing is deleted") {
     val d = pileUp("kv_maint_healthy", commits = 3) // 6 segments
     val before = KvLog.liveFiles(fsOf(d), new Path(d))

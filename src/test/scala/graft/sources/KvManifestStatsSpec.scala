@@ -69,6 +69,30 @@ class KvManifestStatsSpec extends graft.SparkSpec {
     }
   }
 
+  test("columns arriving in another order seal in Cell.schema order with exact stats") {
+    val d = s"${sys.props("java.io.tmpdir")}/graft_test/kv_stats_permuted"
+    graft.sinks.Sinks.deleteRecursive(spark, d)
+    cells.select("ts", "value", "qualifier", "family", "rowKey")
+      .write.format("graft-kv").option("regions", 2).mode("overwrite").save(d)
+    val fs = fsOf(d)
+    val table = new Path(d)
+    val stats = KvLog.liveFileStats(fs, table)
+    KvLog.liveFiles(fs, table).foreach { f =>
+      val file = spark.read.parquet(new Path(table, f).toString)
+      file.schema.fieldNames.toSeq shouldBe graft.kv.Cell.schema.fieldNames.toSeq
+      val truth = file.agg(count(lit(1)), min("rowKey"), max("rowKey"),
+        min("ts"), max("ts")).collect()(0)
+      stats(f).rows shouldBe truth.getLong(0)
+      stats(f).minKey shouldBe Some(truth.getString(1))
+      stats(f).maxKey shouldBe Some(truth.getString(2))
+      stats(f).minTs shouldBe Some(truth.getLong(3))
+      stats(f).maxTs shouldBe Some(truth.getLong(4))
+    }
+    val back = spark.read.format("graft-kv").load(d)
+    back.exceptAll(cells).count() shouldBe 0
+    cells.exceptAll(back).count() shouldBe 0
+  }
+
   test("pushed COUNT/MIN/MAX(ts) over a logged table opens ZERO data files") {
     val d = pileUp("kv_stats_agg", commits = 4, regions = 2)
     val expect = cells

@@ -423,7 +423,7 @@ class KvStreamSpec extends graft.SparkSpec {
       part.getAbsolutePath
     }
     new KvStreamingWrite(d, Cell.schema, "q1", sconf)
-      .commit(0, Array(KvEpochCommit(stageAttempt("a"), 0)))
+      .commit(0, Array(KvWriteCommit(Seq(KvStagedFile(stageAttempt("a"), 0)))))
     val live1 = KvLog.liveFiles(fs, table)
     live1 shouldBe Seq("part-e0000000000-q100-00000.parquet")
     // recovery re-runs epoch 0 (failure AFTER the full commit, before
@@ -431,7 +431,8 @@ class KvStreamSpec extends graft.SparkSpec {
     // non-empty region set, the hazard case: honoring it would leave the
     // manifest pointing at deleted files
     new KvStreamingWrite(d, Cell.schema, "q1", sconf)
-      .commit(0, Array(KvEpochCommit("", 0), KvEpochCommit(stageAttempt("b"), 1)))
+      .commit(0, Array(KvWriteCommit(Nil),
+        KvWriteCommit(Seq(KvStagedFile(stageAttempt("b"), 1)))))
     KvLog.liveFiles(fs, table) shouldBe live1
     fs.exists(new Path(d, "part-e0000000000-q100-00000.parquet")) shouldBe true
     fs.exists(new Path(d, "part-e0000000000-q100-00001.parquet")) shouldBe false
@@ -458,9 +459,9 @@ class KvStreamSpec extends graft.SparkSpec {
     // both queries commit THE SAME epoch number — the collision case the
     // per-query name token exists for
     new KvStreamingWrite(d, Cell.schema, "qA", sconf)
-      .commit(0, Array(KvEpochCommit(stageAttempt("a", 5), 0)))
+      .commit(0, Array(KvWriteCommit(Seq(KvStagedFile(stageAttempt("a", 5), 0)))))
     new KvStreamingWrite(d, Cell.schema, "qB", sconf)
-      .commit(0, Array(KvEpochCommit(stageAttempt("b", 7), 0)))
+      .commit(0, Array(KvWriteCommit(Seq(KvStagedFile(stageAttempt("b", 7), 0)))))
     val live = KvLog.liveFiles(fs, table).sorted
     live.length shouldBe 2
     live.count(_.contains("-qA00-")) shouldBe 1
@@ -470,7 +471,7 @@ class KvStreamSpec extends graft.SparkSpec {
     // qB's tag, so the tag check misses — the live-prefix check must make
     // the replay a no-op instead of re-renaming and double-appending
     new KvStreamingWrite(d, Cell.schema, "qA", sconf)
-      .commit(0, Array(KvEpochCommit(stageAttempt("a2", 3), 0)))
+      .commit(0, Array(KvWriteCommit(Seq(KvStagedFile(stageAttempt("a2", 3), 0)))))
     KvLog.liveFiles(fs, table).sorted shouldBe live
     KvLog.latestSeq(fs, table) shouldBe 1L
     spark.read.format("graft-kv").load(d).count() shouldBe 12
@@ -498,14 +499,14 @@ class KvStreamSpec extends graft.SparkSpec {
         .head.getAbsolutePath
     }
     val w = new KvStreamingWrite(d, Cell.schema, "qM", sconf)
-    w.commit(0, Array(KvEpochCommit(stageAttempt("a"), 0)))
-    w.commit(1, Array(KvEpochCommit(stageAttempt("b"), 0)))
+    w.commit(0, Array(KvWriteCommit(Seq(KvStagedFile(stageAttempt("a"), 0)))))
+    w.commit(1, Array(KvWriteCommit(Seq(KvStagedFile(stageAttempt("b"), 0)))))
     val n = spark.read.format("graft-kv").load(d).count()
     KvCompactor.compact(spark, d, regions = 1) shouldBe a[KvCompactor.Compacted]
     val liveAfterCompact = KvLog.liveFiles(fs, table)
     // epoch 1 replays post-compaction: must be a pure no-op
     new KvStreamingWrite(d, Cell.schema, "qM", sconf)
-      .commit(1, Array(KvEpochCommit(stageAttempt("b2"), 0)))
+      .commit(1, Array(KvWriteCommit(Seq(KvStagedFile(stageAttempt("b2"), 0)))))
     KvLog.liveFiles(fs, table) shouldBe liveAfterCompact
     spark.read.format("graft-kv").load(d).count() shouldBe n
     // the compacted-away epoch files (pending removal) were not touched
