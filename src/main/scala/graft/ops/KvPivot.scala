@@ -130,8 +130,8 @@ object KvPivot {
     * without parsing physical plans; a caller that already consulted it
     * passes the answer back through [[pivotAuto]]'s `strategy` so the
     * manifest is not replayed twice. The consult itself is ONE replay
-    * (`liveFilesWithStats`) serving both the tombstone check and the
-    * contiguity certification.
+    * (`KvLog.live`) serving both the tombstone check and the contiguity
+    * certification.
     */
   def autoStrategy(spark: org.apache.spark.sql.SparkSession,
       path: String): String = {
@@ -139,7 +139,7 @@ object KvPivot {
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(dir) || !graft.sources.KvLog.exists(fs, dir))
       return "hash"
-    val entries = graft.sources.KvLog.liveFilesWithStats(fs, dir)
+    val entries = graft.sources.KvLog.live(fs, dir).withStats
     // Stats on EVERY live file are the certification substrate (a
     // stat-less file proves nothing about its sort or span) — including
     // marker segments, whose slices the masked scan derives from the

@@ -128,7 +128,9 @@ private[sources] class KvWriteBuilder(path: String, info: LogicalWriteInfo,
             s"declares $d salt buckets"))
     }
     val saltCheck =
-      if (saltWrite.isDefined) saltWrite // stored keys validated post-prefix
+      // The sink prefixes every key itself (KvTaskWriter): a stored-form
+      // re-check of a key it just salted cannot fail, so none is asked for.
+      if (saltWrite.isDefined) None
       else if (!doTruncate) {
         val p = new Path(path)
         KvSalt.resolveAt(p.getFileSystem(conf.value), p, None)

@@ -130,15 +130,16 @@ private[sources] class KvCellTable(path: String,
     // `tailId` registers a streaming tail's progress with the table's
     // manifest so compaction parks on it (KvTailStream.commit doc).
     // `asOfSeq` is a TIME-TRAVEL batch read: the table as of that manifest
-    // entry (KvLog.liveFilesAt doc); `asOfTime` (epoch millis) resolves to
-    // the last version PUBLISHED at or before that instant
-    // (KvLog.seqAtTime — the Delta timestampAsOf analog). `sinceSeq` is an
-    // INCREMENTAL (CDC) batch read: only the cells committed in
-    // `(sinceSeq, asOfSeq|latest]` (KvLog.changedFiles doc). The version
-    // options are batch-only — a stream's position IS its version, so
-    // they are rejected at stream construction; `sinceSeq` alone is ALSO
-    // meaningful on a stream, where it sets a fresh checkpoint's RESUME
-    // position (KvTailStream.initialOffset — the CDC recovery bridge).
+    // entry (KvLog.live doc); `asOfTime` (epoch millis) resolves to the
+    // last version PUBLISHED at or before that instant (KvLog.seqAtTime —
+    // the Delta timestampAsOf analog). `sinceSeq` is an INCREMENTAL (CDC)
+    // batch read: only the cells committed in `(sinceSeq, asOfSeq|latest]`
+    // (KvLog.changes doc). The version options are batch-only — a stream's
+    // position IS its version, so they are rejected at stream
+    // construction; `sinceSeq` alone is ALSO meaningful on a stream, where
+    // it sets a fresh checkpoint's RESUME position
+    // (KvTailStream.initialOffset — the CDC recovery bridge).
+    val conf = sessionConf
     val asOfSeq = Option(options.get("asOfSeq")).map(_.toLong)
     val asOfTime = Option(options.get("asOfTime")).map(_.toLong)
     require(asOfSeq.isEmpty || asOfTime.isEmpty,
@@ -146,7 +147,7 @@ private[sources] class KvCellTable(path: String,
         "its version by seq OR by publish instant, not both")
     val asOf = asOfSeq.orElse(asOfTime.map { t =>
       val dir = new org.apache.hadoop.fs.Path(path)
-      KvLog.seqAtTime(dir.getFileSystem(sessionConf.value), dir, t)
+      KvLog.seqAtTime(dir.getFileSystem(conf.value), dir, t)
     })
     // `snapshot` reads a NAMED snapshot ([[KvSnapshot]]) — like asOfSeq
     // but planned from the snapshot's self-contained manifest, so it
@@ -164,81 +165,9 @@ private[sources] class KvCellTable(path: String,
     // AND scope) to stored form. Must match the writer's `n` — KvSalt doc.
     val optionBuckets = Option(options.get("saltBuckets")).map(_.toInt)
     optionBuckets.foreach(KvSalt.requireBuckets)
-    // A [[KvSalt.saltedWrite]] table RECORDS its bucket count (the HBase
-    // SALT_BUCKETS table attribute): reads auto-detect it, and an option
-    // that contradicts the recorded value is refused — a wrong bucket
-    // count doesn't error, it silently mis-routes point lookups.
-    // Resolution is VERSION-AWARE ([[KvSalt.resolveAt]]): a time-travel
-    // read resolves the layout of the version it reads — after a
-    // [[KvResalt]], `VERSION AS OF` a pre-resalt seq strips and expands
-    // under the OLD salt, which is what those files store — and a
-    // snapshot read takes the layout its config-recording manifest pinned
-    // at create time. An incremental (CDC) span must not CROSS a layout
-    // change at all: its files disagree on the salt, so no single bucket
-    // count strips them correctly — refused, split the span at the
-    // declaration.
-    val dirX = new org.apache.hadoop.fs.Path(path)
-    val fsX = dirX.getFileSystem(sessionConf.value)
-    // An UNPINNED incremental read (sinceSeq without a version) pins its
-    // span end to the plan-time latest seq: the crossing guard, the salt
-    // resolution, and the scan itself must all see the SAME span — with
-    // separate reads, a resalt publishing between the guard and the
-    // resolution would pass the guard yet flip resolution to the new
-    // layout over the old-layout span, silently wrong rows. Pinning also
-    // makes the CDC read a stable version span (the KvIndex lookup
-    // contract) instead of "whatever latest is at execution".
-    val pinnedAsOf =
-      if (sinceSeq.isDefined && asOf.isEmpty)
-        Some(KvLog.latestSeq(fsX, dirX))
-      else asOf
-    // r19: an incremental span that CROSSES a salt declaration no longer
-    // refuses — it reads MIXED: the scan resolves each file's layout at
-    // its own entry seq ([[KvSalt.resolveAt]]) and strips per file, so
-    // every emitted rowKey is logical regardless of which side of the
-    // declaration its segment landed on. The price is key-space
-    // pushdown: no single bucket count can rewrite a rowKey predicate
-    // for both sides, so a mixed scan accepts NO pushed filters (Spark
-    // re-applies everything on the logical keys), serves no key
-    // aggregates, no ordered/top-n pushdown, and reports no ordering —
-    // correct first, fast where it can be. A declaration at EXACTLY
-    // since+1 does not mix layouts (the declaring entry is a compact
-    // checkpoint; everything after it is uniformly the new layout).
-    val mixedSaltSpan = sinceSeq.exists { since =>
-      KvSalt.declsIn(fsX, dirX, since,
-        pinnedAsOf.getOrElse(KvLog.latestSeq(fsX, dirX)))
-        .exists(_ != since + 1)
-    }
-    val recorded = if (mixedSaltSpan) None else {
-      val dir = dirX
-      val fsx = fsX
-      snapshot match {
-        case Some(name) =>
-          KvSnapshot.get(fsx, dir, name) match {
-            case Some(info) => info.salt
-            case None => KvSalt.resolveAt(fsx, dir, None)
-          }
-        case None => KvSalt.resolveAt(fsx, dir, pinnedAsOf)
-      }
-    }
-    (optionBuckets, recorded) match {
-      case (Some(a), Some(b)) => require(a == b,
-        s"graft-kv: saltBuckets option $a contradicts the table's recorded " +
-          s"salt property $b at $path")
-      case _ => ()
-    }
-    require(!mixedSaltSpan || optionBuckets.isEmpty,
-      s"graft-kv: the span crosses a salt layout change at $path — no " +
-        "single saltBuckets value describes it; drop the option (the scan " +
-        "resolves each segment's layout itself)")
-    // rowKey SCOPE options are SOURCE-ENFORCED (never re-applied by Spark
-    // as residuals), and on a mixed span the bound has no single STORED
-    // form — so instead of the stored-form record-filter rewrite, the
-    // readers enforce the scope on the EMITTED logical key, after each
-    // file's own epoch strip (r20, [[KvRowScope]]): exact under every
-    // layout in the span, at the price of no key-space pruning — the
-    // mixed-span deal everywhere. family/qualifier scopes are
-    // salt-agnostic and keep riding the record filter.
-    val saltBuckets = if (mixedSaltSpan) None else optionBuckets.orElse(recorded)
+    // The read's ONE version: seq, salt layout at that seq, file set.
+    val version = KvReadVersion.resolve(path, conf.value, asOf, sinceSeq,
+      snapshot, optionBuckets)
     // `splitRegionBytes` plans MULTIPLE byte-range partitions over any
     // region file larger than it — intra-region scan parallelism for a
     // monolith the layout hasn't normalized yet (KvScan doc; NOT for
@@ -250,17 +179,8 @@ private[sources] class KvCellTable(path: String,
     // the raw replication/debug view — markers and masked puts included.
     val readTombstones =
       Option(options.get("readTombstones")).exists(_.toBoolean)
-    new KvScanBuilder(path, maxFiles, scope, sessionConf,
-      Option(options.get("tailId")),
-      pinnedAsOf,
-      sinceSeq,
-      maxBytes,
-      snapshot,
-      saltBuckets,
-      splitBytes,
-      readTombstones,
-      asOfAutoPinned = pinnedAsOf.isDefined && asOf.isEmpty,
-      mixedSaltSpan = mixedSaltSpan)
+    new KvScanBuilder(path, version, maxFiles, scope, conf,
+      Option(options.get("tailId")), maxBytes, splitBytes, readTombstones)
   }
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -306,32 +226,31 @@ private[sources] class KvCellTable(path: String,
     new KvRowLevelOperationBuilder(path, info, sessionConf)
 }
 
-private[sources] class KvScanBuilder(path: String, maxFilesPerBatch: Option[Int] = None,
+private[sources] class KvScanBuilder(path: String,
+    /** The read's version, resolved once ([[KvReadVersion]]). */
+    version: KvReadVersion,
+    maxFilesPerBatch: Option[Int] = None,
     scopeFilters: Array[Filter] = Array.empty,
     conf: SerializableConfiguration = KvScanBuilder.activeConf,
     tailId: Option[String] = None,
-    asOfSeq: Option[Long] = None,
-    sinceSeq: Option[Long] = None,
     maxBytesPerBatch: Option[Long] = None,
-    snapshot: Option[String] = None,
-    saltBuckets: Option[Int] = None,
     splitRegionBytes: Option[Long] = None,
-    readTombstones: Boolean = false,
-    /** True when `asOfSeq` was AUTO-PINNED for an unpinned incremental
-      * read (plan-time latest, not a user-named version): a stream built
-      * from this scan ignores the pin — its offset names its position —
-      * where a user-named version is still refused.
-      */
-    asOfAutoPinned: Boolean = false,
-    /** The span crosses a salt declaration (newScanBuilder doc, r19):
-      * per-file layout resolution, NO key-space pushdown of any kind.
-      */
-    mixedSaltSpan: Boolean = false)
+    readTombstones: Boolean = false)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit
     with org.apache.spark.sql.connector.read.SupportsPushDownTopN {
+
+  /** Test construction: a builder over `path`'s current version. */
+  def this(path: String) =
+    this(path, KvReadVersion.current(path, KvScanBuilder.activeConf.value))
+
+  private def saltBuckets = version.salt
+  /** The span crosses a salt declaration (r19, [[KvReadVersion]]):
+    * per-file layout resolution, NO key-space pushdown of any kind.
+    */
+  private def mixedSaltSpan = version.mixedSalt
 
   private var required: StructType = graft.kv.Cell.schema
   private var accepted: Array[Filter] = Array.empty
@@ -477,8 +396,8 @@ private[sources] class KvScanBuilder(path: String, maxFilesPerBatch: Option[Int]
     // scan it replaces answers for the MASKED one. Raw views — a
     // `readTombstones` scan, or a `sinceSeq` change feed (KvScan
     // .maskingActive doc) — ARE the raw rows, still servable.
-    (readTombstones || sinceSeq.isDefined ||
-      plannedStats.exists(_.forall(_._2.forall(_.tombstones == 0L)))) &&
+    (readTombstones || version.since.isDefined ||
+      plannedStats.exists(_.forall(_.stat.forall(_.tombstones == 0L)))) &&
     (!specs.exists(s => s == KvStatsScan.MinKeySpec || s == KvStatsScan.MaxKeySpec) ||
       // Salted tables refuse the key aggregates outright: manifest bounds
       // are STORED (salt-prefixed) keys, whose min/max says nothing about
@@ -486,22 +405,15 @@ private[sources] class KvScanBuilder(path: String, maxFilesPerBatch: Option[Int]
       // planned file to carry manifest stats (footer string statistics
       // may be truncated).
       (saltBuckets.isEmpty && !mixedSaltSpan &&
-        plannedStats.exists(_.forall(_._2.isDefined))))
+        plannedStats.exists(_.forall(_.stat.isDefined))))
 
-  /** ONE manifest replay shared by every pushdown-feasibility check in
-    * this builder (the tombstone gate + the key-bounds gate would
-    * otherwise each replay the log — object-store round-trips per entry,
-    * on exactly the planning path the stats rewrite exists to make
-    * cheap). None = unreadable here; the refusal lets the real scan fail
-    * with the precise error.
+  /** The version's file set, the one replay every pushdown-feasibility
+    * check here (the tombstone gate, the key-bounds gate) and the scan
+    * built after them share. None = unreadable here; the refusal lets
+    * the real scan fail with the precise error.
     */
-  private lazy val plannedStats
-      : Option[Seq[(Path, Option[KvLog.FileStat])]] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf.value)
-    try Some(KvLog.scanFilesWithStats(fs, p, asOfSeq, sinceSeq, snapshot))
-    catch { case _: Exception => None }
-  }
+  private def plannedStats: Option[Seq[KvLog.LiveFile]] =
+    try Some(version.files) catch { case _: Exception => None }
 
   /** Scope filters join the pushed set. Unlike Catalyst-pushed filters,
     * Spark never re-evaluates them as residuals — the parquet record filter
@@ -509,7 +421,7 @@ private[sources] class KvScanBuilder(path: String, maxFilesPerBatch: Option[Int]
     */
   override def build(): Scan = statsAggs match {
     case Some(specs) =>
-      new KvStatsScan(path, specs, conf, asOfSeq, sinceSeq, snapshot)
+      new KvStatsScan(path, specs, version, conf)
     case None =>
       // Salted tables: every rowKey predicate — Catalyst-pushed AND
       // scope-option — rewrites to stored key space before it reaches the
@@ -531,11 +443,10 @@ private[sources] class KvScanBuilder(path: String, maxFilesPerBatch: Option[Int]
           rowScope.collectFirst { case LessThan("rowKey", v: String) => v }))
       val effective = (accepted ++ otherScope).distinct
       val pushedStored = saltBuckets.fold(effective)(KvSalt.expandAll(effective, _))
-      new KvScan(path, required, pushedStored,
-        maxFilesPerBatch, conf, tailId, asOfSeq, sinceSeq, limit, ordered,
-        descending, maxBytesPerBatch, snapshot, orderedCols, saltBuckets,
-        splitRegionBytes, readTombstones, asOfAutoPinned = asOfAutoPinned,
-        mixedSaltSpan = mixedSaltSpan, logicalKeyScope = logicalScope)
+      new KvScan(path, required, pushedStored, version,
+        maxFilesPerBatch, conf, tailId, limit, ordered, descending,
+        maxBytesPerBatch, orderedCols, splitRegionBytes, readTombstones,
+        logicalKeyScope = logicalScope)
   }
 }
 
@@ -560,12 +471,13 @@ private[sources] object KvScanBuilder {
     org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(conf)
 }
 
-/** Metadata-only scan serving pushed aggregates from parquet footers. */
+/** Metadata-only scan serving pushed aggregates from the version's
+  * manifest stats (parquet footers for stat-less files) — the version
+  * the builder's gates already planned, never a later one.
+  */
 private[sources] class KvStatsScan(path: String, specs: Seq[KvStatsScan.Spec],
-    sconf: SerializableConfiguration = KvScanBuilder.activeConf,
-    asOfSeq: Option[Long] = None,
-    sinceSeq: Option[Long] = None,
-    snapshot: Option[String] = None)
+    version: KvReadVersion,
+    sconf: SerializableConfiguration = KvScanBuilder.activeConf)
     extends Scan with Batch {
 
   import KvStatsScan._
@@ -581,20 +493,17 @@ private[sources] class KvStatsScan(path: String, specs: Seq[KvStatsScan.Spec],
 
   private lazy val values: Array[Any] = {
     val conf = sconf.value
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val files = KvLog.scanFilesWithStats(fs, p, asOfSeq, sinceSeq, snapshot)
     var count = 0L
     var tsMin: Option[Long] = None
     var tsMax: Option[Long] = None
     var keyMin: Option[String] = None
     var keyMax: Option[String] = None
-    files.foreach {
+    version.files.foreach {
       // Manifest-carried stats answer without touching the file at all —
       // a stats query over a logged 100-TB table is one log replay, zero
       // footer round-trips. Absent ts/key bounds inside a stat mean every
       // row had a null there: genuinely no contribution, not missing data.
-      case (_, Some(st)) =>
+      case KvLog.LiveFile(_, _, Some(st)) =>
         count += st.rows
         st.minTs.foreach(lo => tsMin = Some(tsMin.fold(lo)(math.min(_, lo))))
         st.maxTs.foreach(hi => tsMax = Some(tsMax.fold(hi)(math.max(_, hi))))
@@ -602,10 +511,11 @@ private[sources] class KvStatsScan(path: String, specs: Seq[KvStatsScan.Spec],
         // (byte) order — a UTF-16 union could serve a wrong aggregate
         st.minKey.foreach(lo => keyMin = Some(keyMin.fold(lo)(graft.kv.Utf8Order.min(_, lo))))
         st.maxKey.foreach(hi => keyMax = Some(keyMax.fold(hi)(graft.kv.Utf8Order.max(_, hi))))
-      case (f, None) =>
+      case KvLog.LiveFile(name, _, None) =>
         // Stat-less legacy file: footer fallback serves count and ts (int64
         // footer stats are exact); key bounds never get here — the builder
         // only accepts key aggregates when every file carries stats.
+        val f = new Path(version.table, name)
         val r = KvFilters.openFooter(HadoopInputFile.fromPath(f, conf), conf)
         try r.getRowGroups.asScala.foreach { block =>
           count += block.getRowCount
@@ -672,14 +582,6 @@ private[sources] object KvStatsScan {
     }
     if (specs.forall(_.isDefined)) Some(specs.map(_.get)) else None
   }
-
-  /** Whether every file the scan would plan carries manifest stats — the
-    * precondition for EXACT rowKey bounds (footer string statistics may
-    * be truncated, so a stat-less file cannot serve them). One manifest
-    * replay at pushdown-decision time, driver-side.
-    */
-  // (key-bounds and tombstone feasibility both read the builder's single
-  // shared manifest replay — KvScanBuilder.plannedStats)
 }
 
 /** The one stats row, shipped driver→executor as plain JVM values
@@ -705,18 +607,16 @@ private[sources] case class KvStatsReaderFactory() extends PartitionReaderFactor
 }
 
 private[sources] class KvScan(path: String, required: StructType, pushed: Array[Filter],
+    /** The read's version ([[KvReadVersion]]): seq, salt layout, files. */
+    version: KvReadVersion,
     maxFilesPerBatch: Option[Int] = None,
     sconf: SerializableConfiguration = KvScanBuilder.activeConf,
     tailId: Option[String] = None,
-    asOfSeq: Option[Long] = None,
-    sinceSeq: Option[Long] = None,
     limit: Option[Int] = None,
     ordered: Boolean = false,
     descending: Boolean = false,
     maxBytesPerBatch: Option[Long] = None,
-    snapshot: Option[String] = None,
     orderedCols: Int = 1,
-    saltBuckets: Option[Int] = None,
     splitRegionBytes: Option[Long] = None,
     readTombstones: Boolean = false,
     /** Row-level-operation mode ([[KvRowLevelScanBuilder]]): pushed
@@ -724,15 +624,6 @@ private[sources] class KvScan(path: String, required: StructType, pushed: Array[
       * row of a kept group surfaces for the copy-on-write rewrite.
       */
     groupPruneOnly: Boolean = false,
-    /** KvScanBuilder doc: an auto-pinned asOf is not a user-named
-      * version and does not refuse streaming.
-      */
-    asOfAutoPinned: Boolean = false,
-    /** The CDC span crosses a salt declaration (r19): readers strip each
-      * file under ITS entry's resolved layout; no key-space pushdown,
-      * pruning, ordering claim, or DPP rides this scan (builder doc).
-      */
-    mixedSaltSpan: Boolean = false,
     /** minRowKey/maxRowKey scope of a mixed-salt span (r20): enforced by
       * the readers on the emitted LOGICAL key — the bound has no single
       * stored form across the span's layouts, so it cannot ride the
@@ -745,6 +636,18 @@ private[sources] class KvScan(path: String, required: StructType, pushed: Array[
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
 
+  /** Test construction: a plain scan of `path`'s current version. */
+  def this(path: String, required: StructType, pushed: Array[Filter]) =
+    this(path, required, pushed,
+      KvReadVersion.current(path, KvScanBuilder.activeConf.value))
+
+  private def saltBuckets = version.salt
+  /** The CDC span crosses a salt declaration (r19): readers strip each
+    * file under ITS entry's resolved layout; no key-space pushdown,
+    * pruning, ordering claim, or DPP rides this scan (builder doc).
+    */
+  private def mixedSaltSpan = version.mixedSalt
+
   override def readSchema(): StructType = required
 
   /** The table path, exposed for [[KvIndexRouting]] — but ONLY when this
@@ -754,7 +657,7 @@ private[sources] class KvScan(path: String, required: StructType, pushed: Array[
     * it. Pushed filters are fine (Spark re-applies them as residuals).
     */
   private[sources] def routablePath: Option[String] =
-    if (asOfSeq.isEmpty && sinceSeq.isEmpty && snapshot.isEmpty &&
+    if (version.isCurrent &&
       tailId.isEmpty && limit.isEmpty && !ordered && !readTombstones &&
       !groupPruneOnly) Some(path)
     else None
@@ -771,7 +674,7 @@ private[sources] class KvScan(path: String, required: StructType, pushed: Array[
     */
   private lazy val spjLayout: Option[(String, Map[String, Int])] = {
     if (limit.isDefined || ordered || splitRegionBytes.isDefined ||
-      groupPruneOnly || sinceSeq.isDefined ||
+      groupPruneOnly || version.since.isDefined ||
       !required.fieldNames.contains("rowKey")) None
     else KvRegionLayout.fromStats(saltBuckets,
       allFilesWithStats.map { case (f, st) => (f.toString, st) })
@@ -884,12 +787,8 @@ private[sources] class KvScan(path: String, required: StructType, pushed: Array[
     * their partition-value spaces could never be compared.
     */
   private lazy val allFilesWithStats
-      : Seq[(Path, Option[KvLog.FileStat])] = {
-    val conf = sconf.value
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    KvLog.scanFilesWithStats(fs, p, asOfSeq, sinceSeq, snapshot)
-  }
+      : Seq[(Path, Option[KvLog.FileStat])] =
+    version.files.map(f => (new Path(version.table, f.name), f.stat))
 
   private lazy val (keptFiles, totalFiles)
       : (Seq[(String, Option[KvLog.FileStat])], Int) = {
@@ -956,7 +855,7 @@ private[sources] class KvScan(path: String, required: StructType, pushed: Array[
     * data forever — the GDPR-leak direction).
     */
   private def maskingActive: Boolean =
-    !readTombstones && sinceSeq.isEmpty && tombstoneFiles.nonEmpty
+    !readTombstones && version.since.isEmpty && tombstoneFiles.nonEmpty
 
   /** Whether the mask needs each row's VALUE bytes: only when the live
     * marker set actually holds an exact-version marker
@@ -1204,34 +1103,12 @@ private[sources] class KvScan(path: String, required: StructType, pushed: Array[
       case None => _ => -1
     }
     // MIXED-salt span (r19): each file strips under the layout current AT
-    // ITS OWN entry seq — one span replay builds the name -> saltLen map
-    // (bounded driver metadata, same entries the planning replay read).
+    // ITS OWN entry seq, which the version's span walk already recorded.
     val saltLenOf: String => Option[Int] =
       if (!mixedSaltSpan) _ => None
       else {
-        val fs = new Path(path).getFileSystem(sconf.value)
-        val table = new Path(path)
-        val start = sinceSeq.getOrElse(-1L) + 1
-        val upTo = asOfSeq.getOrElse(KvLog.latestSeq(fs, table))
-        // Declarations partition the span into a handful of EPOCHS —
-        // resolve once per epoch (O(decls) declaration reads), not once
-        // per entry (O(span) — a 1000-entry span would pay ~1000
-        // declaration-dir round-trips for the same few answers).
-        val epochs: Seq[(Long, Int)] =
-          ((start, KvSalt.resolveAt(fs, table, Some(start))) +:
-            KvSalt.declsIn(fs, table, start - 1, upTo).sorted
-              .map(d => (d, KvSalt.resolveAt(fs, table, Some(d)))))
-            .map { case (s, salt) =>
-              (s, if (salt.isDefined) KvSalt.Width else 0) }
-        def saltLenAt(q: Long): Int =
-          epochs.takeWhile(_._1 <= q).lastOption.fold(0)(_._2)
-        val byName: Map[String, Int] =
-          (start to upTo).flatMap { q =>
-            KvLog.read(fs, table, q).toSeq.flatMap { e =>
-              val names = if (e.compact) e.dropFiles else e.adds
-              names.map(_ -> saltLenAt(q))
-            }
-          }.toMap
+        val byName = version.files
+          .map(f => f.name -> version.saltWidthAt(f.seq)).toMap
         f => Some(byName.getOrElse(new Path(f).getName, 0))
       }
     val pieces = splitRegionBytes.filter(_ => limit.isEmpty) match {
@@ -1357,7 +1234,9 @@ private[sources] class KvScan(path: String, required: StructType, pushed: Array[
     */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    require((asOfSeq.isEmpty || asOfAutoPinned) && snapshot.isEmpty,
+    // A CDC span's plan-time pin is not a user-named version: only
+    // asOfSeq/asOfTime/snapshot refuse.
+    require(version.asOf.isEmpty && version.snapshot.isEmpty,
       "graft-kv: asOfSeq/asOfTime/snapshot are batch-read options — a " +
         "stream's offset already names its log position; tail from a fresh " +
         "checkpoint instead")
@@ -1383,7 +1262,7 @@ private[sources] class KvScan(path: String, required: StructType, pushed: Array[
     new KvTailStream(path, required, pushed, maxFilesPerBatch, sconf, tailId,
       maxBytesPerBatch,
       saltLen = if (saltBuckets.isDefined) KvSalt.Width else 0,
-      sinceSeq = sinceSeq)
+      sinceSeq = version.since)
   }
 
   override def description(): String = {

@@ -193,14 +193,17 @@ object KvCompactor {
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(dir)) return Parked(s"no table at $path")
     KvLog.seedFromDirIfNeeded(fs, dir) // legacy table: manifest first
-    val latest = KvLog.latestSeq(fs, dir)
+    // ONE resolution: the seq this pass publishes after and the live set
+    // it merges come from the same version.
+    val version = KvLog.live(fs, dir)
+    val latest = version.seq
     if (latest < 0) return Parked("empty table: nothing to compact")
     val marks = KvLog.tailPositions(fs, dir)
     // The gating floor: merge strictly below the slowest registered tail;
     // with none registered, below the log end + 1 (the whole live set is
     // fair game — selection then decides how much of it to touch).
     val gate = if (marks.isEmpty) latest + 1 else marks.values.min
-    val live = KvLog.liveFilesWithSeq(fs, dir)
+    val live = version.files.map(f => (f.name, f.seq))
     // Idempotence park: when the log tip IS a compaction entry and every
     // live segment is one of ITS merge outputs, a re-run would only
     // re-merge the previous pass's own outputs — a pure rewrite with no
@@ -236,7 +239,7 @@ object KvCompactor {
     // Sizes come from the manifest stats where recorded; a driver-side
     // getFileStatus covers stat-less legacy entries — bounded region
     // metadata either way.
-    val liveStats = KvLog.liveFileStats(fs, dir)
+    val liveStats = version.stats
     val sized = candidates.map { case (f, s) =>
       (f, s, liveStats.get(f).map(_.bytes)
         .getOrElse(fs.getFileStatus(new Path(dir, f)).getLen)) }
@@ -415,12 +418,11 @@ object KvCompactor {
     // carries exact stats for the merged outputs — re-key them by the
     // published names. Carried files keep their stats too: the checkpoint
     // entry is the replay start, so stats dropped here would be lost.
-    val tmpStats = KvLog.liveFileStats(fs, tmp)
-    var merged = KvLog.dataFiles(fs, tmp).zipWithIndex.map { case (f, i) =>
+    var merged = KvLog.live(fs, tmp).files.zipWithIndex.map { case (f, i) =>
       val target = new Path(dir, f"part-c$expectSeq%010d-$i%05d.parquet")
-      if (!fs.rename(f, target)) throw new IllegalStateException(
+      if (!fs.rename(new Path(tmp, f.name), target)) throw new IllegalStateException(
         s"graft-kv compaction: staging rename to $target failed")
-      target.getName -> tmpStats.get(f.getName)
+      target.getName -> f.stat
     }
     fs.delete(tmp, true)
 

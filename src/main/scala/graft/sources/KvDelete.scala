@@ -253,15 +253,16 @@ object KvDelete extends org.apache.spark.internal.Logging {
       // explicit `mode("overwrite")`.)
       val dir = new Path(path)
       val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      // Legacy (log-less) directories must be seeded first or liveFiles
-      // is empty and the truncate would silently no-op while the scan's
+      // Legacy (log-less) directories must be seeded first or the live
+      // set is empty and the truncate would silently no-op while the scan's
       // directory-listing fallback still shows every row.
       if (fs.exists(dir)) KvLog.seedFromDirIfNeeded(fs, dir): Unit
       var attempts = 0
       var done = false
       while (!done) {
-        val (latest, live) = KvLog.liveFilesWithLatest(fs, dir)
-        val expect = latest + 1
+        val version = KvLog.live(fs, dir)
+        val expect = version.seq + 1
+        val live = version.names
         if (live.isEmpty) return
         try {
           KvLog.append(fs, dir, adds = Nil, removes = live,
@@ -336,8 +337,9 @@ object KvDelete extends org.apache.spark.internal.Logging {
   private def currentMaxTs(spark: SparkSession, path: String): Long = {
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val live = KvLog.liveFiles(fs, dir)
-    val stats = KvLog.liveFileStats(fs, dir)
+    val version = KvLog.live(fs, dir)
+    val live = version.names
+    val stats = version.stats
     // Manifest ts bounds cover PUT rows only (the sink excludes marker ts
     // — a prior forever-delete's Long.MaxValue marker must not upgrade
     // this delete to forever). A file WITHOUT a stat has unknown content

@@ -97,15 +97,16 @@ object KvFsck {
       droppedSnapshots: Seq[String])
 
   /** The reference sets both [[check]] and [[repair]] bucket files with —
-    * gathered once per call: manifest live set, pending removals,
-    * snapshot-pinned names, and the on-disk data files.
+    * gathered once per call: manifest live set (with its stats, from the
+    * same version), pending removals, snapshot-pinned names, and the
+    * on-disk data files.
     */
-  private case class TableSets(live: Set[String], removals: Set[String],
+  private case class TableSets(live: KvLog.Live, removals: Set[String],
       snapRefs: Set[String], onDisk: Set[String])
 
   private def tableSets(fs: org.apache.hadoop.fs.FileSystem,
       dir: Path): TableSets = TableSets(
-    live = KvLog.liveFiles(fs, dir).toSet,
+    live = KvLog.live(fs, dir),
     removals = KvLog.removalTimes(fs, dir).keySet,
     snapRefs = KvSnapshot.referencedFiles(fs, dir),
     onDisk = fs.listStatus(dir).map(_.getPath.getName)
@@ -146,7 +147,8 @@ object KvFsck {
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(dir) && KvLog.exists(fs, dir),
       s"graft-kv repair: $path is not a manifest-logged table")
-    val TableSets(live, removals, snapRefs, onDisk) = tableSets(fs, dir)
+    val TableSets(version, removals, snapRefs, onDisk) = tableSets(fs, dir)
+    val live = version.names.toSet
     val forgotten =
       if (!forgetMissing) Nil
       else {
@@ -249,8 +251,9 @@ object KvFsck {
     val fs = dir.getFileSystem(conf)
     require(fs.exists(dir) && KvLog.exists(fs, dir),
       s"graft-kv fsck: $path is not a manifest-logged table")
-    val stats = KvLog.liveFileStats(fs, dir)
-    val live = KvLog.liveFiles(fs, dir)
+    val version = KvLog.live(fs, dir)
+    val stats = version.stats
+    val live = version.names
     var mismatches = 0L
     var unreadable = 0L
     live.foreach { f =>
@@ -271,9 +274,10 @@ object KvFsck {
     require(KvLog.exists(fs, dir),
       s"graft-kv fsck: $path has no manifest log — consistency is undefined " +
         "for legacy/externally-staged directories (every file is 'live')")
-    val TableSets(live, removals, snapRefs, onDisk) = tableSets(fs, dir)
+    val TableSets(version, removals, snapRefs, onDisk) = tableSets(fs, dir)
+    val live = version.names.toSet
     val dropRefs = KvLog.referencedDropFiles(fs, dir)
-    val stats = KvLog.liveFileStats(fs, dir)
+    val stats = version.stats
     val scratch = fs.listStatus(dir).filter(_.isDirectory)
       .map(_.getPath.getName)
       .count(n => n.startsWith("_tmp_") || n.startsWith("_compact_"))

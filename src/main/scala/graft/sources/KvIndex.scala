@@ -782,12 +782,13 @@ object KvIndex {
     // Marker hygiene: tombstones accumulate one per superseded entry;
     // compact the INDEX once they outnumber a quarter of its rows (or
     // the absolute floor), purging masked entries and markers together.
-    val stats = KvLog.liveFileStats(fs, dir).values
+    val index = KvLog.live(fs, dir)
+    val stats = index.stats.values
     val tombs = stats.map(_.tombstones).sum
     val rows = stats.map(_.rows).sum
     if (tombs > math.max(4096L, rows / 4))
       KvCompactor.compact(spark, dir.toString,
-        regions = math.max(1, KvLog.liveFiles(fs, dir).size)): Unit
+        regions = math.max(1, index.files.size)): Unit
     Refreshed(m.asOfSeq, latest)
   }
 
@@ -797,7 +798,7 @@ object KvIndex {
     * declaration the scan refuses (same boundary rule — a declaration at
     * exactly `since + 1` has nothing below it and passes), or it dips
     * below the compaction floor (the merged-away segments' change sets
-    * are not reconstructible — `KvLog.changedFiles` throws on the same
+    * are not reconstructible — `KvLog.changes` throws on the same
     * condition). Retention entries serve incrementally: the feed ships
     * the drops as exact-version markers, the touched-key probe sees their
     * rowKeys, and the post-image re-read at `latest` reflects the
@@ -808,7 +809,7 @@ object KvIndex {
   private def servableSpan(fs: FileSystem, table: Path, since: Long,
       latest: Long): Option[Seq[KvLog.Entry]] = {
     if (since + 1 < KvLog.floor(fs, table)) return None
-    if (KvSalt.declsIn(fs, table, since, latest).exists(_ != since + 1))
+    if (KvSalt.declsIn(fs, table, since, latest).exists(_._1 != since + 1))
       return None
     val entries = (since + 1 to latest).flatMap(KvLog.read(fs, table, _))
     // PRE-IMAGE SURVIVAL: when the span CARRIES CONTENT (appends, or a
@@ -826,10 +827,10 @@ object KvIndex {
     val carries = entries.exists(e =>
       if (e.compact) e.dropFiles.nonEmpty else e.adds.nonEmpty)
     val preImageLost = carries && entries.exists(_.compact) && !(try {
-      KvLog.liveFilesAt(fs, table, since)
+      KvLog.live(fs, table, Some(since)).names
         .forall(n => fs.exists(new Path(table, n)))
     } catch {
-      // liveFilesAt itself validates reconstructibility and throws once
+      // live itself validates reconstructibility and throws once
       // vacuum reclaimed the version's segments — same verdict.
       case _: IllegalStateException => false
     })
@@ -1074,8 +1075,10 @@ object KvIndex {
       catch { case _: java.io.FileNotFoundException => -1L }
     val key = (dir.toString, latest, mtime)
     if (liveStatsCache.size > 512) liveStatsCache.clear()
-    liveStatsCache.computeIfAbsent(key,
-      _ => KvLog.liveFilesWithStats(fs, dir))
+    // The memo holds the version its key names: replayed AT `latest`, so a
+    // commit landing after the seq read cannot file N+1's stats under N.
+    liveStatsCache.computeIfAbsent(key, _ =>
+      if (latest < 0) Nil else KvLog.live(fs, dir, Some(latest)).withStats)
   }
 
   /** The routing threshold: an index serves a range when its estimated

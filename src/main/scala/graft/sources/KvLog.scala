@@ -98,6 +98,17 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * writer tag); compaction rebases onto interleaved PURE APPENDS and
   * aborts only on a true conflict — an interleaved remove/compact — see
   * [[KvCompactor]]'s publish loop.
+  *
+  * READS name a version through two resolvers over one replay walk:
+  * [[live]] (the files version V holds — the latest, or a time-travel
+  * version) and [[changes]] (the files committed in a CDC span). Both
+  * return one shape, [[Live]]: the seq, and per file its name,
+  * attributing seq and manifest stat. The isolation contract is ONE
+  * READ, ONE VERSION: a scan resolves its seq, the salt layout at that
+  * seq and its file set once ([[KvReadVersion]]) and plans every step
+  * from that one value, and a maintenance pass takes its expected seq
+  * and its file set from one [[live]] call — a commit landing mid-read
+  * is never half-seen.
   */
 private[graft] object KvLog {
 
@@ -328,7 +339,7 @@ private[graft] object KvLog {
     val h = horizon(fs, table)
     if (h < 0) return 0
     val fl = floor(fs, table)
-    // NAMED SNAPSHOTS are durable CDC anchors (r18, [[changedFiles]]):
+    // NAMED SNAPSHOTS are durable CDC anchors (r18, [[changes]]):
     // entries ABOVE the oldest snapshot seq are never truncated — their
     // adds and drop files serve snapshot-anchored change spans, however
     // old — so the walk is capped at that seq. Entries at or below it
@@ -691,15 +702,6 @@ private[graft] object KvLog {
   def reset(fs: FileSystem, table: Path): Unit =
     fs.delete(logDir(table), true): Unit
 
-  /** First-commit MIGRATION of a legacy table: when a directory holds data
-    * files but no manifest yet (round-7-written or externally-staged), the
-    * first logged commit must not hide them — [[dataFiles]] switches to log
-    * replay the moment `_log` exists, so an entry listing only the new
-    * files would silently drop every pre-log segment from all scans. Seeds
-    * the log with a `compact` entry enumerating the directory ONCE (a
-    * compaction entry's adds are by contract the complete live set, which
-    * is exactly what a directory snapshot is). Returns true when it seeded.
-    */
   /** Create the (possibly empty) `_log` dir — the commit paths call this
     * BEFORE renaming any data file into the table, so a sink-named file
     * can never exist in a log-less directory unless the directory was
@@ -710,6 +712,15 @@ private[graft] object KvLog {
   def ensureLogDir(fs: FileSystem, table: Path): Unit =
     fs.mkdirs(logDir(table)): Unit
 
+  /** First-commit MIGRATION of a legacy table: when a directory holds data
+    * files but no manifest yet (round-7-written or externally-staged), the
+    * first logged commit must not hide them — every read switches to log
+    * replay the moment `_log` exists, so an entry listing only the new
+    * files would silently drop every pre-log segment from all scans. Seeds
+    * the log with a `compact` entry enumerating the directory ONCE (a
+    * compaction entry's adds are by contract the complete live set, which
+    * is exactly what a directory snapshot is). Returns true when it seeded.
+    */
   def seedFromDirIfNeeded(fs: FileSystem, table: Path): Boolean = {
     if (exists(fs, table) || !fs.exists(table)) return false
     // Seed only FOREIGN files (plain spark writes, external staging). A
@@ -882,22 +893,39 @@ private[graft] object KvLog {
       mtimeMs: Long): Unit =
     fs.setTimes(entryPath(table, seq), mtimeMs, -1)
 
-  /** The live data-file set by log replay, starting at the horizon
-    * checkpoint (a compaction entry's adds are the complete live set, so
-    * replay cost is O(commits since last compaction), not O(all commits)).
+  /** One file of a resolved read set: its name, the seq of the entry
+    * that last published it — the unit compaction partitions on (a file
+    * attributed below the gating floor is safe to merge) and the layout
+    * epoch a mixed-salt span strips it under — and its manifest
+    * [[FileStat]] (None for a log-less directory's seed entry; consumers
+    * fall back per file).
     */
-  def liveFiles(fs: FileSystem, table: Path): Seq[String] =
-    liveFilesWithSeq(fs, table).map(_._1).sorted
+  case class LiveFile(name: String, seq: Long, stat: Option[FileStat])
 
-  /** `(latestSeq, liveFiles)` from ONE log walk — for optimistic commit
-    * loops that need both per attempt (reading them separately doubles
-    * the hint probes and opens a benign-but-retry-causing window).
+  /** A resolved table version: seq `seq` and its files, sorted by name
+    * (-1 and no files for an empty log).
     */
-  def liveFilesWithLatest(fs: FileSystem, table: Path): (Long, Seq[String]) = {
-    val latest = latestSeq(fs, table)
-    (latest, replayLive(fs, table, math.max(horizon(fs, table), 0L), latest)
-      .keysIterator.toSeq.sorted)
+  case class Live(seq: Long, files: Seq[LiveFile]) {
+    def names: Seq[String] = files.map(_.name)
+    def stats: Map[String, FileStat] =
+      files.collect { case LiveFile(n, _, Some(s)) => n -> s }.toMap
+    def withStats: Seq[(String, Option[FileStat])] = files.map(f => (f.name, f.stat))
   }
+
+  /** The current version's file names — a projection of [[live]]. */
+  def liveFiles(fs: FileSystem, table: Path): Seq[String] =
+    live(fs, table).names
+
+  /** The current version's manifest stats, stat-less files absent — a
+    * projection of [[live]].
+    */
+  def liveFileStats(fs: FileSystem, table: Path): Map[String, FileStat] =
+    live(fs, table).stats
+
+  /** The current version's (name, stat) pairs — a projection of [[live]]. */
+  def liveFilesWithStats(fs: FileSystem, table: Path)
+      : Seq[(String, Option[FileStat])] =
+    live(fs, table).withStats
 
   /** The optimistic append loop every simple committer shares: retry the
     * ONE-entry append on a lost seq race (bounded attempts). Callers
@@ -922,145 +950,115 @@ private[graft] object KvLog {
     throw new IllegalStateException("unreachable: appendRetrying returns")
   }
 
-  /** Live files ATTRIBUTED to the entry whose adds last published them —
-    * the unit compaction partitions on: a file attributed below the gating
-    * floor is safe to merge (every position that could deliver it is
-    * already behind the floor), one at or above must be carried forward.
+  /** THE VERSION RESOLVER: the files version `asOf` holds (None = the
+    * latest), with the seq it resolved — one log walk. Replay starts at
+    * the horizon checkpoint (a compaction entry's adds are the complete
+    * live set), so it costs O(commits since the last compaction).
+    *
+    * TIME TRAVEL (`asOf`, the HBase snapshot-read / Delta `versionAsOf`
+    * analog; every entry is a durable table version). A version at or
+    * after the horizon replays from it; an older one anchors at the
+    * NEWEST RETAINED checkpoint at or below it — any compact entry is a
+    * complete live set, so a version between two checkpoints stays
+    * reconstructible after truncation dropped the prefix below the older
+    * one (an O(asOf − anchor) backward probe). Fails loudly when:
+    *  - `asOf` is beyond the log end (that version doesn't exist yet);
+    *  - no retained checkpoint covers it and the prefix was truncated;
+    *  - a file live at `asOf` was merged away by compaction AND already
+    *    reclaimed by [[KvVacuum]] — Delta's trade: compaction alone never
+    *    limits time travel (its deletes are deferred, [[KvCompactor]]
+    *    publish protocol step 4), VACUUM does. A file attributed below
+    *    the floor costs one existence probe, paid only on pre-checkpoint
+    *    versions.
     */
-  def liveFilesWithSeq(fs: FileSystem, table: Path): Seq[(String, Long)] =
-    replayLive(fs, table, math.max(horizon(fs, table), 0L),
-      latestSeq(fs, table)).map { case (n, (seq, _)) => (n, seq) }.toSeq
-
-  /** Manifest-carried [[FileStat]]s for the live file set — the planning
-    * side's zero-footer-open source of row counts, byte sizes, and
-    * rowKey/ts bounds. Files without stats — only a log-less external
-    * directory's seed entry produces them — are absent; consumers fall
-    * back per-file.
-    */
-  def liveFileStats(fs: FileSystem, table: Path): Map[String, FileStat] =
-    replayLive(fs, table, math.max(horizon(fs, table), 0L),
-      latestSeq(fs, table)).collect { case (n, (_, Some(s))) => n -> s }.toMap
-
-  /** Live (name, stat) pairs in one replay — for consumers that need both
-    * names and stats ([[KvSnapshot.create]]) without paying the log walk
-    * twice.
-    */
-  def liveFilesWithStats(fs: FileSystem, table: Path)
-      : Seq[(String, Option[FileStat])] =
-    replayLive(fs, table, math.max(horizon(fs, table), 0L),
-      latestSeq(fs, table)).toSeq.map { case (n, (_, st)) => (n, st) }
-      .sortBy(_._1)
-
-  /** Replay entries `[from, to]` into the live (name → (attribution,
-    * stats)) map — the shared engine under every live-set read.
-    */
-  private def replayLive(fs: FileSystem, table: Path, from: Long, to: Long)
-      : scala.collection.mutable.LinkedHashMap[String, (Long, Option[FileStat])] = {
-    val live = scala.collection.mutable
-      .LinkedHashMap.empty[String, (Long, Option[FileStat])]
-    (from to to).foreach { seq =>
-      read(fs, table, seq).foreach { e =>
-        e.removes.foreach(live -= _)
-        e.adds.foreach(n => live(n) = (seq, e.stats.get(n)))
-      }
-    }
-    live
-  }
-
-  /** TIME TRAVEL: the live file set AS OF log seq `asOf` — the table
-    * exactly as a scan at that commit would have seen it (the HBase
-    * snapshot-read / Delta `versionAsOf` analog; every manifest entry is a
-    * durable table version). Replays entries `0..asOf` (O(asOf) probes —
-    * acceptable for an audit/debug read, and bounded by log length, not
-    * table size). Fails loudly when:
-    *  - `asOf` is beyond the log end (that version doesn't exist yet), or
-    *  - any file live at `asOf` was merged away by compaction AND already
-    *    physically reclaimed by [[KvVacuum]] — exactly Delta's trade:
-    *    compaction alone never limits time travel (its deletes are
-    *    deferred, [[KvCompactor]] publish protocol step 4), VACUUM does.
-    * A file whose replay attribution lands below the compaction floor is
-    * manifest-removed; while it survives on disk awaiting vacuum's grace
-    * the version still reads (one existence probe per suspect file, paid
-    * only on pre-checkpoint reads), after reclamation it cannot.
-    */
-  def liveFilesAt(fs: FileSystem, table: Path, asOf: Long): Seq[String] =
-    liveFilesAtWithStats(fs, table, asOf).map(_._1)
-
-  private def liveFilesAtWithStats(fs: FileSystem, table: Path, asOf: Long)
-      : Seq[(String, Option[FileStat])] = {
-    val latest = latestSeq(fs, table)
-    require(asOf >= 0 && asOf <= latest,
-      s"graft-kv log: asOfSeq $asOf is outside $table's log (latest $latest)")
-    // Versions at/after the horizon replay FROM that checkpoint (its adds
-    // are the complete live set). Older versions anchor at the NEWEST
-    // RETAINED checkpoint at or below `asOf` — any compact entry is a
-    // complete live set, not just the current horizon's, so a version
-    // between two checkpoints stays reconstructible after truncation
-    // dropped the prefix below the older one (an O(asOf − anchor)
-    // backward probe on this audit path). Only when no retained
-    // checkpoint covers the span AND the prefix was truncated is the
-    // version genuinely gone.
+  def live(fs: FileSystem, table: Path, asOf: Option[Long] = None): Live = {
     val h = horizon(fs, table)
-    val firstKept = earliestSeq(fs, table)
-    val from =
-      if (h >= 0 && asOf >= h) h
+    val v = asOf.getOrElse(latestSeq(fs, table))
+    // An entry at `v` proves `v <= latest`; only its absence pays the walk
+    // to the log end that names the latest seq in the refusal.
+    if (asOf.isDefined && (v < 0 || (v >= h && !fs.exists(entryPath(table, v))))) {
+      val latest = latestSeq(fs, table)
+      require(v >= 0 && v <= latest,
+        s"graft-kv log: asOfSeq $v is outside $table's log (latest $latest)")
+    }
+    val files =
+      if (v >= h) replayLive(fs, table, math.max(h, 0L), v)
       else {
-        var s = asOf
+        val firstKept = earliestSeq(fs, table)
+        var s = v
         var anchor = -1L
         while (anchor < 0 && s >= firstKept)
           if (read(fs, table, s).exists(_.compact)) anchor = s else s -= 1
-        if (anchor >= 0) anchor else 0L
+        if (anchor < 0 && firstKept > 0) throw new IllegalStateException(
+          s"graft-kv log: version $v of $table is no longer reconstructible — " +
+            s"entries below seq $firstKept were truncated by log retention and " +
+            "no retained checkpoint covers this version (pre-floor versions " +
+            "survive truncation only as long as their entries or a covering " +
+            "checkpoint do; re-baseline from the checkpoint or a full scan)")
+        val replayed = replayLive(fs, table, math.max(anchor, 0L), v)
+        val fl = floor(fs, table)
+        val reclaimed = replayed.filter(_.seq < fl).map(_.name).sorted
+          .filterNot(n => fs.exists(new Path(table, n)))
+        if (reclaimed.nonEmpty) throw new IllegalStateException(
+          s"graft-kv log: version $v of $table is no longer reconstructible — " +
+            s"${reclaimed.length} of its files were merged away by compaction " +
+            s"(floor $fl) and reclaimed by vacuum: " +
+            s"${reclaimed.take(3).mkString(", ")}…. Pre-checkpoint versions stay " +
+            "readable only until vacuum's grace period reclaims their segments.")
+        replayed
       }
-    val live = replayLive(fs, table, from, asOf)
-    if (from < firstKept) throw new IllegalStateException(
-      s"graft-kv log: version $asOf of $table is no longer reconstructible — " +
-        s"entries below seq $firstKept were truncated by log retention and " +
-        "no retained checkpoint covers this version (pre-floor versions " +
-        "survive truncation only as long as their entries or a covering " +
-        "checkpoint do; re-baseline from the checkpoint or a full scan)")
-    val fl = floor(fs, table)
-    val merged = live.filter(_._2._1 < fl).keys.toSeq.sorted
-    val reclaimed = merged.filterNot(n => fs.exists(new Path(table, n)))
-    if (reclaimed.nonEmpty) throw new IllegalStateException(
-      s"graft-kv log: version $asOf of $table is no longer reconstructible — " +
-        s"${reclaimed.length} of its files were merged away by compaction " +
-        s"(floor $fl) and reclaimed by vacuum: " +
-        s"${reclaimed.take(3).mkString(", ")}…. Pre-checkpoint versions stay " +
-        "readable only until vacuum's grace period reclaims their segments.")
-    live.toSeq.map { case (n, (_, st)) => (n, st) }.sortBy(_._1)
+    Live(v, files.sortBy(_.name))
   }
 
-  /** INCREMENTAL (CDC) read: the files COMMITTED in `(sinceSeq, asOf]` — a
-    * batch equivalent of tailing that span ([[KvTailStream]]), for backfill
-    * pipelines that consume a table in version-bounded increments without a
-    * streaming checkpoint (the Delta change-data-feed shape; cells are
-    * immutable so every change is an append). Compact entries contribute
-    * nothing — they re-publish existing data, not changes (the same rule the
-    * tail's delivery uses). Fails loudly when the span dips below the
-    * compaction floor: those increments' files were merged away and the
-    * change set is no longer reconstructible — UNLESS a named snapshot
-    * anchors the span (r18): a snapshot at seq ≤ sinceSeq makes the span
-    * a DURABLE CDC LEASE — [[truncate]] stops above the oldest snapshot
-    * seq and [[KvVacuum]] spares the span's adds, so the below-floor
-    * span is served after VERIFYING every file still exists (the pin
-    * guarantees it outside the create-vs-GC race window every
-    * non-locking store shares).
+  /** THE CHANGE RESOLVER — an INCREMENTAL (CDC) read: the files COMMITTED
+    * in `(since, upTo]`, each with the seq of the entry that committed it
+    * — a batch equivalent of tailing that span ([[KvTailStream]]), for
+    * backfill pipelines that consume a table in version-bounded
+    * increments without a streaming checkpoint (the Delta change-data-feed
+    * shape; cells are immutable so every change is an append). A compact
+    * entry's adds re-publish already-consumed data and are skipped (the
+    * tail's delivery rule); its DROP FILES are the span's delete records
+    * (exact-version markers) and ship like any other file. Fails loudly
+    * when the span dips below the compaction floor — those increments'
+    * files were merged away — UNLESS a named snapshot at seq <= `since`
+    * anchors it (r18): the span is then a DURABLE CDC LEASE
+    * ([[truncate]] stops above the oldest snapshot seq, [[KvVacuum]]
+    * spares the span's adds), served after VERIFYING every entry and file
+    * still exists (the pin guarantees it outside the create-vs-GC race
+    * window every non-locking store shares).
     */
-  def changedFiles(fs: FileSystem, table: Path, sinceSeq: Long, asOf: Long)
-      : Seq[String] = {
+  def changes(fs: FileSystem, table: Path, since: Long, upTo: Long): Live = {
     val latest = latestSeq(fs, table)
-    require(sinceSeq >= -1 && sinceSeq <= asOf && asOf <= latest,
-      s"graft-kv log: change span ($sinceSeq, $asOf] is outside $table's " +
-        s"log (latest $latest)")
+    // `upTo <= latest` matters: a version beyond the log end is a
+    // stale/wrong reference and must error, not return a partial span.
+    require(since >= -1 && since <= upTo && upTo <= latest,
+      s"graft-kv log: change span ($since, $upTo] is outside $table's log " +
+        s"(latest seq is $latest)")
     val fl = floor(fs, table)
-    val belowFloor = spanAnchoredBelowFloor(fs, table, sinceSeq, fl)
-    val files = (sinceSeq + 1 to asOf).flatMap { seq =>
+    val belowFloor = spanAnchoredBelowFloor(fs, table, since, fl)
+    val files = (since + 1 to upTo).flatMap { seq =>
       val entry = read(fs, table, seq)
-      if (belowFloor) requireNoSpanGap(table, sinceSeq, asOf, seq, fl, entry)
-      entry.toSeq.flatMap(e => if (e.compact) e.dropFiles else e.adds)
-    }.sorted
-    if (belowFloor) requireSpanFiles(fs, table, sinceSeq, asOf, files)
-    files
+      if (belowFloor) requireNoSpanGap(table, since, upTo, seq, fl, entry)
+      entry.toSeq.flatMap(e => (if (e.compact) e.dropFiles else e.adds)
+        .map(n => LiveFile(n, seq, e.stats.get(n))))
+    }.sortBy(_.name)
+    if (belowFloor) requireSpanFiles(fs, table, since, upTo, files.map(_.name))
+    Live(upTo, files)
+  }
+
+  /** Replay entries `[from, to]` into the live set — the one walk under
+    * [[live]]; each file carries the seq of the entry that last added it.
+    */
+  private def replayLive(fs: FileSystem, table: Path, from: Long, to: Long)
+      : Seq[LiveFile] = {
+    val live = scala.collection.mutable.HashMap.empty[String, LiveFile]
+    (from to to).foreach { seq =>
+      read(fs, table, seq).foreach { e =>
+        e.removes.foreach(live -= _)
+        e.adds.foreach(n => live(n) = LiveFile(n, seq, e.stats.get(n)))
+      }
+    }
+    live.values.toSeq
   }
 
   /** Floor admission for a change span (r18): a below-floor span refuses
@@ -1114,105 +1112,6 @@ private[graft] object KvLog {
     val latest = latestSeq(fs, table)
     (earliestSeq(fs, table) to latest).flatMap(s =>
       read(fs, table, s).toSeq.flatMap(_.dropFiles)).toSet
-  }
-
-  /** The table's data files as Paths: log replay when a log exists, else a
-    * directory listing (legacy/externally-staged tables). Every batch-scan
-    * planning site shares this so log-carrying tables are read from their
-    * MANIFEST (immune to stray files from an interrupted compaction) while
-    * foreign tables keep working.
-    */
-  /** Scan-planning entry point uniting the three batch read shapes: full
-    * (neither option), time travel (`asOf`), incremental CDC (`since`, with
-    * `asOf` as its optional upper bound). Shared by the data scan and the
-    * footer-stats scan so a pushed COUNT(*) over a version or change span
-    * counts exactly that span's files.
-    */
-  def scanFiles(fs: FileSystem, table: Path, asOf: Option[Long],
-      since: Option[Long]): Seq[Path] =
-    scanFilesWithStats(fs, table, asOf, since).map(_._1)
-
-  /** [[scanFiles]] plus each file's manifest-carried [[FileStat]] (None for
-    * stat-less entries and legacy directories) — so planning consults the
-    * log first and pays a footer open only where the log is silent. A
-    * `snapshot` read plans from the NAMED snapshot's self-contained
-    * manifest ([[KvSnapshot]]) — no log replay at all, which is what lets
-    * snapshots outlive log truncation.
-    */
-  def scanFilesWithStats(fs: FileSystem, table: Path, asOf: Option[Long],
-      since: Option[Long], snapshot: Option[String] = None)
-      : Seq[(Path, Option[FileStat])] = snapshot match {
-    case Some(name) =>
-      val info = KvSnapshot.get(fs, table, name)
-        .getOrElse(throw new IllegalArgumentException(
-          s"graft-kv: no snapshot '$name' on $table"))
-      info.files.map { case (n, st) => (new Path(table, n), st) }
-    case None => scanFilesWithStatsLogged(fs, table, asOf, since)
-  }
-
-  private def scanFilesWithStatsLogged(fs: FileSystem, table: Path,
-      asOf: Option[Long], since: Option[Long])
-      : Seq[(Path, Option[FileStat])] = since match {
-    case Some(s) =>
-      if (!exists(fs, table)) throw new IllegalArgumentException(
-        s"graft-kv: sinceSeq incremental reads require a manifest log, and " +
-          s"$table has none (legacy/externally-staged directory)")
-      val latest = latestSeq(fs, table)
-      val upTo = asOf.getOrElse(latest)
-      // Same bounds + floor validation as changedFiles, WITHOUT replaying
-      // the span twice (each entry read is an object-store round-trip; a
-      // 1000-entry CDC span would otherwise pay ~2000 of them). The
-      // `upTo <= latest` bound matters: an asOfSeq beyond the log end is a
-      // stale/wrong version reference and must error, not silently return
-      // whatever entries happen to exist.
-      require(s >= -1 && s <= upTo && upTo <= latest,
-        s"graft-kv log: change span ($s, $upTo] is outside $table's log " +
-          s"(latest seq is $latest)")
-      val fl = floor(fs, table)
-      val belowFloor = spanAnchoredBelowFloor(fs, table, s, fl)
-      val planned = (s + 1 to upTo).flatMap { seq =>
-        val entry = read(fs, table, seq)
-        if (belowFloor) requireNoSpanGap(table, s, upTo, seq, fl, entry)
-        entry.toSeq.flatMap { e =>
-          // A compact entry's adds re-publish already-consumed data and
-          // are skipped; its DROP FILES are the span's delete records
-          // (exact-version markers) and ship like any other file — the
-          // scan reads them under the same cell schema and the consumer
-          // sees marker-qualified cells (KvDelete.VersionMarkerPrefix).
-          val names = if (e.compact) e.dropFiles else e.adds
-          names.map(n => (new Path(table, n), e.stats.get(n)))
-        }
-      }.sortBy(_._1.getName)
-      if (belowFloor)
-        requireSpanFiles(fs, table, s, upTo, planned.map(_._1.getName))
-      planned
-    case None =>
-      if (asOf.isDefined && !exists(fs, table)) throw new IllegalArgumentException(
-        s"graft-kv: asOfSeq time travel requires a manifest log, and $table " +
-          "has none (legacy/externally-staged directory — versions were never recorded)")
-      if (exists(fs, table)) asOf match {
-        case Some(v) => liveFilesAtWithStats(fs, table, v)
-          .map { case (n, st) => (new Path(table, n), st) }
-        case None =>
-          replayLive(fs, table, math.max(horizon(fs, table), 0L),
-            latestSeq(fs, table)).toSeq
-            .map { case (n, (_, st)) => (new Path(table, n), st) }
-            .sortBy(_._1.getName)
-      }
-      else fs.listStatus(table).map(_.getPath)
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName).toSeq.map((_, None))
-  }
-
-  def dataFiles(fs: FileSystem, table: Path, asOf: Option[Long] = None): Seq[Path] = {
-    if (asOf.isDefined && !exists(fs, table)) throw new IllegalArgumentException(
-      s"graft-kv: asOfSeq time travel requires a manifest log, and $table has " +
-        "none (legacy/externally-staged directory — versions were never recorded)")
-    if (exists(fs, table))
-      asOf.fold(liveFiles(fs, table))(liveFilesAt(fs, table, _)).map(new Path(table, _))
-    else fs.listStatus(table).map(_.getPath)
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .sortBy(_.getName).toSeq
   }
 
   /** Hint reads are TOLERANT of every failure mode a concurrent in-place

@@ -77,7 +77,17 @@ object KvResalt {
     to.foreach(KvSalt.requireBuckets)
     KvLog.seedFromDirIfNeeded(fs, dir) // legacy table: manifest first
     KvLog.ensureLogDir(fs, dir)
-    val from = KvSalt.resolveAt(fs, dir, None)
+    // ONE resolution for (latest, live, layout): reading them separately
+    // would let a commit land in between, and — because this pass's
+    // checkpoint claims to be the complete live set — the `expectSeq`
+    // guard would then PASS while the interleaved commit's files silently
+    // vanish behind the new horizon (and vacuum later reclaims them), or
+    // files a racing resalt rewrote would be unsalted under the old layout.
+    val version = KvLog.live(fs, dir)
+    val expect = version.seq + 1
+    val live = version.names
+    val liveStats = version.stats
+    val from = KvSalt.resolveAt(fs, dir, Some(version.seq))
     if (from == to) {
       // Crash repair: a prior resalt that published its declaration but
       // died before recording the property leaves `salt_buckets` stale
@@ -98,15 +108,6 @@ object KvResalt {
       s"graft-kv resalt: cannot change the salt layout of $path while " +
         s"tails are registered (${marks.keys.toSeq.sorted.mkString(", ")}) " +
         "— stop the pipes or DropTail first")
-
-    // ONE log walk for (latest, live): reading them separately would let
-    // a commit land in between, and — because this pass's checkpoint
-    // claims to be the complete live set — the `expectSeq` guard would
-    // then PASS while the interleaved commit's files silently vanish
-    // behind the new horizon (and vacuum later reclaims them).
-    val (latest0, live) = KvLog.liveFilesWithLatest(fs, dir)
-    val expect = latest0 + 1
-    val liveStats = KvLog.liveFileStats(fs, dir)
 
     // Stage the rewrite (skipped when there is nothing to rewrite — an
     // empty or data-less table converts with a declaration-only entry).
@@ -138,14 +139,13 @@ object KvResalt {
       // write, never the published table.
       to.foreach(n => w = w.option("saltedInput", n))
       w.mode("overwrite").save(tmp.toString)
-      val tmpStats = KvLog.liveFileStats(fs, tmp)
-      staged = KvLog.dataFiles(fs, tmp).zipWithIndex.map { case (f, i) =>
+      staged = KvLog.live(fs, tmp).files.zipWithIndex.map { case (f, i) =>
         // part-c naming: a resalt IS a major compaction, and the
         // compactor's idempotence park recognizes its outputs as one.
         val t = new Path(dir, f"part-c$expect%010d-$i%05d.parquet")
-        if (!fs.rename(f, t)) throw new IllegalStateException(
+        if (!fs.rename(new Path(tmp, f.name), t)) throw new IllegalStateException(
           s"graft-kv resalt: staging rename to $t failed")
-        t.getName -> tmpStats.get(f.getName)
+        t.getName -> f.stat
       }
       fs.delete(tmp, true)
     }

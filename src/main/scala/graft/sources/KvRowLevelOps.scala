@@ -116,18 +116,16 @@ private[sources] class KvRowLevelOperation(path: String,
 
   override def command(): RowLevelOperation.Command = cmd
 
-  /** The table's recorded salt ([[KvSalt]]), read once per operation: the
-    * scan strips it (conditions evaluate on LOGICAL keys, like every
-    * other read) and the replacement write re-applies it per row — the
-    * salted/unsalted asymmetry SQL mutations used to have is gone.
+  /** The version the operation reads ([[KvReadVersion]]), resolved once:
+    * its group scan plans from it, and its salt layout ([[KvSalt]]) is
+    * what the scan strips (conditions evaluate on LOGICAL keys, like
+    * every other read) and the replacement write re-applies per row.
     */
-  private val saltBuckets: Option[Int] = {
-    val dir = new Path(path)
-    KvSalt.resolveAt(dir.getFileSystem(conf.value), dir, None)
-  }
+  private val version = KvReadVersion.current(path, conf.value)
+  private val saltBuckets: Option[Int] = version.salt
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new KvRowLevelScanBuilder(path, conf, scannedFiles, saltBuckets)
+    new KvRowLevelScanBuilder(path, conf, scannedFiles, version)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
@@ -154,7 +152,7 @@ private[sources] class KvRowLevelOperation(path: String,
 private[sources] class KvRowLevelScanBuilder(path: String,
     conf: SerializableConfiguration,
     record: java.util.concurrent.atomic.AtomicReference[Seq[String]],
-    saltBuckets: Option[Int] = None)
+    version: KvReadVersion)
     extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
 
@@ -172,10 +170,10 @@ private[sources] class KvRowLevelScanBuilder(path: String,
     // KvSalt.expand doc) and the scan strips the salt, so the rewrite
     // plan's condition and copied-through rows all see LOGICAL keys.
     val pushedStored =
-      saltBuckets.fold(pruneFilters)(KvSalt.expandAll(pruneFilters, _))
+      version.salt.fold(pruneFilters)(KvSalt.expandAll(pruneFilters, _))
     new KvScanRecording(
-      new KvScan(path, graft.kv.Cell.schema, pushedStored, sconf = conf,
-        saltBuckets = saltBuckets, groupPruneOnly = true),
+      new KvScan(path, graft.kv.Cell.schema, pushedStored, version,
+        sconf = conf, groupPruneOnly = true),
       record)
   }
 }
@@ -266,12 +264,12 @@ private[sources] class KvReplaceDataBatchWrite(path: String,
   }
 
   // The replacement re-applies the table's salt per row (the sink-salted
-  // writer) and admits only the stored keys that produces.
+  // writer); a key it prefixed itself needs no stored-form check.
   override def createBatchWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DataWriterFactory =
     commitStep.writerFactory(writeSchema, codec, allowTombstones = false,
-      saltCheck = saltBuckets, saltOnWrite = saltBuckets)
+      saltCheck = None, saltOnWrite = saltBuckets)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     KvRowLevelOps.preCommitHook()
@@ -281,7 +279,10 @@ private[sources] class KvReplaceDataBatchWrite(path: String,
       throw new IllegalStateException(
         "graft-kv: row-level replacement committed before its scan " +
           "planned — no group set to retire"))
-    val seq0 = KvLog.latestSeq(fs, dir) + 1
+    // One resolution per publish attempt: the expected seq and the live
+    // set the liveness check reads come from the same version.
+    var version = KvLog.live(fs, dir)
+    val seq0 = version.seq + 1
     // The retired groups' delete markers RE-ENTER the table as one
     // compacted sidecar file sealed into the same entry (class doc):
     // dropping them with the groups would resurrect masked puts in
@@ -293,7 +294,8 @@ private[sources] class KvReplaceDataBatchWrite(path: String,
     // silently collapse into one target. A label outside the numeric
     // namespace cannot; the seal's rename check is the backstop for every
     // other unexpected clash.
-    val sidecar = markerSidecar(fs, dir, removes).map { case (f, st) => (f, "m", st) }
+    val sidecar = markerSidecar(fs, dir, removes, version.stats)
+      .map { case (f, st) => (f, "m", st) }
     val sealedOut = commitStep.seal(fs, dir,
       commitStep.staged(messages) ++ sidecar, "replacement commit")(label =>
       f"part-b$seq0%010d-$label-${commitStep.token}.parquet")
@@ -312,9 +314,8 @@ private[sources] class KvReplaceDataBatchWrite(path: String,
     var attempts = 0
     var committed = false
     while (!committed) {
-      val (latest, liveSeq) = KvLog.liveFilesWithLatest(fs, dir)
-      val expect = latest + 1
-      val live = liveSeq.toSet
+      val expect = version.seq + 1
+      val live = version.names.toSet
       val gone = removes.filterNot(live)
       if (gone.nonEmpty) {
         discard()
@@ -338,6 +339,7 @@ private[sources] class KvReplaceDataBatchWrite(path: String,
         case e: KvLog.ConcurrentCommitException =>
           attempts += 1
           if (attempts >= 20) { discard(); throw e }
+          version = KvLog.live(fs, dir)
       }
     }
     // Maintain-declared tables housekeep after rewrites too: a COW-heavy
@@ -359,8 +361,8 @@ private[sources] class KvReplaceDataBatchWrite(path: String,
     * when no retired group holds markers.
     */
   private def markerSidecar(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
-      removes: Seq[String]): Option[(String, Option[KvLog.FileStat])] = {
-    val stats = KvLog.liveFileStats(fs, dir)
+      removes: Seq[String], stats: Map[String, KvLog.FileStat])
+      : Option[(String, Option[KvLog.FileStat])] = {
     val tombFiles = removes.filter(n => stats.get(n).exists(_.tombstones > 0))
     if (tombFiles.isEmpty) return None
     val newest =

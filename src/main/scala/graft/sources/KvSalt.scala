@@ -330,17 +330,19 @@ object KvSalt {
         "rows in the superseded layout (re-run the statement)")
   }
 
-  /** Declaration seqs in `(fromExclusive, toInclusive]` — the guard an
+  /** Published declarations in `(fromExclusive, toInclusive]`, oldest
+    * first, each with the layout it declares (None = unsalted) — what an
     * incremental (CDC) span consults: a span crossing a layout change
-    * mixes files whose stored keys disagree on the salt, which no single
-    * `saltBuckets` can strip-and-expand correctly, so such spans are
-    * refused and split at the declaration instead.
+    * mixes files whose stored keys disagree on the salt, so no single
+    * `saltBuckets` strips and expands it; the scan reads such a span per
+    * file, each under the newest declaration at or below its entry.
     */
   def declsIn(fs: FileSystem, table: Path, fromExclusive: Long,
-      toInclusive: Long): Seq[Long] =
-    declSeqs(fs, table)
+      toInclusive: Long): Seq[(Long, Option[Int])] =
+    declSeqs(fs, table).reverse
       .filter(s => s > fromExclusive && s <= toInclusive)
-      .filter(s => KvLog.read(fs, table, s).exists(_.saltDecl.isDefined))
+      .flatMap(s => KvLog.read(fs, table, s).flatMap(_.saltDecl)
+        .map(n => (s, if (n > 0) Some(n) else None)))
 
   /** Salt + write + record in one step: after this, plain
     * `spark.read.format("graft-kv").load(path)` reads the table salt-aware

@@ -79,14 +79,17 @@ object KvSnapshot {
       s"graft-kv snapshot: $path has no manifest log")
     require(!fs.exists(snapPath(dir, name)),
       s"graft-kv snapshot: '$name' already exists on $path (drop it first)")
-    val seq = KvLog.latestSeq(fs, dir)
+    // Seq, files and salt from ONE resolution: a commit landing mid-create
+    // must not leave a snapshot claiming seq N while holding N+1's files.
+    val version = KvLog.live(fs, dir)
+    val seq = version.seq
     require(seq >= 0, s"graft-kv snapshot: $path is empty — nothing to pin")
-    val files = KvLog.liveFilesWithStats(fs, dir)
+    val files = version.withStats
     val now = System.currentTimeMillis()
     // cfg marks a config-recording manifest (the only shape [[get]]
     // reads); salt= carries the registration the pinned files were
     // written under; `p<TAB>k=v` lines carry the catalog properties.
-    val salt = KvSalt.resolveAt(fs, dir, None)
+    val salt = KvSalt.resolveAt(fs, dir, Some(seq))
     val props = KvTableProps.read(fs, dir)
     val header = s"v1 snapshot seq=$seq at=$now cfg" +
       salt.fold("")(n => s" salt=$n")
@@ -167,7 +170,7 @@ object KvSnapshot {
     * the durable-CDC-anchor horizon (r18): [[KvLog.truncate]] never
     * drops entries above it and [[KvVacuum]] spares the span's adds, so
     * a change span anchored at any snapshot stays servable across
-    * maintenance ([[KvLog.changedFiles]]).
+    * maintenance ([[KvLog.changes]]).
     */
   def minSeq(fs: FileSystem, table: Path): Option[Long] =
     list(fs, table).map(_.seq).minOption
@@ -281,8 +284,9 @@ object KvSnapshot {
       // Restore stages nothing — every attempt recomputes from the current
       // log, so ANY interleaved commit (append, compaction, another
       // restore) is absorbed by recomputation, not adjudication.
-      val expect = KvLog.latestSeq(fs, dir) + 1
-      val removes = KvLog.liveFiles(fs, dir).filterNot(snapSet)
+      val version = KvLog.live(fs, dir)
+      val expect = version.seq + 1
+      val removes = version.names.filterNot(snapSet)
       val pending = KvLog.removalTimes(fs, dir)
         .filter { case (n, _) => fs.exists(new Path(dir, n)) }
       // The snapshot pinned the salt layout its files were written under;

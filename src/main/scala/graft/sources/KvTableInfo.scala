@@ -69,7 +69,7 @@ object KvTableInfo {
   private def storedDisjointSorted(fs: org.apache.hadoop.fs.FileSystem,
       dir: Path): Boolean = {
     if (!fs.exists(dir) || !KvLog.exists(fs, dir)) return false
-    storedDisjointSortedFrom(KvLog.liveFilesWithStats(fs, dir))
+    storedDisjointSortedFrom(KvLog.live(fs, dir).withStats)
   }
 
   /** The certification applied to an ALREADY-REPLAYED live (name, stat)

@@ -172,7 +172,7 @@ private[sources] class KvTailStream(
       capSeq: Long): (Seq[Path], LogPos) = {
     val fl = KvLog.floor(fs, tableDir)
     // Below-floor offsets refuse UNLESS a named snapshot anchors the
-    // span (r18, [[KvLog.changedFiles]] doc): the anchor stops
+    // span (r18, [[KvLog.changes]] doc): the anchor stops
     // truncation and vacuum above its seq, so a stream whose checkpoint
     // fell behind the floor during an outage resumes exactly when its
     // operator pinned an anchor — admission probes each entry's files
@@ -197,7 +197,7 @@ private[sources] class KvTailStream(
     // An anchored below-floor resume tolerates no silent entry gaps: a
     // seq truncated BEFORE the anchor existed would otherwise park the
     // stream forever at the hole (a missing entry normally just means
-    // "caught up"). Loud here, like [[KvLog.changedFiles]]' gap check.
+    // "caught up"). Loud here, like [[KvLog.changes]]' gap check.
     def readChecked(seq: Long): Option[KvLog.Entry] = {
       val e = readEntry(seq)
       if (e.isEmpty && seq < fl) throw new IllegalStateException(

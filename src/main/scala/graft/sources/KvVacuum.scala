@@ -85,7 +85,7 @@ object KvVacuum {
     // break it long after any grace period. One `_snapshots` listing +
     // one small read per snapshot, GC path only.
     val pinned = KvSnapshot.referencedFiles(fs, dir)
-    // Snapshots are also durable CDC ANCHORS (r18, [[KvLog.changedFiles]]):
+    // Snapshots are also durable CDC ANCHORS (r18, [[KvLog.changes]]):
     // the change span (oldest snapshot seq, latest] must stay servable
     // across maintenance, so the NON-COMPACT adds of every retained entry
     // above that seq are spared even after a later compaction merged them

@@ -32,6 +32,8 @@ class CountingFileSystem extends RawLocalFileSystem {
       CountingFileSystem.dataOpens.incrementAndGet()
       CountingFileSystem.openedData.add(p.toString)
     }
+    if (p.toString.contains(s"/${KvLog.LogDirName}/"))
+      CountingFileSystem.logReads.incrementAndGet()
     super.open(p, bufferSize)
   }
 }
@@ -50,7 +52,13 @@ object CountingFileSystem {
     * claim).
     */
   val openedData = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** Opens under a table's `_log/` dir: entries, hints (`_latest`,
+    * `_horizon`, `_floor`, `_trunc`) and layout files (`_salt`) — the
+    * manifest reads one planning pass pays.
+    */
+  val logReads = new AtomicLong(0)
   def reset(): Unit = {
     lists.set(0); probes.set(0); dataOpens.set(0); openedData.clear()
+    logReads.set(0)
   }
 }

@@ -147,7 +147,7 @@ class KvCompactionSpec extends graft.SparkSpec {
     val table = new Path(d)
     val before = spark.read.format("graft-kv").load(d)
       .select(count(lit(1)), sum(col("ts")), max(col("rowKey"))).collect()(0)
-    val attributed = KvLog.liveFilesWithSeq(fs, table).toMap
+    val attributed = KvLog.live(fs, table).files.map(f => f.name -> f.seq).toMap
     // cap the tier at 4: the pass must touch 4 segments, not all 12
     val res = KvCompactor.compactTo(spark, d, targetRegionBytes = Long.MaxValue,
       KvCompactor.Minor(maxMerge = 4))

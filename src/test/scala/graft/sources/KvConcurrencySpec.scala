@@ -94,7 +94,7 @@ class KvConcurrencySpec extends graft.SparkSpec {
       .foreach(f => assert(f.startsWith("part-c0000000005-")))
     interleavedAdds.foreach(f => assert(entry.adds.contains(f)))
     // no orphaned pre-rebase staging names remain
-    assert(!KvLog.dataFiles(fs, table).exists(_.getName.startsWith("part-c0000000004")))
+    assert(!KvLog.live(fs, table).names.exists(_.startsWith("part-c0000000004")))
     // the table replays to the full union and keeps every file's stats
     spark.read.format("graft-kv").load(d).count() shouldBe cells.count()
     KvLog.liveFileStats(fs, table).keySet shouldBe
@@ -129,7 +129,7 @@ class KvConcurrencySpec extends graft.SparkSpec {
     assert(res.isInstanceOf[KvCompactor.Aborted], s"expected Aborted, got $res")
     // the staged outputs were discarded — no part-c file is on disk or in
     // the manifest, and the table reads exactly per the winner's log
-    assert(!KvLog.dataFiles(fs, table).exists(_.getName.startsWith("part-c")))
+    assert(!KvLog.live(fs, table).names.exists(_.startsWith("part-c")))
     KvLog.liveFiles(fs, table).foreach(f => assert(!f.startsWith("part-c")))
     val after = spark.read.format("graft-kv").load(d).count()
     assert(after < before, "the interleaved remove should have shrunk the table")
@@ -219,7 +219,7 @@ class KvConcurrencySpec extends graft.SparkSpec {
     // The table IS the snapshot state: the losing compaction left no
     // trace — no staged output on disk or in the manifest, and the live
     // set is exactly the snapshot's pins.
-    assert(!KvLog.dataFiles(fs, table).exists(_.getName.startsWith("part-c")))
+    assert(!KvLog.live(fs, table).names.exists(_.startsWith("part-c")))
     readable(spark.read.format("graft-kv").load(d)) shouldBe goldenRows
     val fsck = KvFsck.check(spark, d)
     assert(fsck.healthy,

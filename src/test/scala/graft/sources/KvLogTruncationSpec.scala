@@ -132,7 +132,7 @@ class KvLogTruncationSpec extends graft.SparkSpec {
     ex.getMessage should include("truncated by log retention")
     // CDC across the truncated span is already floor-refused
     intercept[IllegalStateException] {
-      KvLog.changedFiles(fs, table, -1, seq)
+      KvLog.changes(fs, table, -1, seq)
     }.getMessage should include("compaction floor")
     // a new commit + maintenance keeps working end-to-end on the
     // truncated log (the policy pass runs truncate itself)

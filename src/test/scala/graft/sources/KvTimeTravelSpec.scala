@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.kv.KvGenerator
 
 /** Time travel through the manifest log (`asOfSeq` reader option): every
-  * commit entry is a durable table version ([[KvLog.liveFilesAt]]), read
+  * commit entry is a durable table version ([[KvLog.live]]), read
   * back exactly; versions whose files compaction merged away fail loudly
   * (the Delta VACUUM-limits-time-travel trade); mode misuse (no manifest,
   * beyond the log end, on a stream) is rejected at plan time, not by a
@@ -133,9 +133,9 @@ class KvTimeTravelSpec extends graft.SparkSpec {
     (0 until 4).foreach(k => asOf(d, k).count() shouldBe versions(k))
     asOf(d, seq).count() shouldBe full
     // incremental (CDC) reads honor the floor: from it they work...
-    KvLog.changedFiles(fs, table, sinceSeq = 1, asOf = 3) should have size 4
+    KvLog.changes(fs, table, since = 1, upTo = 3).files should have size 4
     // ...below it they fail loudly (those increments were merged away)
-    (the[Exception] thrownBy KvLog.changedFiles(fs, table, 0, 3))
+    (the[Exception] thrownBy KvLog.changes(fs, table, 0, 3))
       .getMessage should include("compaction floor")
     // stage 2 (vacuumed past grace): exactly the merged-away originals go
     KvLog.backdateEntry(fs, table, seq, 1000L)
@@ -152,7 +152,7 @@ class KvTimeTravelSpec extends graft.SparkSpec {
     // floor-bounded incremental read still replays the carried segments
     asOf(d, seq).count() shouldBe full
     spark.read.format("graft-kv").load(d).count() shouldBe full
-    KvLog.changedFiles(fs, table, sinceSeq = 1, asOf = 3) should have size 4
+    KvLog.changes(fs, table, since = 1, upTo = 3).files should have size 4
   }
 
   test("asOfSeq on a stream is rejected: an offset already names its version") {
